@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes without sbt's
-# startup/lock overhead (probe harness helper; sbt remains the build).
+# startup/lock overhead (sbt remains the build), e.g. the query profile:
+#   scripts/run_main.sh graft.tools.Profile <sfDir> <q1,q2,...> [outDir]
 # Usage: scripts/run_main.sh <mainClass> [args...]
-# Env: SPARK_DRIVER_MEM (default 24g) and the usual SPARK_GRAFT_* knobs.
+# Env: SPARK_DRIVER_MEM (default 24g), SPARK_GRAFT_CPUS (default: all
+# cores) and Spark's SPARK_LOCAL_DIRS (shuffle scratch).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
@@ -13,5 +15,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"

@@ -1,35 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the engine's standard extensions: native functions in SQL text +
-      // the conf-gated rewrite rules (range join, MV, zone-map pruning)
-      // — all inert unless a query opts in, so the registry's plans are
-      // unchanged except where a _zonemap synopsis exists by design
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // shuffle/spill scratch on tmpfs: the build VM's virtio disk
-      // intermittently stalls writes for seconds at a time, which shows up
-      // as multi-x wall-clock noise on shuffle-heavy queries; shuffle data
-      // at bench scale is tiny, so RAM-backed scratch removes the stall
-      // without memory risk (a real cluster would use local NVMe here)
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-scratch"
-        else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark has no native
-      // type for; read as Long (epoch nanos) — oracle side uses epoch_ns().
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     graft.core.CodegenWatch.install()
     new java.io.File(outDir).mkdirs()
     // dev-only subset (SPARK_GRAFT_ONLY=q43_asof_join,...); driver sets no env

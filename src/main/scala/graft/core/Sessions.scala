@@ -2,16 +2,24 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory with the engine's standard configuration.
+/** SparkSession factory with the engine's standard configuration — the only
+  * place a main builds a session, so Bench, Verify, the tools and the
+  * benchmark all measure the same engine (`SessionsSpec` gates this).
   *
   * Settings chosen for correctness-parity with the reference corpus and for
   * scale: UTC session time zone (the reference parses all timestamps as UTC —
-  * /root/reference/USQL/ProcessDaily.usql:16), AQE on (runtime re-planning,
+  * ProcessDaily.usql:16), AQE on (runtime re-planning,
   * skew-join splitting, partition coalescing), shuffle partitions sized to
   * the local core count rather than the 200 default.
   */
 object Sessions {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+
+  /** `local[n]` with n from `SPARK_GRAFT_CPUS`, else every core. */
+  def local(): SparkSession =
+    local(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors()))
+
+  def local(cores: Int): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -20,7 +28,9 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cores.toString)
       // shuffle/spill scratch on tmpfs when available: the build VM's
       // virtio disk intermittently stalls writes, multiplying wall-clock
-      // on shuffle-heavy stages (a real cluster uses local NVMe here)
+      // on shuffle-heavy stages (a real cluster uses local NVMe here).
+      // Spark's own SPARK_LOCAL_DIRS overrides it: probe tiers whose
+      // shuffle volume exceeds RAM point it at disk.
       .config("spark.local.dir",
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-scratch"
         else System.getProperty("java.io.tmpdir"))

@@ -1,11 +1,10 @@
 package graft.jobs
 
+import graft.core.Par
 import graft.entities.{Pipelines, Specs}
 import graft.ingest.Staging
+import graft.ops.MergeOnRead
 import org.apache.spark.sql.SparkSession
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 
 /** The daily merge job — `ProcessDaily(@Year,@Month,@Day)`
   * (/root/reference/USQL/ProcessDaily.usql:7-3593) as one function.
@@ -29,26 +28,20 @@ object ProcessDaily {
   /** Run every entity pipeline over an arbitrary staged frame (one day for
     * the daily merge; the whole history for [[Bootstrap]]). */
   def runOn(spark: SparkSession, day: org.apache.spark.sql.DataFrame,
-      curatedDir: String, parallelism: Int = 4): Seq[String] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val tasks: Seq[(String, () => Unit)] =
-        Specs.snapshots.map(s =>
-          s.table -> (() => { Pipelines.runSnapshot(spark, day, curatedDir, s); () })) ++
-        Specs.arrayChildren.map(s =>
-          s.table -> (() => { Pipelines.runArrayChild(spark, day, curatedDir, s); () })) ++
-        Specs.collections.map(s =>
-          s.table -> (() => { Pipelines.runCollection(spark, day, curatedDir, s); () })) ++
-        Specs.traffic.map(s =>
-          s.table -> (() => { Pipelines.runTraffic(spark, day, curatedDir, s); () })) ++
-        Seq(
-          Specs.repo.snapshot.table ->
-            (() => { Pipelines.runSnapshotLog(spark, day, curatedDir, Specs.repo); () }))
-      val fs = tasks.map { case (name, f) => Future { f(); name } }
-      Await.result(Future.sequence(fs), Duration.Inf)
-    } finally { pool.shutdown(); () }
-  }
+      curatedDir: String, parallelism: Int = 4): Seq[String] =
+    Par.all(parallelism)(
+      Specs.snapshots.map(s =>
+        () => { Pipelines.runSnapshot(spark, day, curatedDir, s); s.table }) ++
+      Specs.arrayChildren.map(s =>
+        () => { Pipelines.runArrayChild(spark, day, curatedDir, s); s.table }) ++
+      Specs.collections.map(s =>
+        () => { Pipelines.runCollection(spark, day, curatedDir, s); s.table }) ++
+      Specs.traffic.map(s =>
+        () => { Pipelines.runTraffic(spark, day, curatedDir, s); s.table }) ++
+      Seq(() => {
+        Pipelines.runSnapshotLog(spark, day, curatedDir, Specs.repo)
+        Specs.repo.snapshot.table
+      }))
 
   /** The daily merge in merge-on-read mode: EVERY entity appends its day
     * as an O(delta) delta partition instead of rewriting the table;
@@ -65,27 +58,20 @@ object ProcessDaily {
       ingestDate: String, parallelism: Int = 4): Seq[String] = {
     val day = Staging.readStaging(spark, stagingDir, ingestDate)
     day.cache()
-    try {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val tasks: Seq[(String, () => Unit)] =
-          (Specs.snapshots :+ Specs.repo.snapshot).map(s => s.table -> (() =>
-            graft.ops.MergeOnRead.appendDelta(
-              Pipelines.freshSnapshot(day, s), morDir, s.table))) ++
-          Specs.arrayChildren.map(s => s.table -> (() =>
-            graft.ops.MergeOnRead.appendDelta(
-              Pipelines.freshArrayChild(day, s), morDir, s.table))) ++
-          Specs.traffic.map(s => s.table -> (() =>
-            graft.ops.MergeOnRead.appendDelta(
-              Pipelines.freshTraffic(day, s), morDir, s.table))) ++
-          Specs.collections.map(s => s.table -> (() =>
-            graft.ops.MergeOnRead.appendDelta(
-              Pipelines.freshCollection(day, s), morDir, s.table)))
-        val fs = tasks.map { case (name, f) => Future { f(); name } }
-        Await.result(Future.sequence(fs), Duration.Inf)
-      } finally { pool.shutdown(); () }
-    } finally { day.unpersist(); () }
+    try Par.all(parallelism)(
+      (Specs.snapshots :+ Specs.repo.snapshot).map(s => () => {
+        MergeOnRead.appendDelta(Pipelines.freshSnapshot(day, s), morDir, s.table)
+        s.table }) ++
+      Specs.arrayChildren.map(s => () => {
+        MergeOnRead.appendDelta(Pipelines.freshArrayChild(day, s), morDir, s.table)
+        s.table }) ++
+      Specs.traffic.map(s => () => {
+        MergeOnRead.appendDelta(Pipelines.freshTraffic(day, s), morDir, s.table)
+        s.table }) ++
+      Specs.collections.map(s => () => {
+        MergeOnRead.appendDelta(Pipelines.freshCollection(day, s), morDir, s.table)
+        s.table }))
+    finally { day.unpersist(); () }
   }
 
   /** The merge-on-read view for any table maintained by [[runMor]] —
@@ -93,7 +79,6 @@ object ProcessDaily {
     * the documented CommitParent quirk and the collection views' extra
     * `etl_ingest_date` provenance column). */
   def morView(spark: SparkSession, morDir: String, table: String): org.apache.spark.sql.DataFrame = {
-    import graft.ops.MergeOnRead
     (Specs.snapshots :+ Specs.repo.snapshot).find(_.table == table).map(_ =>
       MergeOnRead.readSnapshot(spark, morDir, table,
         Seq("etl_source_id"), Pipelines.mergeOrder))

@@ -315,20 +315,9 @@ object Lifecycle {
     // not optimization. One within-run localCheckpoint materializes the
     // union once (it feeds the two per-day staging reads), freed after
     // the day loop.
-    // -Dgraft.q244.trace=1: per-segment walls to stderr (probe harness
-    // only; a few nanoTime reads, no behavior change)
-    val trace = sys.props.get("graft.q244.trace").contains("1")
-    def seg[T](label: String)(f: => T): T =
-      if (!trace) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"""{"q244seg":"$label","sec":${(System.nanoTime() - t0) / 1e9}%.3f}""")
-        r
-      }
     val render = snapDocs.unionByName(collDocs).unionByName(trafDocs)
     graft.core.PlanTrace.dump("q244_render", render)
-    val raw = seg("render_ckpt")(render.localCheckpoint())
+    val raw = render.localCheckpoint()
     val base = System.getProperty("java.io.tmpdir") +
       s"/graft_q244_${math.abs(dir.hashCode)}"
     val hfs = new Path(base)
@@ -345,31 +334,21 @@ object Lifecycle {
     // jobs (guide §2.6): each executor's write/swap tail back-fills the
     // cores the others' scans freed. The cache materializes ONCE before
     // the threads start so concurrent first-use can't race-compute it.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try Seq("2024-01-01", "2024-01-02").foreach { day =>
-      val staged = seg(s"stage_$day") {
-        val s = graft.ingest.Staging.stage(
-          raw.where(col("day") === day).select("data"), day)
-        s.cache()
-        s.count()
-        s
-      }
-      seg(s"executors_$day") {
-        val runs = Seq[() => Unit](
-          () => { Pipelines.runSnapshot(spark, staged, s"$base/cur", acctSpec); () },
-          () => { Pipelines.runCollection(spark, staged, s"$base/cur", collSpec); () },
-          () => { Pipelines.runTraffic(spark, staged, s"$base/curF", Specs.views,
-            faithful = true); () },
-          () => { Pipelines.runTraffic(spark, staged, s"$base/curC", Specs.views,
-            faithful = false); () }
-        ).map(f => scala.concurrent.Future(f())(ec))
-        runs.foreach(scala.concurrent.Await.result(_,
-          scala.concurrent.duration.Duration.Inf))
-      }
-      staged.unpersist()
-    } finally pool.shutdown()
-    graft.core.Ckpt.free(raw) // both day stages consumed it; blocks are dead
+      val staged = graft.ingest.Staging.stage(
+        raw.where(col("day") === day).select("data"), day)
+      staged.cache()
+      try {
+        staged.count()
+        graft.core.Par.all(4)(Seq(
+          () => Pipelines.runSnapshot(spark, staged, s"$base/cur", acctSpec),
+          () => Pipelines.runCollection(spark, staged, s"$base/cur", collSpec),
+          () => Pipelines.runTraffic(spark, staged, s"$base/curF", Specs.views,
+            faithful = true),
+          () => Pipelines.runTraffic(spark, staged, s"$base/curC", Specs.views,
+            faithful = false)))
+      } finally { staged.unpersist(); () }
+    } finally graft.core.Ckpt.free(raw) // both day stages consumed it
     def uid(c: Column) = substring(c, 10, 30).cast("long")
     val snapF = spark.read.parquet(s"$base/cur/account").select(
       lit("snapshot").as("section"), uid(col("etl_source_id")).as("user_id"),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit artifact generator: materializes the headline queries at a
   * small SF (so AQE reports FINAL plans, not estimates) and writes their
   * `explain("formatted")` output — plus the scale-relevant properties a
@@ -95,16 +93,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     val sb = new StringBuilder
     sb.append("# PLANS — audited physical plans of the headline queries\n\n")
     sb.append(s"Generated by `graft.tools.PlanAudit` at `$sfDir` ")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Decade scaling probe for the round-9 families: the text-analysis
@@ -16,7 +15,10 @@ import org.apache.spark.sql.functions._
   * round-7/8 tiers: per-op codegen warmup at the small corpus, then
   * `SPARK_GRAFT_REPEAT` timed runs (default 1 — at sf10/sf100 runtimes
   * the op dominates sampling noise; use 3 at sf1). Filter with
-  * `SPARK_GRAFT_PROBES` (comma list of label prefixes).
+  * `SPARK_GRAFT_PROBES` (comma list of label prefixes). Point Spark's
+  * `SPARK_LOCAL_DIRS` at a disk directory for sf10+ tiers: the session's
+  * tmpfs scratch is wrong there (the sf100 SRP probe shuffles ~4.6G
+  * candidate pairs and filled /dev/shm until the OOM killer took the JVM).
   */
 object ScaleProbe {
 
@@ -43,22 +45,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf10")
     val warmDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // tmpfs scratch (the bench default) is WRONG at this tier: the sf100
-      // SRP probe shuffles ~4.6G candidate pairs and filled /dev/shm until
-      // the OOM killer took the JVM. SPARK_GRAFT_LOCAL_DIR overrides; the
-      // default here is the DISK tmpdir because probe tiers are exactly
-      // the runs whose shuffle volume exceeds RAM.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-          System.getProperty("java.io.tmpdir")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
 
     // the registry's text + SRP entries, measured as the driver runs them
     for (q <- Seq("q22_lang_id", "q24_token_count", "q40_token_budget",

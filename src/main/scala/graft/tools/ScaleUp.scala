@@ -57,15 +57,7 @@ object ScaleUp {
         s"unknown table(s) ${bad.mkString(",")} — a typo here would " +
           s"silently emit nothing; known: ${known.toSeq.sorted.mkString(",")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     run(spark, src, dst, n, only)
     spark.stop()
   }

@@ -50,4 +50,9 @@ object GraftSqlShim {
         l.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Block until Spark's listener bus (package-private) has delivered every
+    * event posted so far — a listener's fold is complete after this. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
