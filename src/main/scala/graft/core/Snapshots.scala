@@ -21,13 +21,19 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  - a SNAPSHOT is one metadata file `root/_snapshots/s<%09d>.json`
   *    mapping every table to the version that snapshot sees; tables not
   *    re-staged are carried forward from the parent snapshot unchanged;
-  *  - COMMIT is a single temp-write + `rename` to a name that does not
-  *    exist yet — the one atomic primitive every Hadoop filesystem
-  *    guarantees. Either the snapshot file exists completely or not at
-  *    all; there is no pointer file to half-update. A crash anywhere
-  *    before the rename leaves only invisible `v=` staging dirs (reaped
-  *    by [[vacuum]]) and the previous snapshot fully intact — ALL
-  *    tables flip together or none do;
+  *  - COMMIT is a single temp-write + `rename` of the snapshot file —
+  *    the one atomic primitive every Hadoop filesystem guarantees.
+  *    Either the snapshot file exists completely or not at all; there is
+  *    no pointer file to half-update. A crash anywhere before the rename
+  *    leaves only invisible `v=` staging dirs (reaped by [[vacuum]]) and
+  *    the previous snapshot fully intact — ALL tables flip together or
+  *    none do;
+  *  - ONE WRITER per root: [[commit]] checks that the id is new and then
+  *    renames, and on the local filesystem `rename` replaces an existing
+  *    file, so two concurrent committers of the same id are not
+  *    excluded — both would "win". Exclusivity holds only under this
+  *    single-writer contract, which every caller ([[graft.ops.Incremental]]
+  *    included) keeps; readers are unrestricted;
   *  - readers resolve `currentSnapshot` ONCE (max numbered file) and
   *    hold the resolved table→directory map: commits that land later
   *    cannot shift any table under a running query — snapshot isolation
@@ -108,15 +114,19 @@ object Snapshots {
 
   /** Highest committed snapshot id, or None before the first commit.
     * One directory listing of O(snapshots) names — no data dirs touched. */
-  def currentId(spark: SparkSession, root: String): Option[Int] = {
+  def currentId(spark: SparkSession, root: String): Option[Int] =
+    committedIds(fs(spark, root), root).lastOption
+
+  /** Every committed snapshot id, ascending (empty before the first
+    * commit or when the log dir does not exist). */
+  private def committedIds(f: FileSystem, root: String): Seq[Int] = {
     val dir = new Path(root, SnapDir)
-    val f = fs(spark, root)
-    if (!f.exists(dir)) None
+    if (!f.exists(dir)) Nil
     else Option(f.listStatus(dir)).toSeq.flatten
       .map(_.getPath.getName)
       .collect { case n if n.matches("s\\d{9}\\.json") =>
         n.substring(1, 10).toInt }
-      .sorted.lastOption
+      .sorted
   }
 
   /** The table→version map snapshot `id` published. */
@@ -175,11 +185,7 @@ object Snapshots {
   def vacuum(spark: SparkSession, root: String, keepLast: Int): (Int, Int) = {
     require(keepLast >= 1, "must retain at least the current snapshot")
     val f = fs(spark, root)
-    val ids = Option(f.listStatus(new Path(root, SnapDir))).toSeq.flatten
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("s\\d{9}\\.json") =>
-        n.substring(1, 10).toInt }
-      .sorted
+    val ids = committedIds(f, root)
     val (drop, keep) = ids.splitAt(math.max(0, ids.length - keepLast))
     drop.foreach(i =>
       f.delete(new Path(new Path(root, SnapDir), snapName(i)), false))

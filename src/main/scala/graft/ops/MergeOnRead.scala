@@ -94,15 +94,27 @@ object MergeOnRead {
   def readSnapshot(spark: SparkSession, dir: String, table: String,
       keys: Seq[String], order: Seq[Column],
       like: Option[DataFrame] = None): DataFrame = {
+    val (base, deltas) = layers(spark, dir, table, like, identity)
+    Merges.snapshotMerge(base, deltas, keys, order)
+  }
+
+  /** The (base, deltas) pair every view merges: deltas pass through
+    * `deltaFilter` (over the `ingest_date` partition column, which is then
+    * dropped), and a missing layer is an empty frame of the schema from
+    * whichever layer exists (base wins), else from `like`. */
+  private def layers(spark: SparkSession, dir: String, table: String,
+      like: Option[DataFrame], deltaFilter: DataFrame => DataFrame)
+      : (DataFrame, DataFrame) = {
     val base = readOpt(spark, basePath(dir, table))
-    val deltas = readOpt(spark, deltaPath(dir, table)).map(_.drop("ingest_date"))
+    val deltas = readOpt(spark, deltaPath(dir, table))
+      .map(d => deltaFilter(d).drop("ingest_date"))
     val schema = base.orElse(deltas).map(_.schema).orElse(like.map(_.schema))
       .getOrElse(throw new IllegalStateException(
         s"$table has no base, no deltas, and no schema template"))
     def orEmpty(d: Option[DataFrame]) = d.getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    Merges.snapshotMerge(orEmpty(base), orEmpty(deltas), keys, order)
+    (orEmpty(base), orEmpty(deltas))
   }
 
   /** The merge-on-read view for a COLLECTION entity (§2.10b semantics:
@@ -117,15 +129,8 @@ object MergeOnRead {
     * replacement-then-carry-forward recurrence. */
   def readCollectionSnapshot(spark: SparkSession, dir: String, table: String,
       originCol: String, like: Option[DataFrame] = None): DataFrame = {
-    val base = readOpt(spark, basePath(dir, table))
-    val deltas = readOpt(spark, deltaPath(dir, table)).map(_.drop("ingest_date"))
-    val schema = base.orElse(deltas).map(_.schema).orElse(like.map(_.schema))
-      .getOrElse(throw new IllegalStateException(
-        s"$table has no base, no deltas, and no schema template"))
-    def orEmpty(d: Option[DataFrame]) = d.getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    val all = orEmpty(base).unionByName(orEmpty(deltas))
+    val (base, deltas) = layers(spark, dir, table, like, identity)
+    val all = base.unionByName(deltas)
     val winning = all.groupBy(originCol)
       .agg(max(col("etl_ingest_date")).as("__wd"))
     all.join(winning, Seq(originCol))
@@ -188,16 +193,9 @@ object MergeOnRead {
         s"as-of $asOfDay predates the compaction horizon $ct — " +
           "that history was folded into base")
     }
-    val base = readOpt(spark, basePath(dir, table))
-    val deltas = readOpt(spark, deltaPath(dir, table))
-      .map(_.where(col("ingest_date") <= asOfDay).drop("ingest_date"))
-    val schema = base.orElse(deltas).map(_.schema).orElse(like.map(_.schema))
-      .getOrElse(throw new IllegalStateException(
-        s"$table has no base, no deltas, and no schema template"))
-    def orEmpty(d: Option[DataFrame]) = d.getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    Merges.snapshotMerge(orEmpty(base), orEmpty(deltas), keys, order)
+    val (base, deltas) = layers(spark, dir, table, like,
+      _.where(col("ingest_date") <= asOfDay))
+    Merges.snapshotMerge(base, deltas, keys, order)
   }
 
   /** VACUUM: remove stranded maintenance artifacts — `.base_staging_*`

@@ -27,8 +27,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * Registration is by session conf (all five required; rule is inert
   * otherwise — the [[RangeJoinRule]] opt-in discipline):
   *   - `spark.graft.mv.fact`     fact parquet path
-  *   - `spark.graft.mv.partials` partials parquet path (written by
-  *     `Incremental.writePartials`)
+  *   - `spark.graft.mv.partials` partials store path (written by
+  *     `Incremental.writePartials`, read through `Incremental.read`)
   *   - `spark.graft.mv.part`     the partition expression, as SQL over
   *     fact columns (e.g. `date_format(o_orderdate, 'yyyy-MM-dd')`)
   *   - `spark.graft.mv.keys`     comma-separated grouping key columns
@@ -159,13 +159,13 @@ object MvRewriteRule extends Rule[LogicalPlan] {
           case Alias(c, _) => c
           case other => other
         }
-    val partResolved = resolved(partSql)
-    val partCanon = canon(partResolved)
+    val partCanon = canon(resolved(partSql))
     val measureCanon = canon(resolved(measureSql))
 
     // a FRESH partials relation per rewrite: attribute ids must be unique
     // within the rewritten plan
-    val partialsPlan = spark.read.parquet(partials).queryExecution.analyzed
+    val partialsPlan = graft.ops.Incremental.read(spark, partials)
+      .queryExecution.analyzed
     def pAttr(name: String): Option[AttributeReference] =
       partialsPlan.output.find(_.name.equalsIgnoreCase(name))
         .collect { case a: AttributeReference => a }
@@ -174,18 +174,11 @@ object MvRewriteRule extends Rule[LogicalPlan] {
       case Alias(c, _) => c
       case other => other
     }
-    // the partials `part` column may come back as DATE (partition-column
-    // type inference); cast it back to the registered expression's type
-    def partOut: Option[Expression] = pAttr("part").map { a =>
-      if (a.dataType == partResolved.dataType) a
-      else Cast(a, partResolved.dataType, Some(conf.sessionLocalTimeZone))
-    }
-
     // map one fact-side grouping expression to its partials-side dual
     def mapGroup(e: Expression): Option[Expression] = stripAlias(e) match {
       case a: AttributeReference if keys.contains(a.name.toLowerCase) =>
         pAttr(a.name)
-      case other if canon(other) == partCanon => partOut
+      case other if canon(other) == partCanon => pAttr("part")
       case _ => None
     }
 

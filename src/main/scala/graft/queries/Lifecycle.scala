@@ -52,31 +52,25 @@ object Lifecycle {
   }
 
   /** Incremental aggregate maintenance ([[graft.ops.Incremental]]):
-    * monthly revenue by order priority answered from DAY-partitioned
+    * monthly revenue by order priority answered from DAY-grain
     * mergeable partials (count + integer-cents sum/min/max), not from the
     * fact table — the merge path the oracle replays as a two-level
-    * aggregate. The partials path derives from the input dir so scale
-    * factors don't collide. */
+    * aggregate. The partials live in a per-process cache dir
+    * ([[graft.core.FsOps.procCacheDir]]) derived from the input dir, so
+    * scale factors and concurrent processes don't collide. */
   def q86IncrementalAgg(spark: SparkSession, dir: String): DataFrame = {
-    val path = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_partials_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = graft.core.FsOps.procCacheDir("q86", dir)
     val cents = round(col("o_totalprice") * 100).cast("long")
     // build-once, read-many IS the operator's contract: history partials
     // are maintained by daily `refresh` (O(delta)), never rebuilt per
-    // query — so a present, committed table short-circuits straight to
-    // the rollup read. The marker is written AFTER the build returns
-    // (dynamic-partition-overwrite commits emit no _SUCCESS; an
-    // underscore-prefixed file is invisible to the parquet FileIndex).
-    // Re-running the build would be idempotent, just pointless.
-    val marker = new java.io.File(path + "/_GRAFT_COMMITTED")
-    if (!marker.exists()) {
+    // query — so a store with a committed version short-circuits straight
+    // to the rollup read. The store's own commit is the marker.
+    if (graft.core.Snapshots.currentId(spark, path).isEmpty)
       Incremental.writePartials(
         Incremental.buildPartials(table(spark, dir, "orders"),
           date_format(col("o_orderdate"), "yyyy-MM-dd"),
           Seq("o_orderpriority"), cents),
         path)
-      marker.createNewFile()
-    }
     Incremental.rollup(spark, path, substring(col("part"), 1, 7),
         Seq("o_orderpriority"))
       .select(col("grain").as("month"), col("o_orderpriority"),

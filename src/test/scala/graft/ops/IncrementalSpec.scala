@@ -19,13 +19,22 @@ class IncrementalSpec extends SparkSpec {
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toMap
 
-  private def rolledUp(path: String) =
-    Incremental.rollup(spark, path, substring(col("part"), 1, 7),
-        Seq("o_orderpriority"))
-      .collect()
+  /** The first order day from mid-history on: orders on both sides, and
+    * a refresh of it is never empty. */
+  private lazy val cut =
+    orders.where(dayExpr >= "1997-06-15").select(min(dayExpr)).head().getString(0)
+
+  private type Answer = Map[(String, String), (Long, Long, Long, Long)]
+
+  private def answer(rolled: org.apache.spark.sql.DataFrame): Answer =
+    rolled.collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toMap
+
+  private def rolledUp(path: String) =
+    answer(Incremental.rollup(spark, path, substring(col("part"), 1, 7),
+      Seq("o_orderpriority")))
 
   test("rollup over day partials ≡ direct monthly aggregate over the facts") {
     val path = scratch("inc_full")
@@ -35,35 +44,28 @@ class IncrementalSpec extends SparkSpec {
     assert(rolledUp(path) == directMonthly(orders))
   }
 
-  test("late-day refresh is O(delta): only its partition is rewritten, result converges") {
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).toSet
+
+  test("late-day refresh changes only its own part, result converges") {
     val path = scratch("inc_delta")
-    val cut = "1997-06-15" // mid-history day with orders on both sides
     Incremental.writePartials(
       Incremental.buildPartials(orders.where(dayExpr < cut),
         dayExpr, Seq("o_orderpriority"), cents),
       path)
-    def listPartition(day: String): Set[(String, Long)] = {
-      val d = new java.io.File(s"$path/part=$day")
-      if (!d.isDirectory) Set.empty
-      else d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified())).toSet
-    }
-    // an untouched early partition, snapshotted before the refresh
-    val untouchedDay = orders.where(dayExpr < cut)
-      .select(min(dayExpr)).head().getString(0)
-    val before = listPartition(untouchedDay)
-    assert(before.nonEmpty)
+    val before = rows(Incremental.read(spark, path))
     // late-arriving day lands: refresh exactly that day's rows
     Incremental.refresh(orders.where(dayExpr === cut), path,
       dayExpr, Seq("o_orderpriority"), cents)
-    assert(listPartition(untouchedDay) == before,
-      "untouched partition was rewritten — refresh is not O(delta)")
+    val after = rows(Incremental.read(spark, path))
+    assert(after.filter(_.head != cut) == before,
+      "a part the delta lacks changed — refresh is not a part replace")
+    assert(after.exists(_.head == cut))
     assert(rolledUp(path) == directMonthly(orders.where(dayExpr <= cut)))
   }
 
   test("re-refreshing the same day is idempotent") {
     val path = scratch("inc_idem")
-    val cut = "1997-06-15"
     Incremental.writePartials(
       Incremental.buildPartials(orders.where(dayExpr <= cut),
         dayExpr, Seq("o_orderpriority"), cents),
@@ -104,11 +106,11 @@ class IncrementalSpec extends SparkSpec {
     // rolled to year — the multi-granularity serving chain: each level is
     // mergeable state, so NO level ever rereads the facts
     val monthPath = scratch("inc_cascade_month")
-    Incremental.rollup(spark, path, substring(col("part"), 1, 7),
-        Seq("o_orderpriority"))
-      .withColumnRenamed("grain", "part")
-      .repartition(col("part"))
-      .write.mode("overwrite").partitionBy("part").parquet(monthPath)
+    Incremental.writePartials(
+      Incremental.rollup(spark, path, substring(col("part"), 1, 7),
+          Seq("o_orderpriority"))
+        .withColumnRenamed("grain", "part"),
+      monthPath)
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
@@ -138,39 +140,132 @@ class IncrementalSpec extends SparkSpec {
     assert(sortedRows(delta) == sortedRows(fNew.join(customer, Seq("o_custkey"))))
   }
 
-  test("first-ever write of an EMPTY partials frame no-ops the compact view") {
+  private def snapshotIds(path: String) =
+    graft.core.Snapshots.currentId(spark, path)
+
+  test("first-ever write of an EMPTY frame commits an empty version") {
     val path = scratch("inc_empty_first")
-    // round-9 code threw 'Unable to infer schema' here: compactView read
-    // the store root unconditionally after a write that created no files
+    // round-9 code threw 'Unable to infer schema' on this store
     Incremental.writePartials(
       Incremental.buildPartials(orders.where(lit(false)), dayExpr,
         Seq("o_orderpriority"), cents), path)
-    val compact = new java.io.File(path, "_compact")
-    assert(!compact.exists())
+    assert(snapshotIds(path).contains(1))
+    assert(rolledUp(path).isEmpty)
   }
 
-  test("rollup falls back to day dirs when the compact view is STALE") {
-    val path = scratch("inc_stale_view")
-    val cut = "1997-06-15"
-    val before = orders.where(col("o_orderdate") < lit(cut).cast("timestamp"))
+  test("crash before commit: rollup serves the last commit, refresh re-stages") {
+    val path = scratch("inc_crash")
+    val before = orders.where(dayExpr < cut)
     Incremental.writePartials(
       Incremental.buildPartials(before, dayExpr, Seq("o_orderpriority"), cents),
-      path) // builds + stamps the view for the pre-cut store
-    // simulate a crash AFTER a later day-dir write but BEFORE the view
-    // swap: write the remaining days directly, bypassing compactView
-    val after = orders.where(col("o_orderdate") >= lit(cut).cast("timestamp"))
-    Incremental.buildPartials(after, dayExpr, Seq("o_orderpriority"), cents)
-      .repartition(col("part"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("part").parquet(path)
-    // the stale view is still on disk, but its source stamp no longer
-    // matches the day dirs — rollup must NOT serve the pre-cut snapshot
-    // the view froze: it self-heals (rebuilds the view from the day dirs)
-    // and the result reflects the full history
-    assert(new java.io.File(path, "_compact").exists())
-    assert(rolledUp(path) == directMonthly(orders))
-    // and the heal is durable: the rebuilt view's stamp now matches the
-    // day dirs, so the next read is served by the view (same answer)
-    assert(rolledUp(path) == directMonthly(orders))
+      path)
+    // a writer that died after staging version 2 and before its commit:
+    // the staged dir holds the full history, but nothing published it
+    graft.core.Snapshots.stage(spark, path, "partials",
+      Incremental.buildPartials(orders, dayExpr, Seq("o_orderpriority"), cents), 2)
+    assert(snapshotIds(path).contains(1))
+    assert(rolledUp(path) == directMonthly(before))
+    // the next refresh takes the same id, overwrites the staged dir, commits
+    Incremental.refresh(orders.where(dayExpr === cut), path,
+      dayExpr, Seq("o_orderpriority"), cents)
+    assert(snapshotIds(path).contains(2))
+    assert(rolledUp(path) == directMonthly(orders.where(dayExpr <= cut)))
+  }
+
+  /** (relative path, size, mtime) of every file and dir under `root`. */
+  private def listing(root: String): Set[(String, Long, Long)] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.map { p =>
+        val f = p.toFile
+        (base.relativize(p).toString, if (f.isFile) f.length() else 0L,
+          f.lastModified())
+      }.toSet
+    } finally walk.close()
+  }
+
+  test("reads never write: rollup leaves the store byte-for-byte untouched") {
+    val path = scratch("inc_readonly")
+    Incremental.writePartials(
+      Incremental.buildPartials(orders.where(dayExpr < cut),
+        dayExpr, Seq("o_orderpriority"), cents), path)
+    Incremental.refresh(orders.where(dayExpr === cut), path,
+      dayExpr, Seq("o_orderpriority"), cents)
+    val before = listing(path)
+    assert(rolledUp(path) == directMonthly(orders.where(dayExpr <= cut)))
+    assert(Incremental.read(spark, path).count() > 0)
+    assert(listing(path) == before)
+  }
+
+  test("a rollup frame built before a refresh still collects after it") {
+    val path = scratch("inc_pinned")
+    val before = orders.where(dayExpr < cut)
+    Incremental.writePartials(
+      Incremental.buildPartials(before, dayExpr, Seq("o_orderpriority"), cents),
+      path)
+    val pinned = Incremental.rollup(spark, path, substring(col("part"), 1, 7),
+      Seq("o_orderpriority"))
+    Incremental.refresh(orders.where(dayExpr === cut), path,
+      dayExpr, Seq("o_orderpriority"), cents)
+    val got = answer(pinned)
+    assert(got == directMonthly(before))
+    assert(got != directMonthly(orders.where(dayExpr <= cut)))
+    assert(rolledUp(path) == directMonthly(orders.where(dayExpr <= cut)))
+  }
+
+  test("two rollup readers beside one refresh writer see only commits") {
+    val path = scratch("inc_threads")
+    Incremental.writePartials(
+      Incremental.buildPartials(orders.where(dayExpr < cut),
+        dayExpr, Seq("o_orderpriority"), cents), path)
+    val old = directMonthly(orders.where(dayExpr < cut))
+    val fresh = directMonthly(orders.where(dayExpr <= cut))
+    assert(old != fresh)
+    @volatile var refreshedAt = Long.MaxValue
+    // each reader records (start nanos, answer) per read, until one of its
+    // reads has started after the writer returned
+    def reader() = {
+      val out = Seq.newBuilder[(Long, Answer)]
+      var start = 0L
+      while (start <= refreshedAt) {
+        start = System.nanoTime()
+        out += (start -> rolledUp(path))
+      }
+      out.result()
+    }
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val readers = Seq.fill(2)(Future(reader()))
+      Await.result(Future {
+        Thread.sleep(200)
+        Incremental.refresh(orders.where(dayExpr === cut), path,
+          dayExpr, Seq("o_orderpriority"), cents)
+        refreshedAt = System.nanoTime()
+      }, Duration.Inf)
+      val reads = readers.flatMap(Await.result(_, Duration.Inf))
+      assert(reads.forall { case (_, r) => r == old || r == fresh })
+      val late = reads.filter(_._1 > refreshedAt)
+      assert(late.nonEmpty && late.forall(_._2 == fresh))
+    } finally pool.shutdown()
+  }
+
+  test("two refreshes in the same second: the second one's rows are visible") {
+    val path = scratch("inc_same_second")
+    Incremental.writePartials(
+      Incremental.buildPartials(orders.where(dayExpr < cut),
+        dayExpr, Seq("o_orderpriority"), cents), path)
+    // back to back: a wrong batch of the day, then its correction
+    Incremental.refresh(orders.where(dayExpr === cut)
+        .withColumn("o_totalprice", col("o_totalprice") + 1),
+      path, dayExpr, Seq("o_orderpriority"), cents)
+    Incremental.refresh(orders.where(dayExpr === cut), path,
+      dayExpr, Seq("o_orderpriority"), cents)
+    assert(snapshotIds(path).contains(3))
+    assert(rolledUp(path) == directMonthly(orders.where(dayExpr <= cut)))
   }
 }
