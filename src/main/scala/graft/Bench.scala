@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -109,7 +110,7 @@ object Bench {
     graft.core.CodegenWatch.install()
     // one untimed pass of the flagship absorbs JVM/codegen/parquet-footer
     // warmup so per-query timings reflect steady state
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => () }
     // SPARK_GRAFT_ONLY=q19_minhash_lsh,q18_ngram_jaccard — iterate on a
     // subset without paying for the full suite
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -118,10 +119,14 @@ object Bench {
     // One untimed pass per query before its timed passes (disable with
     // SPARK_GRAFT_WARMUP=0). First execution conflates the query with
     // one-time janino/JIT compilation of its generated code — tens of
-    // codegen units for the multi-stage similarity queries, recompiled at
-    // every AQE replan — and on the shared build host that compile cost
-    // varies 10–50× with CPU contention (measured: q18 first run 8–77 s,
-    // second run 3 s, identical binary). Steady state is the metric.
+    // codegen units for the multi-stage similarity queries — and on the
+    // shared build host that compile cost varies 10–50× with CPU
+    // contention (measured: q18 first run 8–77 s, second run 3 s,
+    // identical binary). The timed runs recompile nothing because
+    // Sessions sizes Spark's generated-class cache above any query's
+    // classes: at Spark's default 100 entries a query with more (q244 159,
+    // q64 120 at sf0.01) evicted its own and recompiled them on every
+    // timed run. Steady state is the metric.
     // MEDIAN-of-3 timed runs per query (SPARK_GRAFT_REPEAT overrides):
     // the host's virtio disk intermittently stalls for seconds (same
     // binary measured 25 s and 173 s across runs), and a median absorbs
@@ -145,7 +150,7 @@ object Bench {
         name: String = ""): Double = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
-      catch { case _: Throwable => false }
+      catch { case NonFatal(_) => false }
       val w = (System.nanoTime() - t0) / 1e9
       if (ok) w else -w
     }
@@ -218,7 +223,7 @@ object Bench {
       if (classes.getOrElse(name, "compute") == "fs") fsf else hf
     val effFloors = floors.map { case (k, v) => k -> v * factorOf(k) }
     val results = selected.map { case (name, fn) =>
-      if (warmup) { try fn(spark, sfDir).count() catch { case _: Throwable => () } }
+      if (warmup) { try fn(spark, sfDir).count() catch { case NonFatal(_) => () } }
       val times = (1 to repeat).map(_ => timeOne(fn, name))
       System.err.println(s"[bench] $name runs: ${times.map(t => f"$t%.3f").mkString(", ")}")
       (name, medianWall(times), times)
@@ -281,7 +286,7 @@ object Bench {
     // line (see [[compactLine]]).
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] file write failed: $e") }
     System.err.println(line)
     println(compactLine(total, official.size, official, reruns, hf, out,
       sfDir, cgf, rf, fsf))

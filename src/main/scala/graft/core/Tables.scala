@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 
 /** Table access for the driver-generated test corpus (TESTDATA.md) and for
   * engine-managed curated tables.
@@ -11,9 +11,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * free. Nothing here collects to the driver.
   */
 object Tables {
-  /** Load one test table, e.g. table(spark, "/root/testdata/sf0.01", "lineitem"). */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeEventTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+  /** Load one test table, e.g. table(spark, "/root/testdata/sf0.01", "lineitem").
+    * The schema comes from the parquet footer on the driver
+    * ([[org.apache.spark.sql.GraftSqlShim.parquetSchema]]) — the one Spark
+    * would infer, without the Spark job its inference runs per call. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val reader = GraftSqlShim.parquetSchema(spark, path).fold(spark.read)(s => spark.read.schema(s))
+    normalizeEventTs(reader.parquet(path))
+  }
 
   /** Engine contract for the events stream: `ts` is an epoch-NANOS long.
     *

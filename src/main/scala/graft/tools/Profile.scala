@@ -2,18 +2,21 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import java.util.Properties
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.mutable
 
-/** Where a query's wall goes, for any registry query. Each query runs one
-  * untimed warm-up, then the action Bench times (`fn(spark, sf).count()`)
+/** Where a query's wall goes, for any registry query. Each query runs the
+  * action Bench times (`fn(spark, sf).count()`) once untimed, then again
   * under a Spark job group that one listener folds into a JSON record:
   * wall, jobs, stages, tasks, executor run time, shuffle bytes, the driver
   * gap (wall minus the union of job intervals — planning, driver loops,
-  * listing) and each job's call site and wall; then the final plan.
+  * listing), the Janino compiles the timed action paid for (0 when the
+  * warm-up's generated classes stayed cached) and each job's call site and
+  * wall; then the final plan.
   *
   * Usage: `graft.tools.Profile <sfDir> <q1,q2,…> [outDir]` — with outDir,
   * each plan goes to `<outDir>/<query>.txt` and `graft.plantrace.dir`
@@ -25,7 +28,7 @@ object Profile {
 
   final case class Record(query: String, wallS: Double, jobs: Seq[Job],
       stages: Int, tasks: Int, runS: Double, shuffleRead: Long,
-      shuffleWrite: Long, driverGapS: Double) {
+      shuffleWrite: Long, driverGapS: Double, codegenCompiles: Long) {
     def json: String = {
       def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val js = jobs.map(j => f"""{"id":${j.id},"call_site":${q(j.callSite)},""" +
@@ -33,7 +36,8 @@ object Profile {
       f"""{"query":${q(query)},"wall_s":$wallS%.3f,"jobs":${jobs.size},""" +
         f""""stages":$stages,"tasks":$tasks,"executor_run_s":$runS%.3f,""" +
         f""""shuffle_read_bytes":$shuffleRead,"shuffle_write_bytes":$shuffleWrite,""" +
-        f""""driver_gap_s":$driverGapS%.3f,"job_list":$js}"""
+        f""""driver_gap_s":$driverGapS%.3f,"codegen_compiles":$codegenCompiles,""" +
+        f""""job_list":$js}"""
     }
   }
 
@@ -96,17 +100,20 @@ object Profile {
     }
     try names.map { name =>
       val fn = graft.SparkEntry.queries(name)
-      fn(spark, sfDir).count()
+      // what Dataset.count() executes, kept so its final plan can be shown;
+      // the warm-up runs the same action, so the timed one finds its
+      // generated classes (the collect's row deserializer included) cached
+      def counted() = { val c = fn(spark, sfDir).groupBy().count(); c.collect(); c }
+      counted()
       val fold = new Fold(s"graft-profile-$name")
       sc.addSparkListener(fold)
       // no description: Spark would report it as every SQL call site
       sc.setJobGroup(s"graft-profile-$name", null)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val (t0, ms0) = (System.nanoTime(), System.currentTimeMillis())
-      // what Dataset.count() executes, kept so its final plan can be shown
-      val counted = try {
-        val c = fn(spark, sfDir).groupBy().count(); c.collect(); c
-      } finally sc.clearJobGroup()
+      val timed = try counted() finally sc.clearJobGroup()
       val (wallS, ms1) = ((System.nanoTime() - t0) / 1e9, System.currentTimeMillis())
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       GraftSqlShim.drainListeners(sc)
       sc.removeSparkListener(fold)
       val spans = fold.jobs.values.map { case (_, a, b) => (a max ms0, b min ms1) }
@@ -117,8 +124,8 @@ object Profile {
         fold.jobs.toSeq.map { case (id, (site, a, b)) =>
           Job(id, site, (b - a) / 1e3, fold.jobTasks(id)) },
         fold.stages.size, fold.tasks.toInt, fold.runMs / 1e3, fold.read,
-        fold.write, math.max(0.0, wallS - busyMs / 1e3))
-      val plan = counted.queryExecution.explainString(FormattedMode)
+        fold.write, math.max(0.0, wallS - busyMs / 1e3), compiles)
+      val plan = timed.queryExecution.explainString(FormattedMode)
       outDir.foreach(d => Files.writeString(Paths.get(d, s"$name.txt"), plan))
       (record, plan)
     } finally priorTrace match {

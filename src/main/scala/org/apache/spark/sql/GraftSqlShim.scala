@@ -1,6 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge between graft's custom Catalyst expressions and the public
   * `Column` API. Spark 4 made the Column↔Expression converters
@@ -55,4 +63,40 @@ object GraftSqlShim {
     * event posted so far — a listener's fold is complete after this. */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The schema `spark.read.parquet(path)` infers while schema merging is
+    * off, read on the driver from the one footer Spark's inference reads:
+    * the path itself, or for a directory its first data file in path order
+    * (hidden names skipped as Spark's file index skips them; summary files
+    * are not data — Spark writes none). The conversion is Spark's own: the
+    * Spark-written schema key first, else the Parquet types under the
+    * session's flags, so `nanosAsLong` holds. Spark's inference runs a job
+    * to read that footer; this runs none and keeps nothing, so the schema
+    * is always the file's current one. None when schema merging is on or
+    * the path holds no data file — the caller leaves inference (and its
+    * errors) to Spark. */
+  def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val hadoop = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoop)
+    if (conf.isParquetSchemaMergingEnabled || !fs.exists(root)) return None
+    val top = fs.makeQualified(root)
+    val files = fs.listFiles(root, true)
+    val data = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(p => !Set("_metadata", "_common_metadata").contains(p.getName) &&
+        Iterator.iterate(p)(_.getParent).takeWhile(q => q != null && q != top)
+          .forall(q => !HadoopFSUtils.shouldFilterOutPathName(q.getName)))
+    data.minByOption(_.toString).map { file =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, hadoop),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+        new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+    }
+  }
 }

@@ -4,11 +4,65 @@ import graft.SparkSpec
 import graft.entities.Fixtures
 import graft.ingest.Staging
 import graft.jobs.ProcessDaily
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.types.LongType
 
 /** SQL-first access: the curated warehouse and the test corpus register
   * as views, and multi-table SQL (the reference users' surface) runs
   * against them with engine functions available. */
 class TablesSpec extends SparkSpec {
+
+  private val sf = "/root/testdata/sf0.001"
+  private def sfTables: Seq[String] =
+    new java.io.File(sf).list().toSeq.filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted
+
+  /** `Tables.table` against Spark's own inference: same schema, same rows. */
+  private def assertSameAsInferred(dir: String, name: String): Unit = {
+    val got = Tables.table(spark, dir, name)
+    val want = Tables.normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
+    assert(got.schema == want.schema, name)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(want), name)
+  }
+
+  /** Spark jobs started while `body` runs, counted after the bus drains. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    GraftSqlShim.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftSqlShim.drainListeners(sc) } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("table: footer schema and rows equal spark.read.parquet for every sf0.001 table") {
+    assert(sfTables.size == 10 && sfTables.contains("events"))
+    sfTables.foreach(assertSameAsInferred(sf, _))
+    assert(Tables.table(spark, sf, "events").schema("ts").dataType == LongType)
+  }
+
+  test("table: a two-file directory reads like spark.read.parquet") {
+    val dir = scratch("two-file")
+    spark.range(0, 40).selectExpr("id", "cast(id as string) s",
+        "cast(id * 1.5 as decimal(12, 2)) d", "timestamp_seconds(id) t",
+        "array(id, id + 1) a", "named_struct('k', id, 'v', cast(id as string)) st")
+      .repartition(2).write.parquet(s"$dir/t.parquet")
+    val files = new java.io.File(s"$dir/t.parquet").list().filter(_.endsWith(".parquet"))
+    assert(files.length == 2)
+    assertSameAsInferred(dir, "t")
+  }
+
+  test("table starts no Spark job; schema inference does") {
+    assert(jobsDuring(sfTables.foreach(t => Tables.table(spark, sf, t).schema)) == 0)
+    assert(jobsDuring(spark.read.parquet(s"$sf/orders.parquet").schema) > 0,
+      "the listener must see the inference job, or the 0 above proves nothing")
+  }
 
   test("registerCurated exposes the warehouse to spark.sql joins") {
     val dir = scratch("graft-views")

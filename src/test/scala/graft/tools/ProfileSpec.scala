@@ -14,6 +14,9 @@ class ProfileSpec extends SparkSpec {
     assert(r.jobs.map(_.tasks).sum == r.tasks)
     assert(r.driverGapS >= 0 && r.driverGapS <= r.wallS)
     assert(r.json.startsWith("""{"query":"q1_agg","""))
+    // the warm-up compiled q1's classes; the timed action reuses them
+    assert(r.codegenCompiles == 0)
+    assert(r.json.contains(""""codegen_compiles":0,"""))
     val file = Paths.get(out, "q1_agg.txt")
     assert(Files.isRegularFile(file) && Files.readString(file) == plan)
     assert(plan.contains("AdaptiveSparkPlan"))
