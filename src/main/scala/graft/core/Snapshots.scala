@@ -157,7 +157,7 @@ object Snapshots {
         throw new IllegalArgumentException(
           s"snapshot $id of $root has no table '$table' " +
             s"(has: ${tables.keys.toSeq.sorted.mkString(", ")})"))
-      spark.read.parquet(s"$root/$table/v=$v")
+      Tables.parquet(spark, s"$root/$table/v=$v")
     }
   }
 

@@ -6,20 +6,25 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
   * engine-managed curated tables.
   *
   * At 100 TB each logical table is a directory of parquet (or Delta) files,
-  * partitioned on its natural partition column; `spark.read.parquet(dir)`
-  * gives FileSourceScanExec with partition pruning + predicate pushdown for
+  * partitioned on its natural partition column; [[parquet]] gives
+  * FileSourceScanExec with partition pruning + predicate pushdown for
   * free. Nothing here collects to the driver.
   */
 object Tables {
-  /** Load one test table, e.g. table(spark, "/root/testdata/sf0.01", "lineitem").
-    * The schema comes from the parquet footer on the driver
-    * ([[org.apache.spark.sql.GraftSqlShim.parquetSchema]]) — the one Spark
-    * would infer, without the Spark job its inference runs per call. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val reader = GraftSqlShim.parquetSchema(spark, path).fold(spark.read)(s => spark.read.schema(s))
-    normalizeEventTs(reader.parquet(path))
-  }
+  /** `spark.read.parquet(path)` with the schema read from the parquet
+    * footer on the driver ([[org.apache.spark.sql.GraftSqlShim.parquetSchema]])
+    * — the one Spark would infer, without the Spark job its inference runs
+    * per call. Partition columns (`ingest_date=…` dirs) are still inferred
+    * from the paths. With no data file, or with `mergeSchema` on, Spark
+    * infers as usual, with its own errors. The test corpus, curated-table
+    * registration, merge-on-read layers, snapshot versions, staging and
+    * the full-rewrite executors all read through here. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    GraftSqlShim.parquetSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+
+  /** Load one test table, e.g. table(spark, "/root/testdata/sf0.01", "lineitem"). */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalizeEventTs(parquet(spark, s"$sfDir/$name.parquet"))
 
   /** Engine contract for the events stream: `ts` is an epoch-NANOS long.
     *
@@ -98,7 +103,7 @@ object Tables {
       .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
       .map(_.getPath.getName).sorted
     tables.foreach { t =>
-      spark.read.parquet(s"$curatedDir/$t").createOrReplaceTempView(t)
+      parquet(spark, s"$curatedDir/$t").createOrReplaceTempView(t)
     }
     tables
   }

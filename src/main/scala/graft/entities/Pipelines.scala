@@ -1,5 +1,6 @@
 package graft.entities
 
+import graft.core.Tables
 import graft.json.Docs._
 import graft.ops.Merges
 import graft.entities.Specs._
@@ -144,7 +145,7 @@ object Pipelines {
     val merged = Merges.snapshotMerge(prior, fresh, Seq("etl_source_id"), mergeOrder)
     val result = if (spec.truncate) merged else prior.unionByName(merged)
     overwriteCurated(result, curatedDir, spec.table)
-    spark.read.parquet(tablePath(curatedDir, spec.table))
+    Tables.parquet(spark, tablePath(curatedDir, spec.table))
   }
 
   // -- §2.10(c) array-child normalization -----------------------------------
@@ -183,7 +184,7 @@ object Pipelines {
       Seq("etl_source_id", "element_index"), mergeOrder)
     val result = if (spec.truncate) merged else prior.unionByName(merged)
     overwriteCurated(result, curatedDir, spec.table)
-    spark.read.parquet(tablePath(curatedDir, spec.table))
+    Tables.parquet(spark, tablePath(curatedDir, spec.table))
   }
 
   // -- §2.10(b) collection replacement --------------------------------------
@@ -238,7 +239,7 @@ object Pipelines {
     val prior = readCurated(spark, curatedDir, spec.table, fresh)
     val merged = Merges.collectionMerge(prior, fresh, spec.originCol)
     overwriteCurated(merged, curatedDir, spec.table)
-    spark.read.parquet(tablePath(curatedDir, spec.table))
+    Tables.parquet(spark, tablePath(curatedDir, spec.table))
   }
 
   // -- §2.10(d) traffic pivot -----------------------------------------------
@@ -294,7 +295,7 @@ object Pipelines {
     val prior = readCurated(spark, curatedDir, spec.table, fresh)
     val merged = Merges.snapshotMerge(prior, fresh, spec.dedupKeys, trafficOrder(spec))
     overwriteCurated(merged, curatedDir, spec.table)
-    spark.read.parquet(tablePath(curatedDir, spec.table))
+    Tables.parquet(spark, tablePath(curatedDir, spec.table))
   }
 
   // -- §2.10(e) snapshot + log ----------------------------------------------
@@ -311,7 +312,7 @@ object Pipelines {
       Seq("etl_source_id"), spec.versionField, mergeOrder)
     overwriteCurated(snap, curatedDir, spec.snapshot.table)
     overwriteCurated(log, curatedDir, spec.logTable)
-    (spark.read.parquet(tablePath(curatedDir, spec.snapshot.table)),
-      spark.read.parquet(tablePath(curatedDir, spec.logTable)))
+    (Tables.parquet(spark, tablePath(curatedDir, spec.snapshot.table)),
+      Tables.parquet(spark, tablePath(curatedDir, spec.logTable)))
   }
 }

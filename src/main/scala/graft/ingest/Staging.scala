@@ -80,7 +80,7 @@ object Staging {
   def readStaging(spark: SparkSession, stagingDir: String, ingestDate: String,
       entityFilter: DataFrame => DataFrame = identity): DataFrame =
     entityFilter(
-      spark.read.parquet(stagingDir)
+      graft.core.Tables.parquet(spark, stagingDir)
         // partition-column type inference would surface yyyy-MM-dd as DATE;
         // the staging contract is the reference's string partition key
         // (CreateGitHubDataTable.usql:25)

@@ -49,12 +49,13 @@ object MergeOnRead {
     def attempt(): Option[DataFrame] =
       if (!exists(spark, p)) None
       else
-        // an entity with no rows for any staged day writes an empty delta
-        // dir (_SUCCESS, no part files, no partition dirs) — schema
-        // inference fails there; treat it as absent. A MISSING-path
-        // failure is NOT that case — let it escape so the swap retry
-        // below can recover instead of silently reading an empty base.
-        try Some(spark.read.parquet(p))
+        // a layer with no part file (a delta whose day partitions a
+        // racing compaction just deleted) has no footer to read, and
+        // Spark's inference fails there; treat it as absent. A
+        // MISSING-path failure is NOT that case — let it escape so the
+        // swap retry below can recover instead of silently reading an
+        // empty base.
+        try Some(graft.core.Tables.parquet(spark, p))
         catch { case e: org.apache.spark.sql.AnalysisException
             if !graft.core.FsOps.isMissingPath(e) => None }
     if (p.endsWith("/base")) {
@@ -104,17 +105,30 @@ object MergeOnRead {
     * whichever layer exists (base wins), else from `like`. */
   private def layers(spark: SparkSession, dir: String, table: String,
       like: Option[DataFrame], deltaFilter: DataFrame => DataFrame)
-      : (DataFrame, DataFrame) = {
-    val base = readOpt(spark, basePath(dir, table))
-    val deltas = readOpt(spark, deltaPath(dir, table))
-      .map(d => deltaFilter(d).drop("ingest_date"))
-    val schema = base.orElse(deltas).map(_.schema).orElse(like.map(_.schema))
-      .getOrElse(throw new IllegalStateException(
+      : (DataFrame, DataFrame) =
+    layersOpt(spark, dir, table, like, deltaFilter).getOrElse(
+      throw new IllegalStateException(
         s"$table has no base, no deltas, and no schema template"))
-    def orEmpty(d: Option[DataFrame]) = d.getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    (orEmpty(base), orEmpty(deltas))
+
+  /** [[layers]], or None when neither layer exists and `like` is empty. */
+  private def layersOpt(spark: SparkSession, dir: String, table: String,
+      like: Option[DataFrame], deltaFilter: DataFrame => DataFrame)
+      : Option[(DataFrame, DataFrame)] = {
+    val base = readOpt(spark, basePath(dir, table))
+    // a delta dir with no day partition holds no rows (an entity with no
+    // rows for any staged day, or deltas all compacted away, leave only
+    // _SUCCESS): skip it unread, since Spark runs its inference job over
+    // no files before it fails
+    val deltas =
+      (if (pendingDeltaDays(spark, dir, table).isEmpty) None
+       else readOpt(spark, deltaPath(dir, table)))
+        .map(d => deltaFilter(d).drop("ingest_date"))
+    base.orElse(deltas).map(_.schema).orElse(like.map(_.schema)).map { schema =>
+      def orEmpty(d: Option[DataFrame]) = d.getOrElse(
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+      (orEmpty(base), orEmpty(deltas))
+    }
   }
 
   /** The merge-on-read view for a COLLECTION entity (§2.10b semantics:
@@ -144,9 +158,6 @@ object MergeOnRead {
     * same tmp+rename swap discipline as the curated overwrite. */
   def compact(spark: SparkSession, dir: String, table: String,
       keys: Seq[String], order: Seq[Column]): Unit = {
-    if (readOpt(spark, basePath(dir, table)).isEmpty &&
-        readOpt(spark, deltaPath(dir, table)).isEmpty)
-      return // nothing staged for this table yet — no-op
     val target = new Path(basePath(dir, table))
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ENUMERATE the delta partitions being folded BEFORE reading the
@@ -155,13 +166,14 @@ object MergeOnRead {
     // recursive delete of the whole deltas/ dir afterwards would drop
     // that never-folded day's rows from every subsequent read. Only the
     // partitions this compaction actually folded are GC'd.
-    val dp = new Path(deltaPath(dir, table))
-    val foldedParts: Seq[Path] =
-      if (!fs.exists(dp)) Seq.empty
-      else Option(fs.listStatus(dp)).toSeq.flatten
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest_date="))
-        .map(_.getPath)
-    val snap = readSnapshot(spark, dir, table, keys, order)
+    val foldedParts = pendingDeltaDays(spark, dir, table)
+      .map(d => new Path(deltaPath(dir, table), s"ingest_date=$d"))
+    // each layer is read once, for both the no-op guard and the merge
+    val (base, deltas) = layersOpt(spark, dir, table, None, identity) match {
+      case Some(pair) => pair
+      case None => return // nothing staged for this table yet — no-op
+    }
+    val snap = Merges.snapshotMerge(base, deltas, keys, order)
     val stamp = System.nanoTime()
     val tmp = new Path(s"$dir/$table/.base_staging_$stamp")
     snap.write.mode("overwrite").parquet(tmp.toString)

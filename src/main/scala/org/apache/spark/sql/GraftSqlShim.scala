@@ -81,12 +81,15 @@ object GraftSqlShim {
     val root = new Path(path)
     val fs = root.getFileSystem(hadoop)
     if (conf.isParquetSchemaMergingEnabled || !fs.exists(root)) return None
-    val top = fs.makeQualified(root)
-    val files = fs.listFiles(root, true)
-    val data = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(p => !Set("_metadata", "_common_metadata").contains(p.getName) &&
-        Iterator.iterate(p)(_.getParent).takeWhile(q => q != null && q != top)
-          .forall(q => !HadoopFSUtils.shouldFilterOutPathName(q.getName)))
+    // plain listStatus, one directory at a time, as Spark's file index
+    // lists: FileSystem.listFiles builds a LocatedFileStatus per file, which
+    // copies its permissions, and the local filesystem reads those by
+    // forking `ls` once per file
+    def leaves(dir: Path): Iterator[Path] = fs.listStatus(dir).iterator
+      .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Iterator(s.getPath))
+    val data = (if (fs.getFileStatus(root).isDirectory) leaves(root) else Iterator(root))
+      .filterNot(p => Set("_metadata", "_common_metadata").contains(p.getName))
     data.minByOption(_.toString).map { file =>
       val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, hadoop),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)

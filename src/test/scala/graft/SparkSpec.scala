@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark
@@ -28,5 +30,18 @@ abstract class SparkSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp")), prefix)
     d.toString
+  }
+
+  /** Spark jobs started while `body` runs, counted after the bus drains. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    GraftSqlShim.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftSqlShim.drainListeners(sc) } finally sc.removeSparkListener(listener)
+    jobs.get
   }
 }

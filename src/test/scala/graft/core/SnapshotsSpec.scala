@@ -32,6 +32,23 @@ class SnapshotsSpec extends SparkSpec {
     assert(s2.read(spark, "b").select("day").as[String].head() == "d2")
   }
 
+  test("Snapshot.read and Incremental.read start no Spark job") {
+    val root = scratch("snap_jobs")
+    Snapshots.stage(spark, root, "t", Seq((1, "d1"), (2, "d2")).toDF("k", "day"), 1)
+    Snapshots.commit(spark, root, 1)
+    val incr = scratch("snap_jobs_incr")
+    graft.ops.Incremental.refresh(Seq(("2024-01-01", "a", 150L)).toDF("d", "k", "c"),
+      incr, col("d"), Seq("k"), col("c"))
+    val snap = Snapshots.open(spark, root)
+    val jobs = Map(
+      "Snapshot.read" -> jobsDuring(snap.read(spark, "t").schema),
+      "Incremental.read" -> jobsDuring(graft.ops.Incremental.read(spark, incr).schema))
+    assert(jobs.values.forall(_ == 0), s"jobs per read: $jobs")
+    assert(jobsDuring(spark.read.parquet(s"$root/t/v=1").schema) > 0,
+      "the listener must see the inference job, or the 0 above proves nothing")
+    assert(graft.ops.Incremental.read(spark, incr).count() == 1)
+  }
+
   test("carry-forward: a table not re-staged keeps its parent version") {
     val root = scratch("snap_carry")
     Snapshots.stage(spark, root, "facts", Seq(1, 2, 3).toDF("v"), 1)

@@ -4,9 +4,8 @@ import graft.SparkSpec
 import graft.entities.Fixtures
 import graft.ingest.Staging
 import graft.jobs.ProcessDaily
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.LongType
 
 /** SQL-first access: the curated warehouse and the test corpus register
@@ -26,19 +25,6 @@ class TablesSpec extends SparkSpec {
     assert(got.schema == want.schema, name)
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     assert(rows(got) == rows(want), name)
-  }
-
-  /** Spark jobs started while `body` runs, counted after the bus drains. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    GraftSqlShim.drainListeners(sc)
-    sc.addSparkListener(listener)
-    try { body; GraftSqlShim.drainListeners(sc) } finally sc.removeSparkListener(listener)
-    jobs.get
   }
 
   test("table: footer schema and rows equal spark.read.parquet for every sf0.001 table") {
@@ -64,12 +50,25 @@ class TablesSpec extends SparkSpec {
       "the listener must see the inference job, or the 0 above proves nothing")
   }
 
+  test("store edges read through Tables.parquet, never a bare spark.read.parquet") {
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val offenders = Seq("ops/MergeOnRead.scala", "core/Snapshots.scala",
+        "ingest/Staging.scala", "entities/Pipelines.scala")
+      .filter(f => Files.readString(root.resolve(f)).contains("spark.read.parquet("))
+    assert(offenders.isEmpty, s"read engine-managed stores with Tables.parquet: $offenders")
+  }
+
   test("registerCurated exposes the warehouse to spark.sql joins") {
     val dir = scratch("graft-views")
     Fixtures.writeStandardFixture(s"$dir/raw/v1")
     ProcessDaily.stageAndProcess(spark, s"$dir/raw/v1", s"$dir/staging",
       s"$dir/curated", Fixtures.day1)
-    val tables = Tables.registerCurated(spark, s"$dir/curated")
+    var tables = Seq.empty[String]
+    assert(jobsDuring { tables = Tables.registerCurated(spark, s"$dir/curated") } == 0,
+      "registration reads each table's schema from its footer")
+    assert(jobsDuring(spark.read.parquet(s"$dir/curated/commit").schema) > 0,
+      "the listener must see the inference job, or the 0 above proves nothing")
     assert(tables.contains("commit") && tables.contains("repo"))
     assert(tables.size == 33)
     val joined = spark.sql(

@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.core.Tables
 import graft.entities.{Fixtures, Pipelines, Specs}
 import graft.ingest.Staging
 import graft.jobs.ProcessDaily
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,6 +22,76 @@ class MergeOnReadSpec extends SparkSpec {
   private def freshFor(staging: String, date: String): DataFrame =
     Pipelines.freshSnapshot(
       Staging.readStaging(spark, staging, date), Specs.commit)
+
+  /** A two-day merge-on-read store over the standard fixture, returning
+    * (staging dir, store dir). `commit` is compacted after day 1, so it
+    * has a base and a day-2 delta; `repo_collaborators` (a collection,
+    * never compacted) has two delta days; `user` (day-1 rows only) is
+    * compacted after day 2, so its delta dir holds only `_SUCCESS`. */
+  private def twoDayStore(prefix: String): (String, String) = {
+    val dir = scratch(prefix)
+    val (staging, mor) = (s"$dir/staging", s"$dir/mor")
+    Fixtures.writeStandardFixture(s"$dir/raw/v1")
+    def compact(table: String) =
+      MergeOnRead.compact(spark, mor, table, Seq("etl_source_id"), order)
+    for (d <- Seq(Fixtures.day1, Fixtures.day2)) {
+      Staging.stageDay(spark, s"$dir/raw/v1", staging, d)
+      ProcessDaily.runMor(spark, staging, mor, d.toString)
+      if (d == Fixtures.day1) compact("commit")
+    }
+    compact("user")
+    (staging, mor)
+  }
+
+  private def dataFiles(dir: String): Seq[String] = {
+    val root = new Path(dir)
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.getName)
+      .filter(_.endsWith(".parquet")).toSeq
+  }
+
+  test("morView starts no Spark job: every layer's schema comes from its footer") {
+    val (_, mor) = twoDayStore("graft-mor-jobs")
+    for (layer <- Seq("commit/base", "commit/delta", "repo_collaborators/delta", "user/base"))
+      assert(dataFiles(s"$mor/$layer").nonEmpty, layer)
+    assert(dataFiles(s"$mor/user/delta").isEmpty)
+    val jobs = Seq("commit", "repo_collaborators", "user")
+      .map(t => t -> jobsDuring(ProcessDaily.morView(spark, mor, t).schema)).toMap
+    assert(jobs.values.forall(_ == 0), s"jobs per morView: $jobs")
+    assert(jobsDuring(spark.read.parquet(s"$mor/commit/base").schema) > 0,
+      "the listener must see the inference job, or the 0 above proves nothing")
+    assert(ProcessDaily.morView(spark, mor, "user").count() > 0)
+  }
+
+  test("footer-read layers and staging carry the schema Spark infers, partition columns included") {
+    val (staging, mor) = twoDayStore("graft-mor-schema")
+    for (layer <- Seq("commit/base", "commit/delta", "repo_collaborators/delta")) {
+      val p = s"$mor/$layer"
+      assert(Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+    assert(Tables.parquet(spark, s"$mor/commit/delta").columns.contains("ingest_date"),
+      "the delta's partition column comes from its paths")
+    assert(Tables.parquet(spark, staging).schema == spark.read.parquet(staging).schema)
+    val inferred = spark.read.parquet(staging)
+      .withColumn("ingest_date", col("ingest_date").cast("string"))
+      .withColumn("entity_name", col("entity_name").cast("string"))
+      .where(col("ingest_date") === "2017-03-02")
+    val got = Staging.readStaging(spark, staging, "2017-03-02")
+    assert(got.schema == inferred.schema)
+    assert(rows(got) == rows(inferred) && rows(got).nonEmpty)
+  }
+
+  test("crash between compaction's two renames: morView re-adopts the stranded base") {
+    val (_, mor) = twoDayStore("graft-mor-crash")
+    MergeOnRead.compact(spark, mor, "commit", Seq("etl_source_id"), order)
+    val want = rows(ProcessDaily.morView(spark, mor, "commit"))
+    val base = new Path(s"$mor/commit/base")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(base, new Path(s"$mor/commit/.base_old_${System.nanoTime()}")))
+    assert(!fs.exists(base))
+    assert(rows(ProcessDaily.morView(spark, mor, "commit")) == want && want.nonEmpty)
+    assert(fs.exists(base), "the read re-adopts the stranded base in place")
+  }
 
   test("merge-on-read view ≡ full-rewrite snapshot across two days, compaction invariant") {
     val dir = scratch("graft-mor")
