@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftSqlShim
-import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType}
 
 /** Native Catalyst expression for float-vector dot products.
@@ -335,9 +334,6 @@ object VectorFunctions {
   def vecDot(a: Column, b: Column): Column =
     GraftSqlShim.column(FloatVecDot(
       GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
-
-  /** L2 norm with the same summation order. */
-  def vecNorm(a: Column): Column = sqrt(vecDot(a, a))
 
   /** 0-based index of the argmax-cosine centroid in `cents` (rows scored
     * against the literal matrix — see [[NearestCentroidIdx]]). */

@@ -62,10 +62,6 @@ object Docs {
     jstr(data, path).as(path.replace('.', '_'), meta)
   }
 
-  /** `Utility.GetUSqlString` large-text variant (ProcessDaily.usql:50) —
-    * semantically identical under Spark's unbounded StringType. */
-  def jtext(data: Column, path: String): Column = jstr(data, path)
-
   private lazy val mapper = new ObjectMapper()
 
   /** Flatten one JSON document to the reference's path→value map: dotted

@@ -590,6 +590,8 @@ object Ann {
       dim: Int, bands: Int, width: Int, scale: Long): (DataFrame, Int) = {
     val bpl = math.max(1, 63 / width) // bands per packed long
     val k = (bands + bpl - 1) / bpl
+    graft.core.Trace.attr("srp_width", width)
+    graft.core.Trace.attr("packed_longs", k)
     val blocks = srpSignatureBlocks(df, idCol, vecCol, dim, bands, width, scale)
     val packedCols = (0 until k).map { g =>
       val lo = g * bpl

@@ -1,6 +1,8 @@
 package graft.ops
 
+import graft.core.Trace
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over an edge list — PageRank in exact integer
@@ -72,9 +74,10 @@ object Graph {
   }
 
   /** Quantized PageRank. `edges` must have `src`/`dst` columns (directed;
-    * pass both directions for an undirected graph). Every node must appear
-    * as a src at least once (no dangling mass redistribution — true by
-    * construction for symmetrized graphs). Returns (node, rank_nano) where
+    * pass both directions for an undirected graph). A node that appears
+    * only as a dst keeps its rank (base plus its in-neighbors'
+    * contributions) but passes nothing on: its mass is not redistributed,
+    * the same contract as [[personalizedPageRank]]. Returns (node, rank_nano) where
     * rank_nano is the PageRank in 1e-9 units; the undamped start is
     * 1e9 per node and the per-round base is `(1e9 * (dampDen - dampNum))
     * div dampDen` (e.g. 150,000,000 for damping 0.85).
@@ -87,28 +90,33 @@ object Graph {
     val base = scale * (dampDen - dampNum) / dampDen
     // persist the edge selection once (reusing a caller cache when there
     // is one — round-10); everything else is O(nodes) and derives from the
-    // checkpointed degree table: the contract above (every node appears
-    // as a src) makes deg's key set exactly the node set, so the three
-    // separate distinct passes of rounds 8/9 collapse into one aggregate
+    // checkpointed degree table: each edge counts 1 for its src and 0 for
+    // its dst, exploded in ONE scan of the edge cache (a union of two scans
+    // measured one job more on q87), so its key set is the node set and a
+    // dst-only node has outdeg 0 and never joins as a src
     val e = cacheEdges(edges, "src", "dst")
-    val deg = outDegrees(e.df).localCheckpoint()
+    val deg = e.df.select(explode(array(struct(col("src").as("node"), lit(1L).as("o")),
+        struct(col("dst").as("node"), lit(0L).as("o")))).as("x"))
+      .groupBy(col("x.node").as("node")).agg(sum(col("x.o")).as("outdeg"))
+      .localCheckpoint()
     val nNodes = deg.count()
+    Trace.attr("n_nodes", nNodes)
     val small = nNodes <= broadcastMaxRows(edges.sparkSession)
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val nodes = deg.select(col("src").as("node"))
+    val nodes = deg.select(col("node"))
     // small graphs (measured node count under the broadcast gate): probe
     // the broadcast degree/rank tables map-side over the edge cache — no
     // per-round exchange or sort of the edge list at all (guide §3.1/§2.4).
     // big graphs: the shuffle shape, with edges ⋈ outdeg persisted once.
     val edgesDeg =
-      if (small) e.df.join(b(deg), "src")
+      if (small) e.df.join(b(deg), col("src") === col("node"))
         .select(col("src"), col("dst"), col("outdeg"))
-      else e.df.join(deg, "src")
+      else e.df.join(deg, col("src") === col("node"))
         .select(col("src"), col("dst"), col("outdeg"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var ranks = nodes.select(col("node"), lit(scale).as("r"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
+    for (round <- 1 to iters) Trace.span("pagerank/round") {
       // integral contribution: order-independent under summation
       val contrib = edgesDeg
         .join(b(ranks), col("src") === col("node"))
@@ -120,7 +128,7 @@ object Graph {
         .join(b(contrib), col("node") === col("dst"), "left")
         .select(col("node"),
           (lit(base) + coalesce(col("s"), lit(0L))).as("r"))
-      graft.core.PlanTrace.dump("pagerank_round", upd)
+      if (round == 1) Trace.attr("plan", upd.queryExecution.explainString(FormattedMode))
       ranks = graft.core.Ckpt.roll(upd, ranks)
     }
     if (!small) { edgesDeg.unpersist(); () }
@@ -158,8 +166,9 @@ object Graph {
     var frontier = dist
     var hop = 0
     var done = nDist == 0
-    while (!done && hop < maxHops) {
+    while (!done && hop < maxHops) Trace.span("bfs/hop") {
       hop += 1
+      Trace.attr("n_dist", nDist)
       def b(df: DataFrame, n: Long): DataFrame =
         if (n <= cap) broadcast(df) else df
       val nextPlan = e.df
@@ -167,7 +176,7 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(b(dist, nDist), Seq("node"), "left_anti")
         .select(col("node"), lit(hop).as("dist"))
-      graft.core.PlanTrace.dump("bfs_hop", nextPlan)
+      if (hop == 1) Trace.attr("plan", nextPlan.queryExecution.explainString(FormattedMode))
       val next = nextPlan.localCheckpoint()
       val n = next.count()
       done = n == 0
@@ -210,13 +219,14 @@ object Graph {
     // streams map-side from its cache; the count is one cheap job per
     // round over the just-checkpointed state
     var nDist = dist.count()
-    for (_ <- 1 to iters) {
+    for (round <- 1 to iters) Trace.span("wsp/round") {
+      Trace.attr("n_dist", nDist)
       val b = if (nDist <= cap) broadcast(dist) else dist
       val relax = e.df.join(b, col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("cand"))
         .unionByName(dist.select(col("node"), col("dist").as("cand")))
         .groupBy(col("node")).agg(min(col("cand")).as("dist"))
-      graft.core.PlanTrace.dump("wsp_relax", relax)
+      if (round == 1) Trace.attr("plan", relax.queryExecution.explainString(FormattedMode))
       dist = graft.core.Ckpt.roll(relax, dist)
       nDist = dist.count()
     }
@@ -322,7 +332,9 @@ object Graph {
       .join(seeds, Seq("node"), "left")
       .select(col("node"), coalesce(col("is_seed"), lit(0)).as("is_seed"))
       .localCheckpoint()
-    val small = nodes.count() <= broadcastMaxRows(edges.sparkSession)
+    val nNodes = nodes.count()
+    Trace.attr("n_nodes", nNodes)
+    val small = nNodes <= broadcastMaxRows(edges.sparkSession)
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // small graphs: edges ⋈ broadcast(deg) is map-side over the edge
     // cache — recomputing it per round is cheaper than persisting a
@@ -336,7 +348,7 @@ object Graph {
     var ranks = nodes
       .select(col("node"), (col("is_seed").cast("long") * scale).as("r"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
+    for (round <- 1 to iters) Trace.span("ppr/round") {
       val contrib = edgesDeg
         .join(b(ranks.where(col("r") > 0)), col("src") === col("node"))
         .select(col("dst"),
@@ -347,7 +359,7 @@ object Graph {
         .select(col("node"),
           (col("is_seed").cast("long") * base +
             coalesce(col("s"), lit(0L))).as("r"))
-      graft.core.PlanTrace.dump("ppr_round", upd)
+      if (round == 1) Trace.attr("plan", upd.queryExecution.explainString(FormattedMode))
       ranks = graft.core.Ckpt.roll(upd, ranks)
     }
     if (!small) { edgesDeg.unpersist(); () }
@@ -396,9 +408,11 @@ object Graph {
     // its measured count fits, broadcast it into each round's join so the
     // edge list streams map-side from its cache and each round's only
     // exchange is the O(nodes) partial-aggregated mode shuffle
-    val small = labels.count() <= broadcastMaxRows(edges.sparkSession)
+    val nNodes = labels.count()
+    Trace.attr("n_nodes", nNodes)
+    val small = nNodes <= broadcastMaxRows(edges.sparkSession)
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    for (_ <- 1 to iters) {
+    for (round <- 1 to iters) Trace.span("lpa/round") {
       val neighborVotes = e.df
         .join(b(labels), col("src") === col("node"))
         .select(col("dst").as("node"), col("label"))
@@ -407,7 +421,7 @@ object Graph {
       val upd = votes
         .groupBy(col("node"))
         .agg(mode(col("label"), deterministic = true).as("label"))
-      graft.core.PlanTrace.dump("lpa_round", upd)
+      if (round == 1) Trace.attr("plan", upd.queryExecution.explainString(FormattedMode))
       labels = graft.core.Ckpt.roll(upd, labels)
     }
     e.release()
@@ -446,7 +460,9 @@ object Graph {
       .unionByName(e.df.select(col("dst").as("node")))
       .distinct()
       .localCheckpoint()
-    val small = nodes.count() <= broadcastMaxRows(edges.sparkSession)
+    val nNodes = nodes.count()
+    Trace.attr("n_nodes", nNodes)
+    val small = nNodes <= broadcastMaxRows(edges.sparkSession)
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // SPARSE rounds (round 9): score frames carry only nodes with a
     // nonzero-sum in-/out-neighborhood; everyone else is an implicit 0.
@@ -468,12 +484,12 @@ object Graph {
     var hub = nodes.select(col("node"), lit(scale).as("h"))
       .localCheckpoint()
     var auth: DataFrame = null
-    for (_ <- 1 to iters) {
+    for (round <- 1 to iters) Trace.span("hits/round") {
       val aRaw = e.df.join(b(hub), col("src") === col("node"))
         .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
         .select(col("node"), col("a"))
       val aNorm = renorm(aRaw, "a")
-      graft.core.PlanTrace.dump("hits_halfround", aNorm)
+      if (round == 1) Trace.attr("plan", aNorm.queryExecution.explainString(FormattedMode))
       auth = graft.core.Ckpt.roll(aNorm, auth)
       val hRaw = e.df.join(b(auth), col("dst") === col("node"))
         .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))

@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Deterministic keep-decision: true for ~`fraction` of distinct keys.
-    * h(key ++ salt) mod 1e6 < fraction·1e6, with the engine-independent
-    * md5-derived hash — same keys survive everywhere, forever. */
-  def hashSample(key: Column, fraction: Double, salt: String = "s0"): Column =
-    pmod(TextDedup.hash60(concat(key.cast("string"), lit(":" + salt))),
-      lit(1000000L)) < (fraction * 1e6).toLong
-
   /** Per-stratum deterministic sampling: keep ~`fractions(stratum)` of
     * rows in each stratum (e.g. downsample over-represented languages).
     * Strata absent from the map keep `defaultFraction`. */

@@ -794,9 +794,10 @@ object TextDedup {
     nEdges = sig._1
     var round = 0
     var converged = nEdges == 0
-    while (!converged && round < maxRounds) {
+    while (!converged && round < maxRounds) graft.core.Trace.span("ccstar/round") {
       val upd = smallStar(largeStar(edges))
-      graft.core.PlanTrace.dump("ccstar_round", upd)
+      if (round == 0) graft.core.Trace.attr("plan",
+        upd.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       edges = graft.core.Ckpt.roll(upd, edges)
       val s = checksum(edges)
       converged = s == sig

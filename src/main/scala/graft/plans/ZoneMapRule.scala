@@ -454,8 +454,8 @@ object ZoneMapRule extends Rule[LogicalPlan] {
       verdicts.get(normalize(p)).forall(identity)
     }
     if (survivors.length == inputFiles.length) return None // nothing to prune
-    logInfo(s"zone map pruned ${inputFiles.length - survivors.length}/" +
-      s"${inputFiles.length} files of ${roots.mkString(",")}")
+    graft.core.Trace.attr("files_pruned", inputFiles.length - survivors.length)
+    graft.core.Trace.attr("files_total", inputFiles.length)
     if (survivors.isEmpty) return Some(Filter(cond, LocalRelation(lr.output)))
     val reader = spark.read.schema(fsRel.dataSchema) // no footer re-read
     // basePath re-derives partition columns from the survivor paths;

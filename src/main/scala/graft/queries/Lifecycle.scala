@@ -310,8 +310,11 @@ object Lifecycle {
     // union once (it feeds the two per-day staging reads), freed after
     // the day loop.
     val render = snapDocs.unionByName(collDocs).unionByName(trafDocs)
-    graft.core.PlanTrace.dump("q244_render", render)
-    val raw = render.localCheckpoint()
+    val raw = graft.core.Trace.span("q244/render") {
+      graft.core.Trace.attr("plan",
+        render.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      render.localCheckpoint()
+    }
     val base = System.getProperty("java.io.tmpdir") +
       s"/graft_q244_${math.abs(dir.hashCode)}"
     val hfs = new Path(base)

@@ -208,6 +208,30 @@ class ZoneMapSpec extends SparkSpec {
     }
   }
 
+  test("ZoneMapRule records files pruned and total on the trace (q279's read shape)") {
+    import graft.plans.ZoneMapRule
+    val tbl = scratch("zm_trace")
+    clustered(10000, 10, tbl)
+    ZoneMap.build(spark, tbl, Seq("id"), ZoneMap.defaultZonePath(tbl))
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ ZoneMapRule
+    try {
+      val all = ZoneMap.listDataFiles(spark, tbl).size
+      // the plain read q279 runs: in-table synopsis, a closed range band
+      def banded = spark.read.parquet(tbl)
+        .where(col("id") >= 2000L && col("id") <= 2999L)
+      val (n, trace) = Trace.collect(spark)(Trace.span("q279")(banded.count()))
+      val attrs = trace.spans.find(_.name == "q279").get.attrs.toMap
+      assert(n == 1000)
+      assert(attrs.get("files_total").contains(all))
+      assert(attrs.get("files_pruned").contains(all - banded.inputFiles.length))
+      assert(attrs("files_pruned").asInstanceOf[Int] > 0)
+    } finally {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
+    }
+  }
+
   test("a build AFTER a negative-cached read is seen: build() itself invalidates") {
     import graft.plans.ZoneMapRule
     val tbl = scratch("zm_latebuild")

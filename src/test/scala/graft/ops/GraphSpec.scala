@@ -123,6 +123,25 @@ class GraphSpec extends SparkSpec {
     assert(total <= n * 1000000000L && total > n * 1000000000L - 3 * n)
   }
 
+  test("pageRank keeps a dst-only node's rank, as personalizedPageRank does, " +
+      "with no extra job") {
+    // 1⇄2 plus 2→3: node 3 is never a src. Round 1 from r0 = 1e9 each:
+    // 1→2 gives 850000000, 2→1 and 2→3 give (85·1e9)//200 = 425000000
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L)).toDF("src", "dst")
+    val out = Graph.pageRank(edges, iters = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out == Map(1L -> 575000000L, 2L -> 1000000000L, 3L -> 575000000L))
+    val ppr = Graph.personalizedPageRank(edges, Seq(1L, 2L, 3L).toDF("node"), iters = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ppr == out)
+    // the node set rides the degree aggregate's one scan of the edge cache:
+    // 17 jobs for two rounds, as when the node set was the out-degree keys,
+    // with or without dst-only nodes
+    val sym = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
+    assert(jobsDuring(Graph.pageRank(sym, iters = 2).collect()) == 17)
+    assert(jobsDuring(Graph.pageRank(edges, iters = 2).collect()) == 17)
+  }
+
   test("labelPropagation: triangle and pair collapse to min-label communities") {
     // triangle {1,2,3} plus disconnected pair {10,11}, symmetrized
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L))

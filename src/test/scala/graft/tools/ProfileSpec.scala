@@ -9,10 +9,12 @@ class ProfileSpec extends SparkSpec {
     val out = scratch("profile")
     val Seq((r, plan)) = Profile.run(spark, "/root/testdata/sf0.001",
       Seq("q1_agg"), Some(out))
+    val root = r.root
     assert(r.query == "q1_agg")
-    assert(r.jobs.nonEmpty && r.stages > 0 && r.tasks > 0)
-    assert(r.jobs.map(_.tasks).sum == r.tasks)
-    assert(r.driverGapS >= 0 && r.driverGapS <= r.wallS)
+    assert(root.jobs.nonEmpty && root.stages > 0 && root.tasks > 0)
+    assert(root.jobs.map(_.tasks).sum == root.tasks)
+    assert(root.driverGapS >= 0 && root.driverGapS <= root.wallS)
+    assert(r.trace.unattributed == 0)
     assert(r.json.startsWith("""{"query":"q1_agg","""))
     // the warm-up compiled q1's classes; the timed action reuses them
     assert(r.codegenCompiles == 0)
@@ -20,6 +22,22 @@ class ProfileSpec extends SparkSpec {
     val file = Paths.get(out, "q1_agg.txt")
     assert(Files.isRegularFile(file) && Files.readString(file) == plan)
     assert(plan.contains("AdaptiveSparkPlan"))
-    assert(!sys.props.contains("graft.plantrace.dir"), "plan-trace dir leaked")
+    assert(Files.list(Paths.get(out)).count() == 1, "only the final plan is written")
+  }
+
+  test("q87 yields one span per PageRank round and q168 its ccstar rounds") {
+    val Seq((pr, _), (er, _)) = Profile.run(spark, "/root/testdata/sf0.001",
+      Seq("q87_pagerank", "q168_entity_resolution"), None)
+    val root = pr.root
+    val rounds = pr.trace.spans.filter(_.name == "pagerank/round")
+    assert(rounds.size == 3 && rounds.forall(_.jobs.nonEmpty), pr.json)
+    assert(rounds.head.attrs.toMap.get("plan").exists(_.toString.contains("== Physical Plan ==")))
+    assert(rounds.tail.forall(!_.attrs.toMap.contains("plan")), "only round 1 explains its plan")
+    assert(root.attrs.toMap.contains("n_nodes"))
+    val children = pr.trace.spans.filter(_.parent == root.id)
+    assert(root.jobs.size == root.selfJobs + children.map(_.jobs.size).sum)
+    assert(root.jobs.map(_.tasks).sum == root.tasks)
+    assert(pr.trace.unattributed == 0)
+    assert(er.trace.spans.exists(_.name == "ccstar/round"), er.json)
   }
 }
