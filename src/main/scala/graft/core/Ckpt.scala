@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row}
 
 /** Checkpoint rolling for iterative operators: every round of PageRank /
   * BFS / label propagation / connected components / BPE replaces its
@@ -24,6 +24,22 @@ object Ckpt {
     val out = next.localCheckpoint()
     free(superseded: _*)
     out
+  }
+
+  /** [[roll]] whose checkpoint job also evaluates `metrics` — deterministic
+    * aggregates over `next`, e.g. a row count for a convergence test or a
+    * broadcast gate — and returns them as one row, in the order given.
+    * They ride the checkpoint as an observed metric (`Dataset.observe`, the
+    * frame's last operator), read back from the checkpointed plan itself,
+    * so a round's count or checksum costs no job of its own and waits on no
+    * listener. Over an empty frame a count reads 0 and other aggregates
+    * null. */
+  def rollObserved(next: DataFrame, metrics: Seq[Column],
+      superseded: DataFrame*): (DataFrame, Row) = {
+    val name = java.util.UUID.randomUUID.toString
+    val observed = next.observe(name, metrics.head, metrics.tail: _*)
+    val out = roll(observed, superseded: _*)
+    (out, observed.queryExecution.observedMetrics(name))
   }
 
   /** Free the checkpoint storage of frames that are provably dead. */

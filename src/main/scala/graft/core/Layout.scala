@@ -46,7 +46,7 @@ object Layout {
     if (files.length <= target) return (files.length, files.length)
     val tmp = new org.apache.hadoop.fs.Path(p.getParent,
       s".${p.getName}.compact.tmp")
-    spark.read.parquet(path).repartition(target)
+    Tables.parquet(spark, path).repartition(target)
       .write.mode("overwrite").parquet(tmp.toString)
     // the ONE audited swap ([[graft.core.FsOps.atomicSwap]]): the earlier
     // hand-rolled copy here had no rollback — a failed second rename left
@@ -127,7 +127,7 @@ object Layout {
   def fileRanges(spark: SparkSession, path: String, key: String)
       : Seq[(String, Long, Long)] = {
     import spark.implicits._
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(key)).cast("long").as("mn"), max(col(key)).cast("long").as("mx"))
       .as[(String, Long, Long)].collect().toSeq.sortBy(_._2)

@@ -775,6 +775,7 @@ object Ann {
     // numCentroids <= 0: dial self-turned — K follows the corpus
     // ([[autoGranularity]]), so a rebuild over grown data gets more cells
     val k = if (numCentroids > 0) numCentroids else autoGranularity(df.count())
+    graft.core.Trace.attr("ivf_k", k)
     val centroids =
       if (kmeansIters > 0)
         kmeansCentroids(df, idCol, vecCol, dim, k, kmeansIters)
@@ -1161,6 +1162,7 @@ object Ann {
       threshold: Double, numCentroids: Int, maxBlock: Int = 4096): DataFrame = {
     require(maxBlock >= 1, s"maxBlock must be positive, got $maxBlock")
     val k = if (numCentroids > 0) numCentroids else autoGranularity(df.count())
+    graft.core.Trace.attr("ivf_k", k)
     val centroids = df.where(col(idCol) < k)
     val assigned = assignClusters(df, centroids, idCol, vecCol, dim)
     val gees = assigned.groupBy("__cid")

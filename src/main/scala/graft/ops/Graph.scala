@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * `ProcessDaily.usql` merge inputs) is only ever consumed as flat
   * latest-wins tables; a warehouse user computing influence/centrality over
   * it needs an iterative operator the reference lacks. Spark-first shape:
-  * each PageRank round is one equi-join (edges ⋈ ranks on src) plus one
-  * groupBy(dst) — the canonical distributed formulation. Edges are persisted
-  * once and reused every round; `localCheckpoint` truncates the rank
-  * lineage so round N's plan does not replay rounds 1..N-1.
+  * each PageRank round is one equi-join (edges ⋈ state on src) plus one
+  * groupBy over the contributions and the state's own rows — the canonical
+  * distributed formulation. Edges are persisted once and reused every
+  * round; `localCheckpoint` truncates the state lineage so round N's plan
+  * does not replay rounds 1..N-1.
   *
   * == Why integer "nano-rank" units ==
   * Classic float PageRank sums per-node contributions in engine-internal,
@@ -32,18 +33,19 @@ import org.apache.spark.sql.functions._
   * == 100 TB shape ==
   * Edges shuffle-partition on `src` for the join; ranks are one row per
   * node (orders of magnitude smaller than edges) and shuffle to meet them.
-  * No broadcast of anything O(nodes), no driver-side state — the only
-  * driver value per round is nothing at all (fixed iteration count; rank
-  * mass conservation makes a convergence test unnecessary for the
-  * bounded-iteration contract). A hot dst (celebrity node) is a groupBy
-  * skew, absorbed by AQE skew handling or [[Skew]] salting; partial
-  * aggregation (map-side combine) already collapses most of it.
+  * O(nodes) state is broadcast only under a measured-count gate, and no
+  * state collects to the driver. Every count an operator here acts on — a
+  * broadcast gate, an empty frontier, a peel fixpoint — rides the
+  * checkpoint of the frame it counts as an observed metric
+  * ([[graft.core.Ckpt.rollObserved]]), so no round pays a job for a
+  * driver-side number; PageRank itself needs none past the node count (a
+  * fixed iteration count; rank mass conservation makes a convergence test
+  * unnecessary for the bounded-iteration contract). A hot dst (celebrity
+  * node) is a groupBy skew, absorbed by AQE skew handling or [[Skew]]
+  * salting; partial aggregation (map-side combine) already collapses most
+  * of it.
   */
 object Graph {
-
-  /** Out-degrees of an edge list: one row per distinct src. */
-  def outDegrees(edges: DataFrame, src: String = "src"): DataFrame =
-    edges.groupBy(col(src)).agg(count(lit(1)).as("outdeg"))
 
   /** Max rows for which the O(nodes) state frames (ranks, labels,
     * frontier, degree table) are BROADCAST into each round's join instead
@@ -83,66 +85,76 @@ object Graph {
     * div dampDen` (e.g. 150,000,000 for damping 0.85).
     */
   def pageRank(edges: DataFrame, iters: Int = 3,
-      dampNum: Int = 85, dampDen: Int = 100): DataFrame = {
+      dampNum: Int = 85, dampDen: Int = 100): DataFrame =
+    rank(edges, None, iters, dampNum, dampDen, "pagerank/round")
+
+  /** [[pageRank]] (`seeds` None: every node is a seed) and
+    * [[personalizedPageRank]]. */
+  private def rank(edges: DataFrame, seeds: Option[DataFrame], iters: Int,
+      dampNum: Int, dampDen: Int, span: String): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
     require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
     val scale = 1000000000L
     val base = scale * (dampDen - dampNum) / dampDen
     // persist the edge selection once (reusing a caller cache when there
-    // is one — round-10); everything else is O(nodes) and derives from the
-    // checkpointed degree table: each edge counts 1 for its src and 0 for
-    // its dst, exploded in ONE scan of the edge cache (a union of two scans
-    // measured one job more on q87), so its key set is the node set and a
-    // dst-only node has outdeg 0 and never joins as a src
+    // is one — round 10: the round-9 double persist cost q184 at 32 cores);
+    // everything else is ONE O(nodes) state frame (node, outdeg, is_seed,
+    // r). Each edge counts 1 for its src and 0 for its dst, exploded in ONE
+    // scan of the edge cache (a union of two scans measured one job more
+    // on q87), so the key set is the node set and a dst-only node has
+    // outdeg 0 and never joins as a src. The node count that gates the
+    // broadcast rides the state's checkpoint.
     val e = cacheEdges(edges, "src", "dst")
     val deg = e.df.select(explode(array(struct(col("src").as("node"), lit(1L).as("o")),
         struct(col("dst").as("node"), lit(0L).as("o")))).as("x"))
       .groupBy(col("x.node").as("node")).agg(sum(col("x.o")).as("outdeg"))
-      .localCheckpoint()
-    val nNodes = deg.count()
+    val seeded = seeds.fold(deg.withColumn("is_seed", lit(1))) { s =>
+      deg.join(s.select(col("node")).distinct().withColumn("is_seed", lit(1)),
+          Seq("node"), "left")
+        .select(col("node"), col("outdeg"), coalesce(col("is_seed"), lit(0)).as("is_seed"))
+    }
+    val (init, obs) = graft.core.Ckpt.rollObserved(
+      seeded.withColumn("r", col("is_seed").cast("long") * scale), Seq(count(lit(1))))
+    var state = init
+    val nNodes = obs.getLong(0)
     Trace.attr("n_nodes", nNodes)
     val small = nNodes <= broadcastMaxRows(edges.sparkSession)
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val nodes = deg.select(col("node"))
-    // small graphs (measured node count under the broadcast gate): probe
-    // the broadcast degree/rank tables map-side over the edge cache — no
-    // per-round exchange or sort of the edge list at all (guide §3.1/§2.4).
-    // big graphs: the shuffle shape, with edges ⋈ outdeg persisted once.
-    val edgesDeg =
-      if (small) e.df.join(b(deg), col("src") === col("node"))
-        .select(col("src"), col("dst"), col("outdeg"))
-      else e.df.join(deg, col("src") === col("node"))
-        .select(col("src"), col("dst"), col("outdeg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.select(col("node"), lit(scale).as("r"))
-      .localCheckpoint()
-    for (round <- 1 to iters) Trace.span("pagerank/round") {
-      // integral contribution: order-independent under summation
-      val contrib = edgesDeg
-        .join(b(ranks), col("src") === col("node"))
-        .select(col("dst"),
+    for (round <- 1 to iters) Trace.span(span) {
+      // small graphs (measured node count under the broadcast gate): probe
+      // the broadcast state map-side over the edge cache — no per-round
+      // exchange or sort of the edge list (guide §3.1/§2.4). Integral
+      // contributions are order-independent under summation; the state's
+      // own rows carry c = 0, so ONE aggregate yields every node's new
+      // rank — no left join against a separate node table. A zero rank
+      // (outside PPR's seed horizon) contributes nothing, so it is not sent.
+      val contrib = e.df.join(b(state.where(col("r") > 0)), col("src") === col("node"))
+        .select(col("dst").as("node"), lit(0L).as("outdeg"), lit(0).as("is_seed"),
           expr(s"($dampNum * r) div ($dampDen * outdeg)").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      // roll: checkpoint the new round, free the superseded one's blocks
-      val upd = nodes
-        .join(b(contrib), col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("s"), lit(0L))).as("r"))
+      val upd = contrib
+        .unionByName(state.select(col("node"), col("outdeg"), col("is_seed"),
+          lit(0L).as("c")))
+        .groupBy(col("node"))
+        .agg(max(col("outdeg")).as("outdeg"), max(col("is_seed")).as("is_seed"),
+          sum(col("c")).as("s"))
+        .select(col("node"), col("outdeg"), col("is_seed"),
+          (col("is_seed").cast("long") * base + col("s")).as("r"))
       if (round == 1) Trace.attr("plan", upd.queryExecution.explainString(FormattedMode))
-      ranks = graft.core.Ckpt.roll(upd, ranks)
+      // roll: checkpoint the new round, free the superseded one's blocks
+      state = graft.core.Ckpt.roll(upd, state)
     }
-    if (!small) { edgesDeg.unpersist(); () }
     e.release()
-    graft.core.Ckpt.free(deg)
-    ranks.select(col("node"), col("r").as("rank_nano"))
+    // personalized: nodes outside the seeds' damped horizon are dropped
+    val out = state.select(col("node"), col("r").as("rank_nano"))
+    if (seeds.isEmpty) out else out.where(col("rank_nano") > 0)
   }
 
   /** Multi-source BFS: minimum hop distance from any source node, up to
     * `maxHops`. Frontier iteration — each round expands only the nodes
     * discovered LAST round (one equi-join), drops already-settled nodes
     * with an anti-join against the distance table, and stops early on an
-    * empty frontier (one O(1) driver boolean per round). Unreached nodes
-    * are absent from the result.
+    * empty frontier (its size rides the frontier's checkpoint, so the stop
+    * costs no job of its own). Unreached nodes are absent from the result.
     *
     * This is the third member of the iterative-graph family
     * ([[pageRank]]: fixed-point scores; `TextDedup.connectedComponents`:
@@ -154,14 +166,16 @@ object Graph {
     require(maxHops >= 0 && maxHops <= 100, "maxHops must be in [0, 100]")
     val e = cacheEdges(edges, "src", "dst")
     val cap = broadcastMaxRows(edges.sparkSession)
-    var dist = sources.select(col("node")).distinct()
-      .select(col("node"), lit(0).as("dist")).localCheckpoint()
-    // counts drive both the empty-frontier stop (the same one action per
-    // round the isEmpty spelling paid) and the broadcast gate: frontier
-    // and settled set are O(reached nodes) and broadcast into the expand /
+    // counts drive both the empty-frontier stop and the broadcast gate, and
+    // each rides the checkpoint of the frame it counts: frontier and
+    // settled set are O(reached nodes) and broadcast into the expand /
     // anti joins while they fit, so the edge list is never exchanged
     // (guide §3.1); past the gate the joins fall back to shuffles
-    var nDist = dist.count()
+    val count1 = Seq(count(lit(1)))
+    val (init, obs) = graft.core.Ckpt.rollObserved(sources.select(col("node")).distinct()
+      .select(col("node"), lit(0).as("dist")), count1)
+    var dist = init
+    var nDist = obs.getLong(0)
     var nFrontier = nDist
     var frontier = dist
     var hop = 0
@@ -177,8 +191,8 @@ object Graph {
         .join(b(dist, nDist), Seq("node"), "left_anti")
         .select(col("node"), lit(hop).as("dist"))
       if (hop == 1) Trace.attr("plan", nextPlan.queryExecution.explainString(FormattedMode))
-      val next = nextPlan.localCheckpoint()
-      val n = next.count()
+      val (next, nObs) = graft.core.Ckpt.rollObserved(nextPlan, count1)
+      val n = nObs.getLong(0)
       done = n == 0
       if (!done) {
         // roll: old dist and old frontier (same object at hop 1 —
@@ -212,13 +226,18 @@ object Graph {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
     val e = cacheEdges(edges, "src", "dst", "w")
     val cap = broadcastMaxRows(edges.sparkSession)
-    var dist = sources.select(col("node")).distinct()
-      .select(col("node"), lit(0L).as("dist")).localCheckpoint()
     // the settled set is O(reached nodes): broadcast it into each relax
     // join while its measured count fits (guide §3.1), so the edge list
-    // streams map-side from its cache; the count is one cheap job per
-    // round over the just-checkpointed state
-    var nDist = dist.count()
+    // streams map-side from its cache; the count rides each round's
+    // checkpoint of the distance table
+    var dist: DataFrame = null
+    var nDist = 0L
+    def roll(next: DataFrame): Unit = {
+      val (out, obs) = graft.core.Ckpt.rollObserved(next, Seq(count(lit(1))), dist)
+      dist = out
+      nDist = obs.getLong(0)
+    }
+    roll(sources.select(col("node")).distinct().select(col("node"), lit(0L).as("dist")))
     for (round <- 1 to iters) Trace.span("wsp/round") {
       Trace.attr("n_dist", nDist)
       val b = if (nDist <= cap) broadcast(dist) else dist
@@ -227,8 +246,7 @@ object Graph {
         .unionByName(dist.select(col("node"), col("dist").as("cand")))
         .groupBy(col("node")).agg(min(col("cand")).as("dist"))
       if (round == 1) Trace.attr("plan", relax.queryExecution.explainString(FormattedMode))
-      dist = graft.core.Ckpt.roll(relax, dist)
-      nDist = dist.count()
+      roll(relax)
     }
     e.release()
     dist
@@ -263,8 +281,9 @@ object Graph {
     * Distributed shape per round: one degree aggregate + two anti-joins
     * that delete edges touching peeled nodes; `localCheckpoint` truncates
     * lineage so round N doesn't replay rounds 1..N−1. The only driver
-    * value per round is a 1-row "did anything peel" count — no node set
-    * ever collects. Rounds are bounded by the graph's degeneracy ordering
+    * value per round is the surviving edge count, which rides the round's
+    * checkpoint (a round that peels nothing leaves it unchanged) — no node
+    * set ever collects. Rounds are bounded by the graph's degeneracy ordering
     * depth (typically ≪ 50 on real graphs; `maxIters` caps pathological
     * chains).
     *
@@ -274,20 +293,27 @@ object Graph {
       src: String = "src", dst: String = "dst"): DataFrame = {
     require(k >= 1, s"k must be ≥ 1, got $k")
     def degrees(e: DataFrame): DataFrame =
-      e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
+      e.select(explode(array(col("src"), col("dst"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-    var edges = pairs.select(col(src).as("src"), col(dst).as("dst"))
-      .localCheckpoint()
-    var it = 0
+    // a peeled node has degree ≥ 1, so a round peeled nothing exactly when
+    // its edge count did not drop — and that count rides the round's
+    // checkpoint, so the fixpoint test costs no job of its own
+    var edges: DataFrame = null
+    var nEdges = -1L
     var done = false
+    def roll(next: DataFrame): Unit = {
+      val (out, obs) = graft.core.Ckpt.rollObserved(next, Seq(count(lit(1))), edges)
+      edges = out
+      done = obs.getLong(0) == nEdges
+      nEdges = obs.getLong(0)
+    }
+    roll(pairs.select(col(src).as("src"), col(dst).as("dst")))
+    var it = 0
     while (!done && it < maxIters) {
       val peel = degrees(edges).where(col("degree") < k).select(col("node"))
-      if (peel.limit(1).count() == 0) done = true
-      else edges = graft.core.Ckpt.roll(edges
+      roll(edges
         .join(peel.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
-        .join(peel.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti"),
-        edges)
+        .join(peel.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti"))
       it += 1
     }
     degrees(edges)
@@ -306,68 +332,14 @@ object Graph {
     * any engine/partitioning and DuckDB can replay the unrolled rounds.
     *
     * 100 TB shape: identical to [[pageRank]] — per round one equi-join
-    * (edges⋈ranks on src) + one groupBy(dst); the seed set joins as a
+    * (edges⋈state on src) + one groupBy(node); the seed set joins as a
     * DataFrame (broadcast when small — the common case for "related to
     * this item" queries), never collected. Nodes with rank 0 after
     * `iters` rounds (outside the seeds' damped horizon) are dropped.
     */
   def personalizedPageRank(edges: DataFrame, sources: DataFrame,
-      iters: Int = 3, dampNum: Int = 85, dampDen: Int = 100): DataFrame = {
-    require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
-    require(dampNum > 0 && dampNum < dampDen, "need 0 < dampNum < dampDen")
-    val scale = 1000000000L
-    val base = scale * (dampDen - dampNum) / dampDen
-    // persist the edge selection once, reusing a caller cache when there
-    // is one (round 10 — the round-9 double persist cost q184 at 32
-    // cores). The seed-flagged node set is O(nodes): checkpoint it once
-    // (it feeds every round's update join AND the rank init) and use its
-    // measured count as the broadcast gate, same as [[pageRank]].
-    val e = cacheEdges(edges, "src", "dst")
-    val deg = outDegrees(e.df).localCheckpoint()
-    val seeds = sources.select(col("node")).distinct()
-      .select(col("node"), lit(1).as("is_seed"))
-    val nodes = e.df.select(col("src").as("node"))
-      .unionByName(e.df.select(col("dst").as("node")))
-      .distinct()
-      .join(seeds, Seq("node"), "left")
-      .select(col("node"), coalesce(col("is_seed"), lit(0)).as("is_seed"))
-      .localCheckpoint()
-    val nNodes = nodes.count()
-    Trace.attr("n_nodes", nNodes)
-    val small = nNodes <= broadcastMaxRows(edges.sparkSession)
-    def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // small graphs: edges ⋈ broadcast(deg) is map-side over the edge
-    // cache — recomputing it per round is cheaper than persisting a
-    // second copy of the edge list; big graphs keep the persisted shape
-    val edgesDeg =
-      if (small) e.df.join(b(deg), "src")
-        .select(col("src"), col("dst"), col("outdeg"))
-      else e.df.join(deg, "src")
-        .select(col("src"), col("dst"), col("outdeg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes
-      .select(col("node"), (col("is_seed").cast("long") * scale).as("r"))
-      .localCheckpoint()
-    for (round <- 1 to iters) Trace.span("ppr/round") {
-      val contrib = edgesDeg
-        .join(b(ranks.where(col("r") > 0)), col("src") === col("node"))
-        .select(col("dst"),
-          expr(s"($dampNum * r) div ($dampDen * outdeg)").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val upd = nodes
-        .join(b(contrib), col("node") === col("dst"), "left")
-        .select(col("node"),
-          (col("is_seed").cast("long") * base +
-            coalesce(col("s"), lit(0L))).as("r"))
-      if (round == 1) Trace.attr("plan", upd.queryExecution.explainString(FormattedMode))
-      ranks = graft.core.Ckpt.roll(upd, ranks)
-    }
-    if (!small) { edgesDeg.unpersist(); () }
-    e.release()
-    graft.core.Ckpt.free(deg)
-    graft.core.Ckpt.free(nodes)
-    ranks.where(col("r") > 0).select(col("node"), col("r").as("rank_nano"))
-  }
+      iters: Int = 3, dampNum: Int = 85, dampDen: Int = 100): DataFrame =
+    rank(edges, Some(sources), iters, dampNum, dampDen, "ppr/round")
 
   /** Synchronous label propagation (community detection): every node starts
     * labeled with its own id; each round it adopts the most frequent label
@@ -396,19 +368,19 @@ object Graph {
       includeSelf: Boolean = true): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
     val e = cacheEdges(edges, "src", "dst")
-    // node set in ONE aggregate (union-then-distinct partial-aggregates
-    // map-side; rounds 8/9 paid three distinct passes) — consumed once
-    // for the label init, so no persist of its own
-    var labels = e.df.select(col("src").as("node"))
-      .unionByName(e.df.select(col("dst").as("node")))
-      .distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    // broadcast gate (guide §3.1): the label table is O(nodes) — while
-    // its measured count fits, broadcast it into each round's join so the
-    // edge list streams map-side from its cache and each round's only
-    // exchange is the O(nodes) partial-aggregated mode shuffle
-    val nNodes = labels.count()
+    // node set in ONE aggregate over ONE exploding scan of the edge cache
+    // (rounds 8/9 paid three distinct passes), checkpointed as the label
+    // init. Broadcast gate (guide §3.1): the label table is O(nodes) —
+    // while its count, which rides that checkpoint, fits, broadcast it into
+    // each round's join so the edge list streams map-side from its cache
+    // and each round's only exchange is the O(nodes) partial-aggregated
+    // mode shuffle
+    val (init, obs) = graft.core.Ckpt.rollObserved(
+      e.df.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
+        .select(col("node"), col("node").as("label")),
+      Seq(count(lit(1))))
+    var labels = init
+    val nNodes = obs.getLong(0)
     Trace.attr("n_nodes", nNodes)
     val small = nNodes <= broadcastMaxRows(edges.sparkSession)
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
@@ -452,15 +424,15 @@ object Graph {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
     val scale = 1000000L
     val e = cacheEdges(edges, "src", "dst")
-    // node set in ONE aggregate, checkpointed (it feeds the hub init and
-    // the final zero re-attach); its measured count gates broadcasting
-    // the O(live nodes) score frames into each half-round's join so the
-    // edge list streams map-side from its cache (guide §3.1)
-    val nodes = e.df.select(col("src").as("node"))
-      .unionByName(e.df.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    val nNodes = nodes.count()
+    // node set in ONE aggregate over ONE exploding scan of the edge cache,
+    // checkpointed (it feeds the hub init and the final zero re-attach);
+    // its count rides that checkpoint and gates broadcasting the O(live
+    // nodes) score frames into each half-round's join so the edge list
+    // streams map-side from its cache (guide §3.1)
+    val (nodes, obs) = graft.core.Ckpt.rollObserved(
+      e.df.select(explode(array(col("src"), col("dst"))).as("node")).distinct(),
+      Seq(count(lit(1))))
+    val nNodes = obs.getLong(0)
     Trace.attr("n_nodes", nNodes)
     val small = nNodes <= broadcastMaxRows(edges.sparkSession)
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
@@ -481,8 +453,10 @@ object Graph {
             .otherwise(expr(s"($c * ${scale}L) div __mx"))
             .as(c))
     }
+    // the init is a projection of the checkpointed node set, read once by
+    // round 1 (freeing it in the roll is a no-op), so it needs no
+    // checkpoint of its own
     var hub = nodes.select(col("node"), lit(scale).as("h"))
-      .localCheckpoint()
     var auth: DataFrame = null
     for (round <- 1 to iters) Trace.span("hits/round") {
       val aRaw = e.df.join(b(hub), col("src") === col("node"))

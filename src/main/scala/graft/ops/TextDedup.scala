@@ -450,12 +450,12 @@ object TextDedup {
     *
     * Algorithm: distributed min-label propagation — each round joins
     * labels across edges and takes the per-node min; labels only
-    * decrease, so Σlabels is a convergence certificate (one cheap
-    * aggregate per round, no row-wise diff). Rounds = component diameter;
-    * near-dup components are dense and tiny (diameter ≲ 4 in practice),
-    * so this converges in a handful of rounds — for adversarially long
-    * chains the alternating large-star/small-star variant (O(log n)
-    * rounds) is the drop-in upgrade. Every round is one equi-join + one
+    * decrease, so Σlabels is a convergence certificate (an aggregate
+    * riding each round's checkpoint, no row-wise diff). Rounds = component
+    * diameter; near-dup components are dense and tiny (diameter ≲ 4 in
+    * practice), so this converges in a handful of rounds — for
+    * adversarially long chains the alternating large-star/small-star
+    * variant (O(log n) rounds) is the drop-in upgrade. Every round is one equi-join + one
     * groupBy, fully distributed; `localCheckpoint` truncates the loop's
     * otherwise-exponential lineage. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
@@ -465,32 +465,35 @@ object TextDedup {
       .unionByName(pairs.select(col(bCol).as("src"), a.as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component"))
-      .localCheckpoint()
     // DECIMAL(38,0) sum: labels only ever DECREASE under min-label
     // propagation, so an unchanged sum is a SOUND fixpoint certificate —
     // but hash60-derived ids are ~2^59 and a LONG sum overflows (ANSI:
     // ArithmeticException kills the job) on a few dozen nodes. 38-digit
     // decimal headroom covers ~8e19 such labels; no collision risk the
-    // way an xor checksum would have (xor is not monotone).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("component").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-    var lastSum = labelSum(labels)
+    // way an xor checksum would have (xor is not monotone). The count and
+    // the sum ride each round's checkpoint of the labels.
+    var labels: DataFrame = null
+    var lastSum: java.math.BigDecimal = null
+    var converged = false
+    def roll(next: DataFrame): Unit = {
+      val (out, obs) = graft.core.Ckpt.rollObserved(next,
+        Seq(count(lit(1)), sum(col("component").cast("decimal(38,0)"))), labels)
+      labels = out
+      val s = obs.getDecimal(1)
+      // labels only decrease: equal sum = fixpoint (compareTo: BigDecimal
+      // equals() is scale-sensitive); no labels at all is a fixpoint too
+      converged = obs.getLong(0) == 0 || lastSum != null && s.compareTo(lastSum) == 0
+      lastSum = s
+    }
+    roll(edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("component")))
     var round = 0
-    var converged = labels.isEmpty
     while (!converged && round < maxRounds) {
-      labels = graft.core.Ckpt.roll(labels
+      roll(labels
         .join(edges, col("id") === col("src"))
         .select(col("dst").as("id"), col("component"))
         .unionByName(labels)
-        .groupBy("id").agg(min("component").as("component")), labels)
-      val s = labelSum(labels)
-      // labels only decrease: equal sum = fixpoint (compareTo: BigDecimal
-      // equals() is scale-sensitive)
-      converged = s.compareTo(lastSum) == 0
-      lastSum = s
+        .groupBy("id").agg(min("component").as("component")))
       round += 1
     }
     edges.unpersist()
@@ -646,8 +649,13 @@ object TextDedup {
       .map(_.toLong).getOrElse(2000000L)
     // the gate is one count over the projected input — for the common
     // raw-table caller this is a metadata-cheap scan, and it buys the
-    // right shape on both sides of the knee
-    if (base.count() <= serialMax) {
+    // right shape on both sides of the knee; the count and the shape it
+    // picked are attributes of the caller's trace span
+    val n = base.count()
+    val serial = n <= serialMax
+    graft.core.Trace.attr("sn_rows", n)
+    graft.core.Trace.attr("sn_shape", if (serial) "serial" else "distributed")
+    if (serial) {
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("__sk"), col("doc_a"))
       base.select(
@@ -733,76 +741,60 @@ object TextDedup {
     * rounds (Kiveris et al., "Connected Components in MapReduce and
     * Beyond") — O(log n) rounds regardless of component DIAMETER, where
     * plain min-label propagation needs diameter rounds. Each round is two
-    * groupBy-min + join passes over the edge list; convergence when the
-    * edge list reaches a fixpoint (certified by count + order-invariant
-    * hash checksum, two cheap aggregates). At the fixpoint every
-    * component is a star centered on its minimum id, so the label read
-    * is one more groupBy-min. Same output contract as
+    * window-min passes over the edge list; convergence when the edge list
+    * reaches a fixpoint (certified by count + order-invariant
+    * hash checksum, two aggregates that ride each round's checkpoint). At
+    * the fixpoint every component is a star centered on its minimum id, so
+    * the label read is one more groupBy-min. Same output contract as
     * [[connectedComponents]] (differentially tested); prefer this
     * variant when components can be long chains. */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50): DataFrame = {
-    // broadcast gate (round 10, guide §3.1): each star round joins the
-    // edge list against its per-node `mins` table — O(touched nodes) ≤
-    // 2·|edges| rows. Post-checkpoint frames have no usable size stats,
-    // so the planner picked sort-merge joins (2 exchanges + 2 sorts per
-    // star, 4 per round) for edge lists of a few hundred rows; the
-    // checksum action already counts the edges every round, so gate an
-    // explicit broadcast of `mins` on that MEASURED count — past the gate
-    // the shuffle shape is unchanged.
-    val bcastMax = pairs.sparkSession.conf
-      .getOption("spark.graft.cc.broadcastMaxEdges")
-      .map(_.toLong).getOrElse(1000000L)
-    var nEdges = 0L
-    def b(df: DataFrame): DataFrame =
-      if (nEdges <= bcastMax) broadcast(df) else df
-    // large-star: every u links its LARGER neighbors to m = min(N(u)∪{u})
-    def largeStar(e: DataFrame): DataFrame = {
-      val und = e.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      val mins = und.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-      und.join(b(mins), Seq("u"))
-        .where(col("v") > col("u"))
+    // each star's per-node min is a window over the node's edges, so a
+    // round is three exchanges and no join or broadcast
+    // large-star: every u links its LARGER neighbors to m = min(N(u)∪{u});
+    // no distinct: duplicates change neither smallStar's per-node min nor
+    // its own final distinct
+    def largeStar(e: DataFrame): DataFrame =
+      e.select(explode(array(struct(col("a").as("u"), col("b").as("v")),
+          struct(col("b").as("u"), col("a").as("v")))).as("x"))
+        .select(col("x.u").as("u"), col("x.v").as("v"))
+        .withColumn("m", least(min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
+        .where(col("v") > col("u") && col("v") =!= col("m"))
         .select(col("v").as("a"), col("m").as("b"))
-        .where(col("a") =!= col("b"))
-        .distinct()
-    }
     // small-star: orient each edge large→small; every u links its
     // not-larger neighbors (and itself) to their collective min
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      val mins = dir.groupBy("u").agg(min(col("v")).as("m"))
-      val joined = dir.join(b(mins), Seq("u"))
-      joined.select(col("v").as("a"), col("m").as("b"))
-        .unionByName(joined.select(col("u").as("a"), col("m").as("b")))
-        .where(col("a") =!= col("b"))
+    def smallStar(e: DataFrame): DataFrame =
+      e.select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
+        .withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
+        .select(explode(array(struct(col("v").as("a"), col("m").as("b")),
+          struct(col("u").as("a"), col("m").as("b")))).as("x"))
+        .where(col("x.a") =!= col("x.b"))
+        .select(col("x.a").as("a"), col("x.b").as("b"))
         .distinct()
+    // fixpoint certificate: count + order-invariant, overflow-free
+    // bit_xor checksum (a sum would overflow the ANSI long on large edge
+    // lists), riding each round's checkpoint of the edge list
+    var edges: DataFrame = null
+    var sig: (Long, Long) = null
+    var converged = false
+    def roll(next: DataFrame): Unit = {
+      val (out, obs) = graft.core.Ckpt.rollObserved(next, Seq(count(lit(1)),
+        coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L))), edges)
+      edges = out
+      val s = (obs.getLong(0), obs.getLong(1))
+      converged = s._1 == 0 || s == sig
+      sig = s
     }
-    def checksum(e: DataFrame): (Long, Long) = {
-      // bit_xor: order-invariant and overflow-free (a sum would overflow
-      // the ANSI long on large edge lists)
-      val r = e.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var edges = pairs.select(col(aCol).cast("long").as("a"),
-        col(bCol).cast("long").as("b"))
+    roll(pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint()
-    var sig = checksum(edges)
-    nEdges = sig._1
+      .distinct())
     var round = 0
-    var converged = nEdges == 0
     while (!converged && round < maxRounds) graft.core.Trace.span("ccstar/round") {
       val upd = smallStar(largeStar(edges))
       if (round == 0) graft.core.Trace.attr("plan",
         upd.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
-      edges = graft.core.Ckpt.roll(upd, edges)
-      val s = checksum(edges)
-      converged = s == sig
-      sig = s
-      nEdges = s._1
+      roll(upd)
       round += 1
     }
     // stars: every member has an edge to the component min

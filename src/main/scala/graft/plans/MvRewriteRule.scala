@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * A user (or BI tool) writes the natural query —
   * {{{
-  *   spark.read.parquet(factPath)
+  *   Tables.parquet(spark, factPath)
   *     .groupBy(date_format($"o_orderdate", "yyyy-MM-dd"), $"o_orderpriority")
   *     .agg(count(lit(1)), sum(cents), min(cents), max(cents))
   * }}}
@@ -151,7 +151,7 @@ object MvRewriteRule extends Rule[LogicalPlan] {
 
     // resolve the registered expressions against the fact schema so the
     // comparison sees ANALYZED trees (implicit casts, resolved functions)
-    val factDf = spark.read.parquet(fact)
+    val factDf = graft.core.Tables.parquet(spark, fact)
     def resolved(sql: String): Expression =
       factDf.select(org.apache.spark.sql.functions.expr(sql))
         .queryExecution.analyzed.asInstanceOf[Project]

@@ -75,7 +75,7 @@ object ResultCache {
       if (!fs.rename(tmp, dest)) fs.delete(tmp, true) // lost the race: a
       // concurrent miss committed the same fingerprint — use theirs
     }
-    spark.read.parquet(dest.toString)
+    graft.core.Tables.parquet(spark, dest.toString)
   }
 
   /** True if `df`'s current fingerprint is already materialized. */

@@ -66,6 +66,29 @@ class CkptSpec extends SparkSpec {
     Ckpt.free(state)
   }
 
+  test("rollObserved: its count equals count(), 0 rows included, on the " +
+      "checkpoint's own job, and it frees the superseded frames") {
+    val prev = Seq(1L, 2L, 3L).toDF("x").localCheckpoint()
+    val before = persistedCount
+    val metrics = Seq(count(lit(1)), sum(col("x")))
+    val next = prev.where(col("x") > 1)
+    val plain = jobsDuring(Ckpt.free(next.localCheckpoint()))
+    var out: org.apache.spark.sql.DataFrame = null
+    var row: org.apache.spark.sql.Row = null
+    val jobs = jobsDuring { val (o, r) = Ckpt.rollObserved(next, metrics, prev, null); out = o; row = r }
+    assert(jobs == plain, "the metrics ride the checkpoint: no job beyond its own")
+    assert(row.getLong(0) == out.count() && row.getLong(0) == 2L && row.getLong(1) == 5L)
+    assert(persistedCount - before == 0, "prev freed, only the new state is held")
+    assert(out.as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+    // empty frames: a filtered checkpoint and a local relation
+    for (empty <- Seq(out.where(col("x") > 9), Seq.empty[Long].toDF("x"))) {
+      val (e, r) = Ckpt.rollObserved(empty, metrics)
+      assert(r.getLong(0) == 0L && r.getLong(0) == e.count() && r.isNullAt(1))
+      Ckpt.free(e)
+    }
+    Ckpt.free(out)
+  }
+
   test("free is idempotent and null-tolerant") {
     val df = Seq(1L).toDF("x").localCheckpoint()
     Ckpt.free(df, df, null)

@@ -134,12 +134,49 @@ class GraphSpec extends SparkSpec {
     val ppr = Graph.personalizedPageRank(edges, Seq(1L, 2L, 3L).toDF("node"), iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ppr == out)
-    // the node set rides the degree aggregate's one scan of the edge cache:
-    // 17 jobs for two rounds, as when the node set was the out-degree keys,
-    // with or without dst-only nodes
+    // the node set rides the state's one scan of the edge cache: 10 jobs
+    // for two rounds, with or without dst-only nodes
     val sym = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
-    assert(jobsDuring(Graph.pageRank(sym, iters = 2).collect()) == 17)
-    assert(jobsDuring(Graph.pageRank(edges, iters = 2).collect()) == 17)
+    assert(jobsDuring(Graph.pageRank(sym, iters = 2).collect()) == 10)
+    assert(jobsDuring(Graph.pageRank(edges, iters = 2).collect()) == 10)
+  }
+
+  test("warm calls pin their job counts: every count rides a checkpoint") {
+    val sym = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L), (4L, 3L))
+      .toDF("src", "dst")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
+    def warm(body: => Unit): Int = { body; jobsDuring(body) }
+    val got = Map(
+      "pageRank" -> warm(Graph.pageRank(sym, iters = 2).collect()),
+      "shortestPaths" -> warm(Graph.shortestPaths(sym, Seq(1L).toDF("node"),
+        maxHops = 6).collect()),
+      "labelPropagation" -> warm(Graph.labelPropagation(sym, iters = 2).collect()),
+      "connectedComponentsStar" -> warm(TextDedup.connectedComponentsStar(pairs,
+        "a", "b").collect()))
+    assert(got == Map("pageRank" -> 10, "shortestPaths" -> 20,
+      "labelPropagation" -> 10, "connectedComponentsStar" -> 16))
+  }
+
+  test("edge cases stop on the observed counts: disconnected BFS, emptied k-core, " +
+      "empty CC-star") {
+    // 1→2→3 plus an island 9→10: the frontier empties at hop 3 of 10
+    val edges = Seq((1L, 2L), (2L, 3L), (9L, 10L)).toDF("src", "dst")
+    val (bfs, trace) = graft.core.Trace.collect(spark)(
+      Graph.shortestPaths(edges, Seq(1L).toDF("node"), maxHops = 10)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+    assert(bfs == Map(1L -> 0, 2L -> 1, 3L -> 2))
+    assert(trace.spans.count(_.name == "bfs/hop") == 3)
+    assert(Graph.shortestPaths(edges, Seq(7L).toDF("node").where($"node" > 7L))
+      .count() == 0)
+    // the path 1–2–3 has no 2-core: the first peel drops every edge
+    val path = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    assert(Graph.kCore(path, k = 2).count() == 0)
+    assert(Graph.kCore(path.where($"src" > 5L), k = 1).count() == 0)
+    // no pairs, and pairs that are all self-loops, give no components
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(TextDedup.connectedComponentsStar(none, "a", "b").count() == 0)
+    assert(TextDedup.connectedComponentsStar(Seq((5L, 5L)).toDF("a", "b"), "a", "b")
+      .count() == 0)
   }
 
   test("labelPropagation: triangle and pair collapse to min-label communities") {

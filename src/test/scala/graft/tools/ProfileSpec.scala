@@ -39,5 +39,19 @@ class ProfileSpec extends SparkSpec {
     assert(root.jobs.map(_.tasks).sum == root.tasks)
     assert(pr.trace.unattributed == 0)
     assert(er.trace.spans.exists(_.name == "ccstar/round"), er.json)
+    // the sorted-neighborhood gate: its measured row count and the shape
+    val gate = er.root.attrs.toMap
+    assert(gate.get("sn_shape").contains("serial"), er.json)
+    assert(gate.get("sn_rows").exists { case n: Long => n > 0; case _ => false }, er.json)
+  }
+
+  test("query_iter's four queries stay within their warm-call job budgets at sf0.01") {
+    // Profile's warm-call counts at 3 slots, with every gate and
+    // convergence count riding a round checkpoint
+    val budget = Map("q87_pagerank" -> 16, "q96_bfs" -> 24,
+      "q168_entity_resolution" -> 16, "q183_label_prop" -> 16)
+    val got = Profile.run(spark, "/root/testdata/sf0.01", budget.keys.toSeq.sorted, None)
+      .map { case (r, _) => r.query -> r.root.jobs.size }.toMap
+    assert(got.forall { case (q, n) => n <= budget(q) }, got)
   }
 }
