@@ -22,11 +22,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * NESTS instead of replacing, which would both corrupt the rollback
   * path and strand the prior leftover forever.
   *
-  * Extracted from the two hand-rolled copies in `MergeOnRead.compact`
-  * and `Ann.ivfCompactDeltas` — crash-safety-critical code should exist
-  * once. Callers stage the full replacement (including any marker files
-  * that must publish atomically WITH the data — e.g. the IVF
-  * `_compacted_to` watermark) inside `tmp` BEFORE calling. */
+  * Callers are the path-addressed stores that readers (and perfbench)
+  * open by path: the merge-on-read base (`MergeOnRead.compact`), the
+  * curated tables (`Pipelines.overwriteCurated`) and `Layout.compact`.
+  * Every versioned store is on [[Snapshots]] instead, and
+  * `CommitGateSpec` fails on a new caller anywhere else. Callers stage
+  * the full replacement inside `tmp` BEFORE calling. */
 object FsOps {
 
   def atomicSwap(fs: FileSystem, tmp: Path, target: Path, old: Path): Unit = {
@@ -104,17 +105,15 @@ object FsOps {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Process-scoped build-once cache root under java.io.tmpdir. The
-    * build-once pattern (write table → createNewFile marker → readers
-    * skip the build) is guarded by a NON-ATOMIC marker: two processes
-    * (a bench and a concurrent sbt test) can race build-vs-read, and a
-    * crash between the table write and the marker leaves a half-built
-    * state a later run rebuilds with mode(overwrite) WHILE the other
-    * process scans it. Staging+rename can't fix it here because zone
-    * synopses record absolute per-file paths. The pid in the path
-    * confines the marker protocol to its single process — the first
-    * execution per process rebuilds, which the bench's untimed warmup
-    * pass absorbs. */
+  /** Process-scoped root of a build-once query cache under
+    * java.io.tmpdir, keyed by the input dir. The cache is a [[Snapshots]]
+    * root whose first commit is its completion marker
+    * ([[Snapshots.openOrBuild]]): a crashed build is invisible and the
+    * next call rebuilds into its own version dirs, which are never
+    * renamed, so the absolute file paths a zone synopsis records stay
+    * valid. The pid in the path keeps one process's caches from being
+    * read by another built from different code; the first execution per
+    * process builds, which the bench's untimed warmup pass absorbs. */
   def procCacheDir(tag: String, sfDir: String): String =
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_" + tag +
       "_p" + java.lang.ProcessHandle.current().pid() + "_" +

@@ -73,23 +73,20 @@ object Maintain {
     * centroids, so after enough drifted batches the cell means walk away
     * from the centroids and recall-per-probe decays. This job closes the
     * loop: read [[graft.ops.Ann.ivfStaleness]] (K rows — max L2 gap
-    * between each stored centroid and its cell's current mean), and if
-    * any cell exceeds `staleThreshold`, RETRAIN — one
-    * [[graft.ops.Ann.buildIvfIndex]] call over the index's own vectors
-    * with `kmeansIters` Lloyd's rounds producing fresh centroids and a
-    * fresh assignment layout. Below threshold it is a strict no-op: not
-    * a byte of the index moves (the spec pins this).
+    * between each stored centroid and its cell's current mean, deltas
+    * included), and if any cell exceeds `staleThreshold`, RETRAIN — one
+    * commit over the index's own live vectors (base ∪ deltas of one
+    * pinned snapshot) with `kmeansIters` Lloyd's rounds producing fresh
+    * centroids and a fresh assignment layout. The commit folds the
+    * deltas and carries the stream watermark forward, so replayed
+    * micro-batches stay hidden across a retrain. Below threshold it is a
+    * strict no-op: no version is committed (the spec pins this).
     *
     * Scale: the decision reads K staleness rows (bounded driver class);
     * the rebuild, when triggered, is the same O(corpus) cost as the
     * original build — which is the point of gating it on a threshold
-    * instead of rebuilding nightly. The rebuild first FOLDS any live
-    * streaming deltas into the base (so retraining sees every vector
-    * the index owns), re-reads the index's own assignment files
-    * (localCheckpoint'd before the overwrite so the rebuild never reads
-    * the path it writes), and re-stamps the compaction watermark the
-    * overwrite wiped — replayed micro-batches stay hidden across a
-    * retrain.
+    * instead of rebuilding nightly. It reads the pinned version's
+    * immutable files, so nothing is copied aside first.
     *
     * `numCentroids <= 0`: the retrain FOLLOWS CORPUS GROWTH — the same
     * appends that drifted the centroids also grew n, so the rebuild
@@ -107,25 +104,8 @@ object Maintain {
     val st = graft.ops.Ann.ivfStaleness(spark, indexPath, dim).collect()
     val maxStale = if (st.isEmpty) 0.0 else st.map(_.getDouble(2)).max
     val rebuilt = maxStale > staleThreshold
-    if (rebuilt) {
-      // streaming-fed indexes may hold un-compacted deltas: fold them
-      // FIRST so the retrain sees every live vector, and capture the
-      // advanced watermark — buildIvfIndex's overwrite wipes the
-      // `_compacted_to` marker, and without re-stamping it a replayed
-      // (already-folded) micro-batch would surface again and
-      // double-count in every read after the rebuild
-      graft.ops.Ann.ivfCompactDeltas(spark, indexPath)
-      val watermark = graft.ops.Ann.ivfWatermark(spark, indexPath)
-      val all = spark.read.parquet(s"$indexPath/assignments")
-        .select(org.apache.spark.sql.functions.col("vec_id"),
-          org.apache.spark.sql.functions.col("vec"))
-        .localCheckpoint() // materialize BEFORE overwriting the source path
-      graft.ops.Ann.buildIvfIndex(all, "vec_id", "vec", dim, numCentroids,
-        indexPath, kmeansIters)
-      if (watermark >= 0)
-        graft.ops.Ann.writeIvfWatermark(spark, indexPath, watermark)
-      graft.core.Ckpt.free(all) // rebuild consumed it; blocks are dead
-    }
+    if (rebuilt)
+      graft.ops.Ann.ivfRetrain(spark, indexPath, dim, numCentroids, kmeansIters)
     Seq(IvfReport(indexPath, st.length.toLong, maxStale, rebuilt)).toDF()
   }
 }

@@ -769,9 +769,25 @@ object Ann {
     * clusters, hence better recall per probe, at the cost of `iters`
     * training passes at build time; `kmeansIters = 0` keeps the
     * deterministic id<K seed ([[ivfTopK]]). Layout is identical either
-    * way, so queries don't care how the index was built. */
+    * way, so queries don't care how the index was built.
+    *
+    * The index is one [[graft.core.Snapshots]] root: `centroids` and
+    * `assignments` are its tables, and each appended batch is a delta
+    * table beside them (`batch_<id>` from a stream, `append_<version>`
+    * from [[ivfAppend]]) until [[ivfCompactDeltas]] folds it. Every
+    * write stages and commits one version and keeps the last two, so a
+    * reader pinned to the previous version keeps reading. A build over
+    * an existing index replaces it in one commit and folds its deltas. */
   def buildIvfIndex(df: DataFrame, idCol: String, vecCol: String, dim: Int,
       numCentroids: Int, path: String, kmeansIters: Int = 0): Unit = {
+    val txn = graft.core.Snapshots.begin(df.sparkSession, path)
+    stageIndex(txn, df, idCol, vecCol, dim, numCentroids, kmeansIters)
+    commitIvf(txn)
+  }
+
+  private def stageIndex(txn: graft.core.Snapshots.Txn, df: DataFrame,
+      idCol: String, vecCol: String, dim: Int, numCentroids: Int,
+      kmeansIters: Int): Unit = {
     // numCentroids <= 0: dial self-turned — K follows the corpus
     // ([[autoGranularity]]), so a rebuild over grown data gets more cells
     val k = if (numCentroids > 0) numCentroids else autoGranularity(df.count())
@@ -782,11 +798,10 @@ object Ann {
           .select(col("cid").as(idCol), col("vec").as(vecCol))
       else df.where(col(idCol) < k)
         .select(col(idCol), col(vecCol))
-    withNorm(centroids, idCol, vecCol, dim)
+    txn.stage("centroids", withNorm(centroids, idCol, vecCol, dim)
       .select(col("__vid").as("cid"), col("__vec").as("cvec"),
         col("__nrm").as("cnrm"))
-      .coalesce(1) // K rows — one file, broadcast at query time
-      .write.mode("overwrite").parquet(s"$path/centroids")
+      .coalesce(1)) // K rows — one file, broadcast at query time
     assignClusters(df, centroids, idCol, vecCol, dim)
       .select(col("__vid").as("vec_id"), col("__vec").as("vec"),
         col("__nrm").as("nrm"), col("__cid").as("cid"))
@@ -796,8 +811,8 @@ object Ann {
       // guide §6); [[clusterForWrite]] additionally lets AQE split a
       // hot cell across tasks by measured size (guide §2.2/§6).
       .transform(clusterForWrite)
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$path/assignments")
+      .write.partitionBy("cid").parquet(txn.dir("assignments"))
+    foldDeltas(txn)
   }
 
   /** Route rows to write tasks for a `partitionBy("cid")` parquet write.
@@ -818,24 +833,52 @@ object Ann {
     df.hint("rebalance", col("cid"))
 
   /** Incremental IVF maintenance: assign a batch of NEW vectors against
-    * the index's PERSISTED centroids and append them to the `cid=`
-    * partitions — the index absorbs the batch without retraining and
-    * without touching any existing cell's files (parquet append writes
-    * new files inside the partition dirs). Because cell membership
-    * depends only on the frozen centroids, build-then-append is
-    * CONTENT-IDENTICAL to a one-shot build over the union — the
-    * invariant q270's oracle hash-checks. Cost is one broadcast-K
-    * assignment pass over the batch, O(batch), never O(index).
+    * the index's PERSISTED centroids and commit them as a delta table —
+    * the index absorbs the batch without retraining and without touching
+    * any existing file. Because cell membership depends only on the
+    * frozen centroids, build-then-append is CONTENT-IDENTICAL to a
+    * one-shot build over the union — the invariant q270's oracle
+    * hash-checks. Cost is one broadcast-K assignment pass over the
+    * batch, O(batch), never O(index).
     *
-    * Appends are at-least-once by nature (a retried job re-appends);
-    * wrap calls in the [[graft.streaming.Streams.upsertBatch]] ledger
-    * or write batches under distinct subdirs when the feed can replay.
-    * Many appends skew cells as the data distribution drifts from the
-    * trained centroids — watch [[centroidDrift]] and re-train + rebuild
-    * past threshold. Returns the number of vectors appended. */
+    * Each call commits a new delta, so a retried call appends twice; a
+    * feed that can replay uses [[ivfDeltaAppend]], whose batch ids make
+    * the replay a no-op. Many appends skew cells as the data
+    * distribution drifts from the trained centroids — watch
+    * [[ivfStaleness]]; [[graft.jobs.Maintain.maintainIvf]] retrains past
+    * a threshold. Returns the number of vectors appended. */
   def ivfAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVecs: DataFrame, idCol: String, vecCol: String, dim: Int): Long = {
-    val cents = spark.read.parquet(s"$path/centroids")
+      newVecs: DataFrame, idCol: String, vecCol: String, dim: Int): Long =
+    appendDelta(spark, path, newVecs, idCol, vecCol, dim, None)
+
+  /** EXACTLY-ONCE streaming ingestion into an IVF index: the batch is
+    * assigned against the frozen centroids (same O(batch) broadcast pass
+    * as [[ivfAppend]]) and committed as the delta table `batch_<id>`. A
+    * replayed micro-batch (foreachBatch is at-least-once) that is still
+    * a delta re-stages the same table, so the index state is unchanged;
+    * one at or below the index's watermark — the highest batch a
+    * compaction or retrain has folded — is a no-op. Returns rows
+    * ingested (0 for a folded replay). */
+  def ivfDeltaAppend(spark: org.apache.spark.sql.SparkSession, path: String,
+      newVecs: DataFrame, idCol: String, vecCol: String, dim: Int,
+      batchId: Long): Long =
+    appendDelta(spark, path, newVecs, idCol, vecCol, dim, Some(batchId))
+
+  private def appendDelta(spark: org.apache.spark.sql.SparkSession,
+      path: String, newVecs: DataFrame, idCol: String, vecCol: String,
+      dim: Int, batch: Option[Long]): Long = {
+    val txn = graft.core.Snapshots.begin(spark, path)
+    if (batch.exists(b => txn.watermark.exists(_ >= b))) return 0L
+    val n = stageDelta(txn, newVecs, idCol, vecCol, dim, batch)
+    commitIvf(txn)
+    n
+  }
+
+  /** Stage one delta of [[ivfAppend]]/[[ivfDeltaAppend]] into `txn`. */
+  private[graft] def stageDelta(txn: graft.core.Snapshots.Txn,
+      newVecs: DataFrame, idCol: String, vecCol: String, dim: Int,
+      batch: Option[Long]): Long = {
+    val cents = indexSnapshot(txn).read(txn.spark, "centroids")
       .select(col("cid").as(idCol), col("cvec").as(vecCol))
     // checkpoint so count + write share ONE assignment pass (the
     // writeShards lesson: never let the manifest re-run the pipeline)
@@ -844,200 +887,97 @@ object Ann {
         col("__nrm").as("nrm"), col("__cid").as("cid"))
       .localCheckpoint()
     val n = assigned.count()
-    // one appended file per touched cell; hot cells split by AQE
-    // ([[clusterForWrite]])
-    clusterForWrite(assigned)
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$path/assignments")
+    txn.stage(batch.fold(s"append_${txn.id}")(b => s"batch_$b"), assigned)
     graft.core.Ckpt.free(assigned) // count + write done; blocks are dead
     n
   }
 
-  /** EXACTLY-ONCE streaming ingestion into an IVF index, by layout: the
-    * batch is assigned against the frozen centroids (same O(batch)
-    * broadcast pass as [[ivfAppend]]) but lands as an immutable DELTA
-    * directory `path/deltas/batch=<id>` written with overwrite — a
-    * replayed micro-batch (foreachBatch is at-least-once) rewrites its
-    * own directory and the index state is unchanged, the
-    * `Streams.nearDupBatch` overwrite rule applied to index maintenance.
-    * `cid` rides as a data column inside the delta (no partitioning —
-    * deltas are batch-sized and short-lived; [[ivfCompactDeltas]] moves
-    * them into the pruned `cid=` layout). Returns rows ingested. */
-  def ivfDeltaAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVecs: DataFrame, idCol: String, vecCol: String, dim: Int,
-      batchId: Long): Long = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cid").as(idCol), col("cvec").as(vecCol))
-    val assigned = assignClusters(newVecs, cents, idCol, vecCol, dim)
-      .select(col("__vid").as("vec_id"), col("__vec").as("vec"),
-        col("__nrm").as("nrm"), col("__cid").as("cid"))
-      .localCheckpoint()
-    val n = assigned.count()
-    assigned.write.mode("overwrite")
-      .parquet(f"$path/deltas/batch=$batchId%d")
-    graft.core.Ckpt.free(assigned) // count + write done; blocks are dead
-    n
-  }
-
-  /** The compaction WATERMARK of an index: deltas with batch id ≤ this
-    * are already folded into the base assignments and must be ignored
-    * (they may linger if a compaction crashed between its atomic swap
-    * and the delta GC). The marker file lives INSIDE the assignments
-    * directory, so the swap that publishes a new base publishes its
-    * watermark in the same rename — base and watermark can never
-    * disagree. −1 = nothing compacted (fresh build). */
-  def ivfWatermark(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    recoverAssignments(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/assignments/_compacted_to")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-  }
-
-  /** Read-side recovery for [[ivfCompactDeltas]]'s swap: a process crash
-    * between the swap's two renames leaves `assignments/` absent with
-    * the prior base (and its in-dir watermark) stranded under
-    * `.assignments_old_<stamp>` — re-adopt it before any read concludes
-    * the index is gone ([[graft.core.FsOps.reAdopt]]). Called from
-    * every assignments read path via [[ivfWatermark]] plus the direct
-    * readers; idempotent and O(1) metadata when the target exists. */
-  private def recoverAssignments(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(s"$path/assignments")
-    graft.core.FsOps.reAdopt(
-      target.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      target, ".assignments_old_")
-  }
-
-  /** Re-stamp the compaction watermark into a (re)built assignments dir.
-    * [[buildIvfIndex]]'s overwrite wipes `_compacted_to`; a maintenance
-    * rebuild over a streaming-fed index must restore it, or a replayed
-    * micro-batch (≤ the old watermark, already folded into the rebuilt
-    * base) becomes visible again and double-counts. */
-  private[graft] def writeIvfWatermark(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, id: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/assignments/_compacted_to")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Read the LIVE index: base `cid=` assignments ∪ deltas above the
-    * compaction watermark. Correct under every crash window of the
-    * ingest/compact cycle — a replayed delta overwrote itself, a
-    * compacted-but-not-GC'd delta is filtered by the watermark that
-    * swapped in WITH the folded base. Base reads keep partition pruning;
-    * the un-pruned delta scan is the standard merge-on-read trade
-    * (deltas are batch-sized until the next compaction). */
-  /** LIVE delta dirs: `batch=N` with N above the watermark AND a parquet
-    * `_SUCCESS` marker. The marker gate matters for crash windows: a
-    * delta whose writing job died mid-commit has some part files but no
-    * `_SUCCESS`; the stream WILL replay that batch (its checkpoint never
-    * advanced), so the partial dir must be invisible to reads and —
-    * critically — to compaction: folding a partial batch and advancing
-    * the watermark past it would hide the eventual complete replay
-    * forever, silently losing the batch's missing rows. */
-  private def liveDeltaDirs(fs: org.apache.hadoop.fs.FileSystem,
-      dp: org.apache.hadoop.fs.Path, watermark: Long)
-      : Seq[org.apache.hadoop.fs.Path] =
-    if (!fs.exists(dp)) Seq.empty
-    else Option(fs.listStatus(dp)).toSeq.flatten
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("batch=") &&
-        p.getName.stripPrefix("batch=").toLong > watermark &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-
-  def readIvfAssignments(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val cols = Seq(col("vec_id"), col("vec"), col("nrm"),
-      col("cid").cast("int").as("cid"))
-    // recover BEFORE the eager schema resolve, and retry through
-    // re-adoption if a racing compaction swap moves the dir between the
-    // recovery and the listing ([[graft.core.FsOps.convergeRead]])
-    val base = graft.core.FsOps.convergeRead()(
-      recoverAssignments(spark, path))(
-      spark.read.parquet(s"$path/assignments").select(cols: _*))
-    val dp = new org.apache.hadoop.fs.Path(s"$path/deltas")
-    val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // list the LIVE delta dirs explicitly ([[liveDeltaDirs]]): dead and
-    // partially-written ones never get scanned, and an emptied deltas/
-    // dir (post-GC) can't break schema inference
-    val live: Seq[String] =
-      liveDeltaDirs(fs, dp, ivfWatermark(spark, path)).map(_.toString)
-    if (live.isEmpty) base
-    else base.unionByName(
-      spark.read.option("basePath", dp.toString)
-        .parquet(live: _*).select(cols: _*))
-  }
-
-  /** Fold live deltas into the base `cid=` layout and advance the
-    * watermark — ONE atomic publish: the new base is staged to a tmp
-    * directory WITH its `_compacted_to` marker already inside, then
-    * swapped via the MergeOnRead double-rename. Crash before the swap →
-    * old base + live deltas, nothing lost; crash after the swap but
-    * before the delta GC → the new base's own watermark hides exactly
-    * the folded deltas from [[readIvfAssignments]], so the GC is pure
-    * garbage collection, never correctness. Idempotent: re-running with
-    * no live deltas is a no-op. Returns (rows in new base, deltas
-    * folded). */
+  /** Fold every delta into the base `cid=` layout in ONE commit: the new
+    * `assignments` version is published, the folded delta tables are
+    * dropped and the watermark advances past their batches in the same
+    * record, so base and watermark can never disagree. A crash before
+    * the commit leaves the previous version whole. No deltas → no
+    * commit. Returns (rows in the base, deltas folded). */
   def ivfCompactDeltas(spark: org.apache.spark.sql.SparkSession,
       path: String): (Long, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dp = new org.apache.hadoop.fs.Path(s"$path/deltas")
-    val w = ivfWatermark(spark, path)
-    // _SUCCESS-gated ([[liveDeltaDirs]]): a partially-committed delta is
-    // NOT folded — its batch will be replayed complete, and folding the
-    // partial would advance the watermark past the replay
-    val live: Seq[Long] = liveDeltaDirs(fs, dp, w)
-      .map(_.getName.stripPrefix("batch=").toLong).sorted
-    if (live.isEmpty) {
-      // GC dead delta dirs (≤ watermark, already folded) a crashed
-      // predecessor left. Above-watermark dirs without _SUCCESS are left
-      // alone: their batch is about to be replayed (the overwrite
-      // rewrites the dir), and deleting mid-replay could race the writer.
-      if (fs.exists(dp)) Option(fs.listStatus(dp)).toSeq.flatten
-        .filter(st => st.getPath.getName.startsWith("batch=") &&
-          st.getPath.getName.stripPrefix("batch=").toLong <= w)
-        .foreach(st => fs.delete(st.getPath, true))
-      return (spark.read.parquet(s"$path/assignments").count(), 0)
-    }
-    val folded = readIvfAssignments(spark, path).localCheckpoint()
+    val txn = graft.core.Snapshots.begin(spark, path)
+    val (n, folded) = stageCompaction(txn)
+    if (folded > 0) commitIvf(txn)
+    (n, folded)
+  }
+
+  /** Stage [[ivfCompactDeltas]]'s version into `txn`. */
+  private[graft] def stageCompaction(txn: graft.core.Snapshots.Txn): (Long, Int) = {
+    val spark = txn.spark
+    val snap = indexSnapshot(txn)
+    if (deltas(snap).isEmpty)
+      return (snap.read(spark, "assignments").count(), 0)
+    val folded = liveAssignments(spark, snap).localCheckpoint()
     val n = folded.count()
-    val stamp = live.max // deterministic tmp names — no wall clock
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.assignments_staging_$stamp")
     // one compacted file per cell; hot cells split by AQE
     // ([[clusterForWrite]])
     clusterForWrite(folded)
-      .write.mode("overwrite").partitionBy("cid").parquet(tmp.toString)
-    val mk = fs.create(new org.apache.hadoop.fs.Path(tmp, "_compacted_to"), true)
-    try mk.write(live.max.toString.getBytes("UTF-8")) finally mk.close()
-    val target = new org.apache.hadoop.fs.Path(s"$path/assignments")
-    val old = new org.apache.hadoop.fs.Path(s"$path/.assignments_old_$stamp")
-    graft.core.FsOps.atomicSwap(fs, tmp, target, old)
-    // GC below-watermark deltas — correctness no longer depends on this
-    Option(fs.listStatus(dp)).toSeq.flatten
-      .filter(st => st.getPath.getName.startsWith("batch=") &&
-        st.getPath.getName.stripPrefix("batch=").toLong <= live.max)
-      .foreach(st => fs.delete(st.getPath, true))
-    // GC stale .assignments_old_* from compactions that crashed AFTER
-    // their swap's publishing rename but before its delete(old) — the
-    // live base is correct, but each stranded old is a full-size dead
-    // copy of a previous base (and a candidate for a future mtime-based
-    // reAdopt). This swap's own `old` is already gone; sweep the rest.
-    Option(fs.listStatus(new org.apache.hadoop.fs.Path(path))).toSeq.flatten
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(".assignments_old_"))
-      .foreach(st => fs.delete(st.getPath, true))
-    graft.core.Ckpt.free(folded) // count + staging write done
-    (n, live.length)
+      .write.partitionBy("cid").parquet(txn.dir("assignments"))
+    graft.core.Ckpt.free(folded) // count + write done
+    (n, foldDeltas(txn))
   }
+
+  /** Retrain an index over its own live vectors — base ∪ deltas of one
+    * pinned snapshot — in one commit: fresh centroids, a fresh layout,
+    * every delta folded ([[graft.jobs.Maintain.maintainIvf]]). */
+  private[graft] def ivfRetrain(spark: org.apache.spark.sql.SparkSession,
+      path: String, dim: Int, numCentroids: Int, kmeansIters: Int): Unit = {
+    val txn = graft.core.Snapshots.begin(spark, path)
+    stageIndex(txn, liveAssignments(spark, indexSnapshot(txn))
+        .select(col("vec_id"), col("vec")),
+      "vec_id", "vec", dim, numCentroids, kmeansIters)
+    commitIvf(txn)
+  }
+
+  private def indexSnapshot(txn: graft.core.Snapshots.Txn) =
+    txn.parent.getOrElse(
+      throw new IllegalStateException(s"no IVF index at ${txn.root}"))
+
+  private def commitIvf(txn: graft.core.Snapshots.Txn): Unit = {
+    txn.commit()
+    graft.core.Snapshots.vacuum(txn.spark, txn.root, keepLast = 2)
+  }
+
+  /** The delta tables of an index snapshot. */
+  private def deltas(snap: graft.core.Snapshots.Snapshot): Seq[String] =
+    snap.dirs.keys.filter(t => t.startsWith("batch_") || t.startsWith("append_"))
+      .toSeq.sorted
+
+  /** Drop every delta of `txn`'s parent from the next version and
+    * advance the watermark past the streamed batches among them.
+    * Returns the number of deltas folded. */
+  private def foldDeltas(txn: graft.core.Snapshots.Txn): Int =
+    txn.parent.fold(0) { snap =>
+      val ds = deltas(snap)
+      ds.foreach { t =>
+        txn.drop(t)
+        if (t.startsWith("batch_")) txn.advance(t.stripPrefix("batch_").toLong)
+      }
+      ds.length
+    }
+
+  /** The live index of one pinned snapshot: base `cid=` assignments ∪
+    * every delta. Base reads keep partition pruning; the un-pruned delta
+    * scan is the standard merge-on-read trade (deltas are batch-sized
+    * until the next compaction). */
+  private def liveAssignments(spark: org.apache.spark.sql.SparkSession,
+      snap: graft.core.Snapshots.Snapshot): DataFrame = {
+    val cols = Seq(col("vec_id"), col("vec"), col("nrm"),
+      col("cid").cast("int").as("cid"))
+    ("assignments" +: deltas(snap))
+      .map(t => snap.read(spark, t).select(cols: _*))
+      .reduce(_ unionByName _)
+  }
+
+  /** Read the LIVE index at its current snapshot: base ∪ deltas. */
+  def readIvfAssignments(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    liveAssignments(spark, graft.core.Snapshots.open(spark, path))
 
   /** Per-cell centroid STALENESS of a persisted IVF index: the L2
     * distance between each stored (frozen) centroid and the CURRENT
@@ -1060,15 +1000,15 @@ object Ann {
   def ivfStaleness(spark: org.apache.spark.sql.SparkSession, path: String,
       dim: Int): DataFrame = {
     require(dim >= 1 && dim <= 512, s"dim must be in [1, 512], got $dim")
-    recoverAssignments(spark, path)
-    val cells = spark.read.parquet(s"$path/assignments")
+    val snap = graft.core.Snapshots.open(spark, path)
+    val cells = liveAssignments(spark, snap)
       .select(col("cid").cast("long").as("cid"),
         posexplode(transform(col("vec"),
           x => round(x.cast("double") * 1000, 0).cast("long")))
           .as(Seq("__i", "__q")))
       .groupBy(col("cid"), col("__i"))
       .agg(count(lit(1)).as("__n"), sum(col("__q")).as("__s"))
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = snap.read(spark, "centroids")
       .select(col("cid").cast("long").as("cid"),
         posexplode(transform(col("cvec"),
           x => round(x.cast("double") * 1000, 0).cast("long")))
@@ -1094,8 +1034,8 @@ object Ann {
   def queryIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, dim: Int,
       k: Int, nprobe: Int): DataFrame = {
-    recoverAssignments(spark, path)
-    val cents = spark.read.parquet(s"$path/centroids")
+    val snap = graft.core.Snapshots.open(spark, path)
+    val cents = snap.read(spark, "centroids")
     val q = withNorm(queries, idCol, vecCol, dim)
     val probes = q.crossJoin(broadcast(cents))
       .withColumn("__sim",
@@ -1107,7 +1047,7 @@ object Ann {
       .join(q, Seq("__vid"))
       .select(col("__vid").as("vec_id"), col("__vec").as("__qv"),
         col("__nrm").as("__qn"), col("cid"))
-    val index = spark.read.parquet(s"$path/assignments")
+    val index = liveAssignments(spark, snap)
     // broadcast the (small) probe side: the assignments scan stays the
     // streamed side and its partition filter comes from the broadcast —
     // dynamic partition pruning reads only probed cid= directories

@@ -18,12 +18,12 @@ import org.apache.spark.sql.functions._
   * discipline at the aggregate layer).
   *
   * The store is ONE committed copy: every write publishes an immutable
-  * version `<path>/partials/v=<id>` through [[graft.core.Snapshots]]
+  * version `<path>/partials/v=<id>-<writer>` through [[graft.core.Snapshots]]
   * (stage → commit → vacuum, keeping the last two versions). Readers
   * resolve the committed version once and never write; a crash before
-  * the commit leaves an invisible staged dir that the next write
-  * re-stages under the same id. Writers follow the single-writer
-  * contract of [[graft.core.Snapshots.commit]].
+  * the commit leaves an invisible staged dir, and the next write stages
+  * its own and commits. Of two writers racing for one version, one
+  * commits and the other fails ([[graft.core.Snapshots.Txn.commit]]).
   *
   * At 100 TB this is the difference between a daily report that costs one
   * day's scan and one that costs the whole table: raw-history scans are
@@ -60,9 +60,16 @@ object Incremental {
     * writes within one second are distinct by construction. */
   def writePartials(partials: DataFrame, path: String): Unit = {
     val spark = partials.sparkSession
-    val cur = Snapshots.currentId(spark, path)
-    val next = cur.fold(partials) { _ =>
-      val prev = read(spark, path)
+    val txn = Snapshots.begin(spark, path)
+    stagePartials(txn, partials)
+    txn.commit()
+    Snapshots.vacuum(spark, path, keepLast = 2)
+  }
+
+  /** Stage [[writePartials]]'s next version into `txn`. */
+  private[graft] def stagePartials(txn: Snapshots.Txn, partials: DataFrame): Unit =
+    txn.stage(Table, txn.parent.fold(partials) { snap =>
+      val prev = snap.read(txn.spark, Table)
       val nFiles = (prev.queryExecution.optimizedPlan.stats.sizeInBytes /
         (512L << 20)).max(1).toInt
       prev.withColumn("__new", lit(0))
@@ -71,12 +78,7 @@ object Incremental {
         .where(col("__new") === col("__keep"))
         .drop("__new", "__keep")
         .coalesce(nFiles)
-    }
-    val id = cur.fold(1)(_ + 1)
-    Snapshots.stage(spark, path, Table, next, id)
-    Snapshots.commit(spark, path, id)
-    Snapshots.vacuum(spark, path, keepLast = 2)
-  }
+    })
 
   /** Incremental refresh: recompute partials ONLY for the rows of `delta`
     * (a new/late day, a corrected batch) and replace exactly those

@@ -458,24 +458,24 @@ object Lifecycle {
   /** Cross-table ATOMIC publish ([[graft.core.Snapshots]]) exercised end
     * to end: snapshot 1 stages TWO report tables (H1-1996 revenue per
     * returnflag; 1996 order counts per priority) and commits them with
-    * ONE rename; snapshot 2 re-stages only the revenue table widened to
+    * ONE record; snapshot 2 re-stages only the revenue table widened to
     * all of 1996 and commits — the counts table must CARRY FORWARD at
-    * its v=1 directory while revenue flips to v=2, atomically. The
-    * result reads both through the pinned current snapshot, so
-    * hash-green proves (a) the staged parquet round-trips exactly,
-    * (b) the carry-forward resolves to the old version, (c) the reader
-    * sees the post-commit world — the mixed-day state a per-table swap
-    * can leak is impossible by construction. The commit itself is one
-    * O(tables) metadata file + one rename at ANY data volume — the
-    * Iceberg snapshot-commit contract on plain parquet (reference's
-    * 33-table ProcessDaily publish, `ProcessDaily.usql:229-3650`, made
+    * its version-1 directory while revenue flips to version 2,
+    * atomically. The result reads both through the pinned current
+    * snapshot, so hash-green proves (a) the staged parquet round-trips
+    * exactly, (b) the carry-forward resolves to the old version, (c) the
+    * reader sees the post-commit world — the mixed-day state a per-table
+    * swap can leak is impossible by construction. The commit itself is
+    * one O(tables) record put-if-absent at ANY data volume — the Iceberg
+    * snapshot-commit contract on plain parquet (reference's 33-table
+    * ProcessDaily publish, `ProcessDaily.usql:229-3650`, made
     * cross-table-consistent). */
   def q273SnapshotPublish(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.Snapshots
     val root = System.getProperty("java.io.tmpdir") +
       s"/graft_q273_${math.abs(dir.hashCode)}"
-    // deterministic rebuild: the monotone-id contract forbids replaying
-    // ids over a prior run's history, so the scratch root starts empty
+    // deterministic rebuild: ids continue a prior run's history, so the
+    // scratch root starts empty for the published ids to be 1 and 2
     val p = new org.apache.hadoop.fs.Path(root)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     val revCents =
@@ -492,11 +492,13 @@ object Lifecycle {
         col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
       .groupBy(col("o_orderpriority").as("k"))
       .agg(count(lit(1)).as("val"))
-    Snapshots.stage(spark, root, "line_rev", lineRev("1996-07-01"), 1)
-    Snapshots.stage(spark, root, "order_counts", orderCounts, 1)
-    Snapshots.commit(spark, root, 1)
-    Snapshots.stage(spark, root, "line_rev", lineRev("1997-01-01"), 2)
-    val published = Snapshots.commit(spark, root, 2)
+    val first = Snapshots.begin(spark, root)
+    first.stage("line_rev", lineRev("1996-07-01"))
+    first.stage("order_counts", orderCounts)
+    first.commit()
+    val second = Snapshots.begin(spark, root)
+    second.stage("line_rev", lineRev("1997-01-01"))
+    val published = second.commit().tables
     require(published == Map("line_rev" -> 2, "order_counts" -> 1),
       s"q273: expected line_rev@2 + carried order_counts@1, got $published")
     val s = Snapshots.open(spark, root)
@@ -556,10 +558,8 @@ object Lifecycle {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val base = graft.core.FsOps.procCacheDir("q280", dir)
     val partials = base + "/partials"
-    val served = base + "/served"
-    val marker = new java.io.File(base + "/_GRAFT_COMMITTED")
     val factPath = s"$dir/orders.parquet"
-    if (!marker.exists()) {
+    graft.core.Snapshots.openOrBuild(spark, base + "/served") { txn =>
       val cents = round(col("o_totalprice") * 100).cast("long")
       val day = date_format(col("o_orderdate"), "yyyy-MM-dd")
       def fact = spark.read.parquet(factPath)
@@ -601,15 +601,12 @@ object Lifecycle {
           s"q280: served plan must read the partials, scans=$roots")
         require(!roots.exists(_.endsWith("orders.parquet")),
           s"q280: served plan must NOT read the fact table, scans=$roots")
-        natural.write.mode("overwrite").parquet(served)
+        txn.stage("served", natural)
       } finally {
         Seq("fact", "partials", "part", "keys", "measure")
           .foreach(k => spark.conf.unset(s"spark.graft.mv.$k"))
       }
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
-    spark.read.parquet(served)
+    }.read(spark, "served")
       .select(col("day"), col("o_orderpriority"), col("n_orders"),
         col("cents"), col("min_cents"), col("max_cents"))
   }

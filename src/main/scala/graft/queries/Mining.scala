@@ -643,28 +643,19 @@ object Mining {
   /** Zone-map-pruned scan ([[graft.core.ZoneMap]]): orders rewritten
     * range-clustered on o_orderdate (16 files, each owning a disjoint
     * date range — [[graft.core.Layout.writeRangeClustered]]), a
-    * persisted per-file min/max synopsis built ONCE beside it, then a
+    * persisted per-file min/max synopsis built ONCE inside it, then a
     * spring-quarter revenue report answered through
     * [[graft.core.ZoneMap.readPruned]]: the synopsis scan shrinks the
     * file list to the ~3 months that can match BEFORE the real scan is
     * constructed, and straddling files re-filter, so the result is
     * identical to a full scan — which is exactly what the oracle
-    * replays. Build is marker-committed build-once like q86's partials
-    * (maintenance is `refresh`, O(new files), not rebuild). */
+    * replays. The build is a build-once cache ([[zoneCache]]);
+    * maintenance is `refresh`, O(new files), not rebuild. */
   def q263ZonePrunedScan(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.{Layout, ZoneMap}
-    val base = graft.core.FsOps.procCacheDir("q263", dir)
-    val tbl = base + "/orders_clustered"
-    val zm = base + "/zonemap"
-    val marker = new java.io.File(base + "/_GRAFT_COMMITTED")
-    if (!marker.exists()) {
-      Layout.writeRangeClustered(table(spark, dir, "orders"), tbl, 16,
-        col("o_orderdate"))
-      ZoneMap.build(spark, tbl, Seq("o_orderdate"), zm)
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
-    ZoneMap.readPruned(spark, tbl, zm, "o_orderdate",
+    import graft.core.ZoneMap
+    val tbl = zoneCache(spark, "q263", dir, "orders_clustered",
+      table(spark, dir, "orders"), "o_orderdate").path("orders_clustered")
+    ZoneMap.readPruned(spark, tbl, ZoneMap.defaultZonePath(tbl), "o_orderdate",
       java.sql.Timestamp.valueOf("1997-03-01 00:00:00"),
       java.sql.Timestamp.valueOf("1997-05-31 00:00:00"))
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
@@ -675,28 +666,17 @@ object Mining {
 
   /** Zone-map pruning through the STANDARD read path
     * ([[graft.plans.ZoneMapRule]]): the same clustered orders as q263,
-    * but the synopsis lives at the default in-table `_zonemap` location
-    * and the query is a PLAIN `spark.read.parquet(tbl).where(band)` —
-    * no readPruned call anywhere. The optimizer consults the synopsis
-    * at planning time and shrinks the file list (the Delta/Iceberg
-    * stats-in-log behavior on plain parquet); the oracle replays the
-    * direct band filter, so equality proves the automatic pruning is
-    * result-invisible. ZoneMapSpec plan-asserts the pruned file list
-    * through this exact read shape. */
-  def q279ZoneAutoPrune(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.{Layout, ZoneMap}
-    val base = graft.core.FsOps.procCacheDir("q279", dir)
-    val tbl = base + "/orders_clustered"
-    val marker = new java.io.File(base + "/_GRAFT_COMMITTED")
-    if (!marker.exists()) {
-      Layout.writeRangeClustered(table(spark, dir, "orders"), tbl, 16,
-        col("o_orderdate"))
-      ZoneMap.build(spark, tbl, Seq("o_orderdate"),
-        ZoneMap.defaultZonePath(tbl))
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
-    spark.read.parquet(tbl)
+    * but the query is a PLAIN parquet scan of the committed version
+    * `.where(band)` — no readPruned call anywhere. The optimizer
+    * consults the synopsis at planning time and shrinks the file list
+    * (the Delta/Iceberg stats-in-log behavior on plain parquet); the
+    * oracle replays the direct band filter, so equality proves the
+    * automatic pruning is result-invisible. ZoneMapSpec plan-asserts the
+    * pruned file list through this exact read shape. */
+  def q279ZoneAutoPrune(spark: SparkSession, dir: String): DataFrame =
+    zoneCache(spark, "q279", dir, "orders_clustered",
+        table(spark, dir, "orders"), "o_orderdate")
+      .read(spark, "orders_clustered")
       .where(col("o_orderdate") >=
           lit(java.sql.Timestamp.valueOf("1997-03-01 00:00:00")) &&
         col("o_orderdate") <=
@@ -705,13 +685,12 @@ object Mining {
       .agg(count(lit(1)).as("n_orders"),
         sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
       .orderBy(col("month"))
-  }
 
   /** IN-list pruning through the STANDARD read path — [[q279ZoneAutoPrune]]'s
     * shape for the second prunable conjunct family
     * ([[graft.plans.ZoneMapRule]]): orders range-clustered on o_custkey,
-    * the in-table `_zonemap` built once, then a PLAIN
-    * `spark.read.parquet(tbl).where(isin(...))` — twelve keys, past the
+    * the in-table `_zonemap` built once, then a PLAIN parquet scan
+    * `.where(isin(...))` — twelve keys, past the
     * optimizer's In→InSet conversion threshold (10), so the rule prunes
     * from an InSet's value set: a file survives when ANY value
     * intersects its zone. The keys span two low zones of the 16-file
@@ -719,22 +698,12 @@ object Mining {
     * filter, proving the pruning result-invisible. ZoneMapSpec
     * plan-asserts both the In and InSet prune shapes. */
   def q281ZoneInPrune(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.{Layout, ZoneMap}
-    val base = graft.core.FsOps.procCacheDir("q281", dir)
-    val tbl = base + "/orders_bycust"
-    val marker = new java.io.File(base + "/_GRAFT_COMMITTED")
-    if (!marker.exists()) {
-      Layout.writeRangeClustered(table(spark, dir, "orders"), tbl, 16,
-        col("o_custkey"))
-      ZoneMap.build(spark, tbl, Seq("o_custkey"),
-        ZoneMap.defaultZonePath(tbl))
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
     // keys ≤ 127 exist at every corpus SF (sf0.001 tops out at 149)
     val keys = Seq(2L, 3L, 5L, 7L, 11L, 13L,
       101L, 103L, 107L, 109L, 113L, 127L)
-    spark.read.parquet(tbl)
+    zoneCache(spark, "q281", dir, "orders_bycust",
+        table(spark, dir, "orders"), "o_custkey")
+      .read(spark, "orders_bycust")
       .where(col("o_custkey").isin(keys: _*))
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"),
@@ -852,8 +821,8 @@ object Mining {
   /** Prefix + OR-of-bands pruning through the STANDARD read path —
     * [[q281ZoneInPrune]]'s shape for the third prunable conjunct family
     * ([[graft.plans.ZoneMapRule]]): events range-clustered on event_type,
-    * the in-table `_zonemap` built once, then a PLAIN
-    * `spark.read.parquet(tbl).where(like('purch%') OR like('sig%'))`.
+    * the in-table `_zonemap` built once, then a PLAIN parquet scan
+    * `.where(like('purch%') OR like('sig%'))`.
     * LikeSimplification turns each pure-prefix LIKE into a StartsWith;
     * the rule extracts the OR of the two prefix byte-range bands
     * ([prefix, prefix▲]) and a file survives only when EITHER prefix
@@ -864,24 +833,32 @@ object Mining {
     * oracle replays the direct LIKE filter, proving the pruning
     * result-invisible; ZoneMapSpec plan-asserts the prefix and OR prune
     * shapes file-by-file. */
-  def q283ZonePrefixPrune(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.{Layout, ZoneMap}
-    val base = graft.core.FsOps.procCacheDir("q283", dir)
-    val tbl = base + "/events_bytype"
-    val marker = new java.io.File(base + "/_GRAFT_COMMITTED")
-    if (!marker.exists()) {
-      Layout.writeRangeClustered(
+  def q283ZonePrefixPrune(spark: SparkSession, dir: String): DataFrame =
+    zoneCache(spark, "q283", dir, "events_bytype",
         table(spark, dir, "events").select(col("event_type"), col("user_id")),
-        tbl, 16, col("event_type"))
-      ZoneMap.build(spark, tbl, Seq("event_type"), ZoneMap.defaultZonePath(tbl))
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
-    spark.read.parquet(tbl)
+        "event_type")
+      .read(spark, "events_bytype")
       .where(col("event_type").like("purch%") || col("event_type").like("sig%"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("user_id")).as("uid_sum"))
       .orderBy(col("event_type"))
+
+  /** The build-once cache behind the zone-map queries: `df` range-
+    * clustered on `key` into 16 files of table `name`, its zone-map
+    * synopsis inside the same version, committed once per process and
+    * input dir ([[graft.core.Snapshots.openOrBuild]] — the commit is the
+    * completion marker, so a crashed build is invisible and rebuilt). */
+  private[graft] def zoneCache(spark: SparkSession, tag: String, dir: String,
+      name: String, df: => DataFrame, key: String): graft.core.Snapshots.Snapshot =
+    graft.core.Snapshots.openOrBuild(spark, graft.core.FsOps.procCacheDir(tag, dir))(
+      stageZoned(_, name, df, key))
+
+  private[graft] def stageZoned(txn: graft.core.Snapshots.Txn, name: String,
+      df: DataFrame, key: String): Unit = {
+    import graft.core.{Layout, ZoneMap}
+    val tbl = txn.dir(name)
+    Layout.writeRangeClustered(df, tbl, 16, col(key))
+    ZoneMap.build(txn.spark, tbl, Seq(key), ZoneMap.defaultZonePath(tbl))
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -104,14 +104,14 @@ object Training {
   /** Incremental IVF maintenance ([[Ann.ivfAppend]]): the index is
     * BUILT from the `vec_id % 3 ≠ 0` two-thirds (frozen seed centroids
     * `vec_id < 16` within it), then the remaining third is APPENDED —
-    * one broadcast-assignment pass over the batch, existing cell files
-    * untouched. Because membership depends only on the frozen
-    * centroids, build-then-append must be content-identical to a
-    * one-shot assignment of ALL vectors against those centroids, which
-    * is exactly what the oracle replays (intra-cell top-3 over the
-    * re-read index). Fresh scratch per run: append is at-least-once,
-    * so replaying into a kept dir would duplicate (the ledger/subdir
-    * patterns in the ivfAppend scaladoc are the production guards). */
+    * one broadcast-assignment pass over the batch, committed as a delta
+    * beside the untouched cell files. Because membership depends only on
+    * the frozen centroids, build-then-append must be content-identical
+    * to a one-shot assignment of ALL vectors against those centroids,
+    * which is exactly what the oracle replays (intra-cell top-3 over the
+    * live index). Fresh scratch per run: each append commits a new
+    * delta, so replaying into a kept dir would duplicate (batch ids,
+    * [[Ann.ivfDeltaAppend]], are the production guard). */
   def q270IvfAppend(spark: SparkSession, dir: String): DataFrame = {
     val base = System.getProperty("java.io.tmpdir") +
       s"/graft_q270_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -120,7 +120,7 @@ object Training {
       "vec_id", "embedding", Dim, 16, base)
     Ann.ivfAppend(spark, base,
       e.where(col("vec_id") % 3 === 0), "vec_id", "embedding", Dim)
-    val idx = spark.read.parquet(s"$base/assignments")
+    val idx = Ann.readIvfAssignments(spark, base)
     // verification workload = top-3 for a FIXED probe set (vec_id <
     // 500), not all-pairs-within-cell: probe x cell-members is LINEAR
     // in corpus where the all-pairs spelling is cell-quadratic (at the
@@ -144,8 +144,8 @@ object Training {
   /** Streaming IVF ingestion lifecycle ([[Ann.ivfDeltaAppend]] →
     * [[Ann.ivfCompactDeltas]] → [[Ann.readIvfAssignments]]): the index
     * is built from the `vec_id % 3 ≠ 0` two-thirds, the remaining third
-    * arrives as TWO micro-batch deltas (`batch=0/1` overwrite dirs —
-    * the exactly-once-by-layout contract behind
+    * arrives as TWO micro-batch deltas (`batch_0/1` tables — the
+    * exactly-once contract behind
     * [[graft.streaming.Streams.ivfIngestSink]]), batch 1 is REPLAYED
     * (at-least-once delivery), and the deltas are compacted into the
     * pruned `cid=` base before the intra-cell top-3. The oracle is

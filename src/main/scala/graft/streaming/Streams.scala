@@ -512,18 +512,21 @@ object Streams {
       .start()
 
   /** Streaming ANN index ingestion: every micro-batch of (id, vector)
-    * rows is assigned against the index's FROZEN centroids and lands as
-    * a `batch=<id>` delta via [[graft.ops.Ann.ivfDeltaAppend]] —
-    * exactly-once by the overwrite layout (a replayed foreachBatch
-    * rewrites its own delta dir), O(batch) per trigger, the base `cid=`
-    * files never touched. Queries read the live index through
-    * [[graft.ops.Ann.readIvfAssignments]]; the nightly
+    * rows is assigned against the index's FROZEN centroids and committed
+    * as the delta table `batch_<id>` via [[graft.ops.Ann.ivfDeltaAppend]]
+    * — exactly-once by the index's watermark (a replayed foreachBatch
+    * re-stages its own delta, or is a no-op once folded), O(batch) per
+    * trigger, the base `cid=` files never touched. Queries read the live
+    * index, base ∪ deltas of one snapshot, through
+    * [[graft.ops.Ann.readIvfAssignments]] and
+    * [[graft.ops.Ann.queryIvfIndex]]; the nightly
     * [[graft.ops.Ann.ivfCompactDeltas]] folds accumulated deltas into
     * the pruned layout and [[graft.jobs.Maintain.maintainIvf]] retrains
     * when the stream has drifted the cells — together the full life of
     * a 100 TB embedding index fed by a firehose: build once, ingest
     * per-trigger at batch cost, compact and retrain on maintenance
-    * windows. */
+    * windows. Each of them is one commit, so a trigger racing a
+    * compaction fails one of the two, and its rerun lands. */
   def ivfIngestSink(stream: DataFrame, indexPath: String, idCol: String,
       vecCol: String, dim: Int, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =

@@ -1,0 +1,40 @@
+package graft.core
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Source gates for the one commit protocol: every versioned store
+  * commits through [[Snapshots]], so a new hand-rolled commit marker,
+  * watermark file or directory swap fails CI here. */
+class CommitGateSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala/graft")
+
+  private def sources: List[Path] = {
+    assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+  }
+
+  test("no commit marker, watermark file or swap staging dir under src/main/scala") {
+    val banned = Seq("_GRAFT_COMMITTED", "_compacted_to", ".assignments_old_",
+      "createNewFile(", "recoverAssignments", "writeIvfWatermark")
+    val offenders = for {
+      p <- sources
+      text = Files.readString(p)
+      b <- banned if text.contains(b)
+    } yield s"${root.relativize(p)}: $b"
+    assert(offenders.isEmpty, s"commit versioned stores through Snapshots: $offenders")
+  }
+
+  test("FsOps swap calls only in MergeOnRead, Pipelines and Layout") {
+    val allowed = Set("ops/MergeOnRead.scala", "entities/Pipelines.scala", "core/Layout.scala")
+    val call = """\b(atomicSwap|reAdopt|convergeRead)(\[\w+\])?\s*\(""".r
+    val offenders = for {
+      p <- sources if !allowed(root.relativize(p).toString)
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if call.findFirstIn(line).nonEmpty && !line.contains("def ")
+    } yield s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, s"commit versioned stores through Snapshots: $offenders")
+  }
+}

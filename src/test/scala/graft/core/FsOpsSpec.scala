@@ -143,20 +143,4 @@ class FsOpsSpec extends SparkSpec {
     assert(after.sameElements(before), "reader must re-adopt the stranded base")
     assert(fs.exists(base), "re-adoption must restore the base dir")
   }
-
-  test("IVF read path self-heals after a compaction crash window") {
-    import org.apache.spark.sql.functions.col
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val idx = scratch("fsops_ivf_heal")
-    graft.ops.Ann.buildIvfIndex(e, "vec_id", "embedding", 64, 8, idx)
-    val before = graft.ops.Ann.readIvfAssignments(spark, idx)
-      .select(col("vec_id"), col("cid")).collect().map(_.toString).sorted
-    // crash between ivfCompactDeltas' two renames: assignments absent,
-    // the full base (with its in-dir watermark) stranded under old
-    assert(fs.rename(new Path(s"$idx/assignments"),
-      new Path(s"$idx/.assignments_old_7")))
-    val after = graft.ops.Ann.readIvfAssignments(spark, idx)
-      .select(col("vec_id"), col("cid")).collect().map(_.toString).sorted
-    assert(after.sameElements(before), "read must re-adopt the stranded base")
-  }
 }

@@ -77,6 +77,10 @@ class MaintainSpec extends SparkSpec {
     }
   }
 
+  /** The committed version of one index table (`centroids`, `assignments`). */
+  private def committed(index: String, table: String) =
+    graft.core.Snapshots.open(spark, index).read(spark, table)
+
   test("maintainIvf: un-drifted appends are a strict no-op — index byte-stable") {
     import graft.ops.Ann
     val idx = scratch("mt_ivf_ok")
@@ -86,20 +90,22 @@ class MaintainSpec extends SparkSpec {
     Ann.ivfAppend(spark, idx,
       blobs(60, 2).map { case (i, v) => (i + 1000L, v) }.toDF("vec_id", "vec"),
       "vec_id", "vec", 4)
-    def snapshot(): Map[String, (Long, Long)] =
-      Seq("centroids", "assignments").flatMap { d =>
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(s"$idx/$d"))
-          .filter(_.getName.endsWith(".parquet"))
-          .map(f => f.getPath -> ((f.lastModified(), f.length())))
-      }.toMap
+    // every file under the index root, commit records included
+    def snapshot(): Map[String, (Long, Long)] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(idx))
+        .map(f => f.getPath -> ((f.lastModified(), f.length()))).toMap
+    }
+    val version = graft.core.Snapshots.currentId(spark, idx)
     val before = snapshot()
     val r = Maintain.maintainIvf(spark, idx, 4, numCentroids = 2,
       staleThreshold = 0.5).collect().head
     assert(!r.getBoolean(3), s"clean appends must not trigger retrain: $r")
     assert(r.getDouble(2) < 0.5 && r.getLong(1) == 2L, s"report: $r")
     assert(snapshot() == before, "no-op maintenance must not move a byte")
+    assert(graft.core.Snapshots.currentId(spark, idx) == version,
+      "no-op maintenance commits nothing")
   }
 
   test("maintainIvf: drifted appends trigger retrain with FRESH centroids") {
@@ -107,7 +113,7 @@ class MaintainSpec extends SparkSpec {
     val idx = scratch("mt_ivf_drift")
     Ann.buildIvfIndex(blobs(200, 3).toDF("vec_id", "vec"), "vec_id", "vec",
       4, numCentroids = 2, idx, kmeansIters = 5)
-    val centsBefore = spark.read.parquet(s"$idx/centroids")
+    val centsBefore = committed(idx, "centroids")
       .orderBy(col("cid")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toList)).toList
     // a THIRD blob far from both centroids: whichever cell absorbs it
@@ -123,12 +129,12 @@ class MaintainSpec extends SparkSpec {
     val r = Maintain.maintainIvf(spark, idx, 4, numCentroids = 2,
       staleThreshold = 0.5, kmeansIters = 10).collect().head
     assert(r.getBoolean(3), s"drift past threshold must rebuild: $r")
-    val centsAfter = spark.read.parquet(s"$idx/centroids")
+    val centsAfter = committed(idx, "centroids")
       .orderBy(col("cid")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toList)).toList
     assert(centsAfter != centsBefore, "rebuild must produce fresh centroids")
     // the rebuilt index carries every vector (old + appended)
-    assert(spark.read.parquet(s"$idx/assignments").count() == 400L)
+    assert(committed(idx, "assignments").count() == 400L)
     // and the fresh centroids fit the NEW distribution: staleness collapses
     val staleAfter = Ann.ivfStaleness(spark, idx, 4)
       .agg(max(col("stale"))).collect().head.getDouble(0)
@@ -146,26 +152,27 @@ class MaintainSpec extends SparkSpec {
       blobs(50, 12).map { case (i, v) => (i + 2000L, v) }.toDF("vec_id", "vec"),
       "vec_id", "vec", 4, 0L)
     Ann.ivfCompactDeltas(spark, idx)
-    assert(Ann.ivfWatermark(spark, idx) == 0L)
+    assert(graft.core.Snapshots.open(spark, idx).watermark.contains(0L))
     val rnd = new scala.util.Random(13)
     val far = (0 until 200).map(i => (5000L + i,
       Array(0f, 0f, 5f, 5f).map(_ + rnd.nextFloat() * 0.05f)))
       .toDF("vec_id", "vec")
     Ann.ivfDeltaAppend(spark, idx, far, "vec_id", "vec", 4, 1L)
-    // drift measured over base only; the appended far blob sits in a
-    // delta, so drift the base too via a direct append
+    // a second live delta through the non-stream append path
     Ann.ivfAppend(spark, idx, far.withColumn("vec_id", col("vec_id") + 10000L),
       "vec_id", "vec", 4)
     val r = Maintain.maintainIvf(spark, idx, 4, numCentroids = 2,
       staleThreshold = 0.5, kmeansIters = 3).collect().head
     assert(r.getBoolean(3), s"drifted fixture must rebuild: $r")
-    // every vector the index owned — base, folded batch, LIVE delta —
-    // is in the rebuilt base
-    assert(spark.read.parquet(s"$idx/assignments").count() == 650L)
-    // the watermark survived the rebuild's overwrite: a replay of the
-    // folded batches stays hidden instead of double-counting
-    assert(Ann.ivfWatermark(spark, idx) == 1L,
-      "rebuild must re-stamp the compaction watermark")
+    // every vector the index owned — base, folded batch, LIVE deltas —
+    // is in the rebuilt base, and no delta is left beside it
+    val rebuilt = graft.core.Snapshots.open(spark, idx)
+    assert(committed(idx, "assignments").count() == 650L)
+    assert(rebuilt.dirs.keySet == Set("centroids", "assignments"))
+    // the rebuild's record carries the watermark past the folded batch:
+    // a replay of the folded batches stays hidden instead of double-counting
+    assert(rebuilt.watermark.contains(1L),
+      "rebuild must carry the watermark past the folded batches")
     Ann.ivfDeltaAppend(spark, idx,
       blobs(50, 12).map { case (i, v) => (i + 2000L, v) }.toDF("vec_id", "vec"),
       "vec_id", "vec", 4, 0L) // replayed old batch
@@ -186,14 +193,14 @@ class MaintainSpec extends SparkSpec {
       Array(0f, 0f, 5f, 5f).map(_ + rnd.nextFloat() * 0.05f)))
       .toDF("vec_id", "vec")
     Ann.ivfAppend(spark, idx, far, "vec_id", "vec", 4)
-    val n = spark.read.parquet(s"$idx/assignments").count()
+    val n = Ann.readIvfAssignments(spark, idx).count()
     assert(n == 1100L)
     val r = Maintain.maintainIvf(spark, idx, 4, numCentroids = 0,
       staleThreshold = 0.5, kmeansIters = 3).collect().head
     assert(r.getBoolean(3), s"drifted fixture must rebuild: $r")
-    val k = spark.read.parquet(s"$idx/centroids").count()
+    val k = committed(idx, "centroids").count()
     assert(k == Ann.autoGranularity(n).toLong,
       s"retrain must re-size K = ceil($n/512) = ${Ann.autoGranularity(n)}, got $k")
-    assert(spark.read.parquet(s"$idx/assignments").count() == n)
+    assert(committed(idx, "assignments").count() == n)
   }
 }

@@ -1,10 +1,15 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.core.Snapshots
 import org.apache.spark.sql.functions.{col, lit, row_number}
 
 class AnnSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The committed version of one index table (`centroids`, `assignments`). */
+  private def committed(index: String, table: String) =
+    Snapshots.open(spark, index).read(spark, table)
 
   // 4-dim toy corpus: 0‖1 (parallel), 2 orthogonal to both, 3 ≈ 0
   private val vecs = Seq(
@@ -123,8 +128,9 @@ class AnnSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val path = scratch("ivf-index")
     Ann.buildIvfIndex(corpus, "vec_id", "embedding", 8, numCentroids = 4, path)
-    // layout: one directory per cluster
-    val dirs = new java.io.File(s"$path/assignments").listFiles()
+    // layout: one directory per cluster in the committed version
+    val version = Snapshots.open(spark, path).path("assignments")
+    val dirs = new java.io.File(version).listFiles()
       .filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.forall(_.startsWith("cid=")) && dirs.length == 4, dirs.toSeq)
     // file-count discipline (guide §6/§2.2): the rebalance-keyed write
@@ -133,7 +139,7 @@ class AnnSpec extends SparkSpec {
     // explosion of an unclustered write; only a genuinely oversized cell
     // may split into more files
     dirs.foreach { d =>
-      val nFiles = new java.io.File(s"$path/assignments/$d").listFiles()
+      val nFiles = new java.io.File(s"$version/$d").listFiles()
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
       assert(nFiles == 1, s"$d has $nFiles files, expected 1")
     }
@@ -273,11 +279,11 @@ class AnnSpec extends SparkSpec {
     Ann.buildIvfIndex(corpus, "vec_id", "embedding", 4,
       numCentroids = 2, path, kmeansIters = 5)
     // layout unchanged: cid= partition dirs
-    val dirs = new java.io.File(s"$path/assignments").listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted
+    val dirs = new java.io.File(Snapshots.open(spark, path).path("assignments"))
+      .listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.forall(_.startsWith("cid=")) && dirs.length == 2, dirs.toSeq)
     // trained clusters align with the blobs: a clean 30/30 split
-    val sizes = spark.read.parquet(s"$path/assignments")
+    val sizes = committed(path, "assignments")
       .groupBy("cid").count().collect().map(_.getLong(1)).sorted.toSeq
     assert(sizes == Seq(30L, 30L), s"cluster sizes $sizes")
     // nprobe=1 against the trained index achieves FULL recall vs brute
@@ -561,28 +567,38 @@ class AnnSpec extends SparkSpec {
     val inc = scratch("ivf-inc"); val full = scratch("ivf-full")
     val old = e.where(col("vec_id") % 3 =!= 0)
     Ann.buildIvfIndex(old, "vec_id", "embedding", 64, 16, inc)
-    val filesBefore = new java.io.File(s"$inc/assignments").listFiles()
-      .filter(_.isDirectory)
-      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
-      .map(f => f.getPath -> f.lastModified()).toMap
+    val before = Snapshots.open(spark, inc)
+    def files(dir: String): Map[String, (Long, Long)] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).map(f => f.getPath -> ((f.lastModified(), f.length()))).toMap
+    }
+    val filesBefore = before.dirs.keys.toSeq.map(t => files(before.path(t))).reduce(_ ++ _)
     val n = Ann.ivfAppend(spark, inc,
       e.where(col("vec_id") % 3 === 0), "vec_id", "embedding", 64)
     assert(n == e.where(col("vec_id") % 3 === 0).count())
-    // append must not rewrite or delete any pre-existing cell file
+    // append commits a delta beside the base: the committed version still
+    // points at the base's cell files, and no file of the previous
+    // version is rewritten or deleted
+    val after = Snapshots.open(spark, inc)
+    assert(after.id == before.id + 1)
+    assert(after.dirs -- before.dirs.keys == after.dirs.filter(_._1.startsWith("append_")))
+    assert(before.dirs.forall { case (t, d) => after.dirs(t) == d })
+    assert(filesBefore.nonEmpty)
     filesBefore.foreach { case (p, m) =>
       val f = new java.io.File(p)
-      assert(f.exists() && f.lastModified() == m, s"append disturbed $p")
+      assert(f.exists() && (f.lastModified(), f.length()) == m, s"append disturbed $p")
     }
     // content identity: membership depends only on the FROZEN centroids,
     // so a one-shot assignment of ALL vectors against them must agree
     // cell-for-cell with the appended index
-    val cents = spark.read.parquet(s"$inc/centroids")
+    val cents = committed(inc, "centroids")
       .select(col("cid").as("vec_id"), col("cvec").as("embedding"))
     val oneShot = Ann.assignClusters(e, cents, "vec_id", "embedding", 64)
       .select(col("__vid"), col("__cid")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val incCells = spark.read.parquet(s"$inc/assignments")
-      // partition-dir inference types cid=K as INT; restore long
+    val incCells = Ann.readIvfAssignments(spark, inc)
+      // the live read types cid as INT; restore long
       .select(col("vec_id"), col("cid").cast("long")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(incCells.size == oneShot.size, "appended index lost vectors")
@@ -603,40 +619,42 @@ class AnnSpec extends SparkSpec {
     val b1 = rest.where((col("vec_id") / 3).cast("long") % 2 === 1)
     Ann.ivfDeltaAppend(spark, idx, b0, "vec_id", "embedding", 64, 0L)
     Ann.ivfDeltaAppend(spark, idx, b1, "vec_id", "embedding", 64, 1L)
-    def state() = Ann.readIvfAssignments(spark, idx)
+    def cells(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("cid")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      .map(r => r.getLong(0) -> r.getInt(1)).toSeq.sorted
+    def state() = cells(Ann.readIvfAssignments(spark, idx))
     val afterIngest = state()
-    assert(afterIngest.size == e.count(), "live read must see base + deltas")
+    assert(afterIngest.size == e.count(), "live read must see base + deltas, once each")
     // REPLAY batch 1 (foreachBatch is at-least-once) → state unchanged
     Ann.ivfDeltaAppend(spark, idx, b1, "vec_id", "embedding", 64, 1L)
     assert(state() == afterIngest, "delta replay must be idempotent")
     // one-shot assignment against the frozen centroids is the truth
-    val cents = spark.read.parquet(s"$idx/centroids")
+    val cents = committed(idx, "centroids")
       .select(col("cid").as("vec_id"), col("cvec").as("embedding"))
     val oneShot = Ann.assignClusters(e, cents, "vec_id", "embedding", 64)
       .select(col("__vid"), col("__cid")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
+      .map(r => r.getLong(0) -> r.getLong(1).toInt).toSeq.sorted
     assert(afterIngest == oneShot, "delta ingest diverged from one-shot")
-    // crash-window: keep a copy of a folded delta, compact, restore it —
-    // the watermark inside the swapped base must hide the stale delta
-    val d1 = new java.io.File(s"$idx/deltas/batch=1")
-    val stash = new java.io.File(scratch("ivf-stash"), "batch=1")
-    org.apache.commons.io.FileUtils.copyDirectory(d1, stash)
+    // crash window: a reader pinned before the compaction keeps reading
+    // the deltas it resolved, and the compaction folds them in ONE commit
+    val pinned = Ann.readIvfAssignments(spark, idx)
     val (nBase, folded) = Ann.ivfCompactDeltas(spark, idx)
     assert(folded == 2 && nBase == e.count())
-    assert(Ann.ivfWatermark(spark, idx) == 1L)
+    val compacted = Snapshots.open(spark, idx)
+    assert(compacted.watermark.contains(1L))
+    assert(compacted.dirs.keySet == Set("centroids", "assignments"))
+    assert(cells(pinned) == afterIngest, "a pinned reader survives the compaction")
     assert(state() == afterIngest, "compaction must be read-invisible")
-    org.apache.commons.io.FileUtils.copyDirectory(stash, d1) // failed GC sim
-    assert(state() == afterIngest,
-      "a below-watermark delta must be invisible (crashed GC window)")
+    // a replay of a folded batch is a no-op: the watermark rides the record
+    assert(Ann.ivfDeltaAppend(spark, idx, b1, "vec_id", "embedding", 64, 1L) == 0L)
+    assert(Snapshots.currentId(spark, idx).contains(compacted.id))
+    assert(state() == afterIngest, "a folded batch's replay must not double-count")
     // compacted base carries every vector in pruned cid= partitions
-    assert(spark.read.parquet(s"$idx/assignments")
-      .where(col("cid").isNotNull).count() == e.count())
-    // idempotent re-compaction: no live deltas → no-op + GC of the stale dir
+    assert(committed(idx, "assignments").where(col("cid").isNotNull).count() == e.count())
+    // idempotent re-compaction: no deltas → no commit
     val (n2, f2) = Ann.ivfCompactDeltas(spark, idx)
     assert(f2 == 0 && n2 == e.count())
-    assert(!d1.exists(), "re-compaction must GC the dead delta")
+    assert(Snapshots.currentId(spark, idx).contains(compacted.id))
   }
 
   test("a partially-committed delta (no _SUCCESS) is invisible and never folded") {
@@ -647,10 +665,11 @@ class AnnSpec extends SparkSpec {
       "vec_id", "embedding", 64, 16, idx)
     val baseCount = Ann.readIvfAssignments(spark, idx).count()
     val batch = e.where(col("vec_id") % 3 === 0)
-    Ann.ivfDeltaAppend(spark, idx, batch, "vec_id", "embedding", 64, 0L)
-    // simulate the crash window: the writing job died mid-commit —
-    // part files exist, _SUCCESS does not
-    val marker = new java.io.File(s"$idx/deltas/batch=0/_SUCCESS")
+    // the crash window: the delta's writing job died mid-commit — part
+    // files exist, _SUCCESS does not, and no record names the delta
+    val txn = Snapshots.begin(spark, idx)
+    Ann.stageDelta(txn, batch, "vec_id", "embedding", 64, Some(0L))
+    val marker = new java.io.File(txn.dir("batch_0"), "_SUCCESS")
     assert(marker.exists()); marker.delete()
     assert(Ann.readIvfAssignments(spark, idx).count() == baseCount,
       "a partial delta must be invisible to reads")
@@ -658,15 +677,38 @@ class AnnSpec extends SparkSpec {
     // that would permanently hide the batch's complete replay
     val (_, folded) = Ann.ivfCompactDeltas(spark, idx)
     assert(folded == 0, "partial delta must not be folded")
-    assert(Ann.ivfWatermark(spark, idx) == -1L,
+    assert(Snapshots.open(spark, idx).watermark.isEmpty,
       "watermark must not advance past an un-replayed batch")
-    assert(new java.io.File(s"$idx/deltas/batch=0").exists(),
-      "the about-to-be-replayed dir must not be GC'd")
-    // the stream replays the batch (overwrite) → now complete → folds
+    // the stream replays the batch → committed → folds
     Ann.ivfDeltaAppend(spark, idx, batch, "vec_id", "embedding", 64, 0L)
     val (n, folded2) = Ann.ivfCompactDeltas(spark, idx)
     assert(folded2 == 1 && n == e.count())
     assert(Ann.readIvfAssignments(spark, idx).count() == e.count())
+    assert(Snapshots.open(spark, idx).watermark.contains(0L))
+  }
+
+  test("streamed vectors are queryable and counted before any compaction") {
+    import org.apache.spark.sql.functions.{col, sum}
+    val rnd = new scala.util.Random(11)
+    val e = (0L until 300L).map(i => i -> Array.fill(8)(rnd.nextFloat() * 2 - 1))
+      .toDF("vec_id", "embedding")
+    val idx = scratch("ivf-live")
+    Ann.buildIvfIndex(e.where(col("vec_id") % 3 =!= 0),
+      "vec_id", "embedding", 8, 4, idx)
+    val streamed = e.where(col("vec_id") % 3 === 0)
+    Ann.ivfDeltaAppend(spark, idx, streamed, "vec_id", "embedding", 8, 0L)
+    // n_vecs counts every live vector: base + the un-compacted delta
+    val nVecs = Ann.ivfStaleness(spark, idx, 8).agg(sum(col("n_vecs")))
+      .head().getLong(0)
+    assert(nVecs == 300L, s"staleness counted $nVecs of 300 vectors")
+    // a copy of streamed vector 0 under a fresh id finds vector 0 at
+    // cosine 1 (exhaustive probe)
+    val probe = streamed.where(col("vec_id") === 0L)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    val hits = Ann.queryIvfIndex(spark, idx, probe, "vec_id", "embedding", 8,
+        k = 1, nprobe = 4)
+      .collect().map(_.getLong(1)).toSeq
+    assert(hits == Seq(0L), s"the streamed vector must be found: $hits")
   }
 
   test("srpAutoBits: bucket population pinned, unclamped past the old one-long ceiling") {

@@ -153,52 +153,6 @@ class IncrementalSpec extends SparkSpec {
     assert(rolledUp(path).isEmpty)
   }
 
-  test("crash before commit: rollup serves the last commit, refresh re-stages") {
-    val path = scratch("inc_crash")
-    val before = orders.where(dayExpr < cut)
-    Incremental.writePartials(
-      Incremental.buildPartials(before, dayExpr, Seq("o_orderpriority"), cents),
-      path)
-    // a writer that died after staging version 2 and before its commit:
-    // the staged dir holds the full history, but nothing published it
-    graft.core.Snapshots.stage(spark, path, "partials",
-      Incremental.buildPartials(orders, dayExpr, Seq("o_orderpriority"), cents), 2)
-    assert(snapshotIds(path).contains(1))
-    assert(rolledUp(path) == directMonthly(before))
-    // the next refresh takes the same id, overwrites the staged dir, commits
-    Incremental.refresh(orders.where(dayExpr === cut), path,
-      dayExpr, Seq("o_orderpriority"), cents)
-    assert(snapshotIds(path).contains(2))
-    assert(rolledUp(path) == directMonthly(orders.where(dayExpr <= cut)))
-  }
-
-  /** (relative path, size, mtime) of every file and dir under `root`. */
-  private def listing(root: String): Set[(String, Long, Long)] = {
-    val base = java.nio.file.Paths.get(root)
-    val walk = java.nio.file.Files.walk(base)
-    try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.map { p =>
-        val f = p.toFile
-        (base.relativize(p).toString, if (f.isFile) f.length() else 0L,
-          f.lastModified())
-      }.toSet
-    } finally walk.close()
-  }
-
-  test("reads never write: rollup leaves the store byte-for-byte untouched") {
-    val path = scratch("inc_readonly")
-    Incremental.writePartials(
-      Incremental.buildPartials(orders.where(dayExpr < cut),
-        dayExpr, Seq("o_orderpriority"), cents), path)
-    Incremental.refresh(orders.where(dayExpr === cut), path,
-      dayExpr, Seq("o_orderpriority"), cents)
-    val before = listing(path)
-    assert(rolledUp(path) == directMonthly(orders.where(dayExpr <= cut)))
-    assert(Incremental.read(spark, path).count() > 0)
-    assert(listing(path) == before)
-  }
-
   test("a rollup frame built before a refresh still collects after it") {
     val path = scratch("inc_pinned")
     val before = orders.where(dayExpr < cut)
@@ -213,45 +167,6 @@ class IncrementalSpec extends SparkSpec {
     assert(got == directMonthly(before))
     assert(got != directMonthly(orders.where(dayExpr <= cut)))
     assert(rolledUp(path) == directMonthly(orders.where(dayExpr <= cut)))
-  }
-
-  test("two rollup readers beside one refresh writer see only commits") {
-    val path = scratch("inc_threads")
-    Incremental.writePartials(
-      Incremental.buildPartials(orders.where(dayExpr < cut),
-        dayExpr, Seq("o_orderpriority"), cents), path)
-    val old = directMonthly(orders.where(dayExpr < cut))
-    val fresh = directMonthly(orders.where(dayExpr <= cut))
-    assert(old != fresh)
-    @volatile var refreshedAt = Long.MaxValue
-    // each reader records (start nanos, answer) per read, until one of its
-    // reads has started after the writer returned
-    def reader() = {
-      val out = Seq.newBuilder[(Long, Answer)]
-      var start = 0L
-      while (start <= refreshedAt) {
-        start = System.nanoTime()
-        out += (start -> rolledUp(path))
-      }
-      out.result()
-    }
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val readers = Seq.fill(2)(Future(reader()))
-      Await.result(Future {
-        Thread.sleep(200)
-        Incremental.refresh(orders.where(dayExpr === cut), path,
-          dayExpr, Seq("o_orderpriority"), cents)
-        refreshedAt = System.nanoTime()
-      }, Duration.Inf)
-      val reads = readers.flatMap(Await.result(_, Duration.Inf))
-      assert(reads.forall { case (_, r) => r == old || r == fresh })
-      val late = reads.filter(_._1 > refreshedAt)
-      assert(late.nonEmpty && late.forall(_._2 == fresh))
-    } finally pool.shutdown()
   }
 
   test("two refreshes in the same second: the second one's rows are visible") {

@@ -354,13 +354,14 @@ class StreamsSpec extends SparkSpec {
       "embedding", 64, ckpt).awaitTermination()
     input.addData(half0.toSeq); drain() // micro-batch 0
     input.addData(half1.toSeq); drain() // micro-batch 1
-    // each trigger wrote its own batch= delta; base files untouched
-    assert(new java.io.File(s"$idx/deltas").listFiles()
-      .count(_.getName.startsWith("batch=")) == 2)
+    // each trigger committed its own batch_ delta; the base is untouched
+    val snap = graft.core.Snapshots.open(spark, idx)
+    assert(snap.dirs.keySet == Set("centroids", "assignments", "batch_0", "batch_1"))
+    assert(snap.tables("assignments") == 1)
     val live = Ann.readIvfAssignments(spark, idx)
       .select(col("vec_id"), col("cid")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val cents = spark.read.parquet(s"$idx/centroids")
+    val cents = snap.read(spark, "centroids")
       .select(col("cid").as("vec_id"), col("cvec").as("embedding"))
     val oneShot = Ann.assignClusters(e, cents, "vec_id", "embedding", 64)
       .select(col("__vid"), col("__cid")).collect()
