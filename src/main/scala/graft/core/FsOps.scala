@@ -24,8 +24,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Callers are the path-addressed stores that readers (and perfbench)
   * open by path: the merge-on-read base (`MergeOnRead.compact`), the
-  * curated tables (`Pipelines.overwriteCurated`) and `Layout.compact`.
-  * Every versioned store is on [[Snapshots]] instead, and
+  * curated tables the daily merge executors and `jobs.Forget` rewrite
+  * (`Pipelines.overwriteCurated`) and `Layout.compact`. Every versioned
+  * store, the streaming sinks' tables included, is on [[Snapshots]] instead, and
   * `CommitGateSpec` fails on a new caller anywhere else. Callers stage
   * the full replacement inside `tmp` BEFORE calling. */
 object FsOps {

@@ -7,7 +7,8 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
   * the reference's daily multi-table rebuild, and the one commit
   * protocol of every versioned store in the engine
   * ([[graft.ops.Incremental]] partials, the IVF index of
-  * [[graft.ops.Ann]], the build-once query caches).
+  * [[graft.ops.Ann]], the build-once query caches, and the tables of the
+  * [[graft.streaming.Streams]] upsert and incremental-snapshot sinks).
   *
   * The reference's `ProcessDaily.usql` publishes ~33 curated tables per
   * day as independent TRUNCATE+INSERTs (one per table, `:229-3650`); a

@@ -129,22 +129,30 @@ object Pipelines {
 
   // -- §2.10(a) snapshot merge ----------------------------------------------
 
-  /** One snapshot entity for one day. Returns the new snapshot (also
-    * persisted). `truncate=false` reproduces the CommitParent append quirk:
-    * rank-1 rows are appended to the untruncated table
-    * (ProcessDaily.usql:409), so duplicates accumulate — faithful mode. */
   /** One day's typed rows for a snapshot entity (shared by the full
     * rewrite and merge-on-read paths). */
   def freshSnapshot(stagedDay: DataFrame, spec: SnapshotSpec): DataFrame =
     project(stagedDay.where(spec.entityPred(col("entity_name"))), spec.fields)
 
+  /** The next snapshot of one snapshot entity: `prior` merged with one
+    * day's [[freshSnapshot]] rows — the executor shared by the
+    * path-addressed [[runSnapshot]] and the streaming
+    * [[graft.streaming.Streams.incrementalSnapshot]]. `truncate=false`
+    * reproduces the CommitParent append quirk: rank-1 rows are appended
+    * to the untruncated table (ProcessDaily.usql:409), so duplicates
+    * accumulate — faithful mode. */
+  def mergeSnapshot(prior: DataFrame, fresh: DataFrame, spec: SnapshotSpec): DataFrame = {
+    val merged = Merges.snapshotMerge(prior, fresh, Seq("etl_source_id"), mergeOrder)
+    if (spec.truncate) merged else prior.unionByName(merged)
+  }
+
+  /** One snapshot entity for one day, written over `curatedDir/<table>`.
+    * Returns the new snapshot. */
   def runSnapshot(spark: SparkSession, stagedDay: DataFrame, curatedDir: String,
       spec: SnapshotSpec): DataFrame = {
     val fresh = freshSnapshot(stagedDay, spec)
     val prior = readCurated(spark, curatedDir, spec.table, fresh)
-    val merged = Merges.snapshotMerge(prior, fresh, Seq("etl_source_id"), mergeOrder)
-    val result = if (spec.truncate) merged else prior.unionByName(merged)
-    overwriteCurated(result, curatedDir, spec.table)
+    overwriteCurated(mergeSnapshot(prior, fresh, spec), curatedDir, spec.table)
     Tables.parquet(spark, tablePath(curatedDir, spec.table))
   }
 

@@ -1,7 +1,8 @@
 package graft.jobs
 
+import graft.core.Tables
 import graft.entities.Pipelines
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Right-to-be-forgotten erasure over curated tables — the deletion half
@@ -36,10 +37,10 @@ object Forget {
     * `keyCol` column must have exactly one column, which is taken as
     * the key set.
     *
-    * Audit counts ride the write as observations
-    * ([[graft.core.Metrics.observed]]): ONE table pass total — at
-    * warehouse scale the previous two extra `count()`s were each a full
-    * re-scan of the table being erased. */
+    * Audit counts come from the parquet footers of the table before and
+    * after the rewrite, with no Spark job: ONE table pass total — at
+    * warehouse scale a `count()` would be a full re-scan of the table
+    * being erased. */
   def eraseSubjects(spark: SparkSession, curatedDir: String, table: String,
       keyCol: String, subjects: DataFrame): DataFrame = {
     val keySrc =
@@ -51,19 +52,11 @@ object Forget {
         col(subjects.columns.head)
       }
     val keys = subjects.select(keySrc.as(keyCol)).distinct()
-    val cur = spark.read.parquet(Pipelines.tablePath(curatedDir, table))
-    // both audit counts ride the write's ONE pass: an observation BELOW
-    // the anti-join sees every pre-erasure row, one above sees the kept
-    // rows — no separate count() re-scans of a table this job exists to
-    // rewrite anyway
-    val (curObserved, obsBefore) = graft.core.Metrics.observed(
-      cur, s"forget_${table}_before", "n" -> count(lit(1)))
-    val kept = curObserved.join(broadcast(keys), Seq(keyCol), "left_anti")
-    val (keptObserved, obsAfter) = graft.core.Metrics.observed(
-      kept, s"forget_${table}_after", "n" -> count(lit(1)))
-    Pipelines.overwriteCurated(keptObserved, curatedDir, table)
-    val before = obsBefore.get("n").asInstanceOf[Long]
-    val after = obsAfter.get("n").asInstanceOf[Long]
+    val path = Pipelines.tablePath(curatedDir, table)
+    val before = GraftSqlShim.parquetRows(spark, path)
+    val kept = Tables.parquet(spark, path).join(broadcast(keys), Seq(keyCol), "left_anti")
+    Pipelines.overwriteCurated(kept, curatedDir, table)
+    val after = GraftSqlShim.parquetRows(spark, path)
     import spark.implicits._
     Seq((table, before, before - after, after))
       .toDF("table", "n_before", "n_erased", "n_after")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.{Snapshots, Tables}
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,6 +41,33 @@ object StreamingQueries {
     try f finally spark.conf.set(key, prev)
   }
 
+  /** The `events` table of `dir` as a file stream. File sources list a
+    * DIRECTORY, so a glob pins the one table; the schema comes from its
+    * footer. `normalizeEventTs` pins `ts` to the epoch-NANOS-long contract
+    * whatever the corpus drop shipped (ns-as-long or µs timestamp), and
+    * `event_ts` truncates it to micros with integer DIV, exactly like
+    * DuckDB's ns->us read does. */
+  private def eventStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(Tables.parquet(spark, s"$dir/events.parquet").schema)
+      .option("pathGlobFilter", "events.parquet").parquet(dir)
+      .transform(Tables.normalizeEventTs)
+      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
+
+  /** Run `df` to completion (`AvailableNow`) into a fresh memory sink and
+    * return the sink's table. The checkpoint is removed once the stream
+    * has terminated: the memory sink already holds the result. */
+  private def runToMemory(df: DataFrame, name: String,
+      mode: String = "append"): DataFrame = {
+    val sink = s"${name}_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val ckpt = new org.apache.hadoop.fs.Path(
+      s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
+    try df.writeStream.format("memory").queryName(sink).outputMode(mode)
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally ckpt.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).delete(ckpt, true)
+    df.sparkSession.table(sink)
+  }
+
   /** Six-hour tumbling-window event counts per type, append mode with a
     * zero-delay watermark, run to completion over the events table.
     *
@@ -54,29 +82,9 @@ object StreamingQueries {
     * formatted as strings to sidestep the parquet ns-vs-µs divergence. */
   def q37StreamWindow(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    // normalizeEventTs pins ts to the epoch-NANOS-long contract whatever
-    // the corpus drop shipped (ns-as-long or µs timestamp); integer DIV
-    // truncates to micros exactly like DuckDB's ns->us read does
-    // file streaming sources list a DIRECTORY; the glob pins the one table
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-    val counts = Streams.windowedCounts(events, "event_ts", "event_type",
+    val counts = Streams.windowedCounts(eventStream(spark, dir), "event_ts", "event_type",
       windowDur = "6 hours", slideDur = "6 hours", watermarkDelay = "0 seconds")
-    val sink = s"q37_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = counts.writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink).select(
+    runToMemory(counts, "q37").select(
       date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
       date_format(col("window_end"), "yyyy-MM-dd HH:mm:ss").as("window_end"),
       col("event_type"),
@@ -92,29 +100,13 @@ object StreamingQueries {
     * per row before the sum (merge-order-proof). */
   def q89StreamEnrich(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-    val dim = spark.read.parquet(s"$dir/customer.parquet")
+    val dim = Tables.parquet(spark, s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = Streams.enrichedWindowedAgg(events, dim,
+    val agg = Streams.enrichedWindowedAgg(eventStream(spark, dir), dim,
       streamKey = "user_id", dimKey = "c_custkey", tsCol = "event_ts",
       segCol = "c_mktsegment", valueCol = "value",
       windowDur = "6 hours", watermarkDelay = "0 seconds")
-    val sink = s"q89_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink).select(
+    runToMemory(agg, "q89").select(
       date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
       date_format(col("window_end"), "yyyy-MM-dd HH:mm:ss").as("window_end"),
       col("c_mktsegment"), col("n_events"), col("revenue_cents"))
@@ -132,25 +124,9 @@ object StreamingQueries {
   // (user × session) keys — enough rows that the per-partition merge sort,
   // not store count, dominates; see withStatePartitions for the trade.
   def q51StreamSession(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-    val sessions = Streams.sessionWindows(events, "event_ts", "user_id",
+    val sessions = Streams.sessionWindows(eventStream(spark, dir), "event_ts", "user_id",
       gap = "12 hours", watermarkDelay = "0 seconds")
-    val sink = s"q51_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = sessions.writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("append")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink).select(
+    runToMemory(sessions, "q51").select(
       col("user_id"),
       date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
       date_format(col("session_end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
@@ -165,23 +141,10 @@ object StreamingQueries {
     * survives is arrival-order-dependent, the key set is not. */
   def q60StreamDedup(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-    val deduped = Streams.dedupStream(events, "event_ts",
+    val deduped = Streams.dedupStream(eventStream(spark, dir), "event_ts",
       Seq("user_id", "event_type"), watermarkDelay = "1 hour")
       .select(col("user_id"), col("event_type"))
-    val sink = s"q60_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = deduped.writeStream
-      .format("memory").queryName(sink).outputMode("append")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    runToMemory(deduped, "q60")
   }
 
   /** Stream-stream inner interval join: each purchase matched to the same
@@ -191,15 +154,10 @@ object StreamingQueries {
     * batch join the oracle spells. */
   def q61StreamJoin(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def stream() = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-    val clicks = stream().where(col("event_type") === "click")
+    val clicks = eventStream(spark, dir).where(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("event_ts").as("click_ts"))
-    val purchases = stream().where(col("event_type") === "purchase")
+    val purchases = eventStream(spark, dir).where(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("event_ts").as("purchase_ts"))
     val joined = Streams.intervalJoin(clicks, purchases, "user_id",
@@ -207,15 +165,7 @@ object StreamingQueries {
       watermarkDelay = "0 seconds")
       .select(col("click_id"), col("l.user_id").as("user_id"),
         col("purchase_id"))
-    val sink = s"q61_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = joined.writeStream
-      .format("memory").queryName(sink).outputMode("append")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    runToMemory(joined, "q61")
   }
 
   /** Streaming LEFT OUTER interval join, run to completion: every click
@@ -227,15 +177,10 @@ object StreamingQueries {
     * two stream maxima) passed. */
   def q170StreamOuterJoin(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def stream() = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-    val clicks = stream().where(col("event_type") === "click")
+    val clicks = eventStream(spark, dir).where(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("event_ts").as("click_ts"))
-    val purchases = stream().where(col("event_type") === "purchase")
+    val purchases = eventStream(spark, dir).where(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("event_ts").as("purchase_ts"))
     val joined = Streams.intervalJoinOuter(clicks, purchases, "user_id",
@@ -243,15 +188,7 @@ object StreamingQueries {
       watermarkDelay = "0 seconds")
       .select(col("click_id"), col("l.user_id").as("user_id"),
         col("purchase_id"))
-    val sink = s"q170_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = joined.writeStream
-      .format("memory").queryName(sink).outputMode("append")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    runToMemory(joined, "q170")
   }
 
   /** Exact distinct users per 6-hour window on the event stream —
@@ -262,22 +199,9 @@ object StreamingQueries {
     * rule. */
   def q167StreamUniques(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-    val uniq = Streams.windowedUniqueKeys(events, "event_ts", "user_id",
+    val uniq = Streams.windowedUniqueKeys(eventStream(spark, dir), "event_ts", "user_id",
       windowDur = "6 hours", watermarkDelay = "0 seconds")
-    val sink = s"q167_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = uniq.writeStream
-      .format("memory").queryName(sink).outputMode("append")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink).select(
+    runToMemory(uniq, "q167").select(
       date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
       date_format(col("window_end"), "yyyy-MM-dd HH:mm:ss").as("window_end"),
       col("n_unique"))
@@ -292,10 +216,7 @@ object StreamingQueries {
     * batches, and the oracle replays it as one rank-1 window. */
   def q161StreamUpsert(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
+    val events = eventStream(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
     val root = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
       s"/graft_q161_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -303,7 +224,7 @@ object StreamingQueries {
       keys = Seq("user_id"), versionCols = Seq("ts", "event_id"),
       checkpoint = s"$root/_ckpt")
     q.awaitTermination()
-    spark.read.parquet(s"$root/user_latest")
+    Snapshots.open(spark, root).read(spark, "user_latest")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_type"), col("value").as("last_value"))
   }
@@ -319,14 +240,11 @@ object StreamingQueries {
     * because replayed events still land on their historical version. */
   def q215StreamScd2(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
+    val events = eventStream(spark, dir)
       .withColumn("ts_us", expr("ts div 1000L"))
       .select(col("event_id"), col("user_id"), col("ts_us"))
     val dim = graft.ops.History.scd2(
-        graft.core.Tables.table(spark, dir, "events")
+        Tables.table(spark, dir, "events")
           .withColumn("ts_us", expr("ts div 1000L")),
         Seq("user_id"), col("ts_us"), col("event_id"), Seq("event_type"))
       .select(col("user_id").as("d_user"), col("event_type").as("state"),
@@ -336,15 +254,7 @@ object StreamingQueries {
           col("ts_us") >= col("valid_from") &&
           (col("valid_to").isNull || col("ts_us") < col("valid_to")))
       .select(col("event_id"), col("user_id"), col("state"), col("version"))
-    val sink = s"q215_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = joined.writeStream
-      .format("memory").queryName(sink).outputMode("append")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    runToMemory(joined, "q215")
   }
 
   /** COMPLETE-output-mode streaming aggregate: the per-type running
@@ -358,22 +268,10 @@ object StreamingQueries {
     * group-by, which is what the oracle replays. */
   def q232StreamComplete(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val events = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.core.Tables.normalizeEventTs)
-    val counts = events.groupBy(col("event_type"))
+    val counts = eventStream(spark, dir).groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(expr("cast(round(value * 1000) as bigint)")).as("value_milli"))
-    val sink = s"q232_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = counts.writeStream
-      .format("memory").queryName(sink).outputMode("complete")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    runToMemory(counts, "q232", "complete")
   }
 
   /** Streaming ingest over the native Avro connector
@@ -391,24 +289,14 @@ object StreamingQueries {
       withStatePartitions(spark, 8) {
     val base = System.getProperty("java.io.tmpdir") +
       s"/graft_q249_${math.abs(dir.hashCode)}"
-    graft.core.Tables.table(spark, dir, "events")
+    Tables.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("vc"))
       .write.format("graftavro").mode("overwrite").save(base)
     val stream = spark.readStream.format("graftavro").load(base)
     val agg = stream.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("vc")).as("value_cents"))
-    val sink = s"q249_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(sink)
-      .outputMode("complete")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-$sink")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
+    runToMemory(agg, "q249", "complete")
       .select(col("event_type"), col("n_events"), col("value_cents"))
   }
 
@@ -428,13 +316,12 @@ object StreamingQueries {
     val lo = 0L; val hi = 50000L; val bins = 100
     val base = System.getProperty("java.io.tmpdir") +
       s"/graft_q265_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    graft.core.Tables.table(spark, dir, "events")
+    Tables.table(spark, dir, "events")
       .select(col("event_id"),
         round(col("value") * 100).cast("long").as("vc"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$base/feed")
-    val schema = spark.read.parquet(s"$base/feed").schema
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(Tables.parquet(spark, s"$base/feed").schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/feed")
     val q = Streams.histogramSink(stream, s"$base/state", "vc",
       lo, hi, bins, s"$base/ckpt")

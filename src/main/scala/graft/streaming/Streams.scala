@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.{Snapshots, Tables}
 import graft.entities.{Pipelines, Specs}
 import graft.ingest.Staging
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,21 +33,17 @@ object Streams {
       .withColumn("ingest_date", date_format(col("processed_at"), "yyyy-MM-dd"))
   }
 
-  /** Incremental snapshot maintenance: every micro-batch merges into the
-    * curated table through the identical batch executor
-    * (`Pipelines.runSnapshot`) — `Trigger.AvailableNow` makes this the
-    * streaming twin of the daily `ProcessDaily` run, exactly-once per
-    * checkpoint.
+  /** Incremental snapshot maintenance: every micro-batch merges into
+    * `spec.table` through the daily executor itself
+    * ([[Pipelines.mergeSnapshot]]) — `Trigger.AvailableNow` makes this the
+    * streaming twin of the daily `ProcessDaily` run. `curatedDir` is a
+    * [[Snapshots]] root holding that one table; read it with
+    * `Snapshots.open(spark, curatedDir).read(spark, spec.table)`.
     *
-    * foreachBatch is at-least-once, so a per-batch commit marker (the
-    * [[upsertBatch]] ledger) guards the replay: WITHOUT it, a replayed
-    * batch re-runs the executor, and for `truncate=false` specs (the
-    * CommitParent append quirk) `runSnapshot` APPENDS — a crash after
-    * the write but before the checkpoint commit would duplicate the
-    * batch's rows. Latest-wins merge specs are naturally replay-
-    * idempotent; the marker makes the append quirk safe too (the
-    * residual window shrinks to write→marker, where the latest-wins
-    * re-merge is byte-identical and the append case is documented). */
+    * Exactly-once: each batch is one [[commitBatch]], so a replayed batch
+    * id (foreachBatch is at-least-once; a fresh checkpoint restarts ids at
+    * 0) is a no-op even for `truncate=false` specs, whose merge APPENDS
+    * (the CommitParent quirk). */
   def incrementalSnapshot(spark: SparkSession, rawRoot: String,
       curatedDir: String, spec: Specs.SnapshotSpec,
       checkpoint: String): StreamingQuery =
@@ -55,17 +52,44 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fs = new org.apache.hadoop.fs.Path(curatedDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$curatedDir/_graft_commits_${spec.table}/$batchId")
-        if (!fs.exists(marker)) {
-          Pipelines.runSnapshot(spark, batch, curatedDir, spec)
-          fs.mkdirs(marker)
+        commitBatch(spark, curatedDir, spec.table, batchId) { prior =>
+          val fresh = Pipelines.freshSnapshot(batch, spec)
+          Pipelines.mergeSnapshot(prior.getOrElse(fresh.limit(0)), fresh, spec)
         }
-        ()
       }
       .start()
+
+  /** Apply micro-batch `batchId` to `table`, the one table of the
+    * [[Snapshots]] root `root`, as one commit: `next` maps the prior
+    * version (None before the first batch) to the new table, which lands
+    * in the same put-if-absent record as the stream watermark advanced to
+    * `batchId`. A batch at or below the watermark is a replay and writes
+    * nothing; a crash before the commit leaves only an invisible staging
+    * dir. Either way no batch applies twice. */
+  private def commitBatch(spark: SparkSession, root: String, table: String,
+      batchId: Long)(next: Option[DataFrame] => DataFrame): Unit = {
+    val txn = Snapshots.begin(spark, root)
+    if (stageBatch(txn, table, batchId)(next)) {
+      txn.commit()
+      Snapshots.vacuum(spark, root, keepLast = 2)
+    }
+  }
+
+  /** [[commitBatch]]'s staging half: false, staging nothing, for a
+    * replayed batch. */
+  private[graft] def stageBatch(txn: Snapshots.Txn, table: String, batchId: Long)
+      (next: Option[DataFrame] => DataFrame): Boolean =
+    !txn.watermark.exists(_ >= batchId) && {
+      val prior = txn.parent.map { p =>
+        // one watermark per root: a second stream's batches would read as replays
+        require(p.dirs.keySet == Set(table),
+          s"${txn.root} holds ${p.dirs.keys.mkString(", ")}; a stream sink root holds only its $table")
+        p.read(txn.spark, table)
+      }
+      txn.stage(table, next(prior))
+      txn.advance(batchId)
+      true
+    }
 
   /** Watermarked sliding-window event counts — the standard streaming
     * aggregate (late rows beyond the watermark are dropped, state is
@@ -374,19 +398,16 @@ object Streams {
 
   // -- exactly-once streaming MERGE INTO -------------------------------------
 
-  /** Apply one micro-batch as a version-aware MERGE into the parquet table
-    * at `<tableDir>/<table>` — the reusable body of [[upsertSink]], exposed
-    * so retry semantics are testable without a streaming runtime.
+  /** Apply one micro-batch as a version-aware MERGE into `table`, the one
+    * table of the [[Snapshots]] root `tableDir` — the reusable body of
+    * [[upsertSink]], exposed so retry semantics are testable without a
+    * streaming runtime. Read the table with
+    * `Snapshots.open(spark, tableDir).read(spark, table)`.
     *
     * Exactly-once: `foreachBatch` is AT-LEAST-once (a batch is re-run if
     * the driver dies between the sink action and the checkpoint commit),
-    * so each applied batch is recorded in a commit ledger
-    * (`<tableDir>/_graft_commits_<table>/<batchId>`) and a replayed
-    * batchId is a no-op. The marker lands AFTER the table swap; a crash
-    * inside that window re-applies the merge, which is safe because the
-    * merge itself is idempotent — newest-version-wins compares the source
-    * row against what is already in the table, so replaying the same rows
-    * reproduces the same table byte-for-byte.
+    * so the batch and the stream watermark commit as one record
+    * ([[commitBatch]]) and a replayed batchId is a no-op.
     *
     * Version-aware update: a source row overwrites its matched target row
     * only when its `versionCols` tuple is >= the target's — out-of-order
@@ -397,34 +418,31 @@ object Streams {
     * MERGE's one-source-row-per-key contract.
     *
     * 100 TB shape: one window shuffle over the (small) batch + the
-    * full-outer merge join, where AQE broadcasts the batch side; the
-    * rewrite is [[Pipelines.overwriteCurated]]'s rename-aside swap. A
-    * table too large to rewrite per batch pairs this same merge with
+    * full-outer merge join, where AQE broadcasts the batch side; each
+    * batch stages a full new version of the table. A table too large to
+    * rewrite per batch pairs this same merge with
     * [[graft.ops.MergeOnRead]]'s O(delta) log instead. `deleteWhen`
     * (over `src_*` columns) emits tombstone deletes. */
   def upsertBatch(tableDir: String, table: String, keys: Seq[String],
       versionCols: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None)
-      (batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
+      (batch: DataFrame, batchId: Long): Unit =
+    commitBatch(batch.sparkSession, tableDir, table, batchId)(
+      upsertMerge(batch, keys, versionCols, deleteWhen))
+
+  /** [[upsertBatch]]'s merge of `batch` into the prior table. */
+  private[graft] def upsertMerge(batch: DataFrame, keys: Seq[String],
+      versionCols: Seq[String], deleteWhen: Option[org.apache.spark.sql.Column])
+      (prior: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(s"$tableDir/_graft_commits_$table/$batchId")
-    if (fs.exists(marker)) return // replayed batch — already applied
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(versionCols.map(col(_).desc): _*)
     val src = batch.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn")
     // keys of the batch's tombstones: "delete if present, NEVER insert".
-    // MERGE's bare semantics would INSERT an unmatched delete row, which
-    // breaks replay idempotence in the crash window between the table
-    // publish and the marker write — the first application deletes key K,
-    // the replay sees K as source-only and resurrects it. The anti-join
-    // below makes delete rows terminal regardless of match state, so a
-    // replayed batch reproduces the same table byte-for-byte (and a
-    // first-batch tombstone never lands as live data).
+    // MERGE's bare semantics would INSERT an unmatched delete row, so a
+    // first-batch tombstone would land as live data; the anti-join below
+    // makes delete rows terminal regardless of match state.
     val deleteKeys = deleteWhen.map { d =>
       val aliased = src.columns.foldLeft(src) { (df, c) =>
         df.withColumnRenamed(c, s"src_$c")
@@ -432,25 +450,18 @@ object Streams {
       aliased.where(coalesce(d, lit(false)))
         .select(keys.map(k => col(s"src_$k").as(k)): _*)
     }
-    val tgtPath = Pipelines.tablePath(tableDir, table)
-    val merged0 =
-      if (!fs.exists(new Path(tgtPath))) src
-      else {
-        val target = spark.read.parquet(tgtPath)
-        val srcNewer =
-          struct(versionCols.map(c => col(s"src_$c")): _*) >=
-            struct(versionCols.map(target(_)): _*)
-        val nonKeys = batch.columns.filterNot(keys.contains)
-        val updates = nonKeys.map(c =>
-          c -> when(srcNewer, col(s"src_$c")).otherwise(target(c))).toMap
-        val inserts = batch.columns.map(c => c -> col(s"src_$c")).toMap
-        graft.ops.MergeInto.mergeInto(target, src, keys, updates, inserts,
-          deleteWhen)
-      }
-    val merged = deleteKeys.fold(merged0)(dk =>
-      merged0.join(broadcast(dk), keys, "left_anti"))
-    Pipelines.overwriteCurated(merged, tableDir, table)
-    fs.mkdirs(marker) // commit point: this batchId is now a no-op
+    val merged = prior.fold(src) { target =>
+      val srcNewer =
+        struct(versionCols.map(c => col(s"src_$c")): _*) >=
+          struct(versionCols.map(target(_)): _*)
+      val nonKeys = batch.columns.filterNot(keys.contains)
+      val updates = nonKeys.map(c =>
+        c -> when(srcNewer, col(s"src_$c")).otherwise(target(c))).toMap
+      val inserts = batch.columns.map(c => c -> col(s"src_$c")).toMap
+      graft.ops.MergeInto.mergeInto(target, src, keys, updates, inserts,
+        deleteWhen)
+    }
+    deleteKeys.fold(merged)(dk => merged.join(broadcast(dk), keys, "left_anti"))
   }
 
   /** Streaming near-duplicate detection — the streaming face of
@@ -488,8 +499,8 @@ object Streams {
       val cross =
         if (fs.exists(new Path(sigs)))
           TextDedup.incrementalDupPairsFrom(
-            spark.read.parquet(sigs).where(col("batch") < batchId),
-            spark.read.parquet(docs).where(col("batch") < batchId),
+            Tables.parquet(spark, sigs).where(col("batch") < batchId),
+            Tables.parquet(spark, docs).where(col("batch") < batchId),
             b, idCol, textCol, n, numHashes, bands, threshold)
         else within.limit(0) // first batch: no prior index, same schema
       within.unionByName(cross)
@@ -541,8 +552,9 @@ object Streams {
 
   /** Exactly-once streaming upsert: every micro-batch MERGEs into the
     * warehouse table through [[upsertBatch]] — the streaming twin of a
-    * nightly MERGE INTO job, with the commit ledger upgrading
-    * foreachBatch's at-least-once replay to exactly-once table state. */
+    * nightly MERGE INTO job, with the snapshot's stream watermark
+    * upgrading foreachBatch's at-least-once replay to exactly-once table
+    * state. */
   def upsertSink(stream: DataFrame, tableDir: String, table: String,
       keys: Seq[String], versionCols: Seq[String], checkpoint: String,
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
@@ -589,6 +601,6 @@ object Streams {
     * [[graft.ops.Sketches.histQuantile]]. */
   def histogramState(spark: SparkSession, stateDir: String): DataFrame =
     graft.ops.Sketches.histMerge(
-      Seq(spark.read.parquet(stateDir).select(col("bin"), col("cnt"))),
+      Seq(Tables.parquet(spark, stateDir).select(col("bin"), col("cnt"))),
       Seq.empty)
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
+import scala.jdk.CollectionConverters._
 
 /** Bridge between graft's custom Catalyst expressions and the public
   * `Column` API. Spark 4 made the Column↔Expression converters
@@ -67,8 +68,7 @@ object GraftSqlShim {
   /** The schema `spark.read.parquet(path)` infers while schema merging is
     * off, read on the driver from the one footer Spark's inference reads:
     * the path itself, or for a directory its first data file in path order
-    * (hidden names skipped as Spark's file index skips them; summary files
-    * are not data — Spark writes none). The conversion is Spark's own: the
+    * ([[dataFiles]]). The conversion is Spark's own: the
     * Spark-written schema key first, else the Parquet types under the
     * session's flags, so `nanosAsLong` holds. Spark's inference runs a job
     * to read that footer; this runs none and keeps nothing, so the schema
@@ -78,19 +78,8 @@ object GraftSqlShim {
   def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
     val conf = spark.sessionState.conf
     val hadoop = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(hadoop)
-    if (conf.isParquetSchemaMergingEnabled || !fs.exists(root)) return None
-    // plain listStatus, one directory at a time, as Spark's file index
-    // lists: FileSystem.listFiles builds a LocatedFileStatus per file, which
-    // copies its permissions, and the local filesystem reads those by
-    // forking `ls` once per file
-    def leaves(dir: Path): Iterator[Path] = fs.listStatus(dir).iterator
-      .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
-      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Iterator(s.getPath))
-    val data = (if (fs.getFileStatus(root).isDirectory) leaves(root) else Iterator(root))
-      .filterNot(p => Set("_metadata", "_common_metadata").contains(p.getName))
-    data.minByOption(_.toString).map { file =>
+    if (conf.isParquetSchemaMergingEnabled) return None
+    dataFiles(path, hadoop).minByOption(_.toString).map { file =>
       val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, hadoop),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
       ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
@@ -101,5 +90,33 @@ object GraftSqlShim {
           nanosAsLong = conf.legacyParquetNanosAsLong,
           respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
     }
+  }
+
+  /** The rows of the parquet data under `path`, summed from the footers:
+    * no Spark job, no data page read. */
+  def parquetRows(spark: SparkSession, path: String): Long = {
+    val hadoop = spark.sessionState.newHadoopConf()
+    dataFiles(path, hadoop).map { file =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, hadoop),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
+  }
+
+  /** The data files under `path` (none when it does not exist): hidden
+    * names are skipped as Spark's file index skips them, and summary files
+    * are not data — Spark writes none. Plain listStatus, one directory at
+    * a time, as Spark's file index lists: FileSystem.listFiles builds a
+    * LocatedFileStatus per file, which copies its permissions, and the
+    * local filesystem reads those by forking `ls` once per file. */
+  private def dataFiles(path: String, hadoop: org.apache.hadoop.conf.Configuration)
+      : Iterator[Path] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoop)
+    def leaves(dir: Path): Iterator[Path] = fs.listStatus(dir).iterator
+      .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Iterator(s.getPath))
+    if (!fs.exists(root)) Iterator.empty
+    else (if (fs.getFileStatus(root).isDirectory) leaves(root) else Iterator(root))
+      .filterNot(p => Set("_metadata", "_common_metadata").contains(p.getName))
   }
 }

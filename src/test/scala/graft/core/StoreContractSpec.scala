@@ -123,6 +123,24 @@ class StoreContractSpec extends SparkSpec {
       rows = tags => sorted(data(tags.lastOption.getOrElse(0)).where(col("id").between(20, 39))))
   }
 
+  // the streaming upsert sink's table: two keys from batch 0; batch `tag`
+  // updates key 1 and inserts key 100 + tag
+  private val upsert = {
+    import graft.streaming.Streams
+    def batch(tag: Int) = Seq((1L, tag.toLong, s"a$tag"), (100L + tag, tag.toLong, "new"))
+      .toDF("id", "ver", "val")
+    def merge(tag: Int) = Streams.upsertMerge(batch(tag), Seq("id"), Seq("ver"), None) _
+    Store("streaming upsert sink",
+      create = root => Streams.upsertBatch(root, "t", Seq("id"), Seq("ver"))(
+        Seq((1L, 0L, "a0"), (2L, 0L, "b0")).toDF("id", "ver", "val"), 0L),
+      write = (root, tag) => Streams.upsertBatch(root, "t", Seq("id"), Seq("ver"))(batch(tag), tag),
+      stage = (txn, tag) => assert(Streams.stageBatch(txn, "t", tag.toLong)(merge(tag))),
+      read = root => Snapshots.open(spark, root).read(spark, "t"),
+      rows = tags => sorted((Seq((2L, 0L, "b0"),
+          tags.lastOption.fold((1L, 0L, "a0"))(t => (1L, t.toLong, s"a$t"))) ++
+        tags.map(t => (100L + t, t.toLong, "new"))).toDF("id", "ver", "val")))
+  }
+
   /** (relative path, size, mtime) of every file and dir under `root`. */
   private def listing(root: String): Set[(String, Long, Long)] = {
     val base = java.nio.file.Paths.get(root)
@@ -153,7 +171,7 @@ class StoreContractSpec extends SparkSpec {
     finally pool.shutdown()
   }
 
-  for (store <- Seq(raw, incremental, ivf, zoned)) {
+  for (store <- Seq(raw, incremental, ivf, zoned, upsert)) {
     import store._
 
     test(s"$name: reads never write") {

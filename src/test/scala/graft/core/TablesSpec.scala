@@ -56,7 +56,7 @@ class TablesSpec extends SparkSpec {
     val offenders = Seq("ops/MergeOnRead.scala", "core/Snapshots.scala",
         "ingest/Staging.scala", "entities/Pipelines.scala", "core/Layout.scala",
         "plans/MvRewriteRule.scala", "plans/ResultCache.scala", "ops/Ann.scala",
-        "jobs/Maintain.scala")
+        "jobs/Maintain.scala", "streaming/Streams.scala", "queries/StreamingQueries.scala")
       .filter(f => Files.readString(root.resolve(f)).contains("spark.read.parquet("))
     assert(offenders.isEmpty, s"read engine-managed stores with Tables.parquet: $offenders")
   }

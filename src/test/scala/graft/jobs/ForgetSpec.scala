@@ -35,6 +35,26 @@ class ForgetSpec extends SparkSpec {
     assert(again.getAs[Long]("n_after") == 80)
   }
 
+  test("eraseSubjects leaves no listener behind for a later persist to copy") {
+    // a listener registered on the session is copied into every session
+    // clone that persist makes, each clone adding one to the listener bus
+    val sc = spark.sparkContext
+    def persisted() = {
+      val df = spark.range(100).selectExpr("id % 7 AS k").persist()
+      try df.count() finally df.unpersist()
+      org.apache.spark.sql.GraftSqlShim.drainListeners(sc)
+      org.apache.spark.TraceSpecShim.listeners(sc)
+    }
+    val dir = scratch("forget-listeners")
+    graft.entities.Pipelines.overwriteCurated(
+      (1L to 20L).map(i => (i % 4, i)).toDF("user_id", "row_id"), dir, "t")
+    val listeners = persisted() // Spark registers its own listeners on first use
+    val audit = Forget.eraseSubjects(spark, dir, "t", "user_id", Seq(1L).toDF("uid"))
+      .collect().head
+    assert(audit.getAs[Long]("n_erased") == 5)
+    assert(persisted() == listeners)
+  }
+
   test("eraseAcross sweeps multiple tables with per-table audit rows") {
     val dir = scratch("forget-multi")
     graft.entities.Pipelines.overwriteCurated(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.core.Snapshots
 import graft.entities.Specs
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -33,7 +34,7 @@ class StreamsSpec extends SparkSpec {
     val q2 = Streams.incrementalSnapshot(spark, raw, curated, Specs.commit, ckpt)
     q2.awaitTermination()
 
-    val result = spark.read.parquet(s"$curated/commit")
+    val result = Snapshots.open(spark, curated).read(spark, "commit")
       .select("etl_source_id", "sha").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(result == Map("urn:c:1" -> "v2", "urn:c:2" -> "x1"))
@@ -477,7 +478,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   private def readTable(dir: String): Map[Long, (Long, String)] =
-    spark.read.parquet(s"$dir/t").collect()
+    Snapshots.open(spark, dir).read(spark, "t").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
 
   test("upsertBatch: insert, newer-version update, stale row ignored") {
@@ -513,23 +514,26 @@ class StreamsSpec extends SparkSpec {
     assert(readTable(dir) == Map(2L -> (1L, "b1")))
   }
 
-  test("upsertBatch: delete replay is byte-idempotent across the marker crash window") {
+  test("upsertBatch: a tombstone batch replayed after a crash before commit applies once") {
     import org.apache.spark.sql.functions.col
     val dir = scratch("upsert-del-replay")
-    val apply = Streams.upsertBatch(dir, "t", Seq("id"), Seq("ver"),
-      deleteWhen = Some(col("src_val") === "DEAD")) _
+    val dead = Some(col("src_val") === "DEAD")
+    val apply = Streams.upsertBatch(dir, "t", Seq("id"), Seq("ver"), dead) _
     apply(upsertFixture(Seq((1L, 10L, "a1"), (2L, 1L, "b1"))), 0L)
-    apply(upsertFixture(Seq((1L, 30L, "DEAD"))), 1L)
+    // the sink died after staging batch 1 and before its commit
+    val tombstone = upsertFixture(Seq((1L, 30L, "DEAD")))
+    val crashed = Snapshots.begin(spark, dir)
+    assert(Streams.stageBatch(crashed, "t", 1L)(
+      Streams.upsertMerge(tombstone, Seq("id"), Seq("ver"), dead)))
+    assert(readTable(dir) == Map(1L -> (10L, "a1"), 2L -> (1L, "b1")),
+      "a staged, uncommitted batch is invisible")
+    // foreachBatch replays batch 1, and then replays it once more
+    apply(tombstone, 1L)
     assert(readTable(dir) == Map(2L -> (1L, "b1")))
-    // crash window: the table published but the commit marker did not —
-    // foreachBatch replays batch 1; the deleted key must NOT resurrect
-    // as a source-only insert
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_graft_commits_t/1"), true)
-    apply(upsertFixture(Seq((1L, 30L, "DEAD"))), 1L)
+    apply(tombstone, 1L)
     assert(readTable(dir) == Map(2L -> (1L, "b1")),
       "replayed tombstone batch must reproduce the same table")
+    assert(Snapshots.open(spark, dir).watermark.contains(1L))
     // first-batch tombstone on an EMPTY table never lands as live data
     val dir2 = scratch("upsert-del-first")
     val apply2 = Streams.upsertBatch(dir2, "t", Seq("id"), Seq("ver"),
@@ -538,25 +542,28 @@ class StreamsSpec extends SparkSpec {
     assert(readTable(dir2) == Map(6L -> (1L, "ok")))
   }
 
-  test("incrementalSnapshot: commit ledger blocks a replayed batch id") {
-    // truncate=false specs APPEND per batch; a replayed batch id (fresh
-    // checkpoint over the same curated dir, or the write→marker crash
-    // window re-running) must not append twice
+  test("incrementalSnapshot: a truncate=false batch replayed on a fresh checkpoint applies once") {
+    // truncate=false specs APPEND per batch (the CommitParent quirk), so a
+    // replayed batch id is visible as duplicate rows unless the sink's
+    // commit recognizes it
+    val appending = Specs.commit.copy(truncate = false)
     val raw = scratch("stream-raw-replay")
     val curated = scratch("stream-cur-replay")
     writeDoc(raw, "a.json", Seq(
-      doc("urn:c:9", "2024-01-01T10:00:00Z", "v1")))
-    val q1 = Streams.incrementalSnapshot(spark, raw, curated, Specs.commit,
-      scratch("stream-ckpt-r1"))
-    q1.awaitTermination()
-    val before = spark.read.parquet(s"$curated/commit").count()
-    // a FRESH checkpoint restarts batch ids at 0 over the same files —
-    // the ledger under the curated dir recognizes the replay
-    val q2 = Streams.incrementalSnapshot(spark, raw, curated, Specs.commit,
-      scratch("stream-ckpt-r2"))
-    q2.awaitTermination()
-    assert(spark.read.parquet(s"$curated/commit").count() == before,
-      "replayed batch 0 must not re-apply")
+      doc("urn:c:9", "2024-01-01T10:00:00Z", "v1"),
+      doc("urn:c:8", "2024-01-01T10:00:00Z", "w1")))
+    def rows() = Snapshots.open(spark, curated).read(spark, "commit").count()
+    Streams.incrementalSnapshot(spark, raw, curated, appending,
+      scratch("stream-ckpt-r1")).awaitTermination()
+    val before = rows()
+    assert(before == 2)
+    // no marker dir of any earlier ledger may be what blocks the replay
+    new java.io.File(curated).listFiles().filter(_.getName.startsWith("_graft_commits_"))
+      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d))
+    // a FRESH checkpoint restarts batch ids at 0 over the same files
+    Streams.incrementalSnapshot(spark, raw, curated, appending,
+      scratch("stream-ckpt-r2")).awaitTermination()
+    assert(rows() == before, "replayed batch 0 must not append again")
   }
 
   test("upsertSink end-to-end: multi-batch stream converges to latest-wins") {
