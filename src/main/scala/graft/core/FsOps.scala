@@ -22,11 +22,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * NESTS instead of replacing, which would both corrupt the rollback
   * path and strand the prior leftover forever.
   *
-  * Callers are the path-addressed stores that readers (and perfbench)
-  * open by path: the merge-on-read base (`MergeOnRead.compact`), the
-  * curated tables the daily merge executors and `jobs.Forget` rewrite
-  * (`Pipelines.overwriteCurated`) and `Layout.compact`. Every versioned
-  * store, the streaming sinks' tables included, is on [[Snapshots]] instead, and
+  * Callers are the two path-addressed stores that readers (and
+  * perfbench) open by path: the merge-on-read base
+  * (`MergeOnRead.compact`) and the curated tables the daily merge
+  * executors and `jobs.Forget` rewrite (`Pipelines.overwriteCurated`).
+  * Every versioned store — the streaming sinks' tables and compacted,
+  * zone-mapped tables included — is on [[Snapshots]] instead, and
   * `CommitGateSpec` fails on a new caller anywhere else. Callers stage
   * the full replacement inside `tmp` BEFORE calling. */
 object FsOps {

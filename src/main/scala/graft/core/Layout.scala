@@ -28,35 +28,32 @@ import org.apache.spark.sql.functions._
 object Layout {
 
   /** Small-file compaction — the nightly maintenance op that keeps a
-    * 100 TB table scannable: a partition that accumulated thousands of
-    * tiny files (streaming sinks, per-day appends) rereads into
+    * 100 TB table scannable: a table that accumulated thousands of tiny
+    * files (streaming sinks, per-day appends) rereads into
     * `ceil(bytes / targetFileBytes)` right-sized files. Row-identical by
-    * construction (read → repartition → overwrite-aside); sizing comes
-    * from the file listing, not a data scan. Returns (filesBefore,
-    * filesAfter). Compact one partition directory at a time — the unit
-    * of atomicity is the directory swap. */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
+    * construction (read → repartition → write); sizing comes from the
+    * file listing, not a data scan.
+    *
+    * `table`'s version in `txn`'s parent is rewritten as a new version
+    * staged in `txn`, with a zone synopsis over the columns the prior
+    * version's synopsis mapped ([[ZoneMap.mappedColumns]]); the caller
+    * commits it, so readers see the old layout or the new one, never a
+    * mix. An already-compact table stages nothing. Returns (filesBefore,
+    * filesAfter). */
+  def compact(txn: Snapshots.Txn, table: String,
       targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(p).filter(s => s.isFile &&
-      s.getPath.getName.endsWith(".parquet"))
+    val spark = txn.spark
+    val src = txn.parent.getOrElse(throw new IllegalStateException(
+      s"${txn.root} has no committed snapshot to compact")).path(table)
+    val hadoop = spark.sessionState.newHadoopConf()
+    val files = org.apache.spark.sql.GraftSqlShim.dataFiles(src, hadoop).toSeq
     val totalBytes = files.map(_.getLen).sum
     val target = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     if (files.length <= target) return (files.length, files.length)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s".${p.getName}.compact.tmp")
-    Tables.parquet(spark, path).repartition(target)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // the ONE audited swap ([[graft.core.FsOps.atomicSwap]]): the earlier
-    // hand-rolled copy here had no rollback — a failed second rename left
-    // the table path ABSENT with the data stranded under .old
-    val old = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.old")
-    fs.delete(old, true)
-    FsOps.atomicSwap(fs, tmp, p, old)
-    val after = fs.listStatus(p).count(s => s.isFile &&
-      s.getPath.getName.endsWith(".parquet"))
-    (files.length, after)
+    txn.stage(table, Tables.parquet(spark, src).repartition(target))
+    val zoned = ZoneMap.mappedColumns(spark, src)
+    if (zoned.nonEmpty) ZoneMap.build(txn, table, zoned)
+    (files.length, org.apache.spark.sql.GraftSqlShim.dataFiles(txn.dir(table), hadoop).size)
   }
 
   /** Write `df` range-clustered by `keys`: `repartitionByRange` samples

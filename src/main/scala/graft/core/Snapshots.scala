@@ -62,6 +62,10 @@ object Snapshots {
 
   private def snapName(id: Int): String = f"s$id%09d.json"
 
+  /** Whether a directory NAME is a version a [[Txn]] staged
+    * (`v=<id>-<token>`): a test of the name alone, no filesystem call. */
+  def isVersionDir(name: String): Boolean = VersionDir.matches(name)
+
   /** One writer's pending snapshot `parent + 1` of `root`. Tables staged
     * through it land in directories only this writer names; [[commit]]
     * publishes exactly them, carries every other table of the parent

@@ -11,16 +11,22 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
   * free. Nothing here collects to the driver.
   */
 object Tables {
-  /** `spark.read.parquet(path)` with the schema read from the parquet
+  /** The parquet data at `path`, with the schema read from the parquet
     * footer on the driver ([[org.apache.spark.sql.GraftSqlShim.parquetSchema]])
     * — the one Spark would infer, without the Spark job its inference runs
     * per call. Partition columns (`ingest_date=…` dirs) are still inferred
     * from the paths. With no data file, or with `mergeSchema` on, Spark
-    * infers as usual, with its own errors. The test corpus, curated-table
-    * registration, merge-on-read layers, snapshot versions, staging and
-    * the full-rewrite executors all read through here. */
+    * infers as usual, with its own errors, and the current [[Trace]] span
+    * records `schema_inferred` (the path). Every engine-managed store and
+    * the test corpus read through here; `TablesSpec` fails on a bare
+    * parquet read anywhere else in main code. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    GraftSqlShim.parquetSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+    GraftSqlShim.parquetSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        Trace.attr("schema_inferred", path)
+        spark.read.parquet(path)
+    }
 
   /** Load one test table, e.g. table(spark, "/root/testdata/sf0.01", "lineitem"). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

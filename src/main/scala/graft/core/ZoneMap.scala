@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.functions._
 
 /** External zone maps: a PERSISTED per-file min/max synopsis table,
@@ -20,157 +20,51 @@ import org.apache.spark.sql.functions._
   * those files (same idea as Delta/Iceberg keeping stats in the
   * transaction log rather than in footers). The reference gets the
   * equivalent from its clustered-index B-tree ranges
-  * (`CreateAndInitializeCommit.usql:55`); on a plain-parquet lake the
-  * zone map is how a path-addressed table gets planning-time pruning.
+  * (`CreateAndInitializeCommit.usql:55`).
+  *
+  * One contract: a synopsis is written once, inside a version a
+  * [[Snapshots.Txn]] stages, and never changes after that — [[build]]
+  * takes the transaction, so it cannot write anywhere else. The version
+  * commits the data and its stats together, and readers only ever see
+  * both. Pruning itself is [[graft.plans.ZoneMapRule]]'s, on the
+  * standard read path of the committed version. Correctness does not
+  * depend on layout: a file whose zone straddles the predicate is
+  * scanned and re-filtered; clustering only decides how much gets
+  * skipped.
   *
   * Scale shape: [[build]] is one distributed pass (group by
-  * `input_file_name`, map-side-combined to one row per file per task);
-  * [[refresh]] is O(new files) — per-file rows are independent, so
-  * maintenance is append-only and never touches stats of files already
-  * mapped. [[prunedFiles]] collects the surviving file LIST to the
-  * driver — bounded by file count, the same accepted metadata-sized
-  * collect class as compaction's directory listing
-  * (`Layout.compact`). Correctness does not depend on layout: a file
-  * whose zone straddles the predicate is scanned and re-filtered, so
-  * [[readPruned]] ≡ full-scan-then-filter on ANY layout; clustering
-  * only decides how much gets skipped.
+  * `input_file_name`, map-side-combined to one row per file per task).
   */
 object ZoneMap {
 
-  /** The synopsis location the STANDARD read path consults
-    * ([[graft.plans.ZoneMapRule]]): inside the table directory,
-    * underscore-prefixed so the data scan never lists it — the
-    * stats-in-log convention (_delta_log) on plain parquet. Build with
-    * `build(spark, tbl, cols, ZoneMap.defaultZonePath(tbl))` and every
-    * banded `spark.read.parquet(tbl).where(...)` in a
-    * GraftExtensions session prunes automatically. */
-  def defaultZonePath(tablePath: String): String = s"$tablePath/_zonemap"
+  /** The synopsis of the version directory `versionDir`: inside it,
+    * under an underscore-prefixed dir so the data scan never lists it —
+    * the stats-in-log convention (_delta_log) on plain parquet. The leaf
+    * itself is not hidden, so a read of it is not one of the paths Spark
+    * warns it ignores. */
+  def zonePath(versionDir: String): String = s"$versionDir/_zonemap/files"
 
-  private def statCols(cols: Seq[String]): Seq[Column] =
-    cols.flatMap { c =>
+  /** One pass over `table`'s staged version in `txn`: per-file (n_rows,
+    * and per requested column min / max / null count), written into the
+    * same version. Min and max keep the column's own type, so pruning
+    * predicates compare in the table's native ordering (dates as dates,
+    * longs as longs). */
+  def build(txn: Snapshots.Txn, table: String, cols: Seq[String]): Unit = {
+    val dir = txn.dir(table)
+    val stats = cols.flatMap { c =>
       Seq(min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
     }
-
-  /** One pass over `tablePath`: per-file (n_rows, and per requested
-    * column min / max / null count), overwritten to `zonePath`. Min and
-    * max keep the column's own type, so pruning predicates compare in
-    * the table's native ordering (dates as dates, longs as longs). */
-  def build(spark: SparkSession, tablePath: String, cols: Seq[String],
-      zonePath: String): Unit = {
-    spark.read.parquet(tablePath)
+    Tables.parquet(txn.spark, dir)
       .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"), statCols(cols): _*)
-      .write.mode("overwrite").parquet(zonePath)
-    // braces matter: as a brace-less single-expression def this line sat
-    // OUTSIDE the body and ran once at object load — a session that had
-    // already negative-cached the table's root never saw the new synopsis
-    graft.plans.ZoneMapRule.invalidateCache()
+      .agg(count(lit(1)).as("n_rows"), stats: _*)
+      .write.mode("overwrite").parquet(zonePath(dir))
   }
 
-  /** Incremental maintenance: stat ONLY files present under `tablePath`
-    * but absent from the zone map, and append their rows. Deletes are
-    * handled by [[prunedFiles]] intersecting with the live listing, so
-    * a compacted/rewritten directory needs [[build]], not refresh.
-    * Returns the number of newly-mapped files. */
-  def refresh(spark: SparkSession, tablePath: String, cols: Seq[String],
-      zonePath: String): Int = {
-    val zp = new org.apache.hadoop.fs.Path(zonePath)
-    val zfs = zp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!zfs.exists(zp)) { // first call on a fresh table = full build
-      build(spark, tablePath, cols, zonePath)
-      return listDataFiles(spark, tablePath).size
-    }
-    // input_file_name URIs vs filesystem listings differ in scheme
-    // spelling — compare path parts (same rule prunedFiles applies)
-    val mapped = spark.read.parquet(zonePath)
-      .select(col("file")).collect().map(r => normalize(r.getString(0))).toSet
-    val live = listDataFiles(spark, tablePath)
-    val missing = live.filterNot(mapped.contains)
-    if (missing.nonEmpty)
-      spark.read.parquet(missing: _*)
-        .groupBy(input_file_name().as("file"))
-        .agg(count(lit(1)).as("n_rows"), statCols(cols): _*)
-        .write.mode("append").parquet(zonePath)
-    graft.plans.ZoneMapRule.invalidateCache()
-    missing.size
-  }
-
-  /** Files under `tablePath` whose `[min, max]` zone on `c` intersects
-    * `[lo, hi]` (both bounds inclusive; pass the column's own type).
-    * An all-null file has null min/max and cannot satisfy a range
-    * predicate (range comparison with NULL is never true), so it is
-    * pruned; files that have left the directory since the map was
-    * built are dropped by intersecting with the live listing. */
-  def prunedFiles(spark: SparkSession, tablePath: String, zonePath: String,
-      c: String, lo: Any, hi: Any): Seq[String] = {
-    val live = listDataFiles(spark, tablePath).toSet
-    spark.read.parquet(zonePath)
-      .where(col(s"${c}__max") >= lit(lo) && col(s"${c}__min") <= lit(hi))
-      .select(col("file")).collect().map(_.getString(0))
-      .filter(f => live.contains(normalize(f)) || live.contains(f))
-      .toSeq.sorted
-  }
-
-  /** Conjunctive pruning: files whose zones intersect EVERY
-    * `(column, lo, hi)` band — the multi-predicate planner path. With a
-    * z-ordered layout ([[Layout.writeZOrdered]]) each file is tight in
-    * BOTH dimensions, so either band alone prunes and their conjunction
-    * prunes multiplicatively — the property single-column range
-    * clustering cannot give (its second column straddles every file).
-    * Same survivor semantics as [[prunedFiles]] per band. */
-  def prunedFilesMulti(spark: SparkSession, tablePath: String,
-      zonePath: String, bands: Seq[(String, Any, Any)]): Seq[String] = {
-    require(bands.nonEmpty, "at least one (column, lo, hi) band")
-    val live = listDataFiles(spark, tablePath).toSet
-    val pred = bands.map { case (c, lo, hi) =>
-      col(s"${c}__max") >= lit(lo) && col(s"${c}__min") <= lit(hi)
-    }.reduce(_ && _)
-    spark.read.parquet(zonePath).where(pred)
-      .select(col("file")).collect().map(_.getString(0))
-      .filter(f => live.contains(normalize(f)) || live.contains(f))
-      .toSeq.sorted
-  }
-
-  /** The zone-pruned scan: read only the surviving files, re-apply the
-    * predicate exactly (zones straddling the bounds contribute partial
-    * files). Result-identical to `read(tablePath).where(between)`; the
-    * savings are the files never opened. An empty survivor list returns
-    * the empty frame WITH the table's schema (one listing-only read). */
-  def readPruned(spark: SparkSession, tablePath: String, zonePath: String,
-      c: String, lo: Any, hi: Any): DataFrame = {
-    val files = prunedFiles(spark, tablePath, zonePath, c, lo, hi)
-    val base =
-      if (files.isEmpty) spark.read.parquet(tablePath).where(lit(false))
-      // basePath keeps hive-partition columns resolvable when the
-      // surviving files live inside key= subdirectories
-      else spark.read.option("basePath", tablePath).parquet(files: _*)
-    base.where(col(c) >= lit(lo) && col(c) <= lit(hi))
-  }
-
-  /** input_file_name() URIs vs filesystem listings differ in scheme
-    * spelling (`file:/` vs `file:///`); compare on the path part. */
-  private def normalize(uri: String): String =
-    uri.replaceFirst("^file:/+", "/")
-
-  /** Data files currently under `path` (footers never opened). */
-  def listDataFiles(spark: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // RECURSIVE: a partitioned table keeps its parquet files inside
-    // key= subdirectories; a top-level-only listing returned an empty
-    // live set there, so prunedFiles dropped every mapped file and
-    // readPruned silently returned ZERO rows instead of the documented
-    // "result-identical on ANY layout". Hidden/_ dirs are not descended.
-    def walk(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      Option(fs.listStatus(d)).toSeq.flatten.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Seq.empty
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq(st)
-      }
-    walk(p)
-      .filter(f => f.getPath.getName.endsWith(".parquet"))
-      .map(f => normalize(f.getPath.toUri.toString))
-  }
+  /** The columns the synopsis of `versionDir` maps, from its `<c>__min`
+    * columns (read from one footer, no Spark job); empty without one. */
+  def mappedColumns(spark: org.apache.spark.sql.SparkSession,
+      versionDir: String): Seq[String] =
+    GraftSqlShim.parquetSchema(spark, zonePath(versionDir)).toSeq
+      .flatMap(_.fieldNames.filter(_.endsWith("__min")).map(_.stripSuffix("__min")))
 }

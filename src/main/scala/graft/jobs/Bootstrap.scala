@@ -30,7 +30,7 @@ object Bootstrap {
     * deliberately NOT applied — this is the full-history scan. */
   def run(spark: SparkSession, stagingDir: String, curatedDir: String,
       parallelism: Int = 4): Seq[String] = {
-    val all = spark.read.parquet(stagingDir)
+    val all = graft.core.Tables.parquet(spark, stagingDir)
       .withColumn("ingest_date", col("ingest_date").cast("string"))
       .withColumn("entity_name", col("entity_name").cast("string"))
     all.cache()

@@ -16,7 +16,7 @@ object GetRepoData {
 
   def run(spark: SparkSession, curatedDir: String, outDir: String,
       ownerLogin: String, name: String): Map[String, DataFrame] = {
-    def t(n: String) = spark.read.parquet(tablePath(curatedDir, n))
+    def t(n: String) = graft.core.Tables.parquet(spark, tablePath(curatedDir, n))
 
     // :13 — point filter on (OwnerLogin, Name)
     val repo = t("repo")

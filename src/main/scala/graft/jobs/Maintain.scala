@@ -3,40 +3,40 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The nightly table-maintenance composite — what keeps a 100 TB
-  * path-addressed warehouse scannable as streams and daily appends
-  * accumulate debris. One call per table directory runs, in order:
+  * warehouse scannable as streams and daily appends accumulate debris.
+  * One call per table of a [[graft.core.Snapshots]] root runs, in order:
   *
   *  1. '''small-file compaction''' ([[graft.core.Layout.compact]]) —
-  *     row-identical rewrite into right-sized files when the directory
-  *     has fragmented past `maxFiles`; skipped otherwise (compaction is
-  *     the expensive step, so the trigger is explicit);
-  *  2. '''zone-map reconciliation''' ([[graft.core.ZoneMap]]) — after a
-  *     compaction the old per-file stats describe files that no longer
-  *     exist, so the map is REBUILT; with no compaction the cheap
-  *     `refresh` (O(new files)) covers whatever appended since;
-  *  3. '''result-cache vacuum''' ([[graft.plans.ResultCache.vacuum]]) —
+  *     when the table's current version has fragmented past `maxFiles`,
+  *     a row-identical rewrite into right-sized files is staged as the
+  *     next version, with a zone synopsis over the columns the prior
+  *     version's synopsis mapped, committed once and vacuumed to two
+  *     versions. Below `maxFiles` nothing is committed (compaction is
+  *     the expensive step, so the trigger is explicit). Of two racing
+  *     compactions exactly one commits; the other throws;
+  *  2. '''result-cache vacuum''' ([[graft.plans.ResultCache.vacuum]]) —
   *     entries older than `cacheTtlMs` are superseded fingerprints
   *     (any data change already re-keyed the readers) and are reaped.
   *
-  * Ordering matters: compact before zone-map (the map must describe the
-  * final layout), vacuum last (independent, but a compaction invalidates
-  * cache entries over this table anyway — their fingerprints bound the
-  * OLD file listing, so they can never serve again and age out here).
-  * Each step is idempotent, so a crashed run is simply re-run — the
-  * same contract as the reference's daily procedures
+  * Vacuum runs last (independent, but a compaction invalidates cache
+  * entries over this table anyway — their fingerprints bound the OLD
+  * file listing, so they can never serve again and age out here). A
+  * crashed run leaves only an invisible staged version and is simply
+  * re-run — the same contract as the reference's daily procedures
   * (`ProcessDaily.usql`'s rebuild-style maintenance).
   *
   * Returns a one-row report (metadata-sized; every number comes from
-  * file listings, not data scans — except the compaction rewrite
-  * itself, which is the point). */
+  * file listings and footers, not data scans — except the compaction
+  * rewrite itself, which is the point). `zoneMapped` is the number of
+  * files the current version's synopsis maps. */
 object Maintain {
 
   final case class Report(table: String, filesBefore: Long,
       filesAfter: Long, compacted: Boolean, zoneMapped: Long,
       cacheReaped: Long)
 
-  def run(spark: SparkSession, tableDir: String, zoneCols: Seq[String],
-      zoneDir: String, cacheDir: Option[String] = None,
+  def run(spark: SparkSession, root: String, table: String,
+      cacheDir: Option[String] = None,
       maxFiles: Int = 64, targetFileBytes: Long = 128L << 20,
       cacheTtlMs: Long = 7L * 24 * 3600 * 1000,
       nowMs: Long = 0L): DataFrame = {
@@ -48,21 +48,27 @@ object Maintain {
       "Maintain.run: nowMs must be supplied when cacheDir is set — " +
         "the cache vacuum compares nowMs against entry mtimes")
     import spark.implicits._
-    import graft.core.{Layout, ZoneMap}
-    val before = ZoneMap.listDataFiles(spark, tableDir).size
-    val compacted = before > maxFiles
-    val after =
-      if (compacted) Layout.compact(spark, tableDir, targetFileBytes)._2
-      else before
-    val zoned =
-      if (compacted) { // old stats describe dead files — full rebuild
-        ZoneMap.build(spark, tableDir, zoneCols, zoneDir)
-        ZoneMap.listDataFiles(spark, tableDir).size
-      } else ZoneMap.refresh(spark, tableDir, zoneCols, zoneDir)
+    import graft.core.{Layout, Snapshots, ZoneMap}
+    import org.apache.spark.sql.GraftSqlShim
+    val txn = Snapshots.begin(spark, root)
+    val current = txn.parent.getOrElse(
+      throw new IllegalStateException(s"$root has no committed snapshot"))
+    val before = GraftSqlShim.dataFiles(current.path(table),
+      spark.sessionState.newHadoopConf()).size
+    val (_, after) =
+      if (before > maxFiles) Layout.compact(txn, table, targetFileBytes)
+      else (before, before)
+    val compacted = after < before
+    val snap = if (!compacted) current else {
+      val s = txn.commit()
+      Snapshots.vacuum(spark, root, keepLast = 2)
+      s
+    }
+    val zoned = GraftSqlShim.parquetRows(spark, ZoneMap.zonePath(snap.path(table)))
     val reaped = cacheDir.map(c => graft.plans.ResultCache
       .vacuum(spark, c, cacheTtlMs, nowMs)).getOrElse(0)
-    Seq(Report(tableDir, before.toLong, after.toLong, compacted,
-      zoned.toLong, reaped.toLong)).toDF()
+    Seq(Report(table, before.toLong, after.toLong, compacted,
+      zoned, reaped.toLong)).toDF()
   }
 
   final case class IvfReport(index: String, cells: Long, maxStale: Double,

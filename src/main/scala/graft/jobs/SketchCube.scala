@@ -58,7 +58,7 @@ object SketchCube {
     * exact-integer HLL estimator. */
   def distinctOverRange(spark: SparkSession, cubeDir: String,
       fromDay: String, toDay: String, b: Int = 9): DataFrame = {
-    val regs = spark.read.parquet(s"$cubeDir/hll")
+    val regs = graft.core.Tables.parquet(spark, s"$cubeDir/hll")
       .where(col("day") >= fromDay && col("day") <= toDay)
       .groupBy(col("bucket")).agg(max(col("max_rho")).as("max_rho"))
     Sketches.hllEstimate(regs, b)
@@ -68,7 +68,7 @@ object SketchCube {
     * cube: union bottom-k per day pair, membership counts — no fact
     * re-scan. */
   def dayOverlap(spark: SparkSession, cubeDir: String, k: Int = 64): DataFrame = {
-    val sk = spark.read.parquet(s"$cubeDir/kmv")
+    val sk = graft.core.Tables.parquet(spark, s"$cubeDir/kmv")
       .select(col("day").cast("string").as("day"), col("h"))
     Sketches.kmvJaccard(sk, "day", k)
   }

@@ -67,7 +67,7 @@ object Export {
     val assigned = shardAssign(df, idCol, numShards, salt)
     assigned.repartition(col("shard_id"))
       .write.mode("overwrite").partitionBy("shard_id").parquet(path)
-    val written = assigned.sparkSession.read.parquet(path)
+    val written = graft.core.Tables.parquet(assigned.sparkSession, path)
       // partition-dir inference reads shard_id=K as INT; restore the
       // assigned LONG so the manifest schema matches shardManifest(assigned)
       .withColumn("shard_id", col("shard_id").cast("long"))

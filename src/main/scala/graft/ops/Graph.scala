@@ -53,11 +53,8 @@ object Graph {
     * well under the driver/executor comfort zone — and the gate is a
     * MEASURED count of the materialized state, not an estimate, so at
     * 100 TB node counts the ops fall back to the shuffle shape
-    * automatically. Override with `spark.graft.graph.broadcastMaxRows`. */
-  private def broadcastMaxRows(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.graph.broadcastMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
+    * automatically. */
+  private val BroadcastMaxRows = 1000000L
 
   /** The edge selection persisted exactly ONCE: when the caller already
     * persisted the input frame (to share it with a seed/source aggregate),
@@ -118,7 +115,7 @@ object Graph {
     var state = init
     val nNodes = obs.getLong(0)
     Trace.attr("n_nodes", nNodes)
-    val small = nNodes <= broadcastMaxRows(edges.sparkSession)
+    val small = nNodes <= BroadcastMaxRows
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     for (round <- 1 to iters) Trace.span(span) {
       // small graphs (measured node count under the broadcast gate): probe
@@ -165,7 +162,6 @@ object Graph {
       maxHops: Int = 10): DataFrame = {
     require(maxHops >= 0 && maxHops <= 100, "maxHops must be in [0, 100]")
     val e = cacheEdges(edges, "src", "dst")
-    val cap = broadcastMaxRows(edges.sparkSession)
     // counts drive both the empty-frontier stop and the broadcast gate, and
     // each rides the checkpoint of the frame it counts: frontier and
     // settled set are O(reached nodes) and broadcast into the expand /
@@ -184,7 +180,7 @@ object Graph {
       hop += 1
       Trace.attr("n_dist", nDist)
       def b(df: DataFrame, n: Long): DataFrame =
-        if (n <= cap) broadcast(df) else df
+        if (n <= BroadcastMaxRows) broadcast(df) else df
       val nextPlan = e.df
         .join(b(frontier, nFrontier), col("src") === col("node"))
         .select(col("dst").as("node")).distinct()
@@ -225,7 +221,6 @@ object Graph {
       iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
     val e = cacheEdges(edges, "src", "dst", "w")
-    val cap = broadcastMaxRows(edges.sparkSession)
     // the settled set is O(reached nodes): broadcast it into each relax
     // join while its measured count fits (guide §3.1), so the edge list
     // streams map-side from its cache; the count rides each round's
@@ -240,7 +235,7 @@ object Graph {
     roll(sources.select(col("node")).distinct().select(col("node"), lit(0L).as("dist")))
     for (round <- 1 to iters) Trace.span("wsp/round") {
       Trace.attr("n_dist", nDist)
-      val b = if (nDist <= cap) broadcast(dist) else dist
+      val b = if (nDist <= BroadcastMaxRows) broadcast(dist) else dist
       val relax = e.df.join(b, col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("cand"))
         .unionByName(dist.select(col("node"), col("dist").as("cand")))
@@ -382,7 +377,7 @@ object Graph {
     var labels = init
     val nNodes = obs.getLong(0)
     Trace.attr("n_nodes", nNodes)
-    val small = nNodes <= broadcastMaxRows(edges.sparkSession)
+    val small = nNodes <= BroadcastMaxRows
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     for (round <- 1 to iters) Trace.span("lpa/round") {
       val neighborVotes = e.df
@@ -434,7 +429,7 @@ object Graph {
       Seq(count(lit(1))))
     val nNodes = obs.getLong(0)
     Trace.attr("n_nodes", nNodes)
-    val small = nNodes <= broadcastMaxRows(edges.sparkSession)
+    val small = nNodes <= BroadcastMaxRows
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // SPARSE rounds (round 9): score frames carry only nodes with a
     // nonzero-sum in-/out-neighborhood; everyone else is an implicit 0.
@@ -541,7 +536,7 @@ object Graph {
     // job over what is usually an already-checkpointed LPA assignment),
     // so the edge list is never exchanged
     val lbl = labels.select(col("node"), col("label"))
-    val small = lbl.count() <= broadcastMaxRows(edges.sparkSession)
+    val small = lbl.count() <= BroadcastMaxRows
     def b(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val el = edges
       .join(b(lbl.select(col("node").as("src"), col("label").as("__ls"))),

@@ -396,7 +396,7 @@ object TextDedup {
       corpus: DataFrame, increment: DataFrame, idCol: String,
       textCol: String, n: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.8): DataFrame =
-    incrementalDupPairsFrom(spark.read.parquet(indexPath), corpus,
+    incrementalDupPairsFrom(graft.core.Tables.parquet(spark, indexPath), corpus,
       increment, idCol, textCol, n, numHashes, bands, threshold)
 
   /** [[incrementalDupPairs]] over an already-loaded (possibly filtered)

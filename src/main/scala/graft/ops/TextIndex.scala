@@ -42,7 +42,7 @@ object TextIndex {
   def lookup(spark: SparkSession, path: String, term: String,
       numBuckets: Int = 64): DataFrame = {
     val bkt = Math.floorMod(TextDedup.hash60Local(term), numBuckets.toLong)
-    spark.read.parquet(path)
+    graft.core.Tables.parquet(spark, path)
       .where(col("bkt") === bkt && col("token") === term)
       .select(col("doc_id"))
   }
@@ -95,7 +95,7 @@ object TextIndex {
     require(terms.nonEmpty, "searchPhrase needs at least one term")
     def positions(term: String): DataFrame = {
       val bkt = Math.floorMod(TextDedup.hash60Local(term), numBuckets.toLong)
-      spark.read.parquet(path)
+      graft.core.Tables.parquet(spark, path)
         .where(col("bkt") === bkt && col("token") === term)
         .select(col("doc_id"), col("pos"))
     }

@@ -9,24 +9,22 @@ import org.apache.spark.sql.types._
 
 /** Optimizer rule: automatic planning-time file pruning from an external
   * zone map — the Delta/Iceberg stats-in-log behavior on plain parquet,
-  * wired into the STANDARD read path.
+  * wired into the STANDARD read path, and the engine's one pruning path.
   *
-  * [[graft.core.ZoneMap.readPruned]] is an explicit call; this rule makes
-  * the same pruning implicit: when a `Filter` sits over a parquet scan
-  * whose root directory carries a `_zonemap` synopsis
-  * ([[graft.core.ZoneMap.defaultZonePath]] — underscore-prefixed, so the
-  * data scan never sees it), every range/equality/IN conjunct on a mapped
-  * column shrinks the scan's file list BEFORE the physical scan is
-  * planned. `spark.read.parquet(dir).where(...)` — or any
-  * `Tables.table`/`readCurated` read — gets O(matching files) I/O with
-  * no API change.
+  * When a `Filter` sits over a parquet scan whose root is a committed
+  * [[graft.core.Snapshots]] version carrying a `_zonemap` synopsis
+  * ([[graft.core.ZoneMap.build]] — underscore-prefixed, so the data scan
+  * never sees it), every range/equality/IN conjunct on a mapped column
+  * shrinks the scan's file list BEFORE the physical scan is planned.
+  * `Snapshots.open(spark, root).read(spark, t).where(...)` gets
+  * O(matching files) I/O with no API change.
   *
   * Correctness invariants (each spec-asserted):
   *  - the `Filter` is LEFT IN PLACE — straddling files re-filter, so the
   *    result is identical to the unpruned plan on any layout;
-  *  - freshness cannot lose rows: survivors = (mapped files whose zones
-  *    intersect every extracted band) ∪ (live files ABSENT from the map)
-  *    — a file written after the last `refresh` is always scanned;
+  *  - an unmapped file cannot lose rows: survivors = (mapped files whose
+  *    zones intersect every extracted band) ∪ (live files ABSENT from
+  *    the map);
   *  - prunable conjuncts: `col {=,>,>=,<,<=} literal` (strict bounds
   *    prune as inclusive — a superset), `col IN (literals)` / `InSet`
   *    (a file survives when ANY value intersects its zone), and the
@@ -46,35 +44,28 @@ import org.apache.spark.sql.types._
   *  - column matching follows `spark.sql.caseSensitive`: exact names
   *    when case-sensitive (two columns differing only in case must not
   *    read each other's zones), case-insensitive otherwise;
-  *  - multi-root scans (`spark.read.parquet(dirA, dirB)`) prune via the
+  *  - multi-root scans (`read.parquet(dirA, dirB)`) prune via the
   *    UNION of each root's synopsis; files under a root with no synopsis
   *    — or mapped under one root but not another — always survive.
   *    Multi-root relations with a partition schema are left untouched
   *    (rebuilding their partition discovery from a file list is not
-  *    worth the edge), and relations with more than [[MaxRoots]] roots
-  *    are skipped entirely — a 10k-explicit-file read must not pay 10k
-  *    sequential `_zonemap` existence probes inside the optimizer;
-  *  - any failure inside the rewrite logs and leaves the plan untouched.
+  *    worth the edge);
+  *  - a failure inside the rewrite or the synopsis load leaves the plan
+  *    untouched and records `zonemap_skipped` (the exception class) on
+  *    the current [[graft.core.Trace]] span.
   *
   * Scale: the synopsis read is O(files) metadata rows (the accepted
   * bounded class — same as compaction's listing); at 100 TB it replaces
   * millions of footer opens with one small parquet scan. The rule cannot
   * re-fire on its own output: the rewritten relation's root paths are
-  * the surviving FILES, which carry no `_zonemap` beneath them.
+  * the surviving FILES, which are not version directories.
   *
-  * A directory's `_zonemap` existence is cached for the session
-  * (negative results too — a miss only costs pruning, never
-  * correctness); [[graft.core.ZoneMap.build]]/`refresh` invalidate the
-  * cache in-JVM. Kill switch: `spark.graft.zonemap.enabled=false`. */
+  * Only a root NAMED like a version (`v=<id>-<token>`,
+  * [[graft.core.Snapshots.isVersionDir]]) is probed — a test of the name,
+  * so every other scan pays no filesystem call. A version never changes
+  * once committed, so its synopsis (or its absence) is cached for the
+  * process by the version directory and never invalidated. */
 object ZoneMapRule extends Rule[LogicalPlan] {
-
-  private val EnabledKey = "spark.graft.zonemap.enabled"
-
-  /** Most roots a relation may have before the rule skips it: each root
-    * costs one filesystem existence probe on first sight (cached after),
-    * and multi-root reads beyond a handful of dirs are the
-    * explicit-file-list pattern zone maps don't serve. */
-  val MaxRoots = 16
 
   /** One root's collected synopsis plus the lookup structures every
     * planning pass needs: stat column indices keyed by the RAW base
@@ -93,8 +84,7 @@ object ZoneMapRule extends Rule[LogicalPlan] {
     if (conf.caseSensitiveAnalysis) syn.cols.get(name)
     else syn.lower.get(name.toLowerCase).flatMap(syn.cols.get)
 
-  /** Per-root synopsis cache: None = no `_zonemap` beside the table
-    * (negative result — a miss only costs pruning, never correctness).
+  /** Per-version synopsis cache: None = the version has no `_zonemap`.
     * The optimizer may run this rule several times per query (two
     * operator-optimization batches + AQE replans); re-reading the
     * synopsis parquet each pass paid footer opens and a collect job for
@@ -103,11 +93,8 @@ object ZoneMapRule extends Rule[LogicalPlan] {
   private val zoneCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Synopsis]]()
 
-  /** Called by ZoneMap.build/refresh so a newly-written synopsis is seen
-    * by this session without a restart. */
-  def invalidateCache(): Unit = zoneCache.clear()
-
   private def zoneStats(root: org.apache.hadoop.fs.Path): Option[Synopsis] = {
+    if (!graft.core.Snapshots.isVersionDir(root.getName)) return None
     // compute OUTSIDE the map's bin lock: the load runs a Spark job
     // (parquet read + collect), and computeIfAbsent would hold the
     // ConcurrentHashMap bin for its whole duration — blocking any
@@ -119,16 +106,13 @@ object ZoneMapRule extends Rule[LogicalPlan] {
     if (cached != null) return cached
     val loaded: Option[Synopsis] =
       try {
-        val zp = new org.apache.hadoop.fs.Path(root, "_zonemap")
-        val exists = zp
-          .getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+        val spark = SparkSession.active
+        val zp = new org.apache.hadoop.fs.Path(graft.core.ZoneMap.zonePath(key))
+        val exists = zp.getFileSystem(spark.sessionState.newHadoopConf())
           .exists(new org.apache.hadoop.fs.Path(zp, "_SUCCESS"))
         if (!exists) None
         else {
-          // glob the part files: handing DataSource the underscore-
-          // prefixed dir itself trips its hidden-path filter into a
-          // spurious "All paths were ignored" WARN per planning pass
-          val zone = SparkSession.active.read.parquet(s"$zp/part-*")
+          val zone = graft.core.Tables.parquet(spark, zp.toString)
           val schema = zone.schema
           val idx = schema.fieldNames.zipWithIndex.toMap
           val cols = schema.fieldNames.filter(_.endsWith("__min")).flatMap { mn =>
@@ -146,16 +130,18 @@ object ZoneMapRule extends Rule[LogicalPlan] {
       } catch { case e: Exception =>
         // performance-only (the Filter stays; pruning is just skipped),
         // but a transient read hiccup must not be indistinguishable from
-        // "no synopsis": log it, and DON'T cache the negative — the next
-        // planning pass retries where a cached None would silently
-        // disable pruning for the session. The no-_SUCCESS case above
-        // still caches (genuinely absent synopsis, cheap to re-check).
-        logWarning(s"zone synopsis read failed for $key " +
-          "(pruning skipped this pass, will retry)", e)
+        // "no synopsis": record it, and DON'T cache the negative — the
+        // next planning pass retries
+        skipped(s"zone synopsis read failed for $key", e)
         return None
       }
     val prior = zoneCache.putIfAbsent(key, loaded)
     if (prior != null) prior else loaded
+  }
+
+  private def skipped(what: String, e: Exception): Unit = {
+    logWarning(s"$what (pruning skipped this pass)", e)
+    graft.core.Trace.attr("zonemap_skipped", e.getClass.getName)
   }
 
   private def normalize(uri: String): String =
@@ -336,26 +322,21 @@ object ZoneMapRule extends Rule[LogicalPlan] {
         RangeBand(a.name, c, lo, hi)
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(EnabledKey, "true").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case f @ Filter(cond, lr: LogicalRelation) =>
         (lr.relation match {
           case fs: HadoopFsRelation
-              if fs.location.rootPaths.length <= MaxRoots &&
-                (fs.location.rootPaths.length == 1 ||
-                  fs.partitionSchema.isEmpty) =>
+              if fs.location.rootPaths.length == 1 || fs.partitionSchema.isEmpty =>
             val syns = fs.location.rootPaths.flatMap(zoneStats)
             if (syns.isEmpty) None
             else {
               try prune(cond, lr, fs, syns)
-              catch { case e: Exception =>
-                logWarning(s"zone-map pruning skipped: $e"); None }
+              catch { case e: Exception => skipped("zone-map pruning failed", e); None }
             }
           case _ => None
         }).getOrElse(f)
     }
-  }
 
   /** One band's evaluation machinery against ONE synopsis, hoisted out
     * of the per-file loop: stat indices, the (optional) monotone-cast

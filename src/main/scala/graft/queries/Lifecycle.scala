@@ -347,16 +347,16 @@ object Lifecycle {
       } finally { staged.unpersist(); () }
     } finally graft.core.Ckpt.free(raw) // both day stages consumed it
     def uid(c: Column) = substring(c, 10, 30).cast("long")
-    val snapF = spark.read.parquet(s"$base/cur/account").select(
+    val snapF = graft.core.Tables.parquet(spark, s"$base/cur/account").select(
       lit("snapshot").as("section"), uid(col("etl_source_id")).as("user_id"),
       lit("").as("k"), col("n_events").as("v1"), col("value_cents").as("v2"),
       concat(col("last_type"), lit("|"), col("etl_ingest_date")).as("s1"))
-    val collF = spark.read.parquet(s"$base/cur/membership").select(
+    val collF = graft.core.Tables.parquet(spark, s"$base/cur/membership").select(
       lit("collection").as("section"), uid(col("origin_urn")).as("user_id"),
       col("member_urn").as("k"), lit(1L).as("v1"), lit(0L).as("v2"),
       lit("").as("s1"))
     def trafF(sub: String, section: String) =
-      spark.read.parquet(s"$base/$sub/repo_views").select(
+      graft.core.Tables.parquet(spark, s"$base/$sub/repo_views").select(
         lit(section).as("section"), uid(col("repo_urn")).as("user_id"),
         date_format(col("data_date"), "yyyy-MM-dd").as("k"),
         col("count").cast("long").as("v1"),
@@ -562,7 +562,7 @@ object Lifecycle {
     graft.core.Snapshots.openOrBuild(spark, base + "/served") { txn =>
       val cents = round(col("o_totalprice") * 100).cast("long")
       val day = date_format(col("o_orderdate"), "yyyy-MM-dd")
-      def fact = spark.read.parquet(factPath)
+      def fact = graft.core.Tables.parquet(spark, factPath)
       def cube = fact.groupBy(day.as("day"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"), sum(cents).as("cents"),
           min(cents).as("min_cents"), max(cents).as("max_cents"))

@@ -643,38 +643,30 @@ object Mining {
   /** Zone-map-pruned scan ([[graft.core.ZoneMap]]): orders rewritten
     * range-clustered on o_orderdate (16 files, each owning a disjoint
     * date range — [[graft.core.Layout.writeRangeClustered]]), a
-    * persisted per-file min/max synopsis built ONCE inside it, then a
-    * spring-quarter revenue report answered through
-    * [[graft.core.ZoneMap.readPruned]]: the synopsis scan shrinks the
+    * persisted per-file min/max synopsis built ONCE inside the same
+    * committed version, then a spring-quarter revenue report read
+    * through the standard path: [[graft.plans.ZoneMapRule]] shrinks the
     * file list to the ~3 months that can match BEFORE the real scan is
     * constructed, and straddling files re-filter, so the result is
     * identical to a full scan — which is exactly what the oracle
-    * replays. The build is a build-once cache ([[zoneCache]]);
-    * maintenance is `refresh`, O(new files), not rebuild. */
-  def q263ZonePrunedScan(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.ZoneMap
-    val tbl = zoneCache(spark, "q263", dir, "orders_clustered",
-      table(spark, dir, "orders"), "o_orderdate").path("orders_clustered")
-    ZoneMap.readPruned(spark, tbl, ZoneMap.defaultZonePath(tbl), "o_orderdate",
-      java.sql.Timestamp.valueOf("1997-03-01 00:00:00"),
-      java.sql.Timestamp.valueOf("1997-05-31 00:00:00"))
-      .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      .orderBy(col("month"))
-  }
+    * replays. The build is a build-once cache ([[zoneCache]]). */
+  def q263ZonePrunedScan(spark: SparkSession, dir: String): DataFrame =
+    springQuarter(spark, dir, "q263")
 
   /** Zone-map pruning through the STANDARD read path
-    * ([[graft.plans.ZoneMapRule]]): the same clustered orders as q263,
-    * but the query is a PLAIN parquet scan of the committed version
-    * `.where(band)` — no readPruned call anywhere. The optimizer
-    * consults the synopsis at planning time and shrinks the file list
-    * (the Delta/Iceberg stats-in-log behavior on plain parquet); the
-    * oracle replays the direct band filter, so equality proves the
-    * automatic pruning is result-invisible. ZoneMapSpec plan-asserts the
-    * pruned file list through this exact read shape. */
+    * ([[graft.plans.ZoneMapRule]]): [[q263ZonePrunedScan]]'s query over
+    * its own build of the clustered orders — a PLAIN parquet scan of the
+    * committed version `.where(band)`. The optimizer consults the
+    * synopsis at planning time and shrinks the file list (the
+    * Delta/Iceberg stats-in-log behavior on plain parquet); the oracle
+    * replays the direct band filter, so equality proves the automatic
+    * pruning is result-invisible. ZoneMapSpec plan-asserts the pruned
+    * file list through this exact read shape. */
   def q279ZoneAutoPrune(spark: SparkSession, dir: String): DataFrame =
-    zoneCache(spark, "q279", dir, "orders_clustered",
+    springQuarter(spark, dir, "q279")
+
+  private def springQuarter(spark: SparkSession, dir: String, tag: String): DataFrame =
+    zoneCache(spark, tag, dir, "orders_clustered",
         table(spark, dir, "orders"), "o_orderdate")
       .read(spark, "orders_clustered")
       .where(col("o_orderdate") >=
@@ -689,7 +681,7 @@ object Mining {
   /** IN-list pruning through the STANDARD read path — [[q279ZoneAutoPrune]]'s
     * shape for the second prunable conjunct family
     * ([[graft.plans.ZoneMapRule]]): orders range-clustered on o_custkey,
-    * the in-table `_zonemap` built once, then a PLAIN parquet scan
+    * the version's `_zonemap` built once, then a PLAIN parquet scan
     * `.where(isin(...))` — twelve keys, past the
     * optimizer's In→InSet conversion threshold (10), so the rule prunes
     * from an InSet's value set: a file survives when ANY value
@@ -821,7 +813,7 @@ object Mining {
   /** Prefix + OR-of-bands pruning through the STANDARD read path —
     * [[q281ZoneInPrune]]'s shape for the third prunable conjunct family
     * ([[graft.plans.ZoneMapRule]]): events range-clustered on event_type,
-    * the in-table `_zonemap` built once, then a PLAIN parquet scan
+    * the version's `_zonemap` built once, then a PLAIN parquet scan
     * `.where(like('purch%') OR like('sig%'))`.
     * LikeSimplification turns each pure-prefix LIKE into a StartsWith;
     * the rule extracts the OR of the two prefix byte-range bands
@@ -855,10 +847,8 @@ object Mining {
 
   private[graft] def stageZoned(txn: graft.core.Snapshots.Txn, name: String,
       df: DataFrame, key: String): Unit = {
-    import graft.core.{Layout, ZoneMap}
-    val tbl = txn.dir(name)
-    Layout.writeRangeClustered(df, tbl, 16, col(key))
-    ZoneMap.build(txn.spark, tbl, Seq(key), ZoneMap.defaultZonePath(tbl))
+    graft.core.Layout.writeRangeClustered(df, txn.dir(name), 16, col(key))
+    graft.core.ZoneMap.build(txn, name, Seq(key))
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -36,7 +36,7 @@ object PlanAudit {
     "q250_cms_heavy_hitters" -> "counter-bounded shuffle; 2048-row sketch broadcast to the probe",
     "q254_pricing_summary" -> "TPC-H Q1: partial/final agg pair; ≤6 rows cross the exchange per task",
     "q262_waiting_suppliers" -> "Q21 as aggregate cascade: two same-key fact shuffles, no 4-way self-join",
-    "q263_zone_pruned_scan" -> "scan constructed over the zone-surviving file list; band re-filter on top",
+    "q263_zone_pruned_scan" -> "standard read of the committed version: ZoneMapRule built the scan over the zone-surviving file list; band re-filter on top",
     "q264_hist_quantiles" -> "one binning pass; quantile probe is histogram-sized (≤bins×probs rows)",
     "q268_avro_count" -> "pushed path shows COUNT(block headers); decoded path keeps the real scan",
     "q270_ivf_append" -> "appended index read back; intra-cell self-join keys on cid, no cross-cell pairs",

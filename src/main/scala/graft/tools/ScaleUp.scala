@@ -65,7 +65,7 @@ object ScaleUp {
   def run(spark: SparkSession, src: String, dst: String, n: Int,
       only: Option[Set[String]] = None): Unit = {
     def want(t: String) = only.forall(_.contains(t))
-    def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def rd(t: String) = graft.core.Tables.parquet(spark, s"$src/$t.parquet")
     // the corpus contract (TESTDATA.md) is ONE parquet FILE per table,
     // not a Spark table directory: the streaming queries list the sf dir
     // with pathGlobFilter=<t>.parquet, which matches leaf FILES — a

@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -65,7 +65,7 @@ object GraftSqlShim {
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
-  /** The schema `spark.read.parquet(path)` infers while schema merging is
+  /** The schema Spark's parquet reader infers for `path` while schema merging is
     * off, read on the driver from the one footer Spark's inference reads:
     * the path itself, or for a directory its first data file in path order
     * ([[dataFiles]]). The conversion is Spark's own: the
@@ -79,10 +79,10 @@ object GraftSqlShim {
     val conf = spark.sessionState.conf
     val hadoop = spark.sessionState.newHadoopConf()
     if (conf.isParquetSchemaMergingEnabled) return None
-    dataFiles(path, hadoop).minByOption(_.toString).map { file =>
-      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, hadoop),
+    dataFiles(path, hadoop).minByOption(_.getPath.toString).map { file =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, hadoop),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
         new ParquetToSparkSchemaConverter(
           assumeBinaryIsString = conf.isParquetBinaryAsString,
           assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
@@ -97,7 +97,7 @@ object GraftSqlShim {
   def parquetRows(spark: SparkSession, path: String): Long = {
     val hadoop = spark.sessionState.newHadoopConf()
     dataFiles(path, hadoop).map { file =>
-      ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, hadoop),
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, hadoop),
         ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
     }.sum
   }
@@ -108,15 +108,18 @@ object GraftSqlShim {
     * a time, as Spark's file index lists: FileSystem.listFiles builds a
     * LocatedFileStatus per file, which copies its permissions, and the
     * local filesystem reads those by forking `ls` once per file. */
-  private def dataFiles(path: String, hadoop: org.apache.hadoop.conf.Configuration)
-      : Iterator[Path] = {
+  def dataFiles(path: String, hadoop: org.apache.hadoop.conf.Configuration)
+      : Iterator[FileStatus] = {
     val root = new Path(path)
     val fs = root.getFileSystem(hadoop)
-    def leaves(dir: Path): Iterator[Path] = fs.listStatus(dir).iterator
+    def leaves(dir: Path): Iterator[FileStatus] = fs.listStatus(dir).iterator
       .filterNot(s => HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
-      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Iterator(s.getPath))
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Iterator(s))
     if (!fs.exists(root)) Iterator.empty
-    else (if (fs.getFileStatus(root).isDirectory) leaves(root) else Iterator(root))
-      .filterNot(p => Set("_metadata", "_common_metadata").contains(p.getName))
+    else {
+      val st = fs.getFileStatus(root)
+      (if (st.isDirectory) leaves(root) else Iterator(st))
+        .filterNot(s => Set("_metadata", "_common_metadata").contains(s.getPath.getName))
+    }
   }
 }

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** Source gates for the one commit protocol: every versioned store
   * commits through [[Snapshots]], so a new hand-rolled commit marker,
-  * watermark file or directory swap fails CI here. */
+  * watermark file, directory swap or mutable zone-map path fails CI
+  * here. */
 class CommitGateSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
@@ -18,7 +19,9 @@ class CommitGateSpec extends AnyFunSuite {
 
   test("no commit marker, watermark file or swap staging dir under src/main/scala") {
     val banned = Seq("_GRAFT_COMMITTED", "_compacted_to", ".assignments_old_",
-      "createNewFile(", "recoverAssignments", "writeIvfWatermark", "_graft_commits_")
+      "createNewFile(", "recoverAssignments", "writeIvfWatermark", "_graft_commits_",
+      // zone synopses are written only inside a staged version
+      "readPruned", "prunedFiles", "invalidateCache", "spark.graft.zonemap.enabled")
     val offenders = for {
       p <- sources
       text = Files.readString(p)
@@ -27,8 +30,8 @@ class CommitGateSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"commit versioned stores through Snapshots: $offenders")
   }
 
-  test("FsOps swap calls only in MergeOnRead, Pipelines and Layout") {
-    val allowed = Set("ops/MergeOnRead.scala", "entities/Pipelines.scala", "core/Layout.scala")
+  test("FsOps swap calls only in MergeOnRead and Pipelines") {
+    val allowed = Set("ops/MergeOnRead.scala", "entities/Pipelines.scala")
     val call = """\b(atomicSwap|reAdopt|convergeRead)(\[\w+\])?\s*\(""".r
     val offenders = for {
       p <- sources if !allowed(root.relativize(p).toString)

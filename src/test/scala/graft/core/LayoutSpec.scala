@@ -120,15 +120,23 @@ class LayoutSpec extends SparkSpec {
 
   test("compact: many small files become few, rows identical, idempotent") {
     import spark.implicits._
-    val dir = scratch("compact") + "/t"
+    val root = scratch("compact")
     val df = (1 to 5000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    df.repartition(40).write.parquet(dir)
-    val rowsBefore = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    val (before, after) = Layout.compact(spark, dir, targetFileBytes = 1L << 20)
+    val first = Snapshots.begin(spark, root)
+    first.stage("t", df.repartition(40))
+    first.commit()
+    def rows = Snapshots.open(spark, root).read(spark, "t").as[(Long, String)].collect().toSet
+    val rowsBefore = rows
+    val txn = Snapshots.begin(spark, root)
+    val (before, after) = Layout.compact(txn, "t", targetFileBytes = 1L << 20)
     assert(before == 40 && after < 40 && after >= 1)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == rowsBefore)
-    // already-compact partition is a no-op
-    val (b2, a2) = Layout.compact(spark, dir, targetFileBytes = 1L << 20)
+    assert(rows == rowsBefore, "a staged compaction is invisible before its commit")
+    txn.commit()
+    assert(rows == rowsBefore)
+    // already-compact table: a no-op that stages nothing
+    val again = Snapshots.begin(spark, root)
+    val (b2, a2) = Layout.compact(again, "t", targetFileBytes = 1L << 20)
     assert(b2 == after && a2 == after)
+    assert(new java.io.File(s"$root/t").list().length == 2, "nothing staged")
   }
 }

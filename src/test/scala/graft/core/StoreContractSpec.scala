@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkSpec
+import graft.jobs.Maintain
 import graft.ops.{Ann, Incremental}
 import java.util.concurrent.{CyclicBarrier, TimeUnit}
 import org.apache.spark.sql.DataFrame
@@ -274,16 +275,72 @@ class StoreContractSpec extends SparkSpec {
   }
 
   test("zone-mapped cache: a read of the committed version prunes") {
-    import graft.plans.ZoneMapRule
     val root = scratch("contract_zoned")
     zoned.create(root)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
+    withZoneRule {
       val banded = zoned.read(root)
       assert(banded.inputFiles.length < 16, s"scanned ${banded.inputFiles.length} of 16 files")
       assert(sorted(banded) == zoned.rows(Nil))
-    } finally spark.experimental.extraOptimizations =
+    }
+  }
+
+  // compaction as a second writer of the zone-mapped cache: Maintain.run
+  // stages Layout.compact's rewrite, zone-mapped on the prior version's
+  // columns, and commits it
+
+  test("zone-mapped cache: a compaction staged but not committed is invisible") {
+    val root = scratch("contract_zoned_crash")
+    zoned.create(root)
+    val id = Snapshots.currentId(spark, root).get
+    assert(Layout.compact(Snapshots.begin(spark, root), "clustered") == ((16, 1)))
+    assert(Snapshots.currentId(spark, root).contains(id))
+    withZoneRule {
+      val banded = zoned.read(root)
+      assert(banded.inputFiles.length < 16, "readers still prune on the old version")
+      assert(sorted(banded) == zoned.rows(Nil))
+    }
+    val r = Maintain.run(spark, root, "clustered", maxFiles = 4).collect().head
+    assert(r.getBoolean(3) && r.getLong(4) == 1L, s"$r")
+    assert(Snapshots.currentId(spark, root).contains(id + 1))
+    assert(ZoneMap.mappedColumns(spark, Snapshots.open(spark, root).path("clustered")) == Seq("id"))
+    assert(sorted(zoned.read(root)) == zoned.rows(Nil))
+  }
+
+  test("zone-mapped cache: of two racing compactions exactly one commits") {
+    val root = scratch("contract_zoned_race")
+    zoned.create(root)
+    val id = Snapshots.currentId(spark, root).get + 1
+    val barrier = new CyclicBarrier(2)
+    def compaction() = {
+      val txn = Snapshots.begin(spark, root)
+      barrier.await(5, TimeUnit.MINUTES) // both begin from one parent
+      Layout.compact(txn, "clustered")
+      barrier.await(5, TimeUnit.MINUTES) // both staged: the commits race
+      Try(txn.commit())
+    }
+    val outcomes = inParallel(() => compaction(), () => compaction())
+    assert(outcomes.count(_.isSuccess) == 1, s"exactly one commit: $outcomes")
+    assert(outcomes.flatMap(_.failed.toOption).forall(e =>
+      e.isInstanceOf[IllegalStateException] && e.getMessage.contains(s"snapshot $id ")))
+    assert(Snapshots.currentId(spark, root).contains(id))
+    assert(sorted(zoned.read(root)) == zoned.rows(Nil))
+    assert(unreferenced(root).isEmpty, "the loser removes its staged dirs")
+  }
+
+  test("zone-mapped cache: a healthy table commits no version") {
+    val root = scratch("contract_zoned_ok")
+    zoned.create(root)
+    val before = listing(root)
+    val r = Maintain.run(spark, root, "clustered").collect().head
+    assert(!r.getBoolean(3) && r.getLong(1) == 16L && r.getLong(4) == 16L, s"$r")
+    assert(listing(root) == before)
+  }
+
+  private def withZoneRule[T](body: => T): T = {
+    import graft.plans.ZoneMapRule
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ ZoneMapRule
+    try body finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
   }
 }

@@ -1,291 +1,295 @@
 package graft.core
 
 import graft.SparkSpec
+import graft.plans.ZoneMapRule
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+/** Zone-map pruning on the one path the engine has: a synopsis built
+  * inside a version a [[Snapshots.Txn]] stages, read back through
+  * [[ZoneMapRule]] on the standard read path. The spec session runs the
+  * rule itself; the unpruned reference is the same read with the rule
+  * removed. Expected survivor sets come from the synopsis rows. */
 class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
 
-  private def clustered(n: Int, files: Int, path: String): Unit =
+  private def withRule[T](body: => T): T = {
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ ZoneMapRule
+    try body finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
+  }
+
+  /** `body` planned without the rule — the unpruned reference. */
+  private def unpruned[T](body: => T): T = {
+    val rules = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = rules.filterNot(_ == ZoneMapRule)
+    try body finally spark.experimental.extraOptimizations = rules
+  }
+
+  /** Table `t` of a fresh Snapshots root: `write` lays out the staged
+    * version, `cols` are zone-mapped inside it (none: no synopsis), and
+    * `after` may add files past the synopsis. Returns the committed
+    * version's directory. */
+  private def committed(prefix: String, cols: String*)(write: String => Unit,
+      after: String => Unit = _ => ()): String = {
+    val txn = Snapshots.begin(spark, scratch(prefix))
+    write(txn.dir("t"))
+    if (cols.nonEmpty) ZoneMap.build(txn, "t", cols)
+    after(txn.dir("t"))
+    txn.commit().path("t")
+  }
+
+  private def clustered(n: Int, files: Int)(dir: String): Unit =
     Layout.writeRangeClustered(
       spark.range(n.toLong).select(col("id"),
         (col("id") * 7 % 1000).as("v")),
-      path, files, col("id"))
+      dir, files, col("id"))
+
+  private def norm(f: String) = f.replaceFirst("^file:/+", "/")
+
+  private def files(df: DataFrame): Set[String] = df.inputFiles.map(norm).toSet
+
+  /** What the rule must keep for `bands` (column, lo, hi), computed from
+    * the synopsis rows: mapped files whose every band intersects their
+    * zone, plus every live file the synopsis does not map. */
+  private def survivors(tbl: String, bands: (String, Any, Any)*): Set[String] = {
+    val zone = spark.read.parquet(ZoneMap.zonePath(tbl))
+    val mapped = zone.select("file").as[String].collect().map(norm).toSet
+    val hit = zone.where(bands.map { case (c, lo, hi) =>
+        col(s"${c}__max") >= lit(lo) && col(s"${c}__min") <= lit(hi) }.reduce(_ && _))
+      .select("file").as[String].collect().map(norm).toSet
+    hit ++ (unpruned(files(spark.read.parquet(tbl))) -- mapped)
+  }
 
   test("pruned read equals direct filter on a range-clustered table, and prunes") {
-    val tbl = scratch("zm_tbl"); val zm = scratch("zm_map")
-    clustered(10000, 10, tbl)
-    ZoneMap.build(spark, tbl, Seq("id", "v"), zm)
-    val all = ZoneMap.listDataFiles(spark, tbl)
-    assert(all.size >= 8, s"expected ~10 files, got ${all.size}")
-    val hit = ZoneMap.prunedFiles(spark, tbl, zm, "id", 2000L, 2999L)
-    assert(hit.nonEmpty && hit.size < all.size / 2,
-      s"clustered band should skip most files: ${hit.size}/${all.size}")
-    val pruned = ZoneMap.readPruned(spark, tbl, zm, "id", 2000L, 2999L)
-      .select("id", "v").as[(Long, Long)].collect().toSet
-    val direct = spark.read.parquet(tbl)
-      .where(col("id").between(2000L, 2999L))
-      .select("id", "v").as[(Long, Long)].collect().toSet
-    assert(pruned == direct && direct.size == 1000)
+    val tbl = committed("zm_tbl", "id", "v")(clustered(10000, 10))
+    def banded = spark.read.parquet(tbl).where(col("id").between(2000L, 2999L))
+    val all = unpruned(banded.inputFiles.length)
+    assert(all >= 8, s"expected ~10 files, got $all")
+    withRule {
+      val hit = files(banded)
+      assert(hit.nonEmpty && hit.size < all / 2,
+        s"clustered band should skip most files: ${hit.size}/$all")
+      assert(hit == survivors(tbl, ("id", 2000L, 2999L)))
+      val pruned = banded.select("id", "v").as[(Long, Long)].collect().toSet
+      val direct = unpruned(banded.select("id", "v").as[(Long, Long)].collect().toSet)
+      assert(pruned == direct && direct.size == 1000)
+    }
   }
 
   test("straddling zones re-filter: correctness never depends on layout") {
-    val tbl = scratch("zm_rnd"); val zm = scratch("zm_rnd_map")
     // adversarial layout: files keyed by v so id zones all overlap
-    spark.range(5000).select(col("id"), (col("id") % 7).as("v"))
-      .repartition(6, col("v"))
-      .write.mode("overwrite").parquet(tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), zm)
-    val pruned = ZoneMap.readPruned(spark, tbl, zm, "id", 100L, 199L)
-      .select("id").as[Long].collect().toSet
+    val tbl = committed("zm_rnd", "id")(dir =>
+      spark.range(5000).select(col("id"), (col("id") % 7).as("v"))
+        .repartition(6, col("v"))
+        .write.mode("overwrite").parquet(dir))
+    val pruned = withRule(spark.read.parquet(tbl).where(col("id").between(100L, 199L))
+      .select("id").as[Long].collect().toSet)
     assert(pruned == (100L to 199L).toSet,
       "unclustered layout must still return exact rows (zones just don't skip)")
   }
 
   test("empty survivor set returns an empty frame with the table schema") {
-    val tbl = scratch("zm_empty"); val zm = scratch("zm_empty_map")
-    clustered(1000, 4, tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), zm)
-    val out = ZoneMap.readPruned(spark, tbl, zm, "id", 50000L, 60000L)
-    assert(out.columns.toSeq == Seq("id", "v") && out.count() == 0)
-    assert(ZoneMap.prunedFiles(spark, tbl, zm, "id", 50000L, 60000L).isEmpty)
+    val tbl = committed("zm_empty", "id")(clustered(1000, 4))
+    withRule {
+      val out = spark.read.parquet(tbl).where(col("id").between(50000L, 60000L))
+      assert(out.inputFiles.isEmpty)
+      assert(out.columns.toSeq == Seq("id", "v") && out.count() == 0)
+    }
   }
 
   test("all-null files are pruned for range predicates; mixed files survive") {
-    val tbl = scratch("zm_null"); val zm = scratch("zm_null_map")
-    val nulls = spark.range(100).select(lit(null).cast("long").as("k"),
-      col("id").as("payload"))
-    val vals = spark.range(100).select((col("id") + 1000L).as("k"),
-      col("id").as("payload"))
-    nulls.coalesce(1).write.mode("overwrite").parquet(tbl)
-    vals.coalesce(1).write.mode("append").parquet(tbl)
-    ZoneMap.build(spark, tbl, Seq("k"), zm)
-    val hit = ZoneMap.prunedFiles(spark, tbl, zm, "k", 1000L, 1010L)
-    assert(hit.size == 1, s"all-null file must be skipped: $hit")
-    assert(ZoneMap.readPruned(spark, tbl, zm, "k", 1000L, 1010L).count() == 11)
+    val tbl = committed("zm_null", "k") { dir =>
+      spark.range(100).select(lit(null).cast("long").as("k"), col("id").as("payload"))
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      spark.range(100).select((col("id") + 1000L).as("k"), col("id").as("payload"))
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+    withRule {
+      val banded = spark.read.parquet(tbl).where(col("k").between(1000L, 1010L))
+      assert(banded.inputFiles.length == 1, s"all-null file must be skipped: ${banded.inputFiles.toSeq}")
+      assert(files(banded) == survivors(tbl, ("k", 1000L, 1010L)))
+      assert(banded.count() == 11)
+    }
   }
 
-  test("refresh stats only new files; timestamps prune in native ordering") {
-    val tbl = scratch("zm_ref"); val zm = scratch("zm_ref_map")
-    val day1 = spark.range(100).select(col("id"),
-      lit("2024-01-01").cast("timestamp").as("ts"))
-    val day2 = spark.range(100).select(col("id"),
-      lit("2024-02-01").cast("timestamp").as("ts"))
-    day1.coalesce(1).write.mode("overwrite").parquet(tbl)
-    ZoneMap.build(spark, tbl, Seq("ts"), zm)
-    day2.coalesce(1).write.mode("append").parquet(tbl)
-    assert(ZoneMap.refresh(spark, tbl, Seq("ts"), zm) == 1)
-    assert(ZoneMap.refresh(spark, tbl, Seq("ts"), zm) == 0, "idempotent")
-    val feb = ZoneMap.prunedFiles(spark, tbl, zm, "ts",
-      java.sql.Timestamp.valueOf("2024-01-15 00:00:00"),
+  test("timestamps prune in native ordering") {
+    val tbl = committed("zm_ts", "ts") { dir =>
+      Seq("2024-01-01", "2024-02-01").foreach { d =>
+        spark.range(100).select(col("id"), lit(d).cast("timestamp").as("ts"))
+          .coalesce(1).write.mode("append").parquet(dir)
+      }
+    }
+    val (lo, hi) = (java.sql.Timestamp.valueOf("2024-01-15 00:00:00"),
       java.sql.Timestamp.valueOf("2024-02-15 00:00:00"))
-    assert(feb.size == 1, s"only the February file should survive: $feb")
-    assert(ZoneMap.readPruned(spark, tbl, zm, "ts",
-      java.sql.Timestamp.valueOf("2024-01-15 00:00:00"),
-      java.sql.Timestamp.valueOf("2024-02-15 00:00:00")).count() == 100)
+    withRule {
+      val feb = spark.read.parquet(tbl).where(col("ts").between(lo, hi))
+      assert(feb.inputFiles.length == 1, s"only the February file should survive: ${feb.inputFiles.toSeq}")
+      assert(files(feb) == survivors(tbl, ("ts", lo, hi)))
+      assert(feb.count() == 100)
+    }
   }
 
   test("q263 layout: a 3-month band on date-clustered orders skips most files") {
-    val tbl = scratch("zm_orders"); val zm = scratch("zm_orders_map")
-    Layout.writeRangeClustered(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet"),
-      tbl, 16, col("o_orderdate"))
-    ZoneMap.build(spark, tbl, Seq("o_orderdate"), zm)
-    val all = ZoneMap.listDataFiles(spark, tbl)
-    val hit = ZoneMap.prunedFiles(spark, tbl, zm, "o_orderdate",
-      java.sql.Timestamp.valueOf("1997-03-01 00:00:00"),
+    val tbl = committed("zm_orders", "o_orderdate")(dir =>
+      Layout.writeRangeClustered(Tables.table(spark, "/root/testdata/sf0.001", "orders"),
+        dir, 16, col("o_orderdate")))
+    val (lo, hi) = (java.sql.Timestamp.valueOf("1997-03-01 00:00:00"),
       java.sql.Timestamp.valueOf("1997-05-31 00:00:00"))
-    // ~3 months of an ~80-month corpus over 16 range-files → ≤3 survivors
-    assert(hit.nonEmpty && hit.size <= 3 && all.size >= 12,
-      s"date band should touch ≤3 of ${all.size} files, got ${hit.size}")
+    def banded = spark.read.parquet(tbl).where(col("o_orderdate").between(lo, hi))
+    val all = unpruned(banded.inputFiles.length)
+    withRule {
+      val hit = files(banded)
+      // ~3 months of an ~80-month corpus over 16 range-files → ≤3 survivors
+      assert(hit.nonEmpty && hit.size <= 3 && all >= 12,
+        s"date band should touch ≤3 of $all files, got ${hit.size}")
+      assert(hit == survivors(tbl, ("o_orderdate", lo, hi)))
+    }
   }
 
   test("z-order + conjunctive zones: either dimension prunes, together multiplicatively") {
-    val tbl = scratch("zm_z"); val zm = scratch("zm_z_map")
     // 64x64 grid, 16 files: z-order clusters BOTH x and y per file
     val grid = spark.range(4096).select(
       (col("id") % 64).as("x"), (col("id") / 64).as("y"))
-    Layout.writeZOrdered(grid, tbl, 16, col("x"), col("y"), bitsPerDim = 6)
-    ZoneMap.build(spark, tbl, Seq("x", "y"), zm)
-    val all = ZoneMap.listDataFiles(spark, tbl).size
-    val xOnly = ZoneMap.prunedFilesMulti(spark, tbl, zm,
-      Seq(("x", 0L, 15L))).size
-    val yOnly = ZoneMap.prunedFilesMulti(spark, tbl, zm,
-      Seq(("y", 0L, 15L))).size
-    val both = ZoneMap.prunedFilesMulti(spark, tbl, zm,
-      Seq(("x", 0L, 15L), ("y", 0L, 15L))).size
-    assert(xOnly < all && yOnly < all,
-      s"z-order must let EITHER dimension prune: x=$xOnly y=$yOnly of $all")
-    assert(both < xOnly && both < yOnly,
-      s"conjunction must prune beyond either band: $both vs $xOnly/$yOnly")
+    val tbl = committed("zm_z", "x", "y")(
+      Layout.writeZOrdered(grid, _, 16, col("x"), col("y"), bitsPerDim = 6))
+    val xBand = col("x").between(0L, 15L); val yBand = col("y").between(0L, 15L)
+    def scan(t: String, c: org.apache.spark.sql.Column) = spark.read.parquet(t).where(c)
+    val all = unpruned(scan(tbl, xBand).inputFiles.length)
+    withRule {
+      val xOnly = files(scan(tbl, xBand))
+      val yOnly = files(scan(tbl, yBand))
+      val both = files(scan(tbl, xBand && yBand))
+      assert(xOnly.size < all && yOnly.size < all,
+        s"z-order must let EITHER dimension prune: x=${xOnly.size} y=${yOnly.size} of $all")
+      assert(both.size < xOnly.size && both.size < yOnly.size,
+        s"conjunction must prune beyond either band: ${both.size} vs ${xOnly.size}/${yOnly.size}")
+      assert(both == survivors(tbl, ("x", 0L, 15L), ("y", 0L, 15L)))
+      assert(scan(tbl, xBand && yBand).count() == unpruned(scan(tbl, xBand && yBand).count()))
+    }
     // contrast: single-column range clustering cannot prune on y
-    val tblR = scratch("zm_r"); val zmR = scratch("zm_r_map")
-    Layout.writeRangeClustered(grid, tblR, 16, col("x"))
-    ZoneMap.build(spark, tblR, Seq("x", "y"), zmR)
-    val yOnRange = ZoneMap.prunedFilesMulti(spark, tblR, zmR,
-      Seq(("y", 0L, 15L))).size
-    val allR = ZoneMap.listDataFiles(spark, tblR).size
-    assert(yOnRange == allR,
-      s"x-clustered layout should straddle every y band: $yOnRange/$allR")
+    val tblR = committed("zm_r", "x", "y")(Layout.writeRangeClustered(grid, _, 16, col("x")))
+    val allR = unpruned(scan(tblR, yBand).inputFiles.length)
+    assert(withRule(scan(tblR, yBand).inputFiles.length) == allR,
+      s"x-clustered layout should straddle every y band of $allR files")
   }
 
   test("deleted files drop out via the live-listing intersection") {
-    val tbl = scratch("zm_del"); val zm = scratch("zm_del_map")
-    clustered(2000, 4, tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), zm)
-    val before = ZoneMap.prunedFiles(spark, tbl, zm, "id", 0L, 5000L)
-    val victim = new java.io.File(new java.net.URI("file://" + before.head
-      .replaceFirst("^file:/+", "/")))
+    val tbl = committed("zm_del", "id")(clustered(2000, 4))
+    val victim = new java.io.File(norm(unpruned(spark.read.parquet(tbl).inputFiles).min))
+    val rows = spark.read.parquet(victim.getPath).count()
     assert(victim.delete(), s"test setup: could not delete $victim")
-    val after = ZoneMap.prunedFiles(spark, tbl, zm, "id", 0L, 5000L)
-    assert(after.size == before.size - 1,
-      "stale zone-map entries for deleted files must not reach the scan")
+    withRule {
+      val banded = spark.read.parquet(tbl).where(col("id").between(0L, 5000L))
+      assert(banded.inputFiles.length == 3,
+        "stale zone-map entries for deleted files must not reach the scan")
+      assert(banded.count() == 2000 - rows)
+    }
   }
 
   test("partitioned table: zone map prunes correctly inside key= subdirs") {
-    // listDataFiles must walk partition subdirectories — a top-level-only
-    // listing made prunedFiles drop every mapped file and readPruned
-    // silently returned ZERO rows on partitioned layouts
-    val tbl = scratch("zm_part"); val zm = scratch("zm_part_map")
-    spark.range(1000L)
-      .select(col("id"), (col("id") % 4).as("k"),
-        (col("id") * 3 % 500).as("v"))
-      .repartition(col("k"))
-      .write.partitionBy("k").mode("overwrite").parquet(tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), zm)
-    val live = ZoneMap.listDataFiles(spark, tbl)
-    assert(live.nonEmpty, "recursive listing must see partitioned files")
-    val got = ZoneMap.readPruned(spark, tbl, zm, "id", 100L, 199L)
-    assert(got.count() == 100L,
-      "pruned read on a partitioned table must return the real rows")
-    // partition column survives (basePath) and is correct
-    assert(got.select("k").distinct().count() == 4L)
-    assert(got.where(col("k") =!= col("id") % 4).count() == 0L)
+    val tbl = committed("zm_part", "id")(dir =>
+      spark.range(1000L)
+        .select(col("id"), (col("id") % 4).as("k"), (col("id") * 3 % 500).as("v"))
+        .repartition(col("k"))
+        .write.partitionBy("k").mode("overwrite").parquet(dir))
+    withRule {
+      val got = spark.read.parquet(tbl).where(col("id").between(100L, 199L))
+      assert(files(got) == survivors(tbl, ("id", 100L, 199L)))
+      assert(got.count() == 100L,
+        "pruned read on a partitioned table must return the real rows")
+      // partition column survives (basePath) and is correct
+      assert(got.select("k").distinct().count() == 4L)
+      assert(got.where(col("k") =!= col("id") % 4).count() == 0L)
+    }
   }
 
   test("ZoneMapRule: the STANDARD read path prunes automatically, result-identically") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_auto")
-    clustered(10000, 10, tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), ZoneMap.defaultZonePath(tbl))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
-      val all = ZoneMap.listDataFiles(spark, tbl).size
-      // the PLAIN read path — no readPruned anywhere
-      def banded = spark.read.parquet(tbl)
-        .where(col("id") >= 2000L && col("id") <= 2999L)
+    // one file lands in the version AFTER its synopsis was built: it is
+    // unmapped, and an unmapped file always survives
+    val tbl = committed("zm_auto", "id")(clustered(10000, 10), dir =>
+      Seq((2500L, -1L), (99999L, -2L)).toDF("id", "v").coalesce(1)
+        .write.mode("append").parquet(dir))
+    def banded = Snapshots.open(spark, tbl.substring(0, tbl.indexOf("/t/v=")))
+      .read(spark, "t").where(col("id") >= 2000L && col("id") <= 2999L)
+    val all = unpruned(banded.inputFiles.length)
+    withRule {
       assert(banded.inputFiles.length < all,
         s"rule must shrink the scan: ${banded.inputFiles.length}/$all")
-      // plan-assert against the explicit-pruning truth
-      def norm(f: String) = f.replaceFirst("^file:/+", "/")
-      val expected = ZoneMap.prunedFiles(spark, tbl,
-        ZoneMap.defaultZonePath(tbl), "id", 2000L, 2999L).map(norm).toSet
-      assert(banded.inputFiles.map(norm).toSet == expected)
-      // result identical to the unpruned plan
-      spark.conf.set("spark.graft.zonemap.enabled", "false")
-      val direct = banded.select("id", "v").as[(Long, Long)].collect().toSet
-      assert(banded.inputFiles.length == all, "kill switch must disable pruning")
-      spark.conf.set("spark.graft.zonemap.enabled", "true")
-      assert(banded.select("id", "v").as[(Long, Long)].collect().toSet == direct)
-      assert(direct.size == 1000)
-      // empty survivor band: empty result, schema intact, no scan error
-      val none = spark.read.parquet(tbl).where(col("id") > 999999L)
-      assert(none.count() == 0 && none.columns.toSeq == Seq("id", "v"))
-      // freshness safety: a file landing AFTER the map was built is
-      // UNMAPPED and must always be scanned — rows cannot vanish
-      Seq((2500L, -1L)).toDF("id", "v").coalesce(1)
-        .write.mode("append").parquet(tbl)
-      ZoneMapRule.invalidateCache() // the append changed the listing
-      val withNew = banded.select("id", "v").as[(Long, Long)].collect().toSet
-      assert(withNew.contains((2500L, -1L)),
-        "an unmapped fresh file must survive pruning unconditionally")
-      assert(withNew.size == 1001)
-    } finally {
-      spark.conf.set("spark.graft.zonemap.enabled", "true")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
+      assert(files(banded) == survivors(tbl, ("id", 2000L, 2999L)))
+      val got = banded.select("id", "v").as[(Long, Long)].collect().toSet
+      assert(got == unpruned(banded.select("id", "v").as[(Long, Long)].collect().toSet))
+      assert(got.contains((2500L, -1L)),
+        "an unmapped file must survive pruning unconditionally")
+      assert(got.size == 1001)
     }
   }
 
   test("ZoneMapRule records files pruned and total on the trace (q279's read shape)") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_trace")
-    clustered(10000, 10, tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), ZoneMap.defaultZonePath(tbl))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
-      val all = ZoneMap.listDataFiles(spark, tbl).size
-      // the plain read q279 runs: in-table synopsis, a closed range band
-      def banded = spark.read.parquet(tbl)
-        .where(col("id") >= 2000L && col("id") <= 2999L)
+    val tbl = committed("zm_trace", "id")(clustered(10000, 10))
+    // the plain read q279 runs: the version's synopsis, a closed range band
+    def banded = spark.read.parquet(tbl)
+      .where(col("id") >= 2000L && col("id") <= 2999L)
+    val all = unpruned(banded.inputFiles.length)
+    withRule {
       val (n, trace) = Trace.collect(spark)(Trace.span("q279")(banded.count()))
       val attrs = trace.spans.find(_.name == "q279").get.attrs.toMap
       assert(n == 1000)
       assert(attrs.get("files_total").contains(all))
       assert(attrs.get("files_pruned").contains(all - banded.inputFiles.length))
       assert(attrs("files_pruned").asInstanceOf[Int] > 0)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
+      assert(!attrs.contains("zonemap_skipped"))
     }
   }
 
-  test("a build AFTER a negative-cached read is seen: build() itself invalidates") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_latebuild")
-    clustered(8000, 8, tbl)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
-      def banded = spark.read.parquet(tbl)
-        .where(col("id") >= 1000L && col("id") <= 1999L)
-      // query FIRST: the rule negative-caches "no synopsis" for this root
-      assert(banded.inputFiles.length == 8)
-      // the build must invalidate that cache itself (it sat outside the
-      // brace-less def body once — this is the regression pin)
-      ZoneMap.build(spark, tbl, Seq("id"), ZoneMap.defaultZonePath(tbl))
-      assert(banded.inputFiles.length < 8,
-        "a synopsis built after a negative-cached read must start pruning")
+  test("a truncated synopsis part file: right rows, zonemap_skipped on the span") {
+    val tbl = committed("zm_trunc", "id")(clustered(4000, 4), dir => {
+      val part = new java.io.File(ZoneMap.zonePath(dir)).listFiles()
+        .filter(_.getName.startsWith("part-")).minBy(_.getName)
+      val bytes = java.nio.file.Files.readAllBytes(part.toPath)
+      java.nio.file.Files.write(part.toPath, bytes.take(bytes.length / 2))
+      new java.io.File(part.getParent, s".${part.getName}.crc").delete()
+    })
+    def banded = spark.read.parquet(tbl).where(col("id").between(1000L, 1999L))
+    withRule {
+      // with no trace open nothing is recorded, and the read still works
       assert(banded.count() == 1000)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
+      // a failed load is not cached as "no synopsis": the next read retries
+      val (n, trace) = Trace.collect(spark)(Trace.span("q")(banded.count()))
+      assert(n == 1000)
+      val attrs = trace.spans.find(_.name == "q").get.attrs.toMap
+      assert(attrs.get("zonemap_skipped").exists(_.toString.contains("Exception")), attrs)
+      assert(!attrs.contains("files_pruned"))
     }
   }
 
   test("ZoneMapRule is inert without a _zonemap synopsis or prunable conjunct") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_inert")
-    clustered(2000, 4, tbl)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
-      val noMap = spark.read.parquet(tbl).where(col("id") <= 100L)
+    withRule {
+      val bare = committed("zm_inert")(clustered(2000, 4))
+      val noMap = spark.read.parquet(bare).where(col("id") <= 100L)
       assert(noMap.inputFiles.length == 4, "no synopsis -> untouched scan")
-      ZoneMap.build(spark, tbl, Seq("id"), ZoneMap.defaultZonePath(tbl))
+      val tbl = committed("zm_inert_map", "id")(clustered(2000, 4))
       // a filter the extractor must ignore: function of the column
       val fn = spark.read.parquet(tbl).where(abs(col("id")) <= lit(100L))
       assert(fn.inputFiles.length == 4, "non-bare conjunct must not prune")
       assert(fn.count() == 101)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
+      // a directory not named like a version is never probed, even with a
+      // synopsis inside it
+      val plain = scratch("zm_plain") + "/t"
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(tbl), new java.io.File(plain))
+      val onPlain = spark.read.parquet(plain).where(col("id") <= 100L)
+      assert(onPlain.inputFiles.length == 4, "only version roots are probed")
+      assert(spark.read.parquet(tbl).where(col("id") <= 100L).inputFiles.length < 4)
     }
   }
 
   test("ZoneMapRule: mixed-case mapped columns prune (case-insensitive stat lookup)") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_case")
-    Layout.writeRangeClustered(
-      spark.range(8000L).select(col("id").as("OrderKey"),
-        (col("id") % 7).as("V")),
-      tbl, 8, col("OrderKey"))
-    ZoneMap.build(spark, tbl, Seq("OrderKey"), ZoneMap.defaultZonePath(tbl))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
+    val tbl = committed("zm_case", "OrderKey")(
+      Layout.writeRangeClustered(
+        spark.range(8000L).select(col("id").as("OrderKey"), (col("id") % 7).as("V")),
+        _, 8, col("OrderKey")))
+    withRule {
       // the synopsis carries OrderKey__min/__max; a case-SENSITIVE
       // fieldIndex on the lowercased band name threw per planning pass
       // and silently disabled pruning — this is the regression pin
@@ -294,28 +298,20 @@ class ZoneMapSpec extends SparkSpec {
       assert(banded.inputFiles.length < 8,
         s"mixed-case column must prune: ${banded.inputFiles.length}/8")
       assert(banded.count() == 1000)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
     }
   }
 
   test("ZoneMapRule: under caseSensitive=true a case-twin column never reads " +
       "the other's zones") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_cs")
     spark.conf.set("spark.sql.caseSensitive", "true")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
+    try withRule {
       // two DISTINCT columns differing only in case; zones exist for K
       // but k is anti-correlated with it — pruning k on K's stats would
       // silently lose rows
-      Layout.writeRangeClustered(
-        spark.range(4000L).select(col("id").as("K"),
-          (lit(3999L) - col("id")).as("k")),
-        tbl, 4, col("K"))
-      ZoneMap.build(spark, tbl, Seq("K"), ZoneMap.defaultZonePath(tbl))
+      val tbl = committed("zm_cs", "K")(
+        Layout.writeRangeClustered(
+          spark.range(4000L).select(col("id").as("K"), (lit(3999L) - col("id")).as("k")),
+          _, 4, col("K")))
       val onTwin = spark.read.parquet(tbl)
         .where(col("k") >= 3900L) // the OTHER column
       assert(onTwin.inputFiles.length == 4,
@@ -325,22 +321,13 @@ class ZoneMapSpec extends SparkSpec {
       val onK = spark.read.parquet(tbl).where(col("K") >= 3900L)
       assert(onK.inputFiles.length < 4, "exact-case match must still prune")
       assert(onK.count() == 100)
-    } finally {
-      spark.conf.set("spark.sql.caseSensitive", "false")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
-    }
+    } finally spark.conf.set("spark.sql.caseSensitive", "false")
   }
 
   test("ZoneMapRule: IN lists prune — both In and the InSet conversion") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_in")
-    clustered(10000, 10, tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), ZoneMap.defaultZonePath(tbl))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
-      val all = ZoneMap.listDataFiles(spark, tbl).size
+    val tbl = committed("zm_in", "id")(clustered(10000, 10))
+    withRule {
+      val all = unpruned(spark.read.parquet(tbl).inputFiles.length)
       // 3 values (stays an In): all inside one ~1000-row zone
       val small = spark.read.parquet(tbl)
         .where(col("id").isin(2100L, 2200L, 2300L))
@@ -355,30 +342,19 @@ class ZoneMapSpec extends SparkSpec {
       assert(big.count() == 12)
       // a value set straddling zones keeps every intersecting file: the
       // result must equal the unpruned truth
-      spark.conf.set("spark.graft.zonemap.enabled", "false")
-      val truth = big.select("id").as[Long].collect().toSet
-      spark.conf.set("spark.graft.zonemap.enabled", "true")
+      val truth = unpruned(big.select("id").as[Long].collect().toSet)
       assert(big.select("id").as[Long].collect().toSet == truth)
-    } finally {
-      spark.conf.set("spark.graft.zonemap.enabled", "true")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
     }
   }
 
   test("ZoneMapRule: LIKE prefix, BETWEEN and OR-of-bands prune; poisoned OR never does") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_like")
     // 8 files clustered on a zero-padded string key: s000000..s009999
-    Layout.writeRangeClustered(
-      spark.range(10000L).select(col("id"),
-        format_string("s%06d", col("id")).as("sk")),
-      tbl, 8, col("sk"))
-    ZoneMap.build(spark, tbl, Seq("sk", "id"), ZoneMap.defaultZonePath(tbl))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
-      val all = ZoneMap.listDataFiles(spark, tbl).size
+    val tbl = committed("zm_like", "sk", "id")(
+      Layout.writeRangeClustered(
+        spark.range(10000L).select(col("id"), format_string("s%06d", col("id")).as("sk")),
+        _, 8, col("sk")))
+    withRule {
+      val all = unpruned(spark.read.parquet(tbl).inputFiles.length)
       // pure prefix (LikeSimplification → StartsWith): one ~1250-row zone
       val pre = spark.read.parquet(tbl).where(col("sk").like("s0023%"))
       assert(pre.inputFiles.length < all,
@@ -420,31 +396,21 @@ class ZoneMapSpec extends SparkSpec {
       assert(poisoned.inputFiles.length == all, "poisoned OR must not prune")
       assert(poisoned.count() == 500)
       // result-identity: pruned OR equals the unpruned truth
-      spark.conf.set("spark.graft.zonemap.enabled", "false")
-      val truth = orq.select("id").as[Long].collect().toSet
-      spark.conf.set("spark.graft.zonemap.enabled", "true")
+      val truth = unpruned(orq.select("id").as[Long].collect().toSet)
       assert(orq.select("id").as[Long].collect().toSet == truth)
-    } finally {
-      spark.conf.set("spark.graft.zonemap.enabled", "true")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
     }
   }
 
   test("ZoneMapRule: order-preserving casts prune; non-monotone shapes never do") {
-    import graft.plans.ZoneMapRule
-    val tbl = scratch("zm_cast")
     // 4 month-files of timestamps; the zone map stores TIMESTAMP stats
-    val months = Seq("2024-01", "2024-02", "2024-03", "2024-04")
-    months.zipWithIndex.foreach { case (m, i) =>
-      spark.range(100).select(col("id") + i * 100,
-          lit(s"$m-15 12:00:00").cast("timestamp").as("ts"))
-        .coalesce(1).write.mode("append").parquet(tbl)
+    val tbl = committed("zm_cast", "ts") { dir =>
+      Seq("2024-01", "2024-02", "2024-03", "2024-04").zipWithIndex.foreach { case (m, i) =>
+        spark.range(100).select(col("id") + i * 100,
+            lit(s"$m-15 12:00:00").cast("timestamp").as("ts"))
+          .coalesce(1).write.mode("append").parquet(dir)
+      }
     }
-    ZoneMap.build(spark, tbl, Seq("ts"), ZoneMap.defaultZonePath(tbl))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
+    withRule {
       // timestamp→date is monotone: the band casts the zone's timestamp
       // stats through the SAME cast and prunes to the one March file
       val mar = spark.read.parquet(tbl)
@@ -457,28 +423,21 @@ class ZoneMapSpec extends SparkSpec {
         .where(date_format(col("ts"), "yyyy-MM") === "2024-03")
       assert(fn.inputFiles.length == 4, "non-cast shapes must not prune")
       assert(fn.count() == 100)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
     }
   }
 
   test("ZoneMapRule: multi-root scans prune via per-root synopsis union") {
-    import graft.plans.ZoneMapRule
-    val tblA = scratch("zm_ma"); val tblB = scratch("zm_mb")
-    clustered(4000, 4, tblA)
+    val tblA = committed("zm_ma", "id")(clustered(4000, 4))
     // B's ids live in a disjoint range so A's band never matches them
-    Layout.writeRangeClustered(
-      spark.range(4000L).select((col("id") + 100000L).as("id"),
-        (col("id") % 7).as("v")),
-      tblB, 4, col("id"))
-    ZoneMap.build(spark, tblA, Seq("id"), ZoneMap.defaultZonePath(tblA))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ZoneMapRule
-    try {
+    def writeB(dir: String) = Layout.writeRangeClustered(
+      spark.range(4000L).select((col("id") + 100000L).as("id"), (col("id") % 7).as("v")),
+      dir, 4, col("id"))
+    val bareB = committed("zm_mb")(writeB)
+    val tblB = committed("zm_mb", "id")(writeB)
+    withRule {
       // only A has a synopsis: A's non-matching files prune, EVERY B
-      // file survives (unmapped-root freshness safety)
-      val band = spark.read.parquet(tblA, tblB)
+      // file survives (unmapped-root safety)
+      val band = spark.read.parquet(tblA, bareB)
         .where(col("id") >= 1000L && col("id") <= 1999L)
       val files = band.inputFiles
       assert(files.count(_.contains("zm_mb")) == 4,
@@ -487,7 +446,6 @@ class ZoneMapSpec extends SparkSpec {
         s"mapped root must prune: ${files.count(_.contains("zm_ma"))}/4")
       assert(band.count() == 1000)
       // both roots mapped: the union prunes B's files on A's band too
-      ZoneMap.build(spark, tblB, Seq("id"), ZoneMap.defaultZonePath(tblB))
       val both = spark.read.parquet(tblA, tblB)
         .where(col("id") >= 1000L && col("id") <= 1999L)
       assert(both.inputFiles.count(_.contains("zm_mb")) == 0,
@@ -496,14 +454,8 @@ class ZoneMapSpec extends SparkSpec {
       // result identity vs the unpruned plan on a straddling band
       val wide = spark.read.parquet(tblA, tblB)
         .where(col("id") >= 3500L && col("id") <= 100500L)
-      spark.conf.set("spark.graft.zonemap.enabled", "false")
-      val truth = wide.select("id").as[Long].collect().toSet
-      spark.conf.set("spark.graft.zonemap.enabled", "true")
+      val truth = unpruned(wide.select("id").as[Long].collect().toSet)
       assert(wide.select("id").as[Long].collect().toSet == truth)
-    } finally {
-      spark.conf.set("spark.graft.zonemap.enabled", "true")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ZoneMapRule)
     }
   }
 }

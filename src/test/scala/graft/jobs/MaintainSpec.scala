@@ -1,69 +1,76 @@
 package graft.jobs
 
 import graft.SparkSpec
-import graft.core.ZoneMap
+import graft.core.{Snapshots, ZoneMap}
 import graft.plans.ResultCache
 import org.apache.spark.sql.functions._
 
 class MaintainSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Table `t` committed at a fresh Snapshots root as `files` files of
+    * ids 0 until n, zone-mapped on `id`. */
+  private def zonedRoot(prefix: String, n: Long, files: Int): String = {
+    val root = scratch(prefix)
+    val txn = Snapshots.begin(spark, root)
+    spark.range(n).select(col("id"), (col("id") % 9).as("k"))
+      .repartition(files).write.parquet(txn.dir("t"))
+    ZoneMap.build(txn, "t", Seq("id"))
+    txn.commit()
+    root
+  }
+
   test("fragmented table: compact + zone-map rebuild + cache vacuum, data identical") {
-    val tbl = scratch("mt_tbl"); val zm = scratch("mt_zm")
+    val root = zonedRoot("mt_tbl", 10000, 100)
     val cache = scratch("mt_cache")
-    // 100 tiny files, then a zone map of the fragmented layout
-    spark.range(10000).select(col("id"), (col("id") % 9).as("k"))
-      .repartition(100).write.mode("overwrite").parquet(tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), zm)
+    def current = Snapshots.open(spark, root).read(spark, "t")
     // a cached result whose fingerprint binds the OLD listing
-    ResultCache.through(
-      spark.read.parquet(tbl).groupBy(col("k")).count(), cache)
-    val sumBefore = spark.read.parquet(tbl)
-      .agg(sum(col("id"))).collect().head.getLong(0)
+    ResultCache.through(current.groupBy(col("k")).count(), cache)
+    val sumBefore = current.agg(sum(col("id"))).collect().head.getLong(0)
+    val v1 = Snapshots.currentId(spark, root).get
 
     val now = System.currentTimeMillis()
-    val r = Maintain.run(spark, tbl, Seq("id"), zm, Some(cache),
+    val r = Maintain.run(spark, root, "t", Some(cache),
       maxFiles = 10, cacheTtlMs = 0L, nowMs = now + 10000).collect().head
     assert(r.getBoolean(3), "100 files over maxFiles=10 must compact")
     assert(r.getLong(2) < r.getLong(1), s"files must shrink: $r")
+    assert(Snapshots.currentId(spark, root).contains(v1 + 1), "one commit")
     // data untouched by the rewrite
-    assert(spark.read.parquet(tbl)
-      .agg(sum(col("id"))).collect().head.getLong(0) == sumBefore)
-    // the zone map describes the POST-compaction files exactly
-    val live = ZoneMap.listDataFiles(spark, tbl).toSet
-    val mapped = spark.read.parquet(zm).select("file").collect()
-      .map(_.getString(0).replaceFirst("^file:/+", "/")).toSet
-    assert(mapped == live, s"zone map stale after compaction")
+    assert(current.agg(sum(col("id"))).collect().head.getLong(0) == sumBefore)
+    // the new version's synopsis maps its files exactly, on the prior
+    // version's columns
+    val dir = Snapshots.open(spark, root).path("t")
+    assert(ZoneMap.mappedColumns(spark, dir) == Seq("id"))
+    def norm(f: String) = f.replaceFirst("^file:/+", "/")
+    val mapped = spark.read.parquet(ZoneMap.zonePath(dir)).select("file").as[String]
+      .collect().map(norm).toSet
+    assert(mapped == current.inputFiles.map(norm).toSet, "zone map stale after compaction")
+    assert(r.getLong(4) == r.getLong(2))
     // pruning still correct on the new layout
-    assert(ZoneMap.readPruned(spark, tbl, zm, "id", 100L, 199L)
-      .count() == 100)
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ graft.plans.ZoneMapRule
+    try assert(current.where(col("id").between(100L, 199L)).count() == 100)
+    finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.ZoneMapRule)
     // the superseded cache entry was reaped
     assert(r.getLong(5) == 1L && !ResultCache.isCached(
-      spark.read.parquet(tbl).groupBy(col("k")).count(), cache))
+      current.groupBy(col("k")).count(), cache))
   }
 
-  test("healthy table: no compaction, refresh covers the appended file only") {
-    val tbl = scratch("mt_ok"); val zm = scratch("mt_ok_zm")
-    spark.range(1000).select(col("id")).coalesce(2)
-      .write.mode("overwrite").parquet(tbl)
-    ZoneMap.build(spark, tbl, Seq("id"), zm)
-    spark.range(1000, 1500).select(col("id")).coalesce(1)
-      .write.mode("append").parquet(tbl)
-    val r = Maintain.run(spark, tbl, Seq("id"), zm, None,
-      maxFiles = 64).collect().head
+  test("healthy table: no compaction commits no version") {
+    val root = zonedRoot("mt_ok", 1000, 3)
+    val version = Snapshots.currentId(spark, root)
+    val r = Maintain.run(spark, root, "t", None, maxFiles = 64).collect().head
     assert(!r.getBoolean(3), "3 files under maxFiles=64 must not compact")
-    assert(r.getLong(1) == r.getLong(2))
-    assert(r.getLong(4) == 1L, s"exactly the appended file maps: $r")
-    assert(ZoneMap.readPruned(spark, tbl, zm, "id", 1200L, 1299L)
-      .count() == 100)
+    assert(r.getLong(1) == 3L && r.getLong(2) == 3L, s"$r")
+    assert(r.getLong(4) == 3L, s"the current synopsis maps every file: $r")
+    assert(Snapshots.currentId(spark, root) == version, "a healthy table commits nothing")
   }
 
   test("run: cacheDir without nowMs fails loudly instead of no-op vacuuming") {
-    val tbl = scratch("mt_now"); val zm = scratch("mt_now_zm")
-    spark.range(100).select(col("id")).coalesce(1)
-      .write.mode("overwrite").parquet(tbl)
+    val root = zonedRoot("mt_now", 100, 1)
     intercept[IllegalArgumentException] {
-      Maintain.run(spark, tbl, Seq("id"), zm, Some(scratch("mt_now_c")))
+      Maintain.run(spark, root, "t", Some(scratch("mt_now_c")))
     }
   }
 
@@ -79,7 +86,7 @@ class MaintainSpec extends SparkSpec {
 
   /** The committed version of one index table (`centroids`, `assignments`). */
   private def committed(index: String, table: String) =
-    graft.core.Snapshots.open(spark, index).read(spark, table)
+    Snapshots.open(spark, index).read(spark, table)
 
   test("maintainIvf: un-drifted appends are a strict no-op — index byte-stable") {
     import graft.ops.Ann
@@ -97,14 +104,14 @@ class MaintainSpec extends SparkSpec {
       walk(new java.io.File(idx))
         .map(f => f.getPath -> ((f.lastModified(), f.length()))).toMap
     }
-    val version = graft.core.Snapshots.currentId(spark, idx)
+    val version = Snapshots.currentId(spark, idx)
     val before = snapshot()
     val r = Maintain.maintainIvf(spark, idx, 4, numCentroids = 2,
       staleThreshold = 0.5).collect().head
     assert(!r.getBoolean(3), s"clean appends must not trigger retrain: $r")
     assert(r.getDouble(2) < 0.5 && r.getLong(1) == 2L, s"report: $r")
     assert(snapshot() == before, "no-op maintenance must not move a byte")
-    assert(graft.core.Snapshots.currentId(spark, idx) == version,
+    assert(Snapshots.currentId(spark, idx) == version,
       "no-op maintenance commits nothing")
   }
 
@@ -152,7 +159,7 @@ class MaintainSpec extends SparkSpec {
       blobs(50, 12).map { case (i, v) => (i + 2000L, v) }.toDF("vec_id", "vec"),
       "vec_id", "vec", 4, 0L)
     Ann.ivfCompactDeltas(spark, idx)
-    assert(graft.core.Snapshots.open(spark, idx).watermark.contains(0L))
+    assert(Snapshots.open(spark, idx).watermark.contains(0L))
     val rnd = new scala.util.Random(13)
     val far = (0 until 200).map(i => (5000L + i,
       Array(0f, 0f, 5f, 5f).map(_ + rnd.nextFloat() * 0.05f)))
@@ -166,7 +173,7 @@ class MaintainSpec extends SparkSpec {
     assert(r.getBoolean(3), s"drifted fixture must rebuild: $r")
     // every vector the index owned — base, folded batch, LIVE deltas —
     // is in the rebuilt base, and no delta is left beside it
-    val rebuilt = graft.core.Snapshots.open(spark, idx)
+    val rebuilt = Snapshots.open(spark, idx)
     assert(committed(idx, "assignments").count() == 650L)
     assert(rebuilt.dirs.keySet == Set("centroids", "assignments"))
     // the rebuild's record carries the watermark past the folded batch:

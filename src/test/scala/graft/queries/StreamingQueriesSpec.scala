@@ -21,4 +21,26 @@ class StreamingQueriesSpec extends SparkSpec {
     val ckpt = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft-ckpt-${sink.get}")
     assert(!ckpt.exists(), s"$ckpt is left behind")
   }
+
+  test("q161 and q265 reuse one scratch root per process and corpus") {
+    val dir = scratch("stream-scratch")
+    spark.range(40).selectExpr("id AS event_id", "id * 60000000000 AS ts",
+        "concat('t', id % 3) AS event_type", "CAST(id * 7 AS DOUBLE) AS value", "id % 5 AS user_id")
+      .coalesce(1).write.parquet(s"$dir/out")
+    val part = new java.io.File(s"$dir/out").listFiles().filter(_.getName.endsWith(".parquet")).head
+    assert(part.renameTo(new java.io.File(s"$dir/events.parquet")))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val corpus = dir.replaceAll("[^A-Za-z0-9]", "_")
+    def left() = tmp.list().filter(n => (n.startsWith("graft_q161_") ||
+      n.startsWith("graft_q265_")) && n.endsWith(corpus)).toSet
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    val first = (rows(StreamingQueries.q161StreamUpsert(spark, dir)),
+      rows(StreamingQueries.q265StreamQuantiles(spark, dir)))
+    val dirs = left()
+    assert(dirs.size == 2, dirs)
+    val second = (rows(StreamingQueries.q161StreamUpsert(spark, dir)),
+      rows(StreamingQueries.q265StreamQuantiles(spark, dir)))
+    assert(left() == dirs, "a second call leaves no new directory")
+    assert(second == first && first._1.size == 5 && first._2.size == 4)
+  }
 }
