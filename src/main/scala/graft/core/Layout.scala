@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Physical data layout for scan efficiency at scale — the writer-side
@@ -46,14 +46,14 @@ object Layout {
     val src = txn.parent.getOrElse(throw new IllegalStateException(
       s"${txn.root} has no committed snapshot to compact")).path(table)
     val hadoop = spark.sessionState.newHadoopConf()
-    val files = org.apache.spark.sql.GraftSqlShim.dataFiles(src, hadoop).toSeq
+    val files = GraftSqlShim.dataFiles(src, hadoop).toSeq
     val totalBytes = files.map(_.getLen).sum
     val target = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     if (files.length <= target) return (files.length, files.length)
     txn.stage(table, Tables.parquet(spark, src).repartition(target))
     val zoned = ZoneMap.mappedColumns(spark, src)
     if (zoned.nonEmpty) ZoneMap.build(txn, table, zoned)
-    (files.length, org.apache.spark.sql.GraftSqlShim.dataFiles(txn.dir(table), hadoop).size)
+    (files.length, GraftSqlShim.dataFiles(txn.dir(table), hadoop).size)
   }
 
   /** Write `df` range-clustered by `keys`: `repartitionByRange` samples

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.GraftSqlShim
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** External zone maps: a PERSISTED per-file min/max synopsis table,
@@ -63,8 +63,7 @@ object ZoneMap {
 
   /** The columns the synopsis of `versionDir` maps, from its `<c>__min`
     * columns (read from one footer, no Spark job); empty without one. */
-  def mappedColumns(spark: org.apache.spark.sql.SparkSession,
-      versionDir: String): Seq[String] =
+  def mappedColumns(spark: SparkSession, versionDir: String): Seq[String] =
     GraftSqlShim.parquetSchema(spark, zonePath(versionDir)).toSeq
       .flatMap(_.fieldNames.filter(_.endsWith("__min")).map(_.stripSuffix("__min")))
 }
