@@ -89,7 +89,7 @@ object Bench {
   /** Resource-class tags for floors: the 3-query compute canary misprices
     * FS-bound queries (round-8 bisect: q270/q274 at 2.2–2.5× floors on a
     * slow-DISK day were byte-identical to the prior round's binary — they
-    * rebuild a fresh index under java.io.tmpdir per run and carry the
+    * rebuild a fresh index under the JVM's temp dir per run and carry the
     * disk's host factor, not the CPU's). Queries tagged `"fs"` in
     * `scripts/bench_classes.json` gate floor re-runs against the
     * [[fsCanary]]-scaled floor instead of the compute-canary-scaled one.
@@ -188,8 +188,8 @@ object Bench {
     System.err.println(f"[bench] host factor: $hf%.3f")
     // FS CANARY: a compute canary prices disk-bound floors wrong in both
     // directions (round-8: q270/q274 2.2-2.5x floors on a slow-disk day,
-    // bisect-proven not a regression). One write+list+read cycle on
-    // java.io.tmpdir — the same filesystem the index-building queries
+    // bisect-proven not a regression). One write+list+read cycle in
+    // the JVM's temp dir — the same filesystem the index-building queries
     // scratch on — priced against its own committed floor
     // ("__fs_canary__" in the floors file).
     def fsCanaryOnce(): Double = {

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** The ONE audited implementation of the crash-safe directory swap that
   * publishes a prepared replacement: `target`→`old`, `tmp`→`target`,
@@ -29,7 +30,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Every versioned store — the streaming sinks' tables and compacted,
   * zone-mapped tables included — is on [[Snapshots]] instead, and
   * `CommitGateSpec` fails on a new caller anywhere else. Callers stage
-  * the full replacement inside `tmp` BEFORE calling. */
+  * the full replacement inside `tmp` BEFORE calling.
+  *
+  * FsOps also owns the process-scoped roots under java.io.tmpdir
+  * ([[procCacheDir]], [[scratchRoot]]): `CommitGateSpec` fails on a
+  * temp-dir root built anywhere else. */
 object FsOps {
 
   def atomicSwap(fs: FileSystem, tmp: Path, target: Path, old: Path): Unit = {
@@ -108,18 +113,36 @@ object FsOps {
   }
 
   /** Process-scoped root of a build-once query cache under
-    * java.io.tmpdir, keyed by the input dir. The cache is a [[Snapshots]]
-    * root whose first commit is its completion marker
-    * ([[Snapshots.openOrBuild]]): a crashed build is invisible and the
-    * next call rebuilds into its own version dirs, which are never
-    * renamed, so the absolute file paths a zone synopsis records stay
-    * valid. The pid in the path keeps one process's caches from being
-    * read by another built from different code; the first execution per
-    * process builds, which the bench's untimed warmup pass absorbs. */
-  def procCacheDir(tag: String, sfDir: String): String =
-    sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_" + tag +
+    * java.io.tmpdir, keyed by the input dir and created if absent. The
+    * cache is a [[Snapshots]] root whose first commit is its completion
+    * marker ([[Snapshots.openOrBuild]]): a crashed build is invisible and
+    * the next call rebuilds into its own version dirs, which are never
+    * renamed, so a version's files keep their paths. The pid in the path
+    * keeps one process's caches from being read by another built from
+    * different code; the first execution per process builds, which the
+    * bench's untimed warmup pass absorbs. The root is removed at JVM exit
+    * (Hadoop `deleteOnExit`). */
+  def procCacheDir(spark: SparkSession, tag: String, sfDir: String): String =
+    procRoot(spark, tag, sfDir, empty = false)
+
+  /** The scratch root of a query over corpus `sfDir` that writes files it
+    * reads back: [[procCacheDir]]'s root, emptied by every call — so the
+    * frame a call returns stays readable until the next call — and removed
+    * at JVM exit. */
+  def scratchRoot(spark: SparkSession, tag: String, sfDir: String): String =
+    procRoot(spark, tag, sfDir, empty = true)
+
+  private def procRoot(spark: SparkSession, tag: String, sfDir: String,
+      empty: Boolean): String = {
+    val root = new Path(sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_" + tag +
       "_p" + java.lang.ProcessHandle.current().pid() + "_" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_")
+      sfDir.replaceAll("[^A-Za-z0-9]", "_"))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (empty) fs.delete(root, true)
+    fs.mkdirs(root)
+    fs.deleteOnExit(root) // registers only a path that exists
+    root.toString
+  }
 
   /** A missing file/dir anywhere in the failure — FileNotFoundException
     * in the cause chain, or an AnalysisException for a nonexistent path.

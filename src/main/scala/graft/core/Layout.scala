@@ -35,11 +35,10 @@ object Layout {
     * file listing, not a data scan.
     *
     * `table`'s version in `txn`'s parent is rewritten as a new version
-    * staged in `txn`, with a zone synopsis over the columns the prior
-    * version's synopsis mapped ([[ZoneMap.mappedColumns]]); the caller
-    * commits it, so readers see the old layout or the new one, never a
-    * mix. An already-compact table stages nothing. Returns (filesBefore,
-    * filesAfter). */
+    * staged in `txn`; the caller commits it, so readers see the old
+    * layout or the new one, never a mix, and the new files' footers are
+    * the zones [[graft.plans.ZoneMapRule]] prunes with. An already-compact
+    * table stages nothing. Returns (filesBefore, filesAfter). */
   def compact(txn: Snapshots.Txn, table: String,
       targetFileBytes: Long = 128L << 20): (Int, Int) = {
     val spark = txn.spark
@@ -51,8 +50,6 @@ object Layout {
     val target = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     if (files.length <= target) return (files.length, files.length)
     txn.stage(table, Tables.parquet(spark, src).repartition(target))
-    val zoned = ZoneMap.mappedColumns(spark, src)
-    if (zoned.nonEmpty) ZoneMap.build(txn, table, zoned)
     (files.length, GraftSqlShim.dataFiles(txn.dir(table), hadoop).size)
   }
 

@@ -32,8 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Maintain {
 
   final case class Report(table: String, filesBefore: Long,
-      filesAfter: Long, compacted: Boolean, zoneMapped: Long,
-      cacheReaped: Long)
+      filesAfter: Long, compacted: Boolean, cacheReaped: Long)
 
   def run(spark: SparkSession, root: String, table: String,
       cacheDir: Option[String] = None,
@@ -48,7 +47,7 @@ object Maintain {
       "Maintain.run: nowMs must be supplied when cacheDir is set — " +
         "the cache vacuum compares nowMs against entry mtimes")
     import spark.implicits._
-    import graft.core.{Layout, Snapshots, ZoneMap}
+    import graft.core.{Layout, Snapshots}
     import org.apache.spark.sql.GraftSqlShim
     val txn = Snapshots.begin(spark, root)
     val current = txn.parent.getOrElse(
@@ -59,16 +58,14 @@ object Maintain {
       if (before > maxFiles) Layout.compact(txn, table, targetFileBytes)
       else (before, before)
     val compacted = after < before
-    val snap = if (!compacted) current else {
-      val s = txn.commit()
+    if (compacted) {
+      txn.commit()
       Snapshots.vacuum(spark, root, keepLast = 2)
-      s
     }
-    val zoned = GraftSqlShim.parquetRows(spark, ZoneMap.zonePath(snap.path(table)))
     val reaped = cacheDir.map(c => graft.plans.ResultCache
       .vacuum(spark, c, cacheTtlMs, nowMs)).getOrElse(0)
     Seq(Report(table, before.toLong, after.toLong, compacted,
-      zoned, reaped.toLong)).toDF()
+      reaped.toLong)).toDF()
   }
 
   final case class IvfReport(index: String, cells: Long, maxStale: Double,

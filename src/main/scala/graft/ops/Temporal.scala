@@ -104,13 +104,16 @@ object Temporal {
       binWidth: Long): DataFrame = {
     require(binWidth > 0, s"binWidth must be positive, got $binWidth")
     // integral `div`, not floor(a / b): epoch-nanos exceed 2^53, so the
-    // double division behind `/` is inexact and can mis-bin boundary rows
+    // double division behind `/` is inexact and can mis-bin boundary rows.
+    // The stop is clamped to start−1, as in plans.RangeJoinRule: an empty
+    // or inverted interval walks back at most two phantom bins, which the
+    // exact range filter rejects, instead of every intervening bin.
     val iBinned = intervals
       .withColumn("__s", col(startCol).cast("long"))
       .withColumn("__e", col(endCol).cast("long"))
       .withColumn("__bin",
         explode(sequence(expr(s"__s div ${binWidth}L"),
-          expr(s"(__e - 1) div ${binWidth}L"))))
+          expr(s"greatest((__e - 1) div ${binWidth}L, (__s div ${binWidth}L) - 1)"))))
     val collide = intervals.columns.toSet.intersect(points.columns.toSet)
     val pRenamed = collide.foldLeft(points) { (df, c) =>
       df.withColumnRenamed(c, s"p_$c")

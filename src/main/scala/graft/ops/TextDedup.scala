@@ -621,12 +621,12 @@ object TextDedup {
     * keys adjacently.
     *
     * Pair generation is sorted-adjacency over the GLOBAL (sortKey, id)
-    * order. The execution shape is gated on a MEASURED row count
-    * (round 10): under `spark.graft.sn.serialMaxRows` (default 2M) the
-    * corpus sorts in ONE window task and pairs come from `lead()` — at
-    * that size the single sort is cheaper than any exchange fan-out; past
-    * the gate the same pairs are computed fully distributed: range-
-    * partition by the sort key, pin the partitioning with a checkpoint
+    * order. The execution shape is gated on a MEASURED row count: up to
+    * 2M rows the corpus sorts in ONE window task and pairs come from
+    * `lead()` — at that size the single sort is cheaper than any exchange
+    * fan-out; past the gate the same pairs are computed fully
+    * distributed: range-partition by the sort key, pin the partitioning
+    * with a checkpoint
     * (partition ids feed three branches — the exactPercentiles
     * discipline), global rank = local row_number + broadcast
     * per-partition offsets, and each record meets its `windowSize`
@@ -639,14 +639,21 @@ object TextDedup {
     * `textCol` prefixes), filtered to `minSim`. */
   def sortedNeighborhoodPairs(df: DataFrame, idCol: String,
       textCol: String, sortKey: Column, windowSize: Int = 3,
-      prefixLen: Int = 30, minSim: Double = 0.9): DataFrame = {
+      prefixLen: Int = 30, minSim: Double = 0.9): DataFrame =
+    sortedNeighborhood(df, idCol, textCol, sortKey, windowSize, prefixLen,
+      minSim, SnSerialMaxRows)
+
+  /** The row count up to which [[sortedNeighborhoodPairs]] runs serially. */
+  private val SnSerialMaxRows = 2000000L
+
+  private[graft] def sortedNeighborhood(df: DataFrame, idCol: String,
+      textCol: String, sortKey: Column, windowSize: Int, prefixLen: Int,
+      minSim: Double, serialMax: Long): DataFrame = {
     require(windowSize >= 1 && prefixLen >= 1)
     val spark = df.sparkSession
     val base = df.select(col(idCol).as("doc_a"),
       substring(col(textCol), 1, prefixLen).as("__pfx_a"),
       sortKey.as("__sk"))
-    val serialMax = spark.conf.getOption("spark.graft.sn.serialMaxRows")
-      .map(_.toLong).getOrElse(2000000L)
     // the gate is one count over the projected input — for the common
     // raw-table caller this is a metadata-cheap scan, and it buys the
     // right shape on both sides of the knee; the count and the shape it

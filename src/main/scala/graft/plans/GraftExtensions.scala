@@ -34,8 +34,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // fact-table aggregates → Incremental partials reads (opt-in via the
     // spark.graft.mv.* conf set; inert otherwise)
     ext.injectOptimizerRule(_ => MvRewriteRule)
-    // banded scans over committed Snapshots versions carrying a _zonemap
-    // synopsis → pruned file lists (inert for every other scan)
+    // banded scans over committed Snapshots versions → file lists pruned
+    // by the files' footer min/max (inert for every other scan)
     ext.injectOptimizerRule(_ => ZoneMapRule)
   }
 }

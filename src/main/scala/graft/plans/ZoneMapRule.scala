@@ -1,30 +1,46 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
-/** Optimizer rule: automatic planning-time file pruning from an external
-  * zone map — the Delta/Iceberg stats-in-log behavior on plain parquet,
-  * wired into the STANDARD read path, and the engine's one pruning path.
+/** Optimizer rule: automatic planning-time file pruning from the per-file
+  * min/max that parquet already commits in every data file's footer — the
+  * Delta Lake data-skipping idea on plain parquet, wired into the STANDARD
+  * read path, and the engine's one pruning path. No build step and no
+  * second copy of the statistics: a version directory never changes after
+  * its [[graft.core.Snapshots]] commit, so its footers are as stable as a
+  * log entry.
   *
-  * When a `Filter` sits over a parquet scan whose root is a committed
-  * [[graft.core.Snapshots]] version carrying a `_zonemap` synopsis
-  * ([[graft.core.ZoneMap.build]] — underscore-prefixed, so the data scan
-  * never sees it), every range/equality/IN conjunct on a mapped column
-  * shrinks the scan's file list BEFORE the physical scan is planned.
+  * When a `Filter` sits over a parquet scan whose one root is a committed
+  * version directory, every range/equality/IN conjunct on a column with a
+  * zone shrinks the scan's file list BEFORE the physical scan is planned.
   * `Snapshots.open(spark, root).read(spark, t).where(...)` gets
   * O(matching files) I/O with no API change.
+  *
+  * A column has a zone in a file only when every row group carries
+  * min/max, or the column is all-null there. The stored values are read
+  * as the Catalyst-internal value of the column's Spark type for these
+  * shapes only: int/short/byte/date ← INT32, long ← INT64,
+  * timestamp/timestamp_ntz ← INT64 TIMESTAMP(MICROS), string ← BINARY
+  * STRING. Every other column is unknown (INT96, float/double, decimal,
+  * nested, stats parquet-mr dropped, dates a file asks to rebase), and a
+  * file with an unknown zone always survives.
   *
   * Correctness invariants (each spec-asserted):
   *  - the `Filter` is LEFT IN PLACE — straddling files re-filter, so the
   *    result is identical to the unpruned plan on any layout;
-  *  - an unmapped file cannot lose rows: survivors = (mapped files whose
-  *    zones intersect every extracted band) ∪ (live files ABSENT from
-  *    the map);
   *  - prunable conjuncts: `col {=,>,>=,<,<=} literal` (strict bounds
   *    prune as inclusive — a superset), `col IN (literals)` / `InSet`
   *    (a file survives when ANY value intersects its zone), and the
@@ -39,103 +55,122 @@ import org.apache.spark.sql.types._
   *    already folds it to the two range conjuncts), and OR-of-bands
   *    (a file survives when ANY disjunct's zone intersects; one
   *    non-band disjunct disables the whole OR). Other casts,
-  *    functions, nulls and unmapped columns are ignored, never
-  *    mis-pruned;
+  *    functions, nulls and unknown zones are ignored, never mis-pruned;
   *  - column matching follows `spark.sql.caseSensitive`: exact names
   *    when case-sensitive (two columns differing only in case must not
   *    read each other's zones), case-insensitive otherwise;
-  *  - multi-root scans (`read.parquet(dirA, dirB)`) prune via the
-  *    UNION of each root's synopsis; files under a root with no synopsis
-  *    — or mapped under one root but not another — always survive.
-  *    Multi-root relations with a partition schema are left untouched
-  *    (rebuilding their partition discovery from a file list is not
-  *    worth the edge);
-  *  - a failure inside the rewrite or the synopsis load leaves the plan
+  *  - a multi-root scan is left untouched;
+  *  - a failure inside the rewrite or the footer read leaves the plan
   *    untouched and records `zonemap_skipped` (the exception class) on
   *    the current [[graft.core.Trace]] span.
   *
-  * Scale: the synopsis read is O(files) metadata rows (the accepted
-  * bounded class — same as compaction's listing); at 100 TB it replaces
-  * millions of footer opens with one small parquet scan. The rule cannot
-  * re-fire on its own output: the rewritten relation's root paths are
-  * the surviving FILES, which are not version directories.
-  *
   * Only a root NAMED like a version (`v=<id>-<token>`,
   * [[graft.core.Snapshots.isVersionDir]]) is probed — a test of the name,
-  * so every other scan pays no filesystem call. A version never changes
-  * once committed, so its synopsis (or its absence) is cached for the
-  * process by the version directory and never invalidated. */
+  * so every other scan pays no filesystem call — and only once a band
+  * extracts against the relation's own schema. Then the version's footers
+  * are read on the driver (one listing, one footer read per file, no
+  * Spark job) and cached for the process by the version directory, never
+  * invalidated. The rule cannot re-fire on its own output: the rewritten
+  * relation's root paths are the surviving FILES, which are not version
+  * directories. */
 object ZoneMapRule extends Rule[LogicalPlan] {
 
-  /** One root's collected synopsis plus the lookup structures every
-    * planning pass needs: stat column indices keyed by the RAW base
-    * name, a lowercase→raw alias for case-insensitive resolution, and
-    * the normalized file→row map. */
-  private case class Synopsis(
-      cols: Map[String, (Int, Int, DataType)],
-      lower: Map[String, String],
-      byFile: Map[String, org.apache.spark.sql.Row])
+  private sealed trait Kind
+  private case object Int32 extends Kind
+  private case object Date32 extends Kind
+  private case object Int64 extends Kind
+  private case object Micros extends Kind
+  private case object Utf8 extends Kind
 
-  /** Stat lookup under the session's resolution rules
-    * (`spark.sql.caseSensitive`): exact when case-sensitive — a filter
-    * on `orderkey` must NOT read `OrderKey`'s zones when they are
-    * distinct columns — case-insensitive otherwise. */
-  private def colFor(syn: Synopsis, name: String): Option[(Int, Int, DataType)] =
-    if (conf.caseSensitiveAnalysis) syn.cols.get(name)
-    else syn.lower.get(name.toLowerCase).flatMap(syn.cols.get)
+  /** One column's zone in one file: min and max as parquet stored them
+    * (strings as UTF8String); null bounds = every value is null. */
+  private case class Zone(kind: Kind, min: Any, max: Any)
 
-  /** Per-version synopsis cache: None = the version has no `_zonemap`.
-    * The optimizer may run this rule several times per query (two
-    * operator-optimization batches + AQE replans); re-reading the
-    * synopsis parquet each pass paid footer opens and a collect job for
-    * identical input. O(files) rows on the driver — the same bounded
-    * class as the survivor filtering the rewrite already performs. */
-  private val zoneCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Synopsis]]()
+  /** The kind of a stored parquet column whose stats this rule reads. */
+  private def kindOf(t: PrimitiveType): Option[Kind] = {
+    import LogicalTypeAnnotation._
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (PrimitiveTypeName.INT32, null) => Some(Int32)
+      case (PrimitiveTypeName.INT32, i: IntLogicalTypeAnnotation) if i.isSigned => Some(Int32)
+      case (PrimitiveTypeName.INT32, _: DateLogicalTypeAnnotation) => Some(Date32)
+      case (PrimitiveTypeName.INT64, null) => Some(Int64)
+      case (PrimitiveTypeName.INT64, i: IntLogicalTypeAnnotation) if i.isSigned => Some(Int64)
+      case (PrimitiveTypeName.INT64, ts: TimestampLogicalTypeAnnotation)
+          if ts.getUnit == TimeUnit.MICROS => Some(Micros)
+      case (PrimitiveTypeName.BINARY, _: StringLogicalTypeAnnotation) => Some(Utf8)
+      case _ => None
+    }
+  }
 
-  private def zoneStats(root: org.apache.hadoop.fs.Path): Option[Synopsis] = {
-    if (!graft.core.Snapshots.isVersionDir(root.getName)) return None
-    // compute OUTSIDE the map's bin lock: the load runs a Spark job
-    // (parquet read + collect), and computeIfAbsent would hold the
-    // ConcurrentHashMap bin for its whole duration — blocking any
-    // concurrent planning thread whose root hashes to the same bin, and
-    // throwing IllegalStateException on a re-entrant same-key lookup.
-    // get-then-putIfAbsent accepts a rare duplicate read instead.
-    val key = root.toString
-    val cached = zoneCache.get(key)
-    if (cached != null) return cached
-    val loaded: Option[Synopsis] =
-      try {
-        val spark = SparkSession.active
-        val zp = new org.apache.hadoop.fs.Path(graft.core.ZoneMap.zonePath(key))
-        val exists = zp.getFileSystem(spark.sessionState.newHadoopConf())
-          .exists(new org.apache.hadoop.fs.Path(zp, "_SUCCESS"))
-        if (!exists) None
-        else {
-          val zone = graft.core.Tables.parquet(spark, zp.toString)
-          val schema = zone.schema
-          val idx = schema.fieldNames.zipWithIndex.toMap
-          val cols = schema.fieldNames.filter(_.endsWith("__min")).flatMap { mn =>
-            val base = mn.stripSuffix("__min")
-            idx.get(s"${base}__max").map { mxI =>
-              base -> ((idx(mn), mxI, schema(mn).dataType))
-            }
-          }.toMap
-          val lower = cols.keys.map(k => k.toLowerCase -> k).toMap
-          val fileIdx = schema.fieldIndex("file")
-          val byFile = zone.collect()
-            .map(r => normalize(r.getString(fileIdx)) -> r).toMap
-          Some(Synopsis(cols, lower, byFile))
+  /** The Catalyst-internal value of a stored `kind` value read as Spark
+    * type `dt`; None when `dt` does not read that kind as stored. */
+  private def reader(dt: DataType, kind: Kind): Option[Any => Any] = (dt, kind) match {
+    case (IntegerType, Int32) | (DateType, Date32) | (LongType, Int64) |
+        (TimestampType | TimestampNTZType, Micros) | (StringType, Utf8) => Some(identity)
+    case (ShortType, Int32) => Some(v => v.asInstanceOf[Int].toShort)
+    case (ByteType, Int32) => Some(v => v.asInstanceOf[Int].toByte)
+    case _ => None
+  }
+
+  private def zoneable(dt: DataType): Boolean =
+    Seq(Int32, Date32, Int64, Micros, Utf8).exists(reader(dt, _).nonEmpty)
+
+  /** One file's zones from its footer, by top-level column: per column the
+    * row groups' statistics merged, kept only when every row group has
+    * min/max or is all-null in it. A file asking Spark to rebase its
+    * dates (`datesAsStored` false) has no date or timestamp zone. */
+  private def fileZones(footer: ParquetMetadata, datesAsStored: Boolean): Map[String, Zone] = {
+    val cols = footer.getFileMetaData.getSchema.getColumns.asScala.toSeq.flatMap { c =>
+      kindOf(c.getPrimitiveType)
+        .filter(k => c.getPath.length == 1 && (datesAsStored || (k != Date32 && k != Micros)))
+        .map(k => c.getPath.head -> ((k, Statistics.createStats(c.getPrimitiveType))))
+    }.toMap
+    val unknown = scala.collection.mutable.Set.empty[String]
+    footer.getBlocks.asScala.foreach { b =>
+      val seen = b.getColumns.asScala.flatMap { ch =>
+        val path = ch.getPath.toArray
+        cols.get(path.head).filter(_ => path.length == 1).map { case (_, acc) =>
+          val s = ch.getStatistics
+          if (s != null && (s.hasNonNullValue ||
+              (s.isNumNullsSet && s.getNumNulls == b.getRowCount))) acc.mergeStatistics(s)
+          else unknown += path.head
+          path.head
         }
-      } catch { case e: Exception =>
-        // performance-only (the Filter stays; pruning is just skipped),
-        // but a transient read hiccup must not be indistinguishable from
-        // "no synopsis": record it, and DON'T cache the negative — the
-        // next planning pass retries
-        skipped(s"zone synopsis read failed for $key", e)
-        return None
-      }
-    val prior = zoneCache.putIfAbsent(key, loaded)
+      }.toSet
+      unknown ++= cols.keySet -- seen
+    }
+    def value(v: Any): Any = v match {
+      case b: Binary => UTF8String.fromBytes(b.getBytes)
+      case other => other
+    }
+    cols.collect { case (name, (kind, acc)) if !unknown(name) =>
+      name -> (if (acc.hasNonNullValue)
+        Zone(kind, value(acc.genericGetMin), value(acc.genericGetMax))
+      else Zone(kind, null, null))
+    }
+  }
+
+  /** Per-version zone cache: normalized file path → that file's zones.
+    * The optimizer may run this rule several times per query (two
+    * operator-optimization batches + AQE replans); a version never
+    * changes once committed, so its footers are read once per process.
+    * O(files) entries on the driver — the same bounded class as the
+    * survivor filtering the rewrite already performs. */
+  private val zoneCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Map[String, Zone]]]()
+
+  /** The zones of every data file under version directory `root`, from
+    * the footers (no Spark job). get-then-putIfAbsent rather than
+    * computeIfAbsent: the footer reads must not hold a map bin lock. A
+    * failed read throws and caches nothing, so the next pass retries. */
+  private def versionZones(spark: SparkSession, root: String): Map[String, Map[String, Zone]] = {
+    val cached = zoneCache.get(root)
+    if (cached != null) return cached
+    val loaded = GraftSqlShim.parquetFooters(spark, root).map { case (f, footer) =>
+      normalize(f.getPath.toString) ->
+        fileZones(footer, GraftSqlShim.datetimesAsStored(spark, footer))
+    }.toMap
+    val prior = zoneCache.putIfAbsent(root, loaded)
     if (prior != null) prior else loaded
   }
 
@@ -326,125 +361,114 @@ object ZoneMapRule extends Rule[LogicalPlan] {
     plan.transformUp {
       case f @ Filter(cond, lr: LogicalRelation) =>
         (lr.relation match {
-          case fs: HadoopFsRelation
-              if fs.location.rootPaths.length == 1 || fs.partitionSchema.isEmpty =>
-            val syns = fs.location.rootPaths.flatMap(zoneStats)
-            if (syns.isEmpty) None
-            else {
-              try prune(cond, lr, fs, syns)
-              catch { case e: Exception => skipped("zone-map pruning failed", e); None }
+          case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+            fs.location.rootPaths match {
+              case Seq(root) if graft.core.Snapshots.isVersionDir(root.getName) =>
+                // a data column a partition column shadows reads the
+                // path's value, not the file's: it has no zone
+                val parts = fs.partitionSchema.fieldNames.map(_.toLowerCase).toSet
+                val types = fs.dataSchema.fields
+                  .filterNot(c => parts(c.name.toLowerCase))
+                  .map(c => c.name -> c.dataType).toMap
+                val bs = bands(cond, types.get(_).exists(zoneable))
+                if (bs.isEmpty) None
+                else try prune(cond, lr, fs, root.toString, types, bs)
+                catch { case e: Exception =>
+                  skipped(s"zone-map pruning failed for $root", e); None }
+              case _ => None
             }
           case _ => None
         }).getOrElse(f)
     }
 
-  /** One band's evaluation machinery against ONE synopsis, hoisted out
-    * of the per-file loop: stat indices, the (optional) monotone-cast
-    * closure over the stat value, and the comparison ordering — a cast
-    * band over a 100k-file table must not allocate 100k Cast+Literal
-    * trees per planning pass. */
+  /** The zone of column `name` in one file's zones, under the session's
+    * resolution rules (`spark.sql.caseSensitive`): exact when
+    * case-sensitive — a filter on `orderkey` must NOT read `OrderKey`'s
+    * zones when they are distinct columns — case-insensitive otherwise. */
+  private def zoneFor(zs: Map[String, Zone], name: String): Option[Zone] =
+    zs.get(name).orElse(
+      if (conf.caseSensitiveAnalysis) None
+      else zs.collect { case (c, z) if c.equalsIgnoreCase(name) => z }.toSeq match {
+        case Seq(z) => Some(z)
+        case _ => None
+      })
+
+  /** One band's evaluation machinery, hoisted out of the per-file loop:
+    * the column's Spark type, the (optional) monotone-cast closure over
+    * the stat value, and the comparison ordering — a cast band over a
+    * 100k-file table must not allocate 100k Cast+Literal trees per
+    * planning pass. */
   private sealed trait CompiledPred
-  private case class BandEval(band: ZBand, mnI: Int, mxI: Int,
+  private case class BandEval(band: ZBand, dt: DataType,
       castFn: Any => Any, ord: Ordering[Any]) extends CompiledPred
   private case class OrEval(subs: Seq[BandEval]) extends CompiledPred
 
-  private def prune(cond: Expression, lr: LogicalRelation,
-      fsRel: HadoopFsRelation, syns: Seq[Synopsis]): Option[LogicalPlan] = {
+  private def prune(cond: Expression, lr: LogicalRelation, fsRel: HadoopFsRelation,
+      root: String, types: Map[String, DataType], bs: Seq[ZPred]): Option[LogicalPlan] = {
     val spark = SparkSession.active
-    val roots = fsRel.location.rootPaths
-    // a column prunes when ANY root maps it — files of a root that does
-    // NOT map it skip that band (see verdict loop), which only widens
-    val mapped: String => Boolean =
-      name => syns.exists(colFor(_, name).nonEmpty)
-    val bs = bands(cond, mapped)
-    if (bs.isEmpty) return None
-    // evaluate the zone predicate over the CACHED stat rows, driver-
-    // local (no job): per band, pass = max >= lo && min <= hi with SQL
-    // null semantics (null stat → null compare → fail → pruned, which
-    // is correct for range predicates: an all-null file cannot match).
-    // Literal.value is the Catalyst-internal representation (UTF8String,
-    // Int days, Long micros) — compare via the type's ordering against
-    // the stats, which ZoneMap wrote in the column's own type; a
-    // monotone cast band first maps the stat through the SAME cast,
-    // with the timeZoneId the analyzed Cast carries.
-    def compileLeaf(syn: Synopsis, b: ZBand): Option[BandEval] =
-      colFor(syn, b.col).map { case (mnI, mxI, statType) =>
-        val castFn: Any => Any = b.castTo match {
-          case None => identity
-          case Some(cs) =>
-            val expr = Cast(BoundReference(0, statType, nullable = true),
-              cs.to, cs.tz.orElse(Some(conf.sessionLocalTimeZone)))
-            val row = new GenericInternalRow(1)
-            (v: Any) => { row.update(0, v); expr.eval(row) }
-        }
-        val ord = org.apache.spark.sql.catalyst.util.TypeUtils
-          .getInterpretedOrdering(
-            b.castTo.map(_.to).getOrElse(statType))
-          .asInstanceOf[Ordering[Any]]
-        BandEval(b, mnI, mxI, castFn, ord)
+    val zones = versionZones(spark, root)
+    // evaluate the zone predicate driver-local (no job): per band, pass =
+    // max >= lo && min <= hi with SQL null semantics (null stat → null
+    // compare → fail → pruned, which is correct for range predicates: an
+    // all-null file cannot match). Literal.value is the Catalyst-internal
+    // representation (UTF8String, Int days, Long micros) — compare via
+    // the type's ordering against the stats read as the column's own
+    // type; a monotone cast band first maps the stat through the SAME
+    // cast, with the timeZoneId the analyzed Cast carries.
+    def compile(b: ZBand): BandEval = {
+      val dt = types(b.col)
+      val castFn: Any => Any = b.castTo match {
+        case None => identity
+        case Some(cs) =>
+          val expr = Cast(BoundReference(0, dt, nullable = true),
+            cs.to, cs.tz.orElse(Some(conf.sessionLocalTimeZone)))
+          val row = new GenericInternalRow(1)
+          (v: Any) => { row.update(0, v); expr.eval(row) }
       }
-    def evalsFor(syn: Synopsis): Seq[CompiledPred] = bs.flatMap {
-      case b: ZBand => compileLeaf(syn, b)
-      // a column unmapped under THIS root has no BandEval — its files
-      // simply skip that band, which only widens the survivor set. For
-      // an OR, ONE unmapped disjunct poisons the whole predicate (rows
-      // matching that disjunct could live anywhere) — skip it entirely.
-      case OrBand(ds) =>
-        val subs = ds.map(compileLeaf(syn, _))
-        if (subs.exists(_.isEmpty)) None else Some(OrEval(subs.flatten))
+      val ord = org.apache.spark.sql.catalyst.util.TypeUtils
+        .getInterpretedOrdering(b.castTo.map(_.to).getOrElse(dt))
+        .asInstanceOf[Ordering[Any]]
+      BandEval(b, dt, castFn, ord)
     }
-    def statVal(e: BandEval, r: org.apache.spark.sql.Row, idx: Int): Any = {
-      val raw = r.get(idx)
-      if (raw == null) null
-      else e.castFn(org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .convertToCatalyst(raw))
+    val evals: Seq[CompiledPred] = bs.map {
+      case b: ZBand => compile(b)
+      case OrBand(ds) => OrEval(ds.map(compile))
     }
     def cmp(e: BandEval, s: Any, l: Literal): Option[Int] =
       if (s == null) None else Some(e.ord.compare(s, l.value))
-    // per-file verdicts, unioned across roots: a file mapped by several
-    // synopses (shouldn't happen — roots are distinct dirs) keeps the
-    // FIRST verdict; files in no synopsis never enter the map → survive
-    val verdicts = scala.collection.mutable.HashMap.empty[String, Boolean]
-    syns.foreach { syn =>
-      val evals = evalsFor(syn)
-      def leafPass(e: BandEval, r: org.apache.spark.sql.Row): Boolean = {
-        val mx = statVal(e, r, e.mxI)
-        val mn = statVal(e, r, e.mnI)
-        e.band match {
-          case RangeBand(_, _, lo, hi) =>
-            lo.forall(l => cmp(e, mx, l).exists(_ >= 0)) &&
-              hi.forall(l => cmp(e, mn, l).exists(_ <= 0))
-          case InBand(_, _, vs) =>
-            vs.exists(v => cmp(e, mx, v).exists(_ >= 0) &&
-              cmp(e, mn, v).exists(_ <= 0))
-        }
-      }
-      syn.byFile.foreach { case (file, r) =>
-        if (!verdicts.contains(file)) {
-          val pass = evals.forall {
-            case e: BandEval => leafPass(e, r)
-            case OrEval(subs) => subs.exists(leafPass(_, r))
+    // a file whose zone for the band's column is unknown passes it: an
+    // OR with one such disjunct passes too, so it only ever widens
+    def leafPass(e: BandEval, zs: Map[String, Zone]): Boolean =
+      zoneFor(zs, e.band.col).flatMap(z => reader(e.dt, z.kind).map((z, _))) match {
+        case None => true
+        case Some((z, read)) =>
+          def stat(v: Any): Any = if (v == null) null else e.castFn(read(v))
+          val (mn, mx) = (stat(z.min), stat(z.max))
+          e.band match {
+            case RangeBand(_, _, lo, hi) =>
+              lo.forall(l => cmp(e, mx, l).exists(_ >= 0)) &&
+                hi.forall(l => cmp(e, mn, l).exists(_ <= 0))
+            case InBand(_, _, vs) =>
+              vs.exists(v => cmp(e, mx, v).exists(_ >= 0) &&
+                cmp(e, mn, v).exists(_ <= 0))
           }
-          verdicts.put(file, pass)
-        }
       }
-    }
-    // freshness-safe survivor set: unmapped live files ALWAYS survive
+    // live files the footer read did not see always survive
     val inputFiles = fsRel.location.inputFiles
     val survivors = inputFiles.filter { p =>
-      verdicts.get(normalize(p)).forall(identity)
+      zones.get(normalize(p)).forall(zs => evals.forall {
+        case e: BandEval => leafPass(e, zs)
+        case OrEval(subs) => subs.exists(leafPass(_, zs))
+      })
     }
     if (survivors.length == inputFiles.length) return None // nothing to prune
     graft.core.Trace.attr("files_pruned", inputFiles.length - survivors.length)
     graft.core.Trace.attr("files_total", inputFiles.length)
     if (survivors.isEmpty) return Some(Filter(cond, LocalRelation(lr.output)))
-    val reader = spark.read.schema(fsRel.dataSchema) // no footer re-read
-    // basePath re-derives partition columns from the survivor paths;
-    // only meaningful (and only well-defined) for a single root — the
-    // multi-root arm is gated to partitionSchema.isEmpty in apply()
-    val withBase = if (roots.length == 1)
-      reader.option("basePath", roots.head.toString) else reader
-    val pruned = withBase.parquet(survivors.toIndexedSeq: _*)
+    // no footer re-read; basePath re-derives partition columns from the
+    // survivor paths
+    val pruned = spark.read.schema(fsRel.dataSchema).option("basePath", root)
+      .parquet(survivors.toIndexedSeq: _*)
       .queryExecution.analyzed.collectFirst { case l: LogicalRelation => l }
     pruned.flatMap { nl =>
       // the new relation must expose the SAME columns in the same order

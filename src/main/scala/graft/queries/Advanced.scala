@@ -235,8 +235,7 @@ object Advanced {
     * so concurrent scale factors don't collide. */
   def q80Catalog(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.Warehouse
-    val root = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_wh_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.core.FsOps.scratchRoot(spark, "q80", dir)
     Warehouse.saveTable(spark, root, "graftwh", "nation",
       table(spark, dir, "nation"))
     val fresh = spark.newSession()
@@ -254,8 +253,7 @@ object Advanced {
     * result-invisible. */
   def q225CatalogView(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.Warehouse
-    val root = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft_whv_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val root = graft.core.FsOps.scratchRoot(spark, "q225", dir)
     Warehouse.saveTable(spark, root, "graftwh2", "customer",
       table(spark, dir, "customer"))
     Warehouse.createView(spark, root, "graftwh2", "customer_masked",

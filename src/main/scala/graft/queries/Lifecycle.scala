@@ -59,7 +59,7 @@ object Lifecycle {
     * ([[graft.core.FsOps.procCacheDir]]) derived from the input dir, so
     * scale factors and concurrent processes don't collide. */
   def q86IncrementalAgg(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.core.FsOps.procCacheDir("q86", dir)
+    val path = graft.core.FsOps.procCacheDir(spark, "q86", dir)
     val cents = round(col("o_totalprice") * 100).cast("long")
     // build-once, read-many IS the operator's contract: history partials
     // are maintained by daily `refresh` (O(delta)), never rebuilt per
@@ -236,7 +236,6 @@ object Lifecycle {
   def q244ProcessDaily(spark: SparkSession, dir: String): DataFrame = {
     import graft.entities.{Pipelines, Specs}
     import graft.entities.Specs.{CollectionSpec, Field, SnapshotSpec}
-    import org.apache.hadoop.fs.Path
 
     def isoUs(us: Column): Column = concat(
       date_format(timestamp_micros(us), "yyyy-MM-dd'T'HH:mm:ss"),
@@ -315,11 +314,7 @@ object Lifecycle {
         render.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       render.localCheckpoint()
     }
-    val base = System.getProperty("java.io.tmpdir") +
-      s"/graft_q244_${math.abs(dir.hashCode)}"
-    val hfs = new Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.delete(new Path(base), true)
+    val base = graft.core.FsOps.scratchRoot(spark, "q244", dir)
     val acctSpec = SnapshotSpec("account", _ === "account", Seq(
       Field("last_type", "last_type"),
       Field("value_cents", "value_cents", "long"),
@@ -378,8 +373,7 @@ object Lifecycle {
     * write is one container file per task, the read one partition per
     * file; at 100 TB this is the crawler-feed shard pattern. */
   def q245AvroRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = System.getProperty("java.io.tmpdir") +
-      s"/graft_q245_${math.abs(dir.hashCode)}"
+    val base = graft.core.FsOps.scratchRoot(spark, "q245", dir)
     table(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), col("o_orderdate"))
@@ -412,8 +406,7 @@ object Lifecycle {
     * probe conflated the two — q268's 8.3× ratio was the 10×-byte
     * export, not the count. */
   def q268AvroCount(spark: SparkSession, dir: String): DataFrame = {
-    val base = System.getProperty("java.io.tmpdir") +
-      s"/graft_q268_${math.abs(dir.hashCode)}"
+    val base = graft.core.FsOps.procCacheDir(spark, "q268", dir)
     val src = table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
     val d = new java.io.File(base)
@@ -445,8 +438,7 @@ object Lifecycle {
     * commit (AvroBatchWrite) guarantees the re-read sees exactly the
     * committed task files. */
   def q272AvroExport(spark: SparkSession, dir: String): DataFrame = {
-    val base = System.getProperty("java.io.tmpdir") +
-      s"/graft_q272_${math.abs(dir.hashCode)}"
+    val base = graft.core.FsOps.scratchRoot(spark, "q272", dir)
     table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       .write.format("graftavro").mode("overwrite").save(base)
@@ -472,12 +464,9 @@ object Lifecycle {
     * cross-table-consistent). */
   def q273SnapshotPublish(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.Snapshots
-    val root = System.getProperty("java.io.tmpdir") +
-      s"/graft_q273_${math.abs(dir.hashCode)}"
     // deterministic rebuild: ids continue a prior run's history, so the
     // scratch root starts empty for the published ids to be 1 and 2
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    val root = graft.core.FsOps.scratchRoot(spark, "q273", dir)
     val revCents =
       round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100)
         .cast("long")
@@ -518,7 +507,7 @@ object Lifecycle {
     * binding (ResultCacheSpec) proves it can never serve stale rows. */
   def q269ResultCache(spark: SparkSession, dir: String): DataFrame = {
     import graft.plans.ResultCache
-    val cacheDir = graft.core.FsOps.procCacheDir("q269", dir)
+    val cacheDir = graft.core.FsOps.procCacheDir(spark, "q269", dir)
     val base = table(spark, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"),
@@ -556,7 +545,7 @@ object Lifecycle {
   def q280ReuseLoop(spark: SparkSession, dir: String): DataFrame = {
     import graft.plans.Reuse
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val base = graft.core.FsOps.procCacheDir("q280", dir)
+    val base = graft.core.FsOps.procCacheDir(spark, "q280", dir)
     val partials = base + "/partials"
     val factPath = s"$dir/orders.parquet"
     graft.core.Snapshots.openOrBuild(spark, base + "/served") { txn =>

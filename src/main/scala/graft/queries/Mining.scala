@@ -622,8 +622,7 @@ object Mining {
     * value hash. */
   def q253SketchCube(spark: SparkSession, dir: String): DataFrame = {
     import graft.jobs.SketchCube
-    val base = System.getProperty("java.io.tmpdir") +
-      s"/graft_q253_${math.abs(dir.hashCode)}"
+    val base = graft.core.FsOps.scratchRoot(spark, "q253", dir)
     val ev = table(spark, dir, "events")
       .withColumn("d",
         to_date(timestamp_micros(expr("ts div 1000"))).cast("string"))
@@ -640,33 +639,32 @@ object Mining {
     range.unionByName(overlap)
   }
 
-  /** Zone-map-pruned scan ([[graft.core.ZoneMap]]): orders rewritten
-    * range-clustered on o_orderdate (16 files, each owning a disjoint
-    * date range — [[graft.core.Layout.writeRangeClustered]]), a
-    * persisted per-file min/max synopsis built ONCE inside the same
-    * committed version, then a spring-quarter revenue report read
-    * through the standard path: [[graft.plans.ZoneMapRule]] shrinks the
-    * file list to the ~3 months that can match BEFORE the real scan is
-    * constructed, and straddling files re-filter, so the result is
-    * identical to a full scan — which is exactly what the oracle
-    * replays. The build is a build-once cache ([[zoneCache]]). */
+  /** Zone-map-pruned scan: orders rewritten range-clustered on
+    * o_orderdate (16 files, each owning a disjoint date range —
+    * [[graft.core.Layout.writeRangeClustered]]) in a build-once cache
+    * ([[zoneCache]]), then a spring-quarter revenue report read through
+    * the standard path: [[graft.plans.ZoneMapRule]] shrinks the file list
+    * to the ~3 months that can match, from the committed files' own
+    * footers, BEFORE the real scan is constructed, and straddling files
+    * re-filter, so the result is identical to a full scan — which is
+    * exactly what the oracle replays. */
   def q263ZonePrunedScan(spark: SparkSession, dir: String): DataFrame =
-    springQuarter(spark, dir, "q263")
+    springQuarter(spark, dir)
 
   /** Zone-map pruning through the STANDARD read path
     * ([[graft.plans.ZoneMapRule]]): [[q263ZonePrunedScan]]'s query over
-    * its own build of the clustered orders — a PLAIN parquet scan of the
-    * committed version `.where(band)`. The optimizer consults the
-    * synopsis at planning time and shrinks the file list (the
-    * Delta/Iceberg stats-in-log behavior on plain parquet); the oracle
-    * replays the direct band filter, so equality proves the automatic
-    * pruning is result-invisible. ZoneMapSpec plan-asserts the pruned
-    * file list through this exact read shape. */
+    * the same build-once cache — a PLAIN parquet scan of the committed
+    * version `.where(band)`. The optimizer reads the version's footers at
+    * planning time and shrinks the file list (the Delta Lake data-skipping
+    * behavior on plain parquet); the oracle replays the direct band
+    * filter, so equality proves the automatic pruning is
+    * result-invisible. ZoneMapSpec plan-asserts the pruned file list
+    * through this exact read shape. */
   def q279ZoneAutoPrune(spark: SparkSession, dir: String): DataFrame =
-    springQuarter(spark, dir, "q279")
+    springQuarter(spark, dir)
 
-  private def springQuarter(spark: SparkSession, dir: String, tag: String): DataFrame =
-    zoneCache(spark, tag, dir, "orders_clustered",
+  private def springQuarter(spark: SparkSession, dir: String): DataFrame =
+    zoneCache(spark, "orders_bydate", dir, "orders_clustered",
         table(spark, dir, "orders"), "o_orderdate")
       .read(spark, "orders_clustered")
       .where(col("o_orderdate") >=
@@ -680,8 +678,8 @@ object Mining {
 
   /** IN-list pruning through the STANDARD read path — [[q279ZoneAutoPrune]]'s
     * shape for the second prunable conjunct family
-    * ([[graft.plans.ZoneMapRule]]): orders range-clustered on o_custkey,
-    * the version's `_zonemap` built once, then a PLAIN parquet scan
+    * ([[graft.plans.ZoneMapRule]]): orders range-clustered on o_custkey
+    * into a build-once cache, then a PLAIN parquet scan
     * `.where(isin(...))` — twelve keys, past the
     * optimizer's In→InSet conversion threshold (10), so the rule prunes
     * from an InSet's value set: a file survives when ANY value
@@ -812,8 +810,8 @@ object Mining {
 
   /** Prefix + OR-of-bands pruning through the STANDARD read path —
     * [[q281ZoneInPrune]]'s shape for the third prunable conjunct family
-    * ([[graft.plans.ZoneMapRule]]): events range-clustered on event_type,
-    * the version's `_zonemap` built once, then a PLAIN parquet scan
+    * ([[graft.plans.ZoneMapRule]]): events range-clustered on event_type
+    * into a build-once cache, then a PLAIN parquet scan
     * `.where(like('purch%') OR like('sig%'))`.
     * LikeSimplification turns each pure-prefix LIKE into a StartsWith;
     * the rule extracts the OR of the two prefix byte-range bands
@@ -836,20 +834,18 @@ object Mining {
       .orderBy(col("event_type"))
 
   /** The build-once cache behind the zone-map queries: `df` range-
-    * clustered on `key` into 16 files of table `name`, its zone-map
-    * synopsis inside the same version, committed once per process and
-    * input dir ([[graft.core.Snapshots.openOrBuild]] — the commit is the
-    * completion marker, so a crashed build is invisible and rebuilt). */
+    * clustered on `key` into 16 files of table `name`, committed once per
+    * process and input dir ([[graft.core.Snapshots.openOrBuild]] — the
+    * commit is the completion marker, so a crashed build is invisible and
+    * rebuilt). The committed files' footers are the zones. */
   private[graft] def zoneCache(spark: SparkSession, tag: String, dir: String,
       name: String, df: => DataFrame, key: String): graft.core.Snapshots.Snapshot =
-    graft.core.Snapshots.openOrBuild(spark, graft.core.FsOps.procCacheDir(tag, dir))(
+    graft.core.Snapshots.openOrBuild(spark, graft.core.FsOps.procCacheDir(spark, tag, dir))(
       stageZoned(_, name, df, key))
 
   private[graft] def stageZoned(txn: graft.core.Snapshots.Txn, name: String,
-      df: DataFrame, key: String): Unit = {
+      df: DataFrame, key: String): Unit =
     graft.core.Layout.writeRangeClustered(df, txn.dir(name), 16, col(key))
-    graft.core.ZoneMap.build(txn, name, Seq(key))
-  }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q283_zone_prefix_prune" -> q283ZonePrefixPrune,

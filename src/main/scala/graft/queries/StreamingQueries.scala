@@ -53,20 +53,6 @@ object StreamingQueries {
       .transform(Tables.normalizeEventTs)
       .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
 
-  /** The scratch root of a stream query over corpus `dir` whose result is
-    * read back from files: one per process and corpus
-    * ([[graft.core.FsOps.procCacheDir]]), emptied by the next call — so the
-    * frame a call returns stays readable until then — and removed at JVM
-    * exit. */
-  private def scratchRoot(spark: SparkSession, tag: String, dir: String): String = {
-    val root = new org.apache.hadoop.fs.Path(graft.core.FsOps.procCacheDir(tag, dir))
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(root, true)
-    fs.mkdirs(root)
-    fs.deleteOnExit(root) // registers only a path that exists
-    root.toString
-  }
-
   /** Run `df` to completion (`AvailableNow`) into a fresh memory sink and
     * return the sink's table. The checkpoint is removed once the stream
     * has terminated: the memory sink already holds the result. */
@@ -232,7 +218,7 @@ object StreamingQueries {
       withStatePartitions(spark, 8) {
     val events = eventStream(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val root = scratchRoot(spark, "q161", dir)
+    val root = graft.core.FsOps.scratchRoot(spark, "q161", dir)
     val q = Streams.upsertSink(events, root, "user_latest",
       keys = Seq("user_id"), versionCols = Seq("ts", "event_id"),
       checkpoint = s"$root/_ckpt")
@@ -300,8 +286,7 @@ object StreamingQueries {
     * partition per container shard. */
   def q249StreamAvroIngest(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val base = System.getProperty("java.io.tmpdir") +
-      s"/graft_q249_${math.abs(dir.hashCode)}"
+    val base = graft.core.FsOps.scratchRoot(spark, "q249", dir)
     Tables.table(spark, dir, "events")
       .select(col("event_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("vc"))
@@ -327,7 +312,7 @@ object StreamingQueries {
       withStatePartitions(spark, 8) {
     import graft.ops.Sketches
     val lo = 0L; val hi = 50000L; val bins = 100
-    val base = scratchRoot(spark, "q265", dir)
+    val base = graft.core.FsOps.scratchRoot(spark, "q265", dir)
     Tables.table(spark, dir, "events")
       .select(col("event_id"),
         round(col("value") * 100).cast("long").as("vc"))

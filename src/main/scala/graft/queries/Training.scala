@@ -109,12 +109,12 @@ object Training {
     * the frozen centroids, build-then-append must be content-identical
     * to a one-shot assignment of ALL vectors against those centroids,
     * which is exactly what the oracle replays (intra-cell top-3 over the
-    * live index). Fresh scratch per run: each append commits a new
+    * live index). The scratch root is emptied per call
+    * ([[graft.core.FsOps.scratchRoot]]): each append commits a new
     * delta, so replaying into a kept dir would duplicate (batch ids,
     * [[Ann.ivfDeltaAppend]], are the production guard). */
   def q270IvfAppend(spark: SparkSession, dir: String): DataFrame = {
-    val base = System.getProperty("java.io.tmpdir") +
-      s"/graft_q270_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val base = graft.core.FsOps.scratchRoot(spark, "q270", dir)
     val e = embs(spark, dir)
     Ann.buildIvfIndex(e.where(col("vec_id") % 3 =!= 0),
       "vec_id", "embedding", Dim, 16, base)
@@ -157,8 +157,7 @@ object Training {
     * however many triggers accumulated — the firehose-fed 100 TB
     * embedding index's steady state. */
   def q274StreamIvfIngest(spark: SparkSession, dir: String): DataFrame = {
-    val base = System.getProperty("java.io.tmpdir") +
-      s"/graft_q274_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val base = graft.core.FsOps.scratchRoot(spark, "q274", dir)
     val e = embs(spark, dir)
     Ann.buildIvfIndex(e.where(col("vec_id") % 3 =!= 0),
       "vec_id", "embedding", Dim, 16, base)
@@ -384,7 +383,7 @@ object Training {
     * intersection — the text column is never rescanned). The oracle
     * answers the same question by brute-force token-list scan. */
   def q77IndexSearch(spark: SparkSession, dir: String): DataFrame = {
-    val idx = java.nio.file.Files.createTempDirectory("graft-q77-idx").toString
+    val idx = graft.core.FsOps.scratchRoot(spark, "q77", dir)
     graft.ops.TextIndex.build(docs(spark, dir), "doc_id", "text", idx,
       numBuckets = 16)
     graft.ops.TextIndex.search(spark, idx, Seq("join", "hash"),
@@ -700,8 +699,7 @@ object Training {
     val d = docs(spark, dir)
     val corpus = d.where(pmod(col("doc_id"), lit(10)) =!= 0)
     val inc = d.where(pmod(col("doc_id"), lit(10)) === 0)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-mhidx-" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val path = graft.core.FsOps.scratchRoot(spark, "q172", dir)
     TextDedup.buildMinhashIndex(corpus, "doc_id", "text", path)
     TextDedup.incrementalDupPairs(spark, path, corpus, inc, "doc_id", "text")
       .withColumn("jaccard", round(col("jaccard"), 6))

@@ -3,10 +3,13 @@ package org.apache.spark.sql
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 import scala.jdk.CollectionConverters._
@@ -94,13 +97,25 @@ object GraftSqlShim {
 
   /** The rows of the parquet data under `path`, summed from the footers:
     * no Spark job, no data page read. */
-  def parquetRows(spark: SparkSession, path: String): Long = {
+  def parquetRows(spark: SparkSession, path: String): Long =
+    parquetFooters(spark, path).map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** The footers, row-group statistics included, of the data files under
+    * `path` ([[dataFiles]]), read on the driver: no Spark job. */
+  def parquetFooters(spark: SparkSession, path: String)
+      : Iterator[(FileStatus, ParquetMetadata)] = {
     val hadoop = spark.sessionState.newHadoopConf()
-    dataFiles(path, hadoop).map { file =>
-      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, hadoop),
-        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
-    }.sum
+    dataFiles(path, hadoop).map(file => file -> ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, hadoop), ParquetMetadataConverter.NO_FILTER))
   }
+
+  /** Whether Spark's parquet reader returns the dates and timestamps of the
+    * file with `footer` as stored: false when the file's writer or the
+    * session's read mode asks for the hybrid-calendar rebase. */
+  def datetimesAsStored(spark: SparkSession, footer: ParquetMetadata): Boolean =
+    DataSourceUtils.datetimeRebaseSpec(footer.getFileMetaData.getKeyValueMetaData.get,
+      spark.sessionState.conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString)
+      .mode == LegacyBehaviorPolicy.CORRECTED
 
   /** The data files under `path` (none when it does not exist): hidden
     * names are skipped as Spark's file index skips them, and summary files

@@ -143,4 +143,20 @@ class FsOpsSpec extends SparkSpec {
     assert(after.sameElements(before), "reader must re-adopt the stranded base")
     assert(fs.exists(base), "re-adoption must restore the base dir")
   }
+
+  test("scratchRoot: two calls of q270 leave one root, removed at exit, same rows") {
+    val dir = "/root/testdata/sf0.001"
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val pid = java.lang.ProcessHandle.current().pid()
+    def roots() = tmp.list().filter(_.startsWith(s"graft_q270_p${pid}_")).toSet
+    def rows() = graft.queries.Training.q270IvfAppend(spark, dir)
+      .collect().map(_.toString).toSeq.sorted
+    val first = rows()
+    val second = rows()
+    assert(roots().size == 1, roots())
+    assert(second == first && first.nonEmpty)
+    val root = new Path(new java.io.File(tmp, roots().head).getPath)
+    assert(fs.cancelDeleteOnExit(root), "the root must be registered for deletion at exit")
+    fs.deleteOnExit(root)
+  }
 }

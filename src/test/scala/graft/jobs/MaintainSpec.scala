@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.SparkSpec
-import graft.core.{Snapshots, ZoneMap}
+import graft.core.Snapshots
 import graft.plans.ResultCache
 import org.apache.spark.sql.functions._
 
@@ -9,13 +9,12 @@ class MaintainSpec extends SparkSpec {
   import spark.implicits._
 
   /** Table `t` committed at a fresh Snapshots root as `files` files of
-    * ids 0 until n, zone-mapped on `id`. */
+    * ids 0 until n. */
   private def zonedRoot(prefix: String, n: Long, files: Int): String = {
     val root = scratch(prefix)
     val txn = Snapshots.begin(spark, root)
     spark.range(n).select(col("id"), (col("id") % 9).as("k"))
       .repartition(files).write.parquet(txn.dir("t"))
-    ZoneMap.build(txn, "t", Seq("id"))
     txn.commit()
     root
   }
@@ -37,15 +36,6 @@ class MaintainSpec extends SparkSpec {
     assert(Snapshots.currentId(spark, root).contains(v1 + 1), "one commit")
     // data untouched by the rewrite
     assert(current.agg(sum(col("id"))).collect().head.getLong(0) == sumBefore)
-    // the new version's synopsis maps its files exactly, on the prior
-    // version's columns
-    val dir = Snapshots.open(spark, root).path("t")
-    assert(ZoneMap.mappedColumns(spark, dir) == Seq("id"))
-    def norm(f: String) = f.replaceFirst("^file:/+", "/")
-    val mapped = spark.read.parquet(ZoneMap.zonePath(dir)).select("file").as[String]
-      .collect().map(norm).toSet
-    assert(mapped == current.inputFiles.map(norm).toSet, "zone map stale after compaction")
-    assert(r.getLong(4) == r.getLong(2))
     // pruning still correct on the new layout
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ graft.plans.ZoneMapRule
@@ -53,7 +43,7 @@ class MaintainSpec extends SparkSpec {
     finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ == graft.plans.ZoneMapRule)
     // the superseded cache entry was reaped
-    assert(r.getLong(5) == 1L && !ResultCache.isCached(
+    assert(r.getLong(4) == 1L && !ResultCache.isCached(
       current.groupBy(col("k")).count(), cache))
   }
 
@@ -63,7 +53,6 @@ class MaintainSpec extends SparkSpec {
     val r = Maintain.run(spark, root, "t", None, maxFiles = 64).collect().head
     assert(!r.getBoolean(3), "3 files under maxFiles=64 must not compact")
     assert(r.getLong(1) == 3L && r.getLong(2) == 3L, s"$r")
-    assert(r.getLong(4) == 3L, s"the current synopsis maps every file: $r")
     assert(Snapshots.currentId(spark, root) == version, "a healthy table commits nothing")
   }
 

@@ -96,6 +96,15 @@ class TemporalSpec extends SparkSpec {
     assert(hits === Set((1L, 51L), (1L, 52L), (1L, 53L), (2L, 52L)))
   }
 
+  test("rangeJoin: an inverted interval matches nothing instead of failing the query") {
+    // start 10^12, end 0, width 1: an unclamped bin sequence walks back
+    // over every bin between them, past Spark's array-length limit
+    val intervals = Seq((1L, 1000000000000L, 0L)).toDF("iid", "s", "e")
+    val points = Seq((50L, 0L), (51L, 5L), (52L, 1000000000000L)).toDF("pid", "pt")
+    val got = Temporal.rangeJoin(intervals, points, "s", "e", "pt", binWidth = 1L)
+    assert(got.count() == 0)
+  }
+
   test("rangeJoin prefixes colliding point columns") {
     val intervals = Seq((1L, 0L, 10L)).toDF("id", "s", "t")
     val points = Seq((2L, 5L)).toDF("id", "t")

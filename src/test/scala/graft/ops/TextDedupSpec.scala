@@ -347,12 +347,9 @@ class TextDedupSpec extends SparkSpec {
   test("sortedNeighborhoodPairs above the gate runs distributed and matches the total-order lead() spelling") {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sk = substring(col("text"), 1, 20)
-    // force the distributed shape (the corpus is under the 2M default)
-    spark.conf.set("spark.graft.sn.serialMaxRows", "0")
-    val out =
-      try TextDedup.sortedNeighborhoodPairs(corpus, "doc_id", "text",
-        sortKey = sk)
-      finally spark.conf.unset("spark.graft.sn.serialMaxRows")
+    // force the distributed shape (the corpus is under the 2M gate)
+    val out = TextDedup.sortedNeighborhood(corpus, "doc_id", "text", sk,
+      windowSize = 3, prefixLen = 30, minSim = 0.9, serialMax = 0L)
     val got = out.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getDouble(2))).toSet
     // no single-task window over the corpus (the round-≤9 serial stage):

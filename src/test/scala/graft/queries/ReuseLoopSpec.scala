@@ -22,7 +22,7 @@ class ReuseLoopSpec extends SparkSpec {
     import graft.plans.MvRewriteRule
     // a fresh base dir so the detect/serve path actually executes (a
     // marker from a previous run would short-circuit to the read)
-    val base = new java.io.File(graft.core.FsOps.procCacheDir("q280", dir))
+    val base = new java.io.File(graft.core.FsOps.procCacheDir(spark, "q280", dir))
     rmTree(base)
     if (!spark.experimental.extraOptimizations.contains(MvRewriteRule))
       spark.experimental.extraOptimizations =
@@ -49,7 +49,7 @@ class ReuseLoopSpec extends SparkSpec {
     // without the rule the natural query scans the fact table, and the
     // in-query plan require must throw — the gate cannot silently pass
     // on an unserved plan
-    val base = new java.io.File(graft.core.FsOps.procCacheDir("q280", dir))
+    val base = new java.io.File(graft.core.FsOps.procCacheDir(spark, "q280", dir))
     rmTree(base)
     val e = intercept[IllegalArgumentException] {
       Lifecycle.q280ReuseLoop(spark, dir)
