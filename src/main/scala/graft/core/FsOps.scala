@@ -27,9 +27,10 @@ import org.apache.spark.sql.SparkSession
   * perfbench) open by path: the merge-on-read base
   * (`MergeOnRead.compact`) and the curated tables the daily merge
   * executors and `jobs.Forget` rewrite (`Pipelines.overwriteCurated`).
-  * Every versioned store — the streaming sinks' tables and compacted,
-  * zone-mapped tables included — is on [[Snapshots]] instead, and
-  * `CommitGateSpec` fails on a new caller anywhere else. Callers stage
+  * Every other store — every streaming sink, the compacted, zone-mapped
+  * tables, the [[Warehouse]] catalog and the result cache included — is
+  * on [[Snapshots]] instead, and `CommitGateSpec` fails on a new caller
+  * of the swap or of `rename` anywhere else. Callers stage
   * the full replacement inside `tmp` BEFORE calling.
   *
   * FsOps also owns the process-scoped roots under java.io.tmpdir

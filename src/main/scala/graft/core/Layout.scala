@@ -153,25 +153,10 @@ object Layout {
     * layout verification (reads footers only, no data pages). */
   def bloomFilteredColumns(spark: SparkSession, path: String)
       : Seq[(String, Seq[String])] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(path).getFileSystem(conf)
-    fs.listStatus(new Path(path)).toSeq
-      .filter(f => f.getPath.getName.endsWith(".parquet"))
-      .map { f =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          val cols = reader.getFooter.getBlocks.asScala.flatMap { block =>
-            block.getColumns.asScala
-              .filter(_.getBloomFilterOffset >= 0)
-              .map(_.getPath.toDotString)
-          }.distinct.toSeq
-          (f.getPath.getName, cols)
-        } finally reader.close()
-      }
+    GraftSqlShim.parquetFooters(spark, path).map { case (f, footer) =>
+      f.getPath.getName -> footer.getBlocks.asScala.flatMap(_.getColumns.asScala
+        .filter(_.getBloomFilterOffset >= 0).map(_.getPath.toDotString)).distinct.toSeq
+    }.toSeq
   }
 }

@@ -7,8 +7,9 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
   * the reference's daily multi-table rebuild, and the one commit
   * protocol of every versioned store in the engine
   * ([[graft.ops.Incremental]] partials, the IVF index of
-  * [[graft.ops.Ann]], the build-once query caches, and the tables of the
-  * [[graft.streaming.Streams]] upsert and incremental-snapshot sinks).
+  * [[graft.ops.Ann]], the build-once query caches and
+  * [[graft.plans.ResultCache]] entries, the [[Warehouse]] catalog, and the
+  * tables of every [[graft.streaming.Streams]] sink).
   *
   * The reference's `ProcessDaily.usql` publishes ~33 curated tables per
   * day as independent TRUNCATE+INSERTs (one per table, `:229-3650`); a
@@ -130,10 +131,16 @@ object Snapshots {
     new Txn(spark, root, currentId(spark, root).map(load(spark, root, _)))
 
   /** The current snapshot, or `build` staged and committed as the first
-    * one — a build-once store whose commit is its completion marker. */
+    * one — a build-once store whose commit is its completion marker. A
+    * build that loses its first commit to a concurrent build returns the
+    * winner's snapshot; its own staged dirs are gone with the lost commit. */
   def openOrBuild(spark: SparkSession, root: String)(build: Txn => Unit): Snapshot = {
     val txn = begin(spark, root)
-    txn.parent.getOrElse { build(txn); txn.commit() }
+    txn.parent.getOrElse {
+      build(txn)
+      try txn.commit()
+      catch { case _: IllegalStateException => open(spark, root, Some(txn.id)) }
+    }
   }
 
   /** Publish `tmp` as `dst` only if `dst` does not exist yet. */

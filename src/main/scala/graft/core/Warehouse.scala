@@ -10,18 +10,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * catalog database once and every later job resolves tables by name).
   *
   * Spark's default in-memory catalog loses metadata when the JVM exits,
-  * so graft pairs the session catalog with a MANIFEST file at the
-  * warehouse root (`_graft_catalog.tsv`: db, table, format, partition
-  * columns — locations are derived as `<root>/<db>/<table>`, so the
-  * warehouse relocates wholesale). Every DDL call updates BOTH: the
-  * session catalog for immediate `spark.sql("SELECT … FROM db.t")`
-  * resolution, the manifest for the next session — [[open]] replays it
-  * into any fresh session/JVM against the same root. Data and manifest
-  * live through the Hadoop FileSystem API, so the warehouse root works
-  * on HDFS/S3/ABFS exactly as on local disk; the manifest rewrite is
-  * write-temp-then-rename (atomic on directory-rename filesystems).
-  * Single-writer DDL is assumed — same as the reference's ADLA catalog
-  * scripts, which serialize DDL through job submission.
+  * so graft pairs the session catalog with a CATALOG table in the
+  * [[Snapshots]] root `<root>/_catalog`: one row per table (db, name,
+  * format, partition columns — locations are derived as
+  * `<root>/<db>/<table>`, so the warehouse relocates wholesale) and per
+  * view (its SQL), views in creation order. Every DDL call updates BOTH:
+  * the session catalog for immediate `spark.sql("SELECT … FROM db.t")`
+  * resolution, and the catalog table for the next session — [[open]]
+  * replays it into any fresh session/JVM against the same root. Data and
+  * catalog live through the Hadoop FileSystem API, so the warehouse root
+  * works on HDFS/S3/ABFS exactly as on local disk.
+  *
+  * Each DDL is one put-if-absent commit of the next catalog version, so
+  * a crash before the commit leaves the catalog as it was, and of two
+  * DDLs that begin from one catalog version exactly one commits: the
+  * other throws `IllegalStateException` instead of silently dropping the
+  * winner's entry, and can be re-run.
   *
   * Tables are EXTERNAL (`spark.catalog.createTable` over the parquet
   * location): dropping the catalog entry never deletes data unless
@@ -37,7 +41,17 @@ object Warehouse {
     def location(root: String): String = s"$root/$db/$table"
   }
 
-  private val ManifestName = "_graft_catalog.tsv"
+  /** One catalog row: a table, or a view when `sql` is set. */
+  private[graft] final case class Item(db: String, name: String, format: String,
+      partitionCols: Seq[String], sql: Option[String]) {
+    def key: (String, String, Boolean) = (db, name, sql.isDefined)
+    def entry: Entry = Entry(db, name, format, partitionCols)
+  }
+
+  private val Catalog = "catalog"
+
+  /** The [[Snapshots]] root of the catalog of warehouse `root`. */
+  private[graft] def catalogRoot(root: String): String = s"$root/_catalog"
 
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -46,13 +60,14 @@ object Warehouse {
     * session-catalog database so `db.table` names resolve in SQL. */
   def createDatabase(spark: SparkSession, root: String, db: String): Unit = {
     requireIdent(db)
+    require(!db.startsWith("_"), s"database names starting with '_' are reserved, got '$db'")
     fs(spark, root).mkdirs(new Path(s"$root/$db"))
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
   }
 
   /** CREATE TABLE AS SELECT: write `df` as parquet under
     * `<root>/<db>/<table>` (optionally partitioned), record it in the
-    * manifest, and register it in the session catalog. `mode` is
+    * catalog, and register it in the session catalog. `mode` is
     * "overwrite" (TRUNCATE+INSERT parity) or "append". */
   def saveTable(spark: SparkSession, root: String, db: String, name: String,
       df: DataFrame, partitionCols: Seq[String] = Nil,
@@ -63,52 +78,46 @@ object Warehouse {
     val w = df.write.mode(mode).format("parquet")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .save(e.location(root))
-    upsert(spark, root, e)
+    ddl(spark, root)(put(Item(db, name, e.format, partitionCols, None)))
     register(spark, root, e)
   }
 
-  /** Replay the manifest into THIS session's catalog — the cold-start
+  /** Replay the catalog into THIS session's catalog — the cold-start
     * path: a brand-new session (or JVM) pointed at the same warehouse
     * root sees every table by `db.table` name, then every persisted VIEW
     * (replayed after tables, in creation order, so views over tables —
     * and views over earlier views — resolve). Returns qualified names
     * (tables then views). */
   def open(spark: SparkSession, root: String): Seq[String] = {
-    val entries = readManifest(spark, root)
+    val catalog = items(spark, root)
+    val entries = tablesOf(catalog)
     entries.foreach(register(spark, root, _))
-    val views = readViews(spark, root)
     // per-view isolation: a view broken by a later dropTable (its base
-    // relation gone) must not abort the replay of every view AFTER it —
-    // that left the whole warehouse unusable until the manifest was
-    // hand-edited. Broken views are skipped and reported on stderr; the
-    // rest of the catalog registers normally.
-    val registered = views.flatMap { case (db, name, sql) =>
+    // relation gone) must not abort the replay of every view AFTER it.
+    // Broken views are skipped and named on the current trace span as
+    // `view_skipped`; the rest of the catalog registers normally.
+    val (registered, skipped) = viewsOf(catalog).partition { case (db, name, sql) =>
       try {
         spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
         spark.sql(s"CREATE OR REPLACE VIEW `$db`.`$name` AS $sql")
-        Some(s"$db.$name")
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          System.err.println(
-            s"[warehouse] skipping broken view $db.$name " +
-              s"(likely a dropped base relation): ${e.getMessage.linesIterator.next()}")
-          None
-      }
+        true
+      } catch { case _: org.apache.spark.sql.AnalysisException => false }
     }
-    entries.map(_.qualified) ++ registered
+    if (skipped.nonEmpty)
+      Trace.attr("view_skipped", skipped.map(v => s"${v._1}.${v._2}").mkString(","))
+    entries.map(_.qualified) ++ registered.map(v => s"${v._1}.${v._2}")
   }
 
   /** CREATE VIEW that SURVIVES the session: the view SQL is validated by
-    * creating it NOW, then persisted (base64, so arbitrary SQL text is
-    * manifest-safe) in `_graft_views.tsv` beside the table manifest;
-    * [[open]] replays views after tables in creation order. Views are
+    * creating it NOW, then persisted as a catalog row; [[open]] replays
+    * views after tables in creation order. Views are
     * metadata-only — Catalyst inlines them, so predicates and pruning
     * push through a view exactly as through its definition (the
     * reference's U-SQL VIEW surface, e.g. a masked or filtered
     * projection published under a stable name).
     *
     * Redefining an EXISTING view replaces its SQL IN PLACE in the
-    * manifest: [[open]] replays views in manifest order and validates
+    * catalog: [[open]] replays views in catalog order and validates
     * references at creation, so moving a redefined view after its
     * dependents (the old filterNot-then-append) would break cold-start
     * replay whenever a later view references it. Only a genuinely new
@@ -118,42 +127,35 @@ object Warehouse {
     requireIdent(db); requireIdent(name)
     createDatabase(spark, root, db)
     spark.sql(s"CREATE OR REPLACE VIEW `$db`.`$name` AS $sql")
-    val views = readViews(spark, root)
-    val updated =
-      if (views.exists(v => v._1 == db && v._2 == name))
-        views.map(v => if (v._1 == db && v._2 == name) (db, name, sql) else v)
-      else views :+ ((db, name, sql))
-    writeViews(spark, root, updated)
+    ddl(spark, root)(put(Item(db, name, "view", Nil, Some(sql))))
   }
 
-  /** DROP VIEW: session catalog + views manifest. */
+  /** DROP VIEW: session catalog + catalog row. */
   def dropView(spark: SparkSession, root: String, db: String,
       name: String): Unit = {
     requireIdent(db); requireIdent(name)
     spark.sql(s"DROP VIEW IF EXISTS `$db`.`$name`")
-    writeViews(spark, root,
-      readViews(spark, root).filterNot(v => v._1 == db && v._2 == name))
+    ddl(spark, root)(_.filterNot(_.key == ((db, name, true))))
   }
 
   /** Persisted views as (db, name, sql), in creation order. */
   def listViews(spark: SparkSession, root: String): Seq[(String, String, String)] =
-    readViews(spark, root)
+    viewsOf(items(spark, root))
 
-  /** DROP TABLE: removes the catalog entry (session + manifest);
+  /** DROP TABLE: removes the catalog entry (session + catalog row);
     * `purge = true` also deletes the data directory. */
   def dropTable(spark: SparkSession, root: String, db: String, name: String,
       purge: Boolean = false): Unit = {
     requireIdent(db); requireIdent(name)
     spark.sql(s"DROP TABLE IF EXISTS `$db`.`$name`")
-    writeManifest(spark, root,
-      readManifest(spark, root).filterNot(e => e.db == db && e.table == name))
+    ddl(spark, root)(_.filterNot(_.key == ((db, name, false))))
     if (purge)
       fs(spark, root).delete(new Path(s"$root/$db/$name"), true)
   }
 
-  /** The manifest's current entries (empty on a fresh root). */
+  /** The catalog's current tables by name (empty on a fresh root). */
   def listTables(spark: SparkSession, root: String): Seq[Entry] =
-    readManifest(spark, root)
+    tablesOf(items(spark, root))
 
   /** ALTER TABLE ... ADD COLUMNS, the additive-evolution half: after new
     * files landed with a WIDER schema (e.g. `saveTable(mode = "append")`
@@ -165,12 +167,12 @@ object Warehouse {
     * rewrites, not evolution ([[Layout.compact]]).
     *
     * Returns the merged schema. Call again after [[open]] in a fresh
-    * session — the manifest stores layout, not schema, so evolution is
+    * session — the catalog stores layout, not schema, so evolution is
     * re-derived from footers (self-healing, never stale). */
   def evolveTable(spark: SparkSession, root: String, db: String,
       name: String): org.apache.spark.sql.types.StructType = {
     requireIdent(db); requireIdent(name)
-    val e = readManifest(spark, root)
+    val e = listTables(spark, root)
       .find(x => x.db == db && x.table == name)
       .getOrElse(throw new IllegalArgumentException(
         s"unknown table $db.$name"))
@@ -195,7 +197,7 @@ object Warehouse {
     * only had raw file bytes to size a filtered dimension with.
     *
     * Stats live in the catalog entry, so like schema evolution they are
-    * per-session state over the manifest-replayed warehouse: re-run
+    * per-session state over the catalog-replayed warehouse: re-run
     * after [[open]] in a fresh session (cheap — stats scans are
     * column-pruned aggregates, no shuffle). Returns the recorded
     * (rowCount, sizeInBytes). */
@@ -224,99 +226,44 @@ object Warehouse {
       spark.catalog.recoverPartitions(e.qualified)
   }
 
-  private def upsert(spark: SparkSession, root: String, e: Entry): Unit =
-    writeManifest(spark, root,
-      readManifest(spark, root)
-        .filterNot(x => x.db == e.db && x.table == e.table) :+ e)
-
-  private def readManifest(spark: SparkSession, root: String): Seq[Entry] = {
-    val f = fs(spark, root)
-    val text = readSmallFile(f, root, ManifestName).getOrElse(return Seq.empty)
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      line.split("\t", -1) match {
-        case Array(db, t, fmt, parts) =>
-          Entry(db, t, fmt,
-            if (parts.isEmpty) Nil else parts.split(",").toSeq)
-        case other =>
-          sys.error(s"malformed catalog line (${other.length} fields): $line")
-      }
-    }.toSeq
+  /** One DDL as one catalog commit: `edit` maps the current rows to the
+    * next version's. */
+  private def ddl(spark: SparkSession, root: String)(edit: Seq[Item] => Seq[Item]): Unit = {
+    val txn = Snapshots.begin(spark, catalogRoot(root))
+    stageCatalog(txn, edit)
+    txn.commit()
+    Snapshots.vacuum(spark, catalogRoot(root), keepLast = 2)
   }
 
-  /** Publish a small manifest file with no catalog-less crash window:
-    * stage tmp → rename live aside → rename tmp in → drop the aside copy.
-    * The delete-then-rename this replaces had a window where the live
-    * file was GONE — and a missing manifest reads as an EMPTY warehouse,
-    * so a crash there silently unregistered every table on the next
-    * `open()`. Readers fall back to the `.old` aside copy when the live
-    * file is missing (the between-renames crash). */
-  private def publishFile(f: org.apache.hadoop.fs.FileSystem, root: String,
-      name: String, body: String): Unit = {
-    val tmp = new Path(s"$root/.$name.tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    val dst = new Path(s"$root/$name")
-    val old = new Path(s"$root/.$name.old")
-    f.delete(old, false)
-    if (f.exists(dst) && !f.rename(dst, old))
-      sys.error(s"manifest publish: rename $dst -> $old failed")
-    if (!f.rename(tmp, dst)) {
-      f.rename(old, dst) // restore
-      sys.error(s"manifest publish: rename $tmp -> $dst failed")
-    }
-    f.delete(old, false)
+  /** [[ddl]]'s staging half: the edited rows of `txn`'s parent catalog,
+    * with their positions, as `txn`'s catalog table. */
+  private[graft] def stageCatalog(txn: Snapshots.Txn, edit: Seq[Item] => Seq[Item]): Unit = {
+    val spark = txn.spark
+    import spark.implicits._
+    val rows = edit(txn.parent.fold(Seq.empty[Item])(itemsOf(spark, _)))
+    txn.stage(Catalog, rows.zipWithIndex.toDF("item", "pos").coalesce(1))
   }
 
-  /** Read a manifest file, falling back to its `.old` aside copy when
-    * the live file is missing (a [[publishFile]] between-renames crash). */
-  private def readSmallFile(f: org.apache.hadoop.fs.FileSystem, root: String,
-      name: String): Option[String] = {
-    val live = new Path(s"$root/$name")
-    val p =
-      if (f.exists(live)) Some(live)
-      else Some(new Path(s"$root/.$name.old")).filter(f.exists)
-    p.map { path =>
-      val in = f.open(path)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
+  /** `item` in place of the row with its key, or appended. */
+  private[graft] def put(item: Item)(rows: Seq[Item]): Seq[Item] =
+    if (rows.exists(_.key == item.key)) rows.map(r => if (r.key == item.key) item else r)
+    else rows :+ item
+
+  private def itemsOf(spark: SparkSession, snap: Snapshots.Snapshot): Seq[Item] = {
+    import spark.implicits._
+    snap.read(spark, Catalog).as[(Item, Int)].collect().toSeq.sortBy(_._2).map(_._1)
   }
 
-  private def writeManifest(spark: SparkSession, root: String,
-      entries: Seq[Entry]): Unit = {
-    val body = entries.sortBy(e => (e.db, e.table)).map { e =>
-      s"${e.db}\t${e.table}\t${e.format}\t${e.partitionCols.mkString(",")}"
-    }.mkString("", "\n", "\n")
-    publishFile(fs(spark, root), root, ManifestName, body)
-  }
+  /** The current catalog's rows in order (none on a fresh root). */
+  private def items(spark: SparkSession, root: String): Seq[Item] =
+    Snapshots.currentId(spark, catalogRoot(root)).fold(Seq.empty[Item])(id =>
+      itemsOf(spark, Snapshots.open(spark, catalogRoot(root), Some(id))))
 
-  private val ViewManifestName = "_graft_views.tsv"
+  private def tablesOf(rows: Seq[Item]): Seq[Entry] =
+    rows.filter(_.sql.isEmpty).map(_.entry).sortBy(e => (e.db, e.table))
 
-  private def readViews(spark: SparkSession,
-      root: String): Seq[(String, String, String)] = {
-    val f = fs(spark, root)
-    val text = readSmallFile(f, root, ViewManifestName)
-      .getOrElse(return Seq.empty)
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      line.split("\t", -1) match {
-        case Array(db, n, b64) =>
-          (db, n, new String(java.util.Base64.getDecoder.decode(b64), "UTF-8"))
-        case other =>
-          sys.error(s"malformed view line (${other.length} fields): $line")
-      }
-    }.toSeq
-  }
-
-  /** Creation ORDER is preserved (no sort) — replay depends on it for
-    * views defined over earlier views. */
-  private def writeViews(spark: SparkSession, root: String,
-      views: Seq[(String, String, String)]): Unit = {
-    val body = views.map { case (db, n, sql) =>
-      s"$db\t$n\t${java.util.Base64.getEncoder
-        .encodeToString(sql.getBytes("UTF-8"))}"
-    }.mkString("", "\n", "\n")
-    publishFile(fs(spark, root), root, ViewManifestName, body)
-  }
+  private def viewsOf(rows: Seq[Item]): Seq[(String, String, String)] =
+    rows.collect { case Item(db, name, _, _, Some(sql)) => (db, name, sql) }
 
   /** Identifiers flow into SQL and filesystem paths — restrict to the
     * safe charset rather than attempt quoting-based escape. */

@@ -399,9 +399,8 @@ object TextDedup {
     incrementalDupPairsFrom(graft.core.Tables.parquet(spark, indexPath), corpus,
       increment, idCol, textCol, n, numHashes, bands, threshold)
 
-  /** [[incrementalDupPairs]] over an already-loaded (possibly filtered)
-    * signature frame — the streaming path filters the index to batches
-    * STRICTLY BEFORE the current one so replays are deterministic. */
+  /** [[incrementalDupPairs]] over an already-loaded signature frame —
+    * the streaming sink passes the index of its parent snapshot. */
   def incrementalDupPairsFrom(index: DataFrame,
       corpus: DataFrame, increment: DataFrame, idCol: String,
       textCol: String, n: Int = 3, numHashes: Int = 16, bands: Int = 4,

@@ -2,6 +2,7 @@ package graft.plans
 
 import java.security.MessageDigest
 
+import graft.core.{Snapshots, Trace}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -27,11 +28,13 @@ import org.apache.spark.sql.DataFrame
   * RESULT (usually orders of magnitude smaller than the inputs); a
   * miss costs the query plus one write. Only deterministic plans
   * belong here — a plan with rand()/now() caches its first answer,
-  * same as any result cache. Concurrent misses of the same key both
-  * compute and one wins the rename — idempotent, never corrupt
-  * (write-aside + atomic rename, the [[graft.entities.Pipelines]]
-  * overwrite discipline). */
+  * same as any result cache. Each entry is a build-once
+  * [[graft.core.Snapshots]] root, so a crashed writer leaves no visible
+  * half-entry, and of concurrent misses of one key exactly one commits:
+  * the others read the winner's copy and leave none of their own. */
 object ResultCache {
+
+  private val Entry = "result"
 
   /** Stable key of (what this plan computes) × (the exact bytes it
     * reads): md5 hex of canonicalized-plan text + each input file's
@@ -51,10 +54,9 @@ object ResultCache {
   }
 
   /** Serve `df` through the cache at `cacheDir`: hit → read the stored
-    * result; miss → execute, store (write-aside + rename so a crashed
-    * writer leaves no half-entry), and read back. The returned frame
-    * always scans the CACHE copy, so downstream plans are identical on
-    * hit and miss. */
+    * result; miss → execute, store as the entry's first snapshot, and
+    * read back. The returned frame always scans the CACHE copy, so
+    * downstream plans are identical on hit and miss. */
   def through(df: DataFrame, cacheDir: String): DataFrame = {
     val spark = df.sparkSession
     // no input files = no observable data version (JDBC, temp views over
@@ -62,27 +64,16 @@ object ResultCache {
     // the PLAN alone and serve the first answer forever — bypass the
     // cache instead of caching something invalidation can never reach
     if (df.inputFiles.isEmpty) {
-      System.err.println("[result-cache] plan has no file inputs — " +
-        "data version unobservable, executing uncached")
+      Trace.attr("result_cache_bypass", "no file inputs")
       return df
     }
-    val fp = fingerprint(df)
-    val dest = new Path(s"$cacheDir/$fp")
-    val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dest)) {
-      val tmp = new Path(s"$cacheDir/.tmp_${fp}_${System.nanoTime()}")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      if (!fs.rename(tmp, dest)) fs.delete(tmp, true) // lost the race: a
-      // concurrent miss committed the same fingerprint — use theirs
-    }
-    graft.core.Tables.parquet(spark, dest.toString)
+    Snapshots.openOrBuild(spark, s"$cacheDir/${fingerprint(df)}")(_.stage(Entry, df))
+      .read(spark, Entry)
   }
 
   /** True if `df`'s current fingerprint is already materialized. */
-  def isCached(df: DataFrame, cacheDir: String): Boolean = {
-    val p = new Path(s"$cacheDir/${fingerprint(df)}")
-    p.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).exists(p)
-  }
+  def isCached(df: DataFrame, cacheDir: String): Boolean =
+    Snapshots.currentId(df.sparkSession, s"$cacheDir/${fingerprint(df)}").nonEmpty
 
   /** Reap entries older than `maxAgeMs` (superseded fingerprints are
     * never referenced again — age is the correct reclaim signal).
@@ -93,8 +84,7 @@ object ResultCache {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return 0
     val old = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && !s.getPath.getName.startsWith(".") &&
-        nowMs - s.getModificationTime > maxAgeMs)
+      .filter(s => s.isDirectory && nowMs - s.getModificationTime > maxAgeMs)
     old.foreach(s => fs.delete(s.getPath, true))
     old.size
   }

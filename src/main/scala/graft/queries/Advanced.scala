@@ -227,7 +227,7 @@ object Advanced {
   }
 
   /** S9 catalog round-trip (ref CreateGitHubDataTable.usql:4-12): CTAS
-    * the nation table into a persistent warehouse (root manifest +
+    * the nation table into a persistent warehouse (catalog table +
     * session catalog, [[graft.core.Warehouse]]), then resolve it BY NAME
     * from a brand-new session whose catalog never saw the DDL — the
     * returned rows travelled through the on-disk catalog metadata, not

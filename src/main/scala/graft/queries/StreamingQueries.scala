@@ -300,9 +300,9 @@ object StreamingQueries {
 
   /** Streaming quantile state ([[Streams.histogramSink]]): the events
     * stream drains in FOUR micro-batches (maxFilesPerTrigger=1 over a
-    * 4-file staged copy), each batch binned once into a (bin, cnt)
-    * partial under `batch=<id>` (overwrite ⇒ replay-idempotent), and
-    * quantiles come from ONE sum-merge of the ≤4×100-row partials —
+    * 4-file staged copy), each batch binned once and sum-merged into the
+    * ≤100-row (bin, cnt) state table, one watermarked commit per batch
+    * (a replayed batch is a no-op), and quantiles read off that table —
     * the mergeable-histogram sketch (q264) as streaming state: fact
     * rows are binned exactly once, never revisited, and batch order
     * can't matter because sum-merge is a semilattice. The oracle

@@ -52,24 +52,23 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(spark, curatedDir, spec.table, batchId) { prior =>
+        commitBatch(spark, curatedDir, batchId)(stageTable(spec.table) { prior =>
           val fresh = Pipelines.freshSnapshot(batch, spec)
           Pipelines.mergeSnapshot(prior.getOrElse(fresh.limit(0)), fresh, spec)
-        }
+        })
       }
       .start()
 
-  /** Apply micro-batch `batchId` to `table`, the one table of the
-    * [[Snapshots]] root `root`, as one commit: `next` maps the prior
-    * version (None before the first batch) to the new table, which lands
-    * in the same put-if-absent record as the stream watermark advanced to
-    * `batchId`. A batch at or below the watermark is a replay and writes
-    * nothing; a crash before the commit leaves only an invisible staging
-    * dir. Either way no batch applies twice. */
-  private def commitBatch(spark: SparkSession, root: String, table: String,
-      batchId: Long)(next: Option[DataFrame] => DataFrame): Unit = {
+  /** Apply micro-batch `batchId` to the sink's [[Snapshots]] root `root`
+    * as one commit: `stage` stages the batch's tables into the pending
+    * version, which lands in the same put-if-absent record as the stream
+    * watermark advanced to `batchId`. A batch at or below the watermark is
+    * a replay and writes nothing; a crash before the commit leaves only
+    * invisible staging dirs. Either way no batch applies twice. */
+  private def commitBatch(spark: SparkSession, root: String, batchId: Long)
+      (stage: Snapshots.Txn => Unit): Unit = {
     val txn = Snapshots.begin(spark, root)
-    if (stageBatch(txn, table, batchId)(next)) {
+    if (stageBatch(txn, batchId)(stage)) {
       txn.commit()
       Snapshots.vacuum(spark, root, keepLast = 2)
     }
@@ -77,19 +76,22 @@ object Streams {
 
   /** [[commitBatch]]'s staging half: false, staging nothing, for a
     * replayed batch. */
-  private[graft] def stageBatch(txn: Snapshots.Txn, table: String, batchId: Long)
-      (next: Option[DataFrame] => DataFrame): Boolean =
-    !txn.watermark.exists(_ >= batchId) && {
-      val prior = txn.parent.map { p =>
-        // one watermark per root: a second stream's batches would read as replays
-        require(p.dirs.keySet == Set(table),
-          s"${txn.root} holds ${p.dirs.keys.mkString(", ")}; a stream sink root holds only its $table")
-        p.read(txn.spark, table)
-      }
-      txn.stage(table, next(prior))
-      txn.advance(batchId)
-      true
+  private[graft] def stageBatch(txn: Snapshots.Txn, batchId: Long)
+      (stage: Snapshots.Txn => Unit): Boolean =
+    !txn.watermark.exists(_ >= batchId) && { stage(txn); txn.advance(batchId); true }
+
+  /** Stage `table`, the one table of a sink root, as `next` of its prior
+    * version (None before the first batch). */
+  private[graft] def stageTable(table: String)(next: Option[DataFrame] => DataFrame)
+      (txn: Snapshots.Txn): Unit = {
+    val prior = txn.parent.map { p =>
+      // one watermark per root: a second stream's batches would read as replays
+      require(p.dirs.keySet == Set(table),
+        s"${txn.root} holds ${p.dirs.keys.mkString(", ")}; a stream sink root holds only its $table")
+      p.read(txn.spark, table)
     }
+    txn.stage(table, next(prior))
+  }
 
   /** Watermarked sliding-window event counts — the standard streaming
     * aggregate (late rows beyond the watermark are dropped, state is
@@ -427,8 +429,8 @@ object Streams {
       versionCols: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None)
       (batch: DataFrame, batchId: Long): Unit =
-    commitBatch(batch.sparkSession, tableDir, table, batchId)(
-      upsertMerge(batch, keys, versionCols, deleteWhen))
+    commitBatch(batch.sparkSession, tableDir, batchId)(
+      stageTable(table)(upsertMerge(batch, keys, versionCols, deleteWhen)))
 
   /** [[upsertBatch]]'s merge of `batch` into the prior table. */
   private[graft] def upsertMerge(batch: DataFrame, keys: Seq[String],
@@ -469,47 +471,52 @@ object Streams {
     * LSH-matched against the PERSISTED MinHash signature index of
     * everything seen before (increment bands broadcast, index scanned
     * once, exact-Jaccard verify against the stored corpus text), plus
-    * within-batch pairs via [[graft.ops.TextDedup.minhashDedupPairs]];
-    * then the batch's own signatures and text append to the state dirs.
-    * State grows O(batch) per batch and prior text is never re-shingled.
+    * within-batch pairs via [[graft.ops.TextDedup.minhashDedupPairs]].
     *
-    * Exactly-once: every append writes `batch=<id>` hive partitions with
-    * mode=overwrite, so a replayed foreachBatch rewrites its own
-    * partitions byte-for-byte instead of duplicating — idempotence by
-    * layout, no commit ledger needed. Output partitions under
-    * `stateDir/pairs`; signatures under `stateDir/sigs`; text under
-    * `stateDir/docs`. */
+    * `stateDir` is a [[Snapshots]] root. Batch `id` stages its pairs,
+    * signatures and text as the tables `pairs_<id>`, `sigs_<id>` and
+    * `docs_<id>` and commits them with the watermark ([[commitBatch]]):
+    * it reads the prior index and corpus from the parent snapshot, so
+    * state grows O(batch) per batch, prior text is never re-shingled, and
+    * a replayed batch id is a no-op. Read the state with
+    * [[nearDupState]]. */
   def nearDupBatch(stateDir: String, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.8)(batch: DataFrame, batchId: Long): Unit = {
+      threshold: Double = 0.8)(batch: DataFrame, batchId: Long): Unit =
+    commitBatch(batch.sparkSession, stateDir, batchId)(
+      stageNearDup(batch, batchId, idCol, textCol, n, numHashes, bands, threshold))
+
+  /** [[nearDupBatch]]'s staging of batch `batchId`. */
+  private[graft] def stageNearDup(batch: DataFrame, batchId: Long, idCol: String,
+      textCol: String, n: Int, numHashes: Int, bands: Int, threshold: Double)
+      (txn: Snapshots.Txn): Unit = {
     import graft.ops.TextDedup
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val (sigs, docs, pairs) =
-      (s"$stateDir/sigs", s"$stateDir/docs", s"$stateDir/pairs")
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val within = TextDedup
         .minhashDedupPairs(b, idCol, textCol, n, numHashes, bands, threshold)
-      // index and corpus reads exclude this batchId and anything later:
-      // a replayed batch sees EXACTLY the state it saw the first time,
-      // so its partition overwrites are byte-deterministic
-      val cross =
-        if (fs.exists(new Path(sigs)))
-          TextDedup.incrementalDupPairsFrom(
-            Tables.parquet(spark, sigs).where(col("batch") < batchId),
-            Tables.parquet(spark, docs).where(col("batch") < batchId),
-            b, idCol, textCol, n, numHashes, bands, threshold)
-        else within.limit(0) // first batch: no prior index, same schema
-      within.unionByName(cross)
-        .write.mode("overwrite").parquet(s"$pairs/batch=$batchId")
-      TextDedup.minhashSignatures(b, idCol, textCol, n, numHashes)
-        .write.mode("overwrite").parquet(s"$sigs/batch=$batchId")
-      b.select(col(idCol), col(textCol))
-        .write.mode("overwrite").parquet(s"$docs/batch=$batchId")
+      // the first batch has no prior index: no cross pairs, same schema
+      val cross = txn.parent.fold(within.limit(0)) { p =>
+        TextDedup.incrementalDupPairsFrom(batches(txn.spark, p, "sigs"),
+          batches(txn.spark, p, "docs"), b, idCol, textCol, n, numHashes, bands, threshold)
+      }
+      txn.stage(s"pairs_$batchId", within.unionByName(cross))
+      txn.stage(s"sigs_$batchId", TextDedup.minhashSignatures(b, idCol, textCol, n, numHashes))
+      txn.stage(s"docs_$batchId", b.select(col(idCol), col(textCol)))
     } finally b.unpersist()
+  }
+
+  /** The near-dup sink's `part` — "pairs", "sigs" or "docs" — over every
+    * batch the current snapshot of `stateDir` holds. */
+  def nearDupState(spark: SparkSession, stateDir: String, part: String): DataFrame =
+    batches(spark, Snapshots.open(spark, stateDir), part)
+
+  /** The `<part>_<id>` tables of `snap` as one scan. */
+  private def batches(spark: SparkSession, snap: Snapshots.Snapshot,
+      part: String): DataFrame = {
+    val paths = snap.dirs.keys.filter(_.startsWith(s"${part}_")).toSeq.sorted.map(snap.path)
+    require(paths.nonEmpty, s"snapshot ${snap.id} of ${snap.root} holds no $part")
+    spark.read.schema(Tables.parquet(spark, paths.head).schema).parquet(paths: _*)
   }
 
   /** [[nearDupBatch]] wired as a foreachBatch sink. */
@@ -569,18 +576,25 @@ object Streams {
   // -- streaming histogram / quantile state ---------------------------------
 
   /** One micro-batch of streaming histogram maintenance: bin the batch
-    * with [[graft.ops.Sketches.histBuild]] and write the (bin, cnt)
-    * partial to `stateDir/batch=<id>` with mode=overwrite — the
-    * idempotence-by-layout rule of [[nearDupBatch]]: a replayed batchId
-    * rewrites its own partition byte-for-byte instead of double-
-    * counting, no commit ledger needed. State grows one ≤bins-row
-    * partial per batch; because the histogram is a sum-merge
-    * semilattice, readers never need batch ordering. */
+    * with [[graft.ops.Sketches.histBuild]] and sum-merge it into the
+    * prior (bin, cnt) table `hist` of the [[Snapshots]] root `stateDir`,
+    * committed with the watermark ([[commitBatch]]): a replayed batch id
+    * is a no-op instead of double-counting. The state stays one ≤bins-row
+    * table however many batches fold into it. */
   def histogramBatch(stateDir: String, valueCol: String, lo: Long,
       hi: Long, bins: Int)(batch: DataFrame, batchId: Long): Unit =
-    graft.ops.Sketches.histBuild(batch, col(valueCol), Seq.empty, lo, hi, bins)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$stateDir/batch=$batchId")
+    commitBatch(batch.sparkSession, stateDir, batchId)(
+      stageHistogram(batch, valueCol, lo, hi, bins))
+
+  /** [[histogramBatch]]'s staging of one batch. */
+  private[graft] def stageHistogram(batch: DataFrame, valueCol: String, lo: Long,
+      hi: Long, bins: Int): Snapshots.Txn => Unit =
+    stageTable(Hist) { prior =>
+      val binned = graft.ops.Sketches.histBuild(batch, col(valueCol), Seq.empty, lo, hi, bins)
+      graft.ops.Sketches.histMerge(prior.toSeq :+ binned, Seq.empty).coalesce(1)
+    }
+
+  private val Hist = "hist"
 
   /** [[histogramBatch]] wired as a foreachBatch sink — running
     * distribution state (quantiles, spread, drift) maintained
@@ -595,12 +609,9 @@ object Streams {
       .foreachBatch(histogramBatch(stateDir, valueCol, lo, hi, bins) _)
       .start()
 
-  /** The merged view of the streaming histogram state: one sum-merge
-    * over every batch partial (a ≤batches×bins-row scan — synopsis-
-    * sized, never the stream). Feed straight into
+  /** The streaming histogram state, (bin, cnt) of the current snapshot:
+    * a ≤bins-row scan. Feed straight into
     * [[graft.ops.Sketches.histQuantile]]. */
   def histogramState(spark: SparkSession, stateDir: String): DataFrame =
-    graft.ops.Sketches.histMerge(
-      Seq(Tables.parquet(spark, stateDir).select(col("bin"), col("cnt"))),
-      Seq.empty)
+    Snapshots.open(spark, stateDir).read(spark, Hist)
 }

@@ -99,6 +99,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("loadClasses reads fs/compute tags and ignores everything else") {
     val f = java.io.File.createTempFile("classes", ".json")
+    f.deleteOnExit()
     java.nio.file.Files.writeString(f.toPath,
       """{"_comment": "why the tags exist", "q270_ivf_append": "fs",
         |"q6_join_fanout": "compute", "q999_bogus": "gpu"}""".stripMargin)

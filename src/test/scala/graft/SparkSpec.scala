@@ -20,17 +20,28 @@ object TestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The JDK temp dir, where the engine's process-scoped roots
+    * (`FsOps.procCacheDir`, `FsOps.scratchRoot`, streaming checkpoints)
+    * land. */
+  val jdkTmp: java.io.File = new java.io.File(System.getProperty("java.io.tmpdir"))
+
+  /** This JVM's one root of spec scratch dirs under [[jdkTmp]], removed
+    * with everything under it when the JVM exits. */
+  lazy val scratchRoot: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(jdkTmp.toPath, "graft-spec-")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    d
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
 
-  /** Fresh scratch dir per call, under target/ (inside the repo). */
-  def scratch(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp")), prefix)
-    d.toString
-  }
+  /** Fresh scratch dir per call, under the JVM's [[TestSession.scratchRoot]]
+    * (removed at exit). */
+  def scratch(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(TestSession.scratchRoot, prefix).toString
 
   /** Spark jobs started while `body` runs, counted after the bus drains. */
   def jobsDuring(body: => Unit): Int = {

@@ -146,7 +146,7 @@ class FsOpsSpec extends SparkSpec {
 
   test("scratchRoot: two calls of q270 leave one root, removed at exit, same rows") {
     val dir = "/root/testdata/sf0.001"
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val tmp = graft.TestSession.jdkTmp
     val pid = java.lang.ProcessHandle.current().pid()
     def roots() = tmp.list().filter(_.startsWith(s"graft_q270_p${pid}_")).toSet
     def rows() = graft.queries.Training.q270IvfAppend(spark, dir)

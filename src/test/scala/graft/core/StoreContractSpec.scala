@@ -23,11 +23,12 @@ class StoreContractSpec extends SparkSpec {
     * tag)` one write through its own API, `stage(txn, tag)` the staging
     * that write commits, `read` its reader (pinned when called) as sorted
     * rows, and `rows(tags)` what `read` returns after `create` and
-    * `write` of each tag in order. */
+    * `write` of each tag in order. `log(root)` is the store's
+    * [[Snapshots]] root, when the store keeps it below its own root. */
   private case class Store(name: String, create: String => Unit,
       write: (String, Int) => Unit, stage: (Snapshots.Txn, Int) => Unit,
       read: String => DataFrame, rows: Seq[Int] => Seq[String],
-      otherReads: String => Unit = _ => ())
+      otherReads: String => Unit = _ => (), log: String => String = identity)
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
@@ -135,11 +136,63 @@ class StoreContractSpec extends SparkSpec {
       create = root => Streams.upsertBatch(root, "t", Seq("id"), Seq("ver"))(
         Seq((1L, 0L, "a0"), (2L, 0L, "b0")).toDF("id", "ver", "val"), 0L),
       write = (root, tag) => Streams.upsertBatch(root, "t", Seq("id"), Seq("ver"))(batch(tag), tag),
-      stage = (txn, tag) => assert(Streams.stageBatch(txn, "t", tag.toLong)(merge(tag))),
+      stage = (txn, tag) => assert(Streams.stageBatch(txn, tag.toLong)(Streams.stageTable("t")(merge(tag)))),
       read = root => Snapshots.open(spark, root).read(spark, "t"),
       rows = tags => sorted((Seq((2L, 0L, "b0"),
           tags.lastOption.fold((1L, 0L, "a0"))(t => (1L, t.toLong, s"a$t"))) ++
         tags.map(t => (100L + t, t.toLong, "new"))).toDF("id", "ver", "val")))
+  }
+
+  // the streaming histogram sink: batch `tag` bins 100 · (tag + 1) values
+  private val histogram = {
+    import graft.streaming.Streams
+    def batch(tag: Int) = spark.range(0, 100L * (tag + 1)).select((col("id") * 7 % 1000).as("v"))
+    def sink(root: String, tag: Int) = Streams.histogramBatch(root, "v", 0L, 1000L, 10)(batch(tag), tag)
+    Store("streaming histogram sink",
+      create = sink(_, 0),
+      write = sink,
+      stage = (txn, tag) => assert(Streams.stageBatch(txn, tag.toLong)(
+        Streams.stageHistogram(batch(tag), "v", 0L, 1000L, 10))),
+      read = Streams.histogramState(spark, _),
+      rows = tags => sorted(graft.ops.Sketches.histBuild((0 +: tags).map(batch).reduce(_ union _),
+        col("v"), Nil, 0L, 1000L, 10)))
+  }
+
+  // the streaming near-dup sink: batch `tag` holds doc 100 + tag, one
+  // text, so it pairs with the doc of every batch committed before it
+  private val nearDup = {
+    import graft.streaming.Streams
+    def batch(tag: Int) = Seq((100L + tag, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
+    def sink(root: String, tag: Int) = Streams.nearDupBatch(root, "doc_id", "text")(batch(tag), tag)
+    Store("streaming near-dup sink",
+      create = sink(_, 0),
+      write = sink,
+      stage = (txn, tag) => assert(Streams.stageBatch(txn, tag.toLong)(
+        Streams.stageNearDup(batch(tag), tag.toLong, "doc_id", "text", 3, 16, 4, 0.8))),
+      read = Streams.nearDupState(spark, _, "pairs").select("doc_a", "doc_b"),
+      rows = tags => {
+        val ids = (0 +: tags).map(100L + _)
+        ids.indices.flatMap(j => ids.take(j).map(a => s"[$a,${ids(j)}]")).sorted
+      },
+      otherReads = root => Seq("sigs", "docs").foreach(Streams.nearDupState(spark, root, _).collect()))
+  }
+
+  // the Warehouse catalog: table t0 and a view over it; write `tag` saves table t<tag>
+  private val catalog = {
+    val db = "contractwh"
+    Store("Warehouse catalog",
+      create = root => {
+        Warehouse.saveTable(spark, root, db, "t0", spark.range(3).toDF("id"))
+        Warehouse.createView(spark, root, db, "v0", s"SELECT * FROM $db.t0")
+      },
+      write = (root, tag) => Warehouse.saveTable(spark, root, db, s"t$tag", spark.range(tag).toDF("id")),
+      stage = (txn, tag) => Warehouse.stageCatalog(txn,
+        Warehouse.put(Warehouse.Item(db, s"t$tag", "parquet", Nil, None))),
+      read = root => (Warehouse.listTables(spark, root).map(_.qualified) ++
+        Warehouse.listViews(spark, root).map(v => s"${v._1}.${v._2}")).toDF("name"),
+      rows = tags => (Seq("t0", "v0") ++ tags.map(t => s"t$t")).map(n => s"[$db.$n]").sorted,
+      otherReads = root => Warehouse.open(spark.newSession(), root),
+      log = Warehouse.catalogRoot)
   }
 
   /** (relative path, size, mtime) of every file and dir under `root`. */
@@ -172,7 +225,7 @@ class StoreContractSpec extends SparkSpec {
     finally pool.shutdown()
   }
 
-  for (store <- Seq(raw, incremental, ivf, zoned, upsert)) {
+  for (store <- Seq(raw, incremental, ivf, zoned, upsert, histogram, nearDup, catalog)) {
     import store._
 
     test(s"$name: reads never write") {
@@ -216,24 +269,24 @@ class StoreContractSpec extends SparkSpec {
     test(s"$name: a crash before commit is invisible") {
       val root = scratch("contract_crash")
       create(root)
-      val id = Snapshots.currentId(spark, root).get
+      val id = Snapshots.currentId(spark, log(root)).get
       // a writer that died after staging and before its commit
-      val crashed = Snapshots.begin(spark, root)
+      val crashed = Snapshots.begin(spark, log(root))
       stage(crashed, 7)
-      assert(Snapshots.currentId(spark, root).contains(id))
+      assert(Snapshots.currentId(spark, log(root)).contains(id))
       assert(sorted(read(root)) == rows(Nil))
       write(root, 1)
-      assert(Snapshots.currentId(spark, root).contains(id + 1))
+      assert(Snapshots.currentId(spark, log(root)).contains(id + 1))
       assert(sorted(read(root)) == rows(Seq(1)))
     }
 
     test(s"$name: two writers, one id: exactly one commits") {
       val root = scratch("contract_race")
       create(root)
-      val id = Snapshots.currentId(spark, root).get + 1
+      val id = Snapshots.currentId(spark, log(root)).get + 1
       val barrier = new CyclicBarrier(2)
       def writer(tag: Int) = () => {
-        val txn = Snapshots.begin(spark, root)
+        val txn = Snapshots.begin(spark, log(root))
         barrier.await(5, TimeUnit.MINUTES) // both begin from one parent
         stage(txn, tag)
         barrier.await(5, TimeUnit.MINUTES) // both staged: the commits race
@@ -245,9 +298,9 @@ class StoreContractSpec extends SparkSpec {
       assert(won.head._2.get.id == id)
       val e = lost.head._2.failed.get
       assert(e.isInstanceOf[IllegalStateException] && e.getMessage.contains(s"snapshot $id "), e)
-      assert(Snapshots.currentId(spark, root).contains(id))
+      assert(Snapshots.currentId(spark, log(root)).contains(id))
       assert(sorted(read(root)) == rows(Seq(won.head._1)))
-      assert(unreferenced(root).isEmpty, "the loser removes its staged dirs")
+      assert(unreferenced(log(root)).isEmpty, "the loser removes its staged dirs")
     }
   }
 

@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** S9 persistent catalog: DDL registers tables in the session catalog AND
-  * a warehouse-root manifest; a brand-new session (fresh catalog) replays
-  * the manifest with [[Warehouse.open]] and resolves every table by
+  * the warehouse root's catalog table; a brand-new session (fresh catalog)
+  * replays it with [[Warehouse.open]] and resolves every table by
   * `db.table` name — the across-session persistence the reference's
   * U-SQL catalog provides (CreateGitHubDataTable.usql:4-12). */
 class WarehouseSpec extends SparkSpec {
@@ -30,7 +30,7 @@ class WarehouseSpec extends SparkSpec {
       val want = orders.where(col("o_orderpriority") === pri).count()
       assert(got == want && got > 0)
 
-      // manifest records both tables with their partition columns
+      // the catalog records both tables with their partition columns
       val entries = Warehouse.listTables(spark, root)
         .map(e => e.qualified -> e.partitionCols).toMap
       assert(entries == Map(
@@ -200,7 +200,7 @@ class WarehouseSpec extends SparkSpec {
         "SELECT n_nationkey, n_name FROM whtest6.nation WHERE n_nationkey < 10")
       Warehouse.createView(spark, root, "whtest6", "derived",
         "SELECT count(*) AS n FROM whtest6.base")
-      // redefine the EARLY view: must stay before its dependent in the manifest
+      // redefine the EARLY view: must stay before its dependent in the catalog
       Warehouse.createView(spark, root, "whtest6", "base",
         "SELECT n_nationkey, n_name FROM whtest6.nation WHERE n_nationkey < 5")
       assert(Warehouse.listViews(spark, root).map(_._2) == Seq("base", "derived"),
@@ -220,18 +220,36 @@ class WarehouseSpec extends SparkSpec {
     }
   }
 
-  test("manifest crash window: live file missing, .old fallback keeps the catalog") {
-    val root = scratch("wh-crash")
-    Warehouse.saveTable(spark, root, "db9", "t1", spark.range(5).toDF("id"))
-    // simulate a publishFile crash between the two renames: live gone,
-    // .old present (the previous manifest)
-    val fsys = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val live = new org.apache.hadoop.fs.Path(s"$root/_graft_catalog.tsv")
-    val old = new org.apache.hadoop.fs.Path(s"$root/._graft_catalog.tsv.old")
-    assert(fsys.rename(live, old))
-    assert(Warehouse.open(spark, root).contains("db9.t1"),
-      "a between-renames crash must not read as an empty warehouse")
+  test("two DDLs from one catalog version: one commits, the other throws; open lists every committed entry") {
+    val root = scratch("wh-race")
+    Warehouse.saveTable(spark, root, "dbr", "t0", spark.range(3).toDF("id"))
+    // two DDLs whose data is written and whose catalog commits race
+    val ddls = Seq("t1", "t2").map { t =>
+      spark.range(5).toDF("id").write.parquet(s"$root/dbr/$t")
+      t -> Snapshots.begin(spark, Warehouse.catalogRoot(root))
+    }
+    ddls.foreach { case (t, txn) =>
+      Warehouse.stageCatalog(txn, Warehouse.put(Warehouse.Item("dbr", t, "parquet", Nil, None)))
+    }
+    ddls.head._2.commit()
+    val e = intercept[IllegalStateException](ddls(1)._2.commit())
+    assert(e.getMessage.contains("committed by another writer"), e)
+    assert(Warehouse.open(spark.newSession(), root) == Seq("dbr.t0", "dbr.t1"))
+    // the losing DDL, re-run, commits on top of the winner's
+    Warehouse.saveTable(spark, root, "dbr", "t2", spark.range(5).toDF("id"))
+    val fresh = spark.newSession()
+    assert(Warehouse.open(fresh, root) == Seq("dbr.t0", "dbr.t1", "dbr.t2"))
+    assert(fresh.sql("SELECT count(*) FROM dbr.t1").head().getLong(0) == 5L)
+  }
+
+  test("a skipped broken view is named on the trace span as view_skipped") {
+    val root = scratch("wh-skipped")
+    Warehouse.saveTable(spark, root, "dbsk", "t1", spark.range(5).toDF("id"))
+    Warehouse.createView(spark, root, "dbsk", "v_broken", "SELECT * FROM dbsk.t1")
+    Warehouse.dropTable(spark, root, "dbsk", "t1")
+    val (registered, report) = Trace.collect(spark)(Warehouse.open(spark, root))
+    assert(registered.isEmpty)
+    assert(report.root.attrs.toMap.get("view_skipped").contains("dbsk.v_broken"), report.root.attrs)
   }
 
   test("a broken view (dropped base) is skipped; later views still register") {

@@ -305,7 +305,7 @@ class TextDedupSpec extends SparkSpec {
     val corpus = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val old = corpus.where(pmod(col("doc_id"), lit(10)) =!= 0)
     val inc = corpus.where(pmod(col("doc_id"), lit(10)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-mhidx").toString
+    val dir = scratch("graft-mhidx")
     TextDedup.buildMinhashIndex(old, "doc_id", "text", dir)
     val incr = TextDedup.incrementalDupPairs(spark, dir, old, inc, "doc_id", "text")
     val got = incr.as[(Long, Long, Double)].collect()

@@ -1,7 +1,16 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.core.{Snapshots, Trace}
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+/** The writers whose scan task has started, shared by every task of the
+  * JVM (a UDF closure is copied per task; this object is not). */
+private object RaceMeet {
+  val arrived: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+}
 
 class ResultCacheSpec extends SparkSpec {
   import spark.implicits._
@@ -70,5 +79,43 @@ class ResultCacheSpec extends SparkSpec {
     assert(ResultCache.vacuum(spark, cache, maxAgeMs = 0L,
       nowMs = now + 10000) == 1, "aged entry must be reaped")
     assert(!ResultCache.isCached(q(src), cache))
+  }
+
+  test("two concurrent misses of one fingerprint: both get the rows, one commits, the loser leaves nothing") {
+    val src = scratch("rc_race"); val cache = scratch("rc_race_cache")
+    mkSource(src, 1000)
+    // each miss's one scan task waits until the other's has started, so
+    // both misses have looked the entry up before either writes it
+    val meet = udf { (_: Long) =>
+      RaceMeet.arrived.add(org.apache.spark.TaskContext.get().getLocalProperty("rc_writer"))
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (RaceMeet.arrived.size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+      true
+    }
+    val df = spark.read.parquet(src).where(meet(col("id")))
+      .groupBy(col("k")).agg(count(lit(1)).as("n"))
+    val fp = ResultCache.fingerprint(df)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val served = try Await.result(Future.sequence(Seq("a", "b").map(w => Future {
+      spark.sparkContext.setLocalProperty("rc_writer", w)
+      ResultCache.through(df, cache).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    })), Duration.Inf) finally pool.shutdown()
+    assert(RaceMeet.arrived.size == 2, "both misses wrote")
+    val want = spark.read.parquet(src).groupBy(col("k")).agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(served == Seq(want, want))
+    assert(Snapshots.currentId(spark, s"$cache/$fp").contains(1))
+    assert(new java.io.File(s"$cache/$fp/_snapshots").list().toSeq == Seq("s000000001.json"))
+    assert(new java.io.File(cache).list().toSeq == Seq(fp), "one entry under the cache dir")
+    assert(new java.io.File(s"$cache/$fp/result").list().length == 1, "one version of the entry")
+  }
+
+  test("a plan with no file inputs runs uncached and records result_cache_bypass on the span") {
+    val cache = scratch("rc_bypass")
+    val (rows, report) = Trace.collect(spark)(ResultCache.through(spark.range(10).toDF("id"), cache).count())
+    assert(rows == 10L)
+    assert(report.root.attrs.toMap.contains("result_cache_bypass"), report.root.attrs)
+    assert(new java.io.File(cache).list().isEmpty, "nothing is stored")
   }
 }

@@ -18,7 +18,7 @@ class StreamingQueriesSpec extends SparkSpec {
     assert(df.collect().map(_.getLong(1)).sum == 30, "the memory sink holds the result")
     val sink = df.queryExecution.analyzed.collectFirst { case a: SubqueryAlias => a.identifier.name }
     assert(sink.exists(_.startsWith("q232_sink_")), df.queryExecution.analyzed)
-    val ckpt = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft-ckpt-${sink.get}")
+    val ckpt = new java.io.File(graft.TestSession.jdkTmp, s"graft-ckpt-${sink.get}")
     assert(!ckpt.exists(), s"$ckpt is left behind")
   }
 
@@ -29,7 +29,7 @@ class StreamingQueriesSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$dir/out")
     val part = new java.io.File(s"$dir/out").listFiles().filter(_.getName.endsWith(".parquet")).head
     assert(part.renameTo(new java.io.File(s"$dir/events.parquet")))
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val tmp = graft.TestSession.jdkTmp
     val corpus = dir.replaceAll("[^A-Za-z0-9]", "_")
     def left() = tmp.list().filter(n => (n.startsWith("graft_q161_") ||
       n.startsWith("graft_q265_")) && n.endsWith(corpus)).toSet

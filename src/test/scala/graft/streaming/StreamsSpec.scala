@@ -305,35 +305,36 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val state = Files.createTempDirectory("graft-neardup").toString
-    val ckpt = Files.createTempDirectory("graft-neardup-ckpt").toString
+    val state = scratch("graft-neardup")
+    val ckpt = scratch("graft-neardup-ckpt")
     val input = MemoryStream[(Long, String)]
     def run(): Unit = {
       val q = Streams.nearDupSink(input.toDS().toDF("doc_id", "text"),
         state, "doc_id", "text", ckpt)
       q.awaitTermination()
     }
+    def read(part: String) = Streams.nearDupState(spark, state, part)
     val textA = "alpha beta gamma delta epsilon zeta"
     val textB = "one two three four five six seven"
     input.addData((1L, textA), (2L, textB))
     run() // batch 0: nothing seen before, no dups
-    assert(spark.read.parquet(s"$state/pairs").count() == 0)
-    assert(spark.read.parquet(s"$state/sigs").count() == 2)
+    assert(read("pairs").count() == 0)
+    assert(read("sigs").count() == 2)
     // batch 1: 3 duplicates doc 1 (cross-batch), 4 and 5 duplicate each
     // other (within-batch)
     input.addData((3L, textA), (4L, "x y z w v u t"), (5L, "x y z w v u t"))
     run()
-    val got = spark.read.parquet(s"$state/pairs")
+    val got = read("pairs")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 3L), (4L, 5L)), s"pairs: $got")
-    assert(spark.read.parquet(s"$state/sigs").count() == 5)
-    assert(spark.read.parquet(s"$state/docs").count() == 5)
-    // replaying batch 1 by hand must rewrite, not duplicate
+    assert(read("sigs").count() == 5)
+    assert(read("docs").count() == 5)
+    // replaying batch 1 by hand must not duplicate
     Streams.nearDupBatch(state, "doc_id", "text")(
       Seq((3L, textA), (4L, "x y z w v u t"), (5L, "x y z w v u t"))
         .toDF("doc_id", "text"), 1L)
-    assert(spark.read.parquet(s"$state/pairs").count() == 2)
-    assert(spark.read.parquet(s"$state/sigs").count() == 5)
+    assert(read("pairs").count() == 2)
+    assert(read("sigs").count() == 5)
   }
 
   test("ivfIngestSink: streamed vectors land as deltas; live read ≡ one-shot assignment") {
@@ -342,8 +343,8 @@ class StreamsSpec extends SparkSpec {
     import graft.ops.Ann
     implicit val sqlCtx = spark.sqlContext
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val idx = Files.createTempDirectory("graft-ivf-stream").toString
-    val ckpt = Files.createTempDirectory("graft-ivf-stream-ckpt").toString
+    val idx = scratch("graft-ivf-stream")
+    val ckpt = scratch("graft-ivf-stream-ckpt")
     Ann.buildIvfIndex(e.where(col("vec_id") % 3 =!= 0),
       "vec_id", "embedding", 64, 16, idx)
     val rest = e.where(col("vec_id") % 3 === 0)
@@ -523,8 +524,8 @@ class StreamsSpec extends SparkSpec {
     // the sink died after staging batch 1 and before its commit
     val tombstone = upsertFixture(Seq((1L, 30L, "DEAD")))
     val crashed = Snapshots.begin(spark, dir)
-    assert(Streams.stageBatch(crashed, "t", 1L)(
-      Streams.upsertMerge(tombstone, Seq("id"), Seq("ver"), dead)))
+    assert(Streams.stageBatch(crashed, 1L)(Streams.stageTable("t")(
+      Streams.upsertMerge(tombstone, Seq("id"), Seq("ver"), dead))))
     assert(readTable(dir) == Map(1L -> (10L, "a1"), 2L -> (1L, "b1")),
       "a staged, uncommitted batch is invisible")
     // foreachBatch replays batch 1, and then replays it once more
@@ -593,8 +594,8 @@ class StreamsSpec extends SparkSpec {
     val all = spark.range(1000).select(col("id").as("v"))
     apply(all.where(col("v") < 400L), 0L)
     apply(all.where(col("v") >= 400L), 1L)
-    // foreachBatch retry: same batchId, even different data — overwrite
-    // of its own batch= partition must leave the state unchanged
+    // foreachBatch retry: same batchId, even different data — a batch
+    // at or below the watermark must leave the state unchanged
     apply(all.where(col("v") >= 400L), 1L)
     val merged = Streams.histogramState(spark, state)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
